@@ -1588,22 +1588,21 @@ def q186_near_dup_clusters_lsh(spark: SparkSession,
 
 def q187_ks_distributed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """q132's per-event-type weekend-vs-weekday KS test on the
-    distributed ECDF path (stats.ks_test_distributed): the value axis
-    is approx-percentile-bucketed, per-(group, bucket) windows add
-    local cumulative counts to broadcast driver prefix offsets —
+    bucketed ECDF path (stats.ks_test(distributed=True)): the value
+    grain is tagged with deterministic slog-width buckets, and
+    per-(group, bucket) windows add local cumulative counts to prefix
+    offsets from a tiny per-bucket count table broadcast back —
     groups×buckets parallel instead of one ordered window task per
-    group, IDENTICAL output (exact integer cumulatives; equal values
-    share a bucket). Closes the rank-window family: every
-    ordered-ECDF operator now has a driver-hash-verified distributed
-    twin (q180/q182/q183/q184 convention). Oracle: shared verbatim
-    with q132."""
-    from pandas_ai_spark.functions.stats import ks_test_distributed
+    group, fully lazy, IDENTICAL output (exact integer cumulatives;
+    equal values share a bucket). Oracle: shared verbatim with
+    q132."""
+    from pandas_ai_spark.functions.stats import ks_test
 
     ev = _t(spark, sf_dir, "events").withColumn(
         "wk", F.when(F.dayofweek("ts").isin(1, 7), "we")
                .otherwise("wd"))
-    out = ks_test_distributed(ev, "event_type", "value", "wk",
-                              "we", "wd")
+    out = ks_test(ev, "event_type", "value", "wk", "we", "wd",
+                  distributed=True, buckets=64)
     return out.select(
         "event_type", "n_a", "n_b",
         F.round("d_stat", 9).alias("d_stat"),
@@ -1667,22 +1666,21 @@ def q189_kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q190_wasserstein_distributed(spark: SparkSession,
                                  sf_dir: str) -> DataFrame:
     """q188's Wasserstein-1 drift on the distributed ECDF path
-    (stats.wasserstein_1d_distributed): the cumulative pass runs
+    (stats.wasserstein_1d(distributed=True)): the cumulative pass runs
     groups×buckets parallel; the integral's cross-bucket seam gap
     comes from each bucket's min(v) carried on the bounded broadcast
     offset table (the true global successor — bucket ids are monotone
     in v). IDENTICAL output on the integer-cents grain (exact
     bigint/DECIMAL terms either way). Oracle: shared verbatim with
     q188."""
-    from pandas_ai_spark.functions.stats import \
-        wasserstein_1d_distributed
+    from pandas_ai_spark.functions.stats import wasserstein_1d
 
     ev = _t(spark, sf_dir, "events").withColumn(
         "wk", F.when(F.dayofweek("ts").isin(1, 7), "we")
                .otherwise("wd")).withColumn(
         "vc", F.round(F.col("value") * 100).cast("bigint"))
-    out = wasserstein_1d_distributed(ev, "event_type", "vc", "wk",
-                                     "we", "wd")
+    out = wasserstein_1d(ev, "event_type", "vc", "wk", "we", "wd",
+                         distributed=True, buckets=64)
     return out.select(
         "event_type", "n_a", "n_b",
         F.round(F.col("w1") / 100.0, 9).alias("w1"),
@@ -1714,23 +1712,23 @@ def q191_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q192_kw_distributed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """q191's Kruskal-Wallis on the distributed_midrank scale path
-    (stats.kruskal_wallis_distributed): ranking runs groups×buckets
-    parallel (bounded boundary/offset collects, per-(group,bucket)
-    windows) instead of one ordered window task per year — the
-    few-huge-groups variant, auto-dispatched by the public
-    kruskal_wallis when Catalyst's size estimate crosses
-    RANK_WINDOW_MAX_BYTES. IDENTICAL output (doubled midranks are
-    exact either way; same ordered float fold). Oracle: shared
+    """q191's Kruskal-Wallis on the bucketed rank path
+    (stats.kruskal_wallis(distributed=True)): ranking runs
+    groups×buckets parallel (slog-width buckets, broadcast prefix
+    offsets, per-(group, bucket) windows — no driver collect) instead
+    of one ordered window task per year — the few-huge-groups shape
+    kruskal_wallis auto-dispatches to when Catalyst's size estimate
+    crosses RANK_WINDOW_MAX_BYTES. IDENTICAL output (doubled midranks
+    are exact either way; same ordered float fold). Oracle: shared
     verbatim with q191."""
-    from pandas_ai_spark.functions.stats import \
-        kruskal_wallis_distributed
+    from pandas_ai_spark.functions.stats import kruskal_wallis
 
     orders = _t(spark, sf_dir, "orders").select(
         F.year("o_orderdate").alias("o_year"),
         "o_orderpriority", "o_totalprice")
-    out = kruskal_wallis_distributed(
-        orders, "o_totalprice", "o_orderpriority", by=["o_year"])
+    out = kruskal_wallis(
+        orders, "o_totalprice", "o_orderpriority", by=["o_year"],
+        distributed=True, buckets=64)
     return out.select(
         "o_year", "k", "n",
         F.round("h", 9).alias("h")).orderBy("o_year")
@@ -1926,7 +1924,7 @@ def q200_brown_forsythe(spark: SparkSession,
 
 def q201_dunn_distributed(spark: SparkSession,
                           sf_dir: str) -> DataFrame:
-    """q197's Dunn post-hoc on the distributed_midrank rank path
+    """q197's Dunn post-hoc on the bucketed rank path
     (stats.dunn_test(distributed=True)): midranks come from the
     groups×buckets two-pass rank instead of one ordered window per
     year — the few-huge-groups variant the public dunn_test
@@ -5301,24 +5299,23 @@ def q179_information_gain(spark: SparkSession, sf_dir: str
 
 def q180_spearman_distributed(spark: SparkSession, sf_dir: str
                               ) -> DataFrame:
-    """q177's Spearman on the RANGE-PARTITIONED two-pass rank path
-    (stats.spearman_corr_distributed / distributed_midrank): global
-    approx-percentile boundaries bucket each variable, a bounded
-    driver prefix-sum turns per-(group, bucket) counts into rank
-    offsets, and the rank window sorts WITHIN (group, bucket) —
+    """q177's Spearman on the bucketed two-pass rank path
+    (stats.spearman_corr(distributed=True)): deterministic slog-width
+    buckets split each variable's value axis, a prefix-sum window over
+    the tiny per-(group, bucket) count table — broadcast back — gives
+    rank offsets, and the rank window sorts WITHIN (group, bucket) —
     groups × buckets parallel instead of one task per group, the
-    variant for a few huge groups (q24/q25 two-path convention).
-    Midranks are exact regardless of boundary placement (equal values
+    variant for a few huge groups; fully lazy, no driver collect.
+    Midranks are exact regardless of bucket placement (equal values
     always share a bucket), so the result — and the oracle — are
     identical to q177's window form; this entry driver-verifies the
     scale path itself."""
-    from pandas_ai_spark.functions.stats import (
-        spearman_corr_distributed)
+    from pandas_ai_spark.functions.stats import spearman_corr
 
     li = _t(spark, sf_dir, "lineitem")
-    out = spearman_corr_distributed(
+    out = spearman_corr(
         li, "l_quantity", "l_extendedprice",
-        by=["l_returnflag"], buckets=16)
+        by=["l_returnflag"], distributed=True, buckets=16)
     return out.select(
         "l_returnflag", "n",
         F.round("rho", 9).alias("rho")).orderBy("l_returnflag")
@@ -5353,22 +5350,21 @@ def q181_profile_exact_corpus(spark: SparkSession, sf_dir: str
 def q182_mw_distributed(spark: SparkSession, sf_dir: str
                         ) -> DataFrame:
     """q159's Mann-Whitney U on the RANGE-PARTITIONED rank path
-    (stats.mann_whitney_u_distributed): identical doubled-midrank
-    algebra and output, but ranking runs groups × buckets parallel
-    via stats.distributed_midrank instead of one ordered window task
-    per group — the q180 convention generalized to the rank-sum
-    test. Oracle: shared verbatim with q159 (identical output by
-    contract)."""
-    from pandas_ai_spark.functions.stats import (
-        mann_whitney_u_distributed)
+    (stats.mann_whitney_u(distributed=True)): identical
+    doubled-midrank algebra and output, but ranking runs groups ×
+    buckets parallel on the bucketed midrank device instead of one
+    ordered window task per group — the q180 convention generalized
+    to the rank-sum test. Oracle: shared verbatim with q159 (identical
+    output by contract)."""
+    from pandas_ai_spark.functions.stats import mann_whitney_u
 
     li = _t(spark, sf_dir, "lineitem").withColumn(
         "disc_band",
         F.when(F.col("l_discount") <= 0.05, F.lit("lo"))
          .otherwise(F.lit("hi")))
-    out = mann_whitney_u_distributed(
+    out = mann_whitney_u(
         li, "l_quantity", "disc_band", "lo", "hi",
-        by=["l_returnflag"], buckets=16)
+        by=["l_returnflag"], distributed=True, buckets=16)
     return out.select(
         "l_returnflag", "n_a", "n_b",
         F.round("u_a", 9).alias("u_a"),
@@ -5378,15 +5374,14 @@ def q182_mw_distributed(spark: SparkSession, sf_dir: str
 def q183_fdr_distributed(spark: SparkSession, sf_dir: str
                          ) -> DataFrame:
     """q160's KS-test family through the RANGE-PARTITIONED BH
-    correction (stats.bh_fdr_distributed): ordinal p-ranks from
+    correction (stats.bh_fdr(distributed=True)): ordinal p-ranks from
     bucket offsets (prefix window over the tiny per-bucket count
     table, broadcast back) and the reverse running min split into a
     within-bucket running min + a broadcast later-bucket suffix min
     — families × buckets parallel, no per-family single window
     task. Identical p_rank/p_adj/reject to q160 (tied-p sharing
     included). Oracle: shared verbatim with q160."""
-    from pandas_ai_spark.functions.stats import (bh_fdr_distributed,
-                                                 ks_test)
+    from pandas_ai_spark.functions.stats import bh_fdr, ks_test
 
     orders = _t(spark, sf_dir, "orders")
     cust = _t(spark, sf_dir, "customer").select(
@@ -5403,9 +5398,9 @@ def q183_fdr_distributed(spark: SparkSession, sf_dir: str
                            / (na + nb)))
     withp = ks.select("c_nationkey", "n_a", "n_b", "d_stat",
                       p.alias("p_value"))
-    out = bh_fdr_distributed(withp, "p_value", alpha=0.05,
-                             tiebreak_cols=["c_nationkey"],
-                             buckets=8)
+    out = bh_fdr(withp, "p_value", alpha=0.05,
+                 tiebreak_cols=["c_nationkey"], distributed=True,
+                 buckets=8)
     return out.select(
         "c_nationkey", "n_a", "n_b",
         F.round("d_stat", 9).alias("d_stat"),
@@ -5418,20 +5413,21 @@ def q183_fdr_distributed(spark: SparkSession, sf_dir: str
 def q184_auc_distributed(spark: SparkSession, sf_dir: str
                          ) -> DataFrame:
     """q167's exact ROC AUC on the range-partitioned rank path
-    (classify.auc_distributed → mann_whitney_u_distributed →
-    distributed_midrank): AUC is ONE global group, so the original's
+    (classify.auc(distributed=True) → stats.mann_whitney_u's bucketed
+    midrank device): AUC is ONE global group, so the window form's
     single ordered window task is exactly the caveat the bucketed
     rank removes — the scores rank buckets-way parallel, ranksums
     and tie terms aggregate map-side. Identical output to q167.
     Oracle: shared verbatim with q167."""
     from pandas_ai_spark.functions.classify import (
-        auc_distributed, hashed_feature_score)
+        auc, hashed_feature_score)
 
     docs = _t(spark, sf_dir, "documents")
     per = docs.select(
         hashed_feature_score(F.col("text")).alias("score"),
         F.col("lang"))
-    out = auc_distributed(per, "score", "lang = 'en'", buckets=16)
+    out = auc(per, "score", "lang = 'en'", distributed=True,
+              buckets=16)
     return out.select(
         "n_pos", "n_neg",
         F.round("auc", 9).alias("auc"),

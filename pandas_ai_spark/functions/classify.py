@@ -370,26 +370,28 @@ def expected_calibration_error(df: DataFrame, score_col: str,
 
 
 def auc(df: DataFrame, score_col: str, label_expr,
-        distributed: bool | None = None) -> DataFrame:
+        distributed: bool | None = None,
+        buckets: int = 64) -> DataFrame:
     """Exact ROC AUC at any scale via the Mann-Whitney identity
     ``AUC = U_pos / (n_pos * n_neg)`` with midrank tie handling —
     the probability a random positive outscores a random negative,
     computed WITHOUT materializing the ROC curve or sampling:
-    :func:`~pandas_ai_spark.functions.stats.mann_whitney_u` collapses
-    the scores to the (value) grain, accumulates DOUBLED midranks as
-    exact bigints, and AUC derives row-local — bit-identical across
-    engines. One row ``(n_pos, n_neg, auc, z)``; ``z`` is the
-    tie-corrected normal statistic (|z| > 1.96 ⇒ the ranking beats
-    chance at 5%). ``label_expr`` is a SQL boolean; NULL counts as
-    negative.
+    :func:`~pandas_ai_spark.functions.stats.mann_whitney_u` accumulates
+    DOUBLED midranks as exact bigints, and AUC derives row-local —
+    bit-identical across engines. One row ``(n_pos, n_neg, auc, z)``;
+    ``z`` is the tie-corrected normal statistic (|z| > 1.96 ⇒ the
+    ranking beats chance at 5%). ``label_expr`` is a SQL boolean;
+    NULL counts as negative.
 
-    ``distributed=None`` (default) inherits
-    :func:`~pandas_ai_spark.functions.stats.mann_whitney_u`'s
-    auto-dispatch: AUC is a single global "group", so past
-    ``stats.RANK_WINDOW_MAX_BYTES`` of estimated input the ranking
-    routes to the buckets-parallel :func:`auc_distributed` path
-    (IDENTICAL output — driver-hash-proven, q184 vs q167); explicit
-    True/False forces a path.
+    ``distributed`` and ``buckets`` pass through to
+    :func:`~pandas_ai_spark.functions.stats.mann_whitney_u`: the
+    window form collapses the scores to the value grain (cheapest for
+    discrete/bucketed scores); AUC is a single global "group", so for
+    continuous scores over billions of rows ``distributed=True`` ranks
+    ``buckets``-way parallel instead of in one ordered task (IDENTICAL
+    output — driver-hash-proven, q184 vs q167). ``None`` (default)
+    picks by Catalyst's size estimate; explicit True/False keeps the
+    call lazy.
     """
     from pandas_ai_spark.functions.stats import mann_whitney_u
 
@@ -397,37 +399,7 @@ def auc(df: DataFrame, score_col: str, label_expr,
                  F.lit("p")).otherwise(F.lit("n"))
     base = df.withColumn("__lab", lab)
     mw = mann_whitney_u(base, score_col, "__lab", "p", "n",
-                        distributed=distributed)
-    return mw.select(
-        F.col("n_a").alias("n_pos"),
-        F.col("n_b").alias("n_neg"),
-        F.when((F.col("n_a") > 0) & (F.col("n_b") > 0),
-               F.col("u_a") / (F.col("n_a").cast("double")
-                               * F.col("n_b").cast("double")))
-         .alias("auc"),
-        "z")
-
-
-def auc_distributed(df: DataFrame, score_col: str, label_expr,
-                    buckets: int = 64) -> DataFrame:
-    """:func:`auc` on the
-    :func:`~pandas_ai_spark.functions.stats.distributed_midrank`
-    scale path: IDENTICAL output (exact midranks either way), but the
-    score ranking runs ``buckets``-way parallel instead of one
-    ordered window task — AUC is a single global "group", so the
-    original's one-task sort is exactly the caveat the
-    range-partitioned rank removes. The variant for continuous
-    scores over billions of rows; for discrete/bucketed score grains
-    the plain :func:`auc` is cheaper.
-    """
-    from pandas_ai_spark.functions.stats import (
-        mann_whitney_u_distributed)
-
-    lab = F.when(F.coalesce(F.expr(label_expr), F.lit(False)),
-                 F.lit("p")).otherwise(F.lit("n"))
-    base = df.withColumn("__lab", lab)
-    mw = mann_whitney_u_distributed(base, score_col, "__lab",
-                                    "p", "n", buckets=buckets)
+                        distributed=distributed, buckets=buckets)
     return mw.select(
         F.col("n_a").alias("n_pos"),
         F.col("n_b").alias("n_neg"),

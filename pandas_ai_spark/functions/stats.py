@@ -82,12 +82,12 @@ def _plan_size(df: DataFrame) -> int | None:
 # Above this Catalyst-estimated PER-GROUP share, a rank-window
 # operator's one-ordered-window-task-per-group shape is treated as a
 # parallelism collapse (one task sorts the whole group) and the
-# groups×buckets distributed two-pass rank path (distributed_midrank)
-# engages automatically. The two paths are output-identical by
-# contract (driver-hash-proven: q182/q183/q184/q180 share oracles
-# verbatim with q159/q160/q167/q177) — dispatch is purely a cost
-# choice; unknown-size plans pay one count() for a width×rows stand-in
-# estimate rather than silently picking the window form (r13).
+# groups×buckets bucketed rank/ECDF device (_bucket_offsets) engages
+# automatically. The two paths are output-identical by contract
+# (driver-hash-proven: q180/q182/q183/q184/q187/q190/q192/q201 share
+# oracles verbatim with their window-form entries) — dispatch is purely
+# a cost choice; unknown-size plans pay one count() for a width×rows
+# stand-in estimate rather than silently picking the window form (r13).
 RANK_WINDOW_MAX_BYTES = 1 << 30
 
 
@@ -142,15 +142,23 @@ def _plan_has_join(df: DataFrame) -> bool:
 
 def _resolve_rank_path(df: DataFrame, by: list[str],
                        distributed: bool | None, op: str) -> bool:
-    """Resolve the three-state ``distributed`` flag of the rank-window
-    family (mann_whitney_u / bh_fdr / auc / spearman_corr): explicit
-    wins; ``None`` consults Catalyst's size estimate and — only when
-    the input is already past the threshold — ONE approx group-count
-    aggregation, to detect the few-huge-groups shape: distributed
-    iff estimated bytes per group > ``RANK_WINDOW_MAX_BYTES``. A
-    many-small-groups input stays on the window form (per-group sorts
-    are already parallel, and the distributed path's groups×buckets
-    boundary collect would grow with the group count)."""
+    """Resolve the three-state ``distributed`` flag of the rank/ECDF
+    family (spearman_corr / mann_whitney_u — and ``classify.auc``
+    through it — / bh_fdr / ks_test / wasserstein_1d / kruskal_wallis
+    / dunn_test): True picks the bucketed device, False the window
+    form. Explicit wins; ``None`` consults Catalyst's size estimate
+    and — only when the input is already past the threshold — ONE
+    approx group-count aggregation, to detect the few-huge-groups
+    shape: distributed iff estimated bytes per group >
+    ``RANK_WINDOW_MAX_BYTES``. A many-small-groups input stays on the
+    window form (per-group sorts are already parallel, and the
+    bucketed path's groups×buckets offset table would grow with the
+    group count).
+
+    Plan building stays lazy when the flag is explicit. ``None`` on a
+    plan without a Catalyst size estimate runs ONE eager ``count()``
+    as a stand-in (skipped — dispatching distributed — when the plan
+    contains Python-UDF stages that would be expensive to re-run)."""
     if distributed is not None:
         return bool(distributed)
     size = _plan_size(df)
@@ -1035,58 +1043,78 @@ def weighted_median(df: DataFrame, group_col: str, value_col: str,
 
 def ks_test(df: DataFrame, group_col: str, value_col: str,
             sample_col: str, a, b,
-            distributed: bool | None = None) -> DataFrame:
+            distributed: bool | None = None,
+            buckets: int = 64) -> DataFrame:
     """Per-group two-sample Kolmogorov-Smirnov test:
     ``(group, n_a, n_b, d_stat, d_crit, significant)`` where
     ``d_stat = sup_x |F_a(x) − F_b(x)|`` and ``d_crit`` is the 5%
     large-sample critical value ``1.358·√((n_a+n_b)/(n_a·n_b))`` —
     the distribution-shape drift test completing the battery next to
     PSI (binned) and JSD (categorical): KS is binning-free and
-    location/shape sensitive.
+    location/shape sensitive. Rows whose sample label is neither
+    ``a`` nor ``b`` or whose value is NULL are excluded.
 
-    Shape: one group-partitioned RANGE-frame window builds both
-    ECDFs in a single ordered pass (the RANGE frame credits all
-    tied values at once — the correct ECDF step at a tie point);
-    per-sample totals are partition window sums; the sup is one
-    grouped max. Everything after the one sort shuffle is row-local
-    integer-count arithmetic — cross-engine exact, no float-sum-order
-    dependence. Rows whose sample label is neither ``a`` nor ``b``
-    or whose value is NULL are excluded.
-
-    ``distributed=None`` (default) auto-dispatches to
-    :func:`ks_test_distributed` (IDENTICAL output — driver-hash-
-    proven, q187 vs q132 shared oracle) when Catalyst's size estimate
-    says the per-group share exceeds ``RANK_WINDOW_MAX_BYTES`` (the
-    few-huge-groups shape); explicit True/False forces a path.
-
-    ``distributed=None`` (the default) auto-dispatches: when Catalyst has
-    no size estimate for the input plan, this runs ONE eager ``count()``
-    job to stand in for it (skipped — dispatching distributed — when the
-    plan contains Python-UDF stages that would be expensive to re-run).
-    Pass ``distributed=True/False`` to keep the call fully lazy.
+    Shape: the sup is one grouped max over row-local integer-count
+    arithmetic — cross-engine exact, no float-sum-order dependence —
+    fed by one of two ECDF devices with IDENTICAL output
+    (driver-hash-proven, q187 vs q132 shared oracle). The window form
+    builds both ECDFs in one group-partitioned RANGE-frame pass over
+    the rows (the RANGE frame credits all tied values at once — the
+    correct ECDF step at a tie point); per-sample totals are partition
+    window sums. The bucketed form (``distributed=True``) first
+    collapses the input to the persisted (group, value) grain of
+    ``(t_a, t_b)`` counts, then :func:`_bucket_offsets` adds each
+    bucket's prefix counts and the group totals to a cumulative
+    window WITHIN (group, bucket) — groups × ``buckets`` parallel
+    instead of one ordered task per group. ``distributed=None``
+    (default) picks the bucketed form when the per-group share
+    exceeds ``RANK_WINDOW_MAX_BYTES`` (:func:`_resolve_rank_path`).
+    Explicit True/False keeps the call lazy; ``None`` on a plan
+    without a size estimate runs one eager ``count()``.
     """
     from pyspark.sql.window import Window
 
-    if _resolve_rank_path(df, [group_col], distributed, "ks_test"):
-        return ks_test_distributed(df, group_col, value_col,
-                                   sample_col, a, b)
+    from .cache import operator_persist
 
     v = F.col(value_col).cast("double")
     s = F.col(sample_col)
     base = df.where(v.isNotNull() & s.isin(a, b)).select(
         F.col(group_col).alias("__g"), v.alias("__v"),
-        (s == a).cast("int").alias("__a"))
-    wr = (Window.partitionBy("__g").orderBy("__v")
-          .rangeBetween(Window.unboundedPreceding, 0))
-    wp = Window.partitionBy("__g")
-    cum_a = F.sum("__a").over(wr)
-    cum_b = F.sum(1 - F.col("__a")).over(wr)
-    n_a = F.sum("__a").over(wp)
-    n_b = F.sum(1 - F.col("__a")).over(wp)
+        (s == a).cast("bigint").alias("__a"))
+    if _resolve_rank_path(df, [group_col], distributed, "ks_test"):
+        grain = operator_persist(
+            _fanout_if_narrow(base, "__g", "__v")
+            .groupBy("__g", "__v").agg(
+                F.sum("__a").cast("bigint").alias("__ta"),
+                F.sum(F.lit(1) - F.col("__a")).cast("bigint")
+                 .alias("__tb")))
+        rows = _bucket_offsets(
+            grain, ["__v"], ["__g"], buckets,
+            [F.sum("__ta").cast("bigint").alias("__ca"),
+             F.sum("__tb").cast("bigint").alias("__cb")],
+            lambda wb, wg: [
+                _prefix("__ca", wb).alias("__offa"),
+                _prefix("__cb", wb).alias("__offb"),
+                F.sum("__ca").over(wg).cast("bigint").alias("n_a"),
+                F.sum("__cb").over(wg).cast("bigint").alias("n_b")])
+        wr = (Window.partitionBy("__g", "__bkt_0").orderBy("__v")
+              .rangeBetween(Window.unboundedPreceding, 0))
+        cum_a = F.col("__offa") + F.sum("__ta").over(wr)
+        cum_b = F.col("__offb") + F.sum("__tb").over(wr)
+        n_a, n_b = F.col("n_a"), F.col("n_b")
+    else:
+        rows = base
+        wr = (Window.partitionBy("__g").orderBy("__v")
+              .rangeBetween(Window.unboundedPreceding, 0))
+        wp = Window.partitionBy("__g")
+        cum_a = F.sum("__a").over(wr)
+        cum_b = F.sum(1 - F.col("__a")).over(wr)
+        n_a = F.sum("__a").over(wp)
+        n_b = F.sum(1 - F.col("__a")).over(wp)
     # try_divide: a group holding only one of the two samples has no
     # defined statistic — NULL d_stat surfaces it (ANSI mode would
     # otherwise throw on the zero count)
-    stepped = base.select(
+    stepped = rows.select(
         "__g", n_a.alias("__na"), n_b.alias("__nb"),
         F.abs(F.try_divide(cum_a, n_a)
               - F.try_divide(cum_b, n_b)).alias("__d"))
@@ -1210,7 +1238,8 @@ def trimmed_stats(df: DataFrame, value_col: str,
 
 def spearman_corr(df: DataFrame, x_col: str, y_col: str,
                   by: list[str] | None = None,
-                  distributed: bool | None = None) -> DataFrame:
+                  distributed: bool | None = None,
+                  buckets: int = 64) -> DataFrame:
     """Per-group Spearman rank correlation — the monotone-association
     companion to Pearson (:func:`grouped_ols`'s ``r``) that a feature
     screen reaches for when the relationship is nonlinear or the
@@ -1227,54 +1256,27 @@ def spearman_corr(df: DataFrame, x_col: str, y_col: str,
     decimals — bit-identical across engines, no float-sum-order
     dependence.
 
-    Scale shape: doubled midranks come from cumulative-count RANGE
-    windows (``2·count(v<x) + count(v=x) + 1``) — two ordered windows
-    over the SAME group partition (one sort per variable, one hash
-    exchange) — then ONE map-side-combined co-moment aggregation.
-    No value-grain collapse needed and nothing collected. Caveat the
-    whole rank-window family shares: parallelism equals the group
-    count (each group sorts in one task) — correct for the
-    many-groups case; a FEW huge groups want the range-partitioned
-    two-pass rank (bucket counts + driver prefix offsets) instead —
-    ``distributed=None`` (default) auto-dispatches there
-    (:func:`spearman_corr_distributed`, IDENTICAL output —
-    driver-hash-proven, q180 vs q177) when Catalyst's size estimate
-    says the per-group share exceeds ``RANK_WINDOW_MAX_BYTES``;
-    explicit True/False forces a path.
-
-    ``distributed=None`` (the default) auto-dispatches: when Catalyst has
-    no size estimate for the input plan, this runs ONE eager ``count()``
-    job to stand in for it (skipped — dispatching distributed — when the
-    plan contains Python-UDF stages that would be expensive to re-run).
-    Pass ``distributed=True/False`` to keep the call fully lazy.
+    Scale shape: both variables' doubled midranks come from
+    :func:`_midranks`, then ONE map-side-combined co-moment
+    aggregation; nothing is collected. The window device sorts each
+    group in one task (two ordered windows over the SAME group
+    partition, one hash exchange) — right for many groups. A FEW huge
+    groups want the bucketed device (``distributed=True``, groups ×
+    ``buckets`` parallel, IDENTICAL output — driver-hash-proven, q180
+    vs q177); ``distributed=None`` (default) picks it when Catalyst's
+    per-group share exceeds ``RANK_WINDOW_MAX_BYTES``
+    (:func:`_resolve_rank_path`).
+    Explicit True/False keeps the call lazy; ``None`` on a plan
+    without a size estimate runs one eager ``count()``.
     """
-    from pyspark.sql.window import Window
-
     by = list(by or [])
-    if _resolve_rank_path(df, by, distributed, "spearman_corr"):
-        return spearman_corr_distributed(df, x_col, y_col, by=by)
+    dist = _resolve_rank_path(df, by, distributed, "spearman_corr")
     base = df.where(F.col(x_col).isNotNull()
                     & F.col(y_col).isNotNull()).select(
         *[F.col(c) for c in by],
         F.col(x_col).alias("__x"), F.col(y_col).alias("__y"))
-
-    def doubled_rank(col: str):
-        wo = (Window.partitionBy(*by).orderBy(col)
-              .rangeBetween(Window.unboundedPreceding, 0)
-              if by else
-              Window.orderBy(col).rangeBetween(
-                  Window.unboundedPreceding, 0))
-        wt = (Window.partitionBy(*by, col) if by
-              else Window.partitionBy(col))
-        cum_le = F.count(F.lit(1)).over(wo)   # RANGE: includes peers
-        t = F.count(F.lit(1)).over(wt)
-        return (F.lit(2) * (cum_le - t) + t + F.lit(1)) \
-            .cast("bigint")
-
-    ranked = base.select(
-        *[F.col(c) for c in by],
-        doubled_rank("__x").alias("__rx"),
-        doubled_rank("__y").alias("__ry"))
+    ranked = _midranks(base, ["__x", "__y"], ["__rx", "__ry"], by,
+                       dist, buckets)
     d = F.col
 
     def dsum(expr):
@@ -1284,16 +1286,13 @@ def spearman_corr(df: DataFrame, x_col: str, y_col: str,
         # would pass bigint near n≈1.3M
         return F.sum(expr.cast("decimal(38,0)"))
 
-    aggs = [
+    g = ranked.groupBy(*[F.col(c) for c in by]).agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
         F.sum("__rx").cast("decimal(38,0)").alias("__sx"),
         F.sum("__ry").cast("decimal(38,0)").alias("__sy"),
         dsum(d("__rx") * d("__ry")).alias("__sxy"),
         dsum(d("__rx") * d("__rx")).alias("__sxx"),
-        dsum(d("__ry") * d("__ry")).alias("__syy"),
-    ]
-    g = (ranked.groupBy(*[F.col(c) for c in by]).agg(*aggs)
-         if by else ranked.agg(*aggs))
+        dsum(d("__ry") * d("__ry")).alias("__syy"))
     nn = d("n").cast("double")
     sx, sy = d("__sx").cast("double"), d("__sy").cast("double")
     cov = nn * d("__sxy").cast("double") - sx * sy
@@ -1322,29 +1321,28 @@ def _slog_bucket(v, mn, mx, nb: int):
     (``slog(x) = sign(x)·log1p(|x|)``) between the per-column slog
     min/max ``mn``/``mx`` (columns from a broadcast one-row
     aggregate). A pure function of the value — equal values always
-    share a bucket and ids are non-decreasing in ``v`` — which is the
-    ONLY property the exact rank/cumulative algebra downstream needs
-    (the same contract the old approx_percentile boundaries
-    satisfied); bucket placement never changes results, only balance.
-    Replacing the percentile sketch with this expression removes the
-    boundary-scan ACTION entirely (guide §2.4 — the whole operator
-    becomes one lazy plan), at the cost of equal-log-width instead of
-    equal-frequency balance; ``nb`` runs several× finer than the old
-    boundary count to compensate (empty buckets cost nothing — the
-    offset table only carries non-empty ids).
+    share a bucket and ids are non-decreasing in ``v`` (in Spark's
+    sort order) — which is the ONLY property the exact
+    rank/cumulative algebra downstream needs; bucket placement never
+    changes results, only balance. The expression removes any
+    boundary-scan ACTION (guide §2.4 — the whole operator stays one
+    lazy plan), at the cost of equal-log-width instead of
+    equal-frequency balance; callers run ``nb`` several× finer than a
+    boundary count would be to compensate (empty buckets cost nothing
+    — the offset table only carries non-empty ids).
 
     Edge handling (all monotone-safe): NULL is routed by callers
-    before this; NaN falls through ``greatest/least`` (NaN compares
-    greater than any number) into the TOP bucket, matching its
-    NULLS-excluded sort position; ``-inf`` hits the ``s <= mn``
-    branch → bucket 0; ``+inf`` clamps to the top; a degenerate or
-    unknown span (single value, all-NaN input) collapses to one
-    bucket. Plain arithmetic only — codegen-friendly, no
-    interpreted higher-order functions."""
+    before this; ``-inf`` hits the ``s <= mn`` branch → bucket 0;
+    ``+inf`` clamps to the top; NaN, which Spark sorts above
+    ``+inf``, is sent to the top bucket explicitly (``floor(NaN)``
+    casts to 0); a degenerate or unknown span (single finite value,
+    no finite value) collapses to one bucket. Plain arithmetic only —
+    codegen-friendly, no interpreted higher-order functions."""
     s = F.signum(v) * F.log1p(F.abs(v))
     span = mx - mn
-    raw = F.when(s <= mn, F.lit(0.0)).otherwise(
-        F.floor((s - mn) / span * F.lit(float(nb))))
+    raw = (F.when(s <= mn, F.lit(0.0))
+           .when(F.isnan(s), F.lit(float(nb)))
+           .otherwise(F.floor((s - mn) / span * F.lit(float(nb)))))
     b = F.least(F.lit(float(nb - 1)),
                 F.greatest(F.lit(0.0), raw)).cast("int")
     return F.when(span > F.lit(0.0), b).otherwise(F.lit(0))
@@ -1352,12 +1350,15 @@ def _slog_bucket(v, mn, mx, nb: int):
 
 def _slog_minmax(v, i: int):
     """The two aggregate expressions feeding :func:`_slog_bucket`'s
-    ``mn``/``mx`` for value column ``v`` (double): slog min/max with
-    NaN excluded (a single NaN would otherwise poison ``max`` and
-    collapse every bucket; NaN rows themselves still land in the top
-    bucket by the comparison semantics above)."""
+    ``mn``/``mx`` for value column ``v`` (double): slog min/max over
+    the FINITE values only. A single NaN would poison ``max`` and a
+    single ±inf would make the span infinite — either collapses every
+    finite value into one bucket (ADVICE r15); those rows themselves
+    still land in the end buckets through :func:`_slog_bucket`'s
+    branches."""
     s = F.signum(v) * F.log1p(F.abs(v))
-    s = F.when(F.isnan(v), F.lit(None)).otherwise(s)
+    s = F.when(F.isnan(v) | (F.abs(v) == F.lit(float("inf"))),
+               F.lit(None)).otherwise(s)
     return [F.min(s).alias(f"__mn_{i}"), F.max(s).alias(f"__mx_{i}")]
 
 
@@ -1365,9 +1366,9 @@ def _fanout_if_narrow(df: DataFrame, *key_cols: str) -> DataFrame:
     """Hash-repartition to ``defaultParallelism`` when the plan would
     scan fewer partitions than cores — single-row-group parquet at toy
     scale strands every map-side expression on one task (guide §2.5
-    "input skew"; the q170 bootstrap device, shared by the
-    distributed-twin rank/ECDF operators). Deterministic key hash:
-    retry-safe, no round-robin pre-sort, and every caller computes
+    "input skew"; the q170 bootstrap device, shared by the bucketed
+    rank/ECDF paths). Deterministic key hash: retry-safe, no
+    round-robin pre-sort, and every caller computes
     placement-independent exact aggregates/ranks so results are
     unchanged. At real scale input splits >= cores and this is a
     no-op."""
@@ -1378,402 +1379,149 @@ def _fanout_if_narrow(df: DataFrame, *key_cols: str) -> DataFrame:
     return df
 
 
-def distributed_midrank(df: DataFrame, value_col: str,
-                        by: list[str] | None = None,
-                        buckets: int = 64,
-                        out_col: str = "r2",
-                        tie_col: str | None = None) -> DataFrame:
-    """EXACT doubled midranks with parallelism ``groups × buckets``
-    — the range-partitioned two-pass rank that replaces the
-    one-task-per-group window sort when a FEW huge groups dominate
-    (the scale caveat every rank-window operator in this module
-    shares). Appends ``out_col`` = the doubled midrank
-    ``2·count(v < x) + count(v = x) + 1`` of ``value_col`` within its
-    group (an integer even at tied midranks — the q159 device).
+def _prefix(col: str, wb):
+    """Exclusive prefix sum of ``col`` over the bucket-ordered window
+    ``wb`` — 0 for a group's first bucket."""
+    from pyspark.sql.window import Window
 
-    How (fully lazy — zero internal actions since r15): (1) a
-    deterministic monotone bucket expression (:func:`_slog_bucket`,
-    equal-width in signed-log space between a broadcast one-row
-    min/max aggregate) splits values into ranges — codegen, no UDF,
-    no boundary-scan job; (2) one map-side-combined (group, bucket)
-    count table — TINY — gets prefix-summed by a window over itself
-    and broadcast back as each bucket's rank offset; (3) a window
-    sorted WITHIN (group, bucket) — many-way parallel per group —
-    adds the local cumulative count to the broadcast offset. Equal
-    values always share a bucket (the id is a function of the
-    value), so tie counts stay exact and the result is IDENTICAL to
-    the single-partition window form regardless of bucket placement
-    — the bucketing only affects balance, never ranks.
-
-    NULL contract: NULL ``value_col`` rows are routed to a dedicated
-    bucket ``-1`` that prefix-sums FIRST, so they all share the
-    lowest midrank (tied together) — exactly the single-window form
-    under Spark's default ascending NULLS FIRST ordering. Rows are
-    never dropped and the driver prefix sum never mixes None with
-    int bucket ids.
-
-    ``tie_col``: also emit the per-(group, value) tie count ``t``
-    under that name — it falls out of the rank window's own tie
-    frame for free (equal values share a bucket, so the within-
-    bucket count IS the group-wide count), saving callers that need
-    ties (Dunn) a second full-data window exchange (r15).
-    """
-    return distributed_midrank_multi(df, [value_col], by=by,
-                                     buckets=buckets,
-                                     out_cols=[out_col],
-                                     tie_cols=[tie_col])
+    return F.coalesce(
+        F.sum(col).over(wb.rowsBetween(Window.unboundedPreceding, -1)),
+        F.lit(0)).cast("bigint")
 
 
-def distributed_midrank_multi(df: DataFrame, value_cols: list[str],
-                              by: list[str] | None = None,
-                              buckets: int = 64,
-                              out_cols: list[str] | None = None,
-                              tie_cols: list[str | None] | None = None
-                              ) -> DataFrame:
-    """:func:`distributed_midrank` for SEVERAL value columns in one
-    pass — and, since r15, a FULLY LAZY one: no internal action at
-    all. Bucket ids come from the deterministic :func:`_slog_bucket`
-    expression (bounds = one broadcast one-row slog min/max aggregate
-    instead of an ``approx_percentile`` collect), and the rank
-    offsets come from a prefix-sum window over the tiny per-(group,
-    bucket) count table, broadcast back (the ``bh_fdr_distributed``
-    idiom) instead of a driver collect + ``createDataFrame``. The
-    caller's single action therefore executes the whole rank — the
-    old form paid two extra driver round-trip jobs per operator
-    (guide §2.4/§5). Output and NULL contract are identical to the
-    boundary-scan form by construction: bucket placement never
-    affects midranks (equal values share a bucket, ids are monotone
-    in the value), only balance — see :func:`_slog_bucket` for the
-    balance trade-off.
+def _bucket_offsets(df: DataFrame, value_cols: list[str],
+                    by: list[str], buckets: int, aggs: list,
+                    offsets, then=None,
+                    bounds: DataFrame | None = None) -> DataFrame:
+    """The bucketed device behind every rank/ECDF operator's
+    ``distributed=True`` path — fully lazy, no internal action:
 
-    Input persistence: the plan still references the input three
-    times (bounds aggregate, count table, final join); it is fanned
-    out and persisted here unless the CALLER already persisted it
-    (``_is_persisted``) — the tie-grain callers (Mann-Whitney,
-    Kruskal-Wallis, Dunn) persist base themselves so their grain
-    aggregation shares the same cache entry."""
+    1. one broadcast one-row slog min/max aggregate (over ``bounds``,
+       default ``df``) tags each row with a deterministic monotone
+       bucket id ``__bkt_i`` per value column (:func:`_slog_bucket`;
+       NULL → bucket -1, which sorts first);
+    2. ``aggs`` summarize each (``by`` group, bucket) — a TINY table,
+       one union across the value columns;
+    3. ``offsets(wb, wg)`` — columns over that table, ``wb`` ordered by
+       bucket within the group (see :func:`_prefix`), ``wg`` the whole
+       group — are broadcast back onto every row of the bucket. With
+       several value columns the SAME broadcast serves each column's
+       join (exchange reuse builds it once), and ``then(rows, i)`` runs
+       right after column ``i``'s join.
+
+    Equal values always share a bucket and ids are monotone in the
+    value, so anything cumulative over the value axis computed as
+    offset + within-(group, bucket) window is placement-invariant:
+    ``buckets`` sets balance, never results."""
     from pyspark.sql.functions import broadcast
     from pyspark.sql.window import Window
 
-    from .cache import operator_persist
+    from .fold import fold_scalars
 
     if buckets < 2:
         raise ValueError("buckets must be >= 2")
-    by = list(by or [])
-    value_cols = list(value_cols)
-    out_cols = list(out_cols or [f"r2_{c}" for c in value_cols])
-    if len(out_cols) != len(value_cols):
-        raise ValueError("out_cols must match value_cols")
-    tie_cols = list(tie_cols or [None] * len(value_cols))
-    if len(tie_cols) != len(value_cols):
-        raise ValueError("tie_cols must match value_cols")
-    if not _is_persisted(df):
-        df = operator_persist(_fanout_if_narrow(df, *value_cols))
-    # finer than the old boundary count: empty buckets are free and
-    # the count table stays bounded by groups × (non-empty ids)
+    # finer than a boundary count would be: empty buckets are free and
+    # the offset table stays bounded by groups × (non-empty ids)
     nb = int(buckets) * 8
-    mm_aggs = []
-    for i, c in enumerate(value_cols):
-        mm_aggs.extend(_slog_minmax(F.col(c).cast("double"), i))
-    tagged = df.crossJoin(broadcast(df.agg(*mm_aggs)))
+    mm = [e for i, c in enumerate(value_cols)
+          for e in _slog_minmax(F.col(c).cast("double"), i)]
+    rows = fold_scalars(df, (df if bounds is None else bounds).agg(*mm))
     for i, c in enumerate(value_cols):
         v = F.col(c)
         bucket = _slog_bucket(v.cast("double"), F.col(f"__mn_{i}"),
                               F.col(f"__mx_{i}"), nb)
-        # NULL values get the dedicated -1 bucket that prefix-sums
-        # FIRST (NULLS FIRST parity with the window form)
-        bucket = F.when(v.isNull(), F.lit(-1)).otherwise(bucket)
-        tagged = tagged.withColumn(f"__bkt_{i}", bucket)
-    tagged = tagged.drop(*[f"__mn_{i}" for i in range(len(value_cols))],
-                         *[f"__mx_{i}" for i in range(len(value_cols))])
-    # ONE union pass builds every column's (group, bucket) counts (the
-    # old collect's union job, kept as a subtree), one window prefix-
-    # sums them into offsets, and the SAME broadcast subtree serves
-    # every column's join (identical plan → exchange reuse builds it
-    # once; the per-column __which equality rides the join condition)
+        rows = rows.withColumn(
+            f"__bkt_{i}", F.when(v.isNull(), F.lit(-1)).otherwise(bucket))
+    rows = rows.drop(*[f"__m{x}_{i}" for x in "nx"
+                       for i in range(len(value_cols))])
+    which = ["__which"] if len(value_cols) > 1 else []
+    keys = which + [f"__g_{g}" for g in by]
     counts = None
     for i in range(len(value_cols)):
-        part = tagged.groupBy(
-            *[F.col(g).alias(f"__g_{g}") for g in by],
-            F.col(f"__bkt_{i}").alias("__b2")).agg(
-            F.count(F.lit(1)).cast("bigint").alias("__cnt")) \
-            .withColumn("__which", F.lit(i))
+        part = rows.groupBy(*[F.col(g).alias(f"__g_{g}") for g in by],
+                            F.col(f"__bkt_{i}").alias("__b2")).agg(*aggs)
+        if which:
+            part = part.withColumn("__which", F.lit(i))
         counts = part if counts is None else counts.unionByName(part)
-    woff = (Window.partitionBy("__which",
-                               *[f"__g_{g}" for g in by])
-            .orderBy(F.col("__b2").asc())
-            .rowsBetween(Window.unboundedPreceding, -1))
-    off_all = counts.select(
-        "__which", *[F.col(f"__g_{g}") for g in by], "__b2",
-        F.coalesce(F.sum("__cnt").over(woff), F.lit(0))
-         .cast("bigint").alias("__off"))
-    joined = tagged
-    for i, (c, oc) in enumerate(zip(value_cols, out_cols)):
-        cond = (F.col(f"__bkt_{i}") == F.col("__b2")) \
-            & (F.col("__which") == F.lit(i))
+    wg = Window.partitionBy(*keys)
+    offs = counts.select(*keys, "__b2",
+                         *offsets(wg.orderBy(F.col("__b2").asc()), wg))
+    for i in range(len(value_cols)):
+        cond = F.col(f"__bkt_{i}") == F.col("__b2")
+        if which:
+            cond = cond & (F.col("__which") == F.lit(i))
         for g in by:
             cond = cond & F.col(g).eqNullSafe(F.col(f"__g_{g}"))
-        joined = joined.join(broadcast(off_all), cond) \
-            .drop("__b2", "__which", *[f"__g_{g}" for g in by])
-        v = F.col(c)
-        wo = Window.partitionBy(*by, f"__bkt_{i}").orderBy(v) \
-            .rangeBetween(Window.unboundedPreceding, 0)
-        wt = Window.partitionBy(*by, f"__bkt_{i}", c)
-        cum_le = F.count(F.lit(1)).over(wo)
-        t = F.count(F.lit(1)).over(wt)
-        r2 = (F.lit(2) * (F.col("__off") + cum_le - t) + t
-              + F.lit(1)).cast("bigint")
-        joined = joined.withColumn(oc, r2)
-        if tie_cols[i]:
-            # the within-bucket tie frame IS the group-wide tie count
-            # (equal values share a bucket) — free for callers that
-            # need it (see distributed_midrank docstring)
-            joined = joined.withColumn(tie_cols[i], t.cast("bigint"))
-        joined = joined.drop(f"__bkt_{i}", "__off")
-    return joined
+        rows = rows.join(broadcast(offs), cond).drop("__b2", *keys)
+        if then is not None:
+            rows = then(rows, i)
+    return rows
 
 
-def spearman_corr_distributed(df: DataFrame, x_col: str, y_col: str,
-                              by: list[str] | None = None,
-                              buckets: int = 64) -> DataFrame:
-    """:func:`spearman_corr` on the :func:`distributed_midrank` scale
-    path: identical output (exact midranks either way), but each
-    variable's rank pass runs ``groups × buckets``-way parallel
-    instead of one task per group — the variant for a few huge groups
-    (the q24-bruteforce / q25-LSH two-path convention). Costs two
-    bounded driver collects (boundaries + bucket offsets).
-    """
-    by = list(by or [])
-    base = df.where(F.col(x_col).isNotNull()
-                    & F.col(y_col).isNotNull()).select(
-        *[F.col(c) for c in by],
-        F.col(x_col).alias("__x"), F.col(y_col).alias("__y"))
-    ranked = distributed_midrank_multi(
-        base, ["__x", "__y"], by=by, buckets=buckets,
-        out_cols=["__rx", "__ry"])
-    d = F.col
+def _midranks(df: DataFrame, value_cols: list[str], out_cols: list[str],
+              by: list[str], distributed: bool, buckets: int = 64,
+              tie_cols: list[str | None] | None = None) -> DataFrame:
+    """Append the EXACT doubled midrank
+    ``r2 = 2·count(v < x) + count(v = x) + 1`` of each
+    ``value_cols[i]`` within its ``by`` group as ``out_cols[i]`` (an
+    integer even at tied midranks — the q159 device), and the tie
+    count ``t = count(v = x)`` as ``tie_cols[i]`` where one is named.
+    NULL values tie together at the lowest midrank (Spark's ascending
+    NULLS FIRST) and no row is dropped, on either device.
 
-    def dsum(expr):
-        return F.sum(expr.cast("decimal(38,0)"))
-
-    aggs = [
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.sum("__rx").cast("decimal(38,0)").alias("__sx"),
-        F.sum("__ry").cast("decimal(38,0)").alias("__sy"),
-        dsum(d("__rx") * d("__ry")).alias("__sxy"),
-        dsum(d("__rx") * d("__rx")).alias("__sxx"),
-        dsum(d("__ry") * d("__ry")).alias("__syy"),
-    ]
-    g = (ranked.groupBy(*[F.col(c) for c in by]).agg(*aggs)
-         if by else ranked.agg(*aggs))
-    nn = d("n").cast("double")
-    sx, sy = d("__sx").cast("double"), d("__sy").cast("double")
-    cov = nn * d("__sxy").cast("double") - sx * sy
-    vx = nn * d("__sxx").cast("double") - sx * sx
-    vy = nn * d("__syy").cast("double") - sy * sy
-    return g.select(
-        *[F.col(c) for c in by], "n",
-        F.when((vx > 0) & (vy > 0),
-               cov / (F.sqrt(vx) * F.sqrt(vy))).alias("rho"))
-
-
-def mann_whitney_u_distributed(df: DataFrame, value_col: str,
-                               sample_col: str, a, b,
-                               by: list[str] | None = None,
-                               buckets: int = 64) -> DataFrame:
-    """:func:`mann_whitney_u` on the :func:`distributed_midrank`
-    scale path: IDENTICAL output (doubled midranks are exact either
-    way — same u_a, z, tie correction), but ranking runs
-    ``groups × buckets``-way parallel instead of the original's one
-    ordered window task per group — the variant for a FEW huge
-    groups, where even the (group, value) grain is large (continuous
-    scores, q167's AUC device). The midrank pass is fully lazy (no
-    internal actions); the tie term is one extra grain aggregation
-    over the SAME persisted base (persisted here, in the caller, so
-    the grain scan shares the cache — ADVICE r14).
-
-    Scale shape: rows (not the grain) carry through
-    :func:`distributed_midrank`; the rank-sum aggregation is
-    map-side combined (shuffle bounded by group count); the tie term
-    ``Σ(t³−t)`` comes from a separate map-side-combined (group,
-    value) grain aggregation, broadcast-joined back (group-count
-    rows). No per-group single-task sort anywhere.
-    """
-    from pyspark.sql.functions import broadcast
-
-    from .cache import operator_persist
-    from .fold import fold_scalars
-
-    by = list(by or [])
-    s = F.col(sample_col)
-    base = df.where(F.col(value_col).isNotNull()
-                    & s.isin(a, b)).select(
-        *[F.col(c) for c in by],
-        F.col(value_col).alias("__v"),
-        (s == a).cast("bigint").alias("__a"))
-    # persist HERE, not inside the midrank (which skips persisted
-    # inputs): the tie-grain aggregation below then reads the same
-    # cache entry instead of re-executing the upstream lineage on an
-    # un-fanned plan (ADVICE r14, the kruskal grain_src finding)
-    base = operator_persist(_fanout_if_narrow(base, "__v"))
-    ranked = distributed_midrank(base, "__v", by=by,
-                                 buckets=buckets, out_col="__r2")
-    main = [
-        F.sum("__a").cast("bigint").alias("n_a"),
-        F.sum(F.lit(1) - F.col("__a")).cast("bigint").alias("n_b"),
-        F.sum(F.col("__a") * F.col("__r2")).cast("bigint")
-         .alias("__ra2"),
-    ]
-    g = (ranked.groupBy(*[F.col(c) for c in by]).agg(*main)
-         if by else ranked.agg(*main))
-    t = F.col("__t")
-    tie_agg = F.sum(t * t * t - t).cast("bigint").alias("__ties")
-    grain = base.groupBy(*[F.col(c) for c in by], F.col("__v")).agg(
-        F.count("*").cast("bigint").alias("__t"))
-    if by:
-        ties = grain.groupBy(
-            *[F.col(c).alias(f"__g_{c}") for c in by]).agg(tie_agg)
-        cond = None
-        for c in by:
-            eq = F.col(c).eqNullSafe(F.col(f"__g_{c}"))
-            cond = eq if cond is None else (cond & eq)
-        g = g.join(broadcast(ties), cond) \
-             .drop(*[f"__g_{c}" for c in by])
-    else:
-        g = fold_scalars(g, grain.agg(tie_agg))
-    na = F.col("n_a").cast("double")
-    nb = F.col("n_b").cast("double")
-    n = na + nb
-    u = ((F.col("__ra2") - F.col("n_a") * (F.col("n_a") + F.lit(1)))
-         .cast("double") / F.lit(2.0))
-    var = (na * nb / F.lit(12.0)
-           * ((n + F.lit(1.0))
-              - F.col("__ties").cast("double")
-              / (n * (n - F.lit(1.0)))))
-    z = F.when(var > 0, (u - na * nb / F.lit(2.0)) / F.sqrt(var))
-    return g.select(
-        *[F.col(c) for c in by], "n_a", "n_b",
-        u.alias("u_a"), z.alias("z"))
-
-
-def bh_fdr_distributed(df: DataFrame, p_col: str,
-                       alpha: float = 0.05,
-                       family_cols: list[str] | None = None,
-                       tiebreak_cols: list[str] | None = None,
-                       buckets: int = 64) -> DataFrame:
-    """:func:`bh_fdr` on the range-partitioned scale path: IDENTICAL
-    output (p_rank, p_adj, reject — including the tied-p sharing and
-    NULL-p ordering), but the ordinal rank and the reverse running
-    min run ``families × buckets``-way parallel instead of one
-    ordered window task per family — for a genuinely huge hypothesis
-    family (per-feature×segment batteries), where :func:`bh_fdr`'s
-    bounded-grain assumption breaks.
-
-    How (all declarative — zero internal actions): (1) the
-    deterministic :func:`_slog_bucket` expression buckets ``p``
-    (NULL p → dedicated lowest bucket, matching the window form's
-    NULLS-FIRST rank / NULLS-LAST running min exactly); (2) the per-(family,
-    bucket) count table — TINY — gets prefix-summed by a window over
-    itself and broadcast back: ordinal ``p_rank`` = offset + local
-    row_number; (3) the BH candidate ``m·p/rank`` suffix-min splits
-    into a within-bucket running min plus a broadcast per-bucket
-    suffix-min over the tiny table (strictly-later buckets), and
-    ``least`` (NULL-skipping) recombines them. Ties of p never span
-    buckets (the bucket id is a function of p), and the max-rank tie
-    candidate is in every tied row's suffix, so tied rows share
-    their adjusted value exactly as the original's RANGE frame.
-    """
-    if not (0.0 < alpha < 1.0):
-        raise ValueError("alpha must be in (0, 1)")
-    if buckets < 2:
-        raise ValueError("buckets must be >= 2")
-    from pyspark.sql.functions import broadcast
+    Window device (``distributed=False``): RANGE-frame cumulative
+    counts over the ``by`` partition — one ordered task per group.
+    Bucketed device (``distributed=True``, the few-huge-groups shape):
+    :func:`_bucket_offsets` gives each row its bucket's prefix count
+    and the same windows run WITHIN (group, bucket) — groups ×
+    ``buckets`` parallel. Equal values share a bucket, so the
+    within-bucket tie frame IS the group-wide tie count and the
+    output is identical. The bucketed plan reads its input three
+    times, so the input is fanned out and persisted here unless the
+    caller already persisted it (``_is_persisted``) — the tie-grain
+    callers (Mann-Whitney, Kruskal-Wallis) persist their base
+    themselves so their grain aggregation reads the same cache entry
+    (ADVICE r14)."""
     from pyspark.sql.window import Window
 
     from .cache import operator_persist
-    from .fold import fold_scalars
 
-    # the hypothesis table is tiny BY CONTRACT (one row per test) but
-    # its upstream plan can be arbitrarily expensive (q183 feeds the
-    # full per-nation KS pass): without a persist that upstream
-    # re-executes once for the boundary scan and 3-4x more inside the
-    # final plan (tagged appears under the offset broadcast, the rank
-    # join, and both suffix-min subtrees) — measured 3x q183 wall.
-    df = operator_persist(df)
-    fam = list(family_cols or [])
-    tb = [F.col(c) for c in (tiebreak_cols or [])]
-    out_cols = list(df.columns)
-    p = F.col(p_col).cast("double")
-    if fam:
-        wm = Window.partitionBy(*fam)
-        base = df.withColumn("__m", F.count("*").over(wm))
-    else:
-        base = fold_scalars(
-            df, df.agg(F.count("*").cast("bigint").alias("__m")))
-    # lazy bucket ids since r15 (the distributed_midrank_multi
-    # rework): the deterministic slog-width expression over a
-    # broadcast one-row min/max replaces the approx_percentile
-    # boundary-scan JOB — this operator now runs zero internal
-    # actions; ranks/suffix-mins are bucket-placement-invariant
-    # (ties of p never span buckets) so the output is unchanged.
-    nb = int(buckets) * 8
-    mm = df.agg(*_slog_minmax(F.col(p_col).cast("double"), 0))
-    bucket = _slog_bucket(p, F.col("__mn_0"), F.col("__mx_0"), nb)
-    bucket = F.when(p.isNull(), F.lit(-1)).otherwise(bucket)
-    tagged = base.crossJoin(broadcast(mm)) \
-        .withColumn("__bkt", bucket).drop("__mn_0", "__mx_0")
-    gsel = [F.col(c).alias(f"__g_{c}") for c in fam]
-    counts = tagged.groupBy(*gsel,
-                            F.col("__bkt").alias("__b2")).agg(
-        F.count("*").cast("bigint").alias("__cnt"))
-    woff = (Window.partitionBy(*[f"__g_{c}" for c in fam])
-            .orderBy(F.col("__b2").asc())
-            .rowsBetween(Window.unboundedPreceding, -1))
-    offs = counts.select(
-        *[F.col(f"__g_{c}") for c in fam], "__b2",
-        F.coalesce(F.sum("__cnt").over(woff), F.lit(0))
-         .cast("bigint").alias("__off"))
-    cond = F.col("__bkt") == F.col("__b2")
-    for c in fam:
-        cond = cond & F.col(c).eqNullSafe(F.col(f"__g_{c}"))
-    joined = tagged.join(broadcast(offs), cond) \
-        .drop("__b2", *[f"__g_{c}" for c in fam])
-    wrn = (Window.partitionBy(*fam, "__bkt")
-           .orderBy(p.asc(), *tb))
-    ranked = joined.withColumn(
-        "p_rank", (F.col("__off")
-                   + F.row_number().over(wrn)).cast("bigint"))
-    cand = (F.col("__m").cast("double") * p
-            / F.col("p_rank").cast("double"))
-    ranked = ranked.withColumn("__cand", cand)
-    wsuf = (Window.partitionBy(*fam, "__bkt")
-            .orderBy(F.col("p_rank").desc())
-            .rowsBetween(Window.unboundedPreceding, 0))
-    ranked = ranked.withColumn("__sin", F.min("__cand").over(wsuf))
-    bmin = ranked.groupBy(*gsel,
-                          F.col("__bkt").alias("__b2")).agg(
-        F.min("__cand").alias("__bmin"))
-    wb = (Window.partitionBy(*[f"__g_{c}" for c in fam])
-          .orderBy(F.col("__b2").desc())
-          .rowsBetween(Window.unboundedPreceding, -1))
-    beyond = bmin.select(
-        *[F.col(f"__g_{c}") for c in fam], "__b2",
-        F.min("__bmin").over(wb).alias("__beyond"))
-    cond2 = F.col("__bkt") == F.col("__b2")
-    for c in fam:
-        cond2 = cond2 & F.col(c).eqNullSafe(F.col(f"__g_{c}"))
-    out = ranked.join(broadcast(beyond), cond2)
-    # least() skips NULLs: a last-bucket row (no later bucket) and a
-    # NULL-p row (NULL candidate) both resolve correctly
-    p_adj = F.least(F.col("__sin"), F.col("__beyond"), F.lit(1.0))
-    return out.withColumn("p_adj", p_adj).withColumn(
-        "reject", F.col("p_adj") <= F.lit(float(alpha))).select(
-        *out_cols, "p_rank", "p_adj", "reject")
+    tie_cols = list(tie_cols or [None] * len(value_cols))
+
+    def rank(rows, i, part, off=None):
+        c = value_cols[i]
+        wo = (Window.partitionBy(*part).orderBy(c)
+              .rangeBetween(Window.unboundedPreceding, 0))
+        cum_le = F.count(F.lit(1)).over(wo)   # RANGE: includes peers
+        t = F.count(F.lit(1)).over(Window.partitionBy(*part, c))
+        lt = cum_le - t if off is None else off + cum_le - t
+        rows = rows.withColumn(
+            out_cols[i], (F.lit(2) * lt + t + F.lit(1)).cast("bigint"))
+        if tie_cols[i]:
+            rows = rows.withColumn(tie_cols[i], t.cast("bigint"))
+        return rows
+
+    def bucketed_rank(rows, i):
+        return rank(rows, i, [*by, f"__bkt_{i}"], F.col("__off")) \
+            .drop(f"__bkt_{i}", "__off")
+
+    if not distributed:
+        for i in range(len(value_cols)):
+            df = rank(df, i, by)
+        return df
+    if not _is_persisted(df):
+        df = operator_persist(_fanout_if_narrow(df, *value_cols))
+    return _bucket_offsets(
+        df, value_cols, by, buckets,
+        [F.count(F.lit(1)).cast("bigint").alias("__cnt")],
+        lambda wb, wg: [_prefix("__cnt", wb).alias("__off")],
+        then=bucketed_rank)
 
 
 def mann_whitney_u(df: DataFrame, value_col: str, sample_col: str,
                    a, b, by: list[str] | None = None,
-                   distributed: bool | None = None) -> DataFrame:
+                   distributed: bool | None = None,
+                   buckets: int = 64) -> DataFrame:
     """Per-group Mann-Whitney U (Wilcoxon rank-sum) test — the
     nonparametric companion to :func:`welch_ttest` when normality is
     off the table: per ``by`` group ``(n_a, n_b, u_a, z)`` with the
@@ -1788,66 +1536,70 @@ def mann_whitney_u(df: DataFrame, value_col: str, sample_col: str,
     row-local — bit-identical across engines, no float-sum-order
     dependence.
 
-    Scale shape: the input collapses to the (group, value) grain
-    first (one map-side-combined aggregation — shuffle bounded by
-    distinct values per group, the q114/ks_test post-aggregation
-    pattern); ONE group-partitioned ordered window over that grain
-    assigns midranks; one grouped aggregation finishes. Designed for
-    discrete/bucketed value grains (counts, quantities, buckets) —
-    bucket continuous values upstream.
-
-    ``distributed=None`` (default) auto-dispatches: when Catalyst's
-    size estimate says the per-group share exceeds
-    ``RANK_WINDOW_MAX_BYTES`` (few huge groups — the shape where this
-    form's one-sort-task-per-group collapses parallelism), the call
-    routes to :func:`mann_whitney_u_distributed`, whose output is
-    IDENTICAL by contract (driver-hash-proven, q182 vs q159).
-    Explicit True/False forces a path.
-
-    ``distributed=None`` (the default) auto-dispatches: when Catalyst has
-    no size estimate for the input plan, this runs ONE eager ``count()``
-    job to stand in for it (skipped — dispatching distributed — when the
-    plan contains Python-UDF stages that would be expensive to re-run).
-    Pass ``distributed=True/False`` to keep the call fully lazy.
+    Scale shape, two devices with IDENTICAL output (driver-hash-proven,
+    q182 vs q159). Window form: the input collapses to the (group,
+    value) grain first (one map-side-combined aggregation — shuffle
+    bounded by distinct values per group, the q114/ks_test
+    post-aggregation pattern); ONE group-partitioned ordered window
+    over that grain assigns midranks; one grouped aggregation
+    finishes. It suits discrete/bucketed value grains (counts,
+    quantities, buckets). Bucketed form (``distributed=True``, a FEW
+    huge groups, e.g. continuous scores — q167's AUC device): rows
+    carry :func:`_midranks`' bucketed doubled ranks (groups ×
+    ``buckets`` parallel) into a map-side-combined rank-sum
+    aggregation, and the tie term comes from a separate (group, value)
+    grain aggregation over the SAME persisted base, broadcast back
+    (ADVICE r14). ``distributed=None`` (default) picks the bucketed
+    form when Catalyst's per-group share exceeds
+    ``RANK_WINDOW_MAX_BYTES`` (:func:`_resolve_rank_path`).
+    Explicit True/False keeps the call lazy; ``None`` on a plan
+    without a size estimate runs one eager ``count()``.
     """
-    by = list(by or [])
-    if _resolve_rank_path(df, by, distributed, "mann_whitney_u"):
-        return mann_whitney_u_distributed(df, value_col, sample_col,
-                                          a, b, by=by)
     from pyspark.sql.window import Window
 
+    from .cache import operator_persist
+
+    by = list(by or [])
+    keys = [F.col(c) for c in by]
     s = F.col(sample_col)
     base = df.where(F.col(value_col).isNotNull()
                     & s.isin(a, b)).select(
-        *[F.col(c) for c in by],
-        F.col(value_col).alias("__v"),
+        *keys, F.col(value_col).alias("__v"),
         (s == a).cast("bigint").alias("__a"))
-    grain = base.groupBy(*[F.col(c) for c in by],
-                         F.col("__v")).agg(
-        F.sum("__a").cast("bigint").alias("__ta"),
-        F.sum(F.lit(1) - F.col("__a")).cast("bigint").alias("__tb"))
-    t = (F.col("__ta") + F.col("__tb")).cast("bigint")
-    w = (Window.partitionBy(*[F.col(c) for c in by])
-         .orderBy("__v").rowsBetween(Window.unboundedPreceding, 0)
-         if by else
-         Window.orderBy("__v").rowsBetween(
-             Window.unboundedPreceding, 0))
-    # doubled midrank for this value: 2*cum_before + t + 1
-    r2 = (F.lit(2) * (F.sum(t).over(w) - t) + t + F.lit(1)) \
-        .cast("bigint")
-    ranked = grain.select(
-        *[F.col(c) for c in by], "__ta", "__tb",
-        t.alias("__t"), r2.alias("__r2"))
-    aggs = [
-        F.sum("__ta").cast("bigint").alias("n_a"),
-        F.sum("__tb").cast("bigint").alias("n_b"),
-        F.sum(F.col("__ta") * F.col("__r2")).cast("bigint")
-         .alias("__ra2"),
-        F.sum(F.col("__t") * F.col("__t") * F.col("__t")
-              - F.col("__t")).cast("bigint").alias("__ties"),
-    ]
-    g = (ranked.groupBy(*[F.col(c) for c in by]).agg(*aggs)
-         if by else ranked.agg(*aggs))
+    if _resolve_rank_path(df, by, distributed, "mann_whitney_u"):
+        base = operator_persist(_fanout_if_narrow(base, "__v"))
+        ranked = _midranks(base, ["__v"], ["__r2"], by, True, buckets)
+        g = ranked.groupBy(*keys).agg(
+            F.sum("__a").cast("bigint").alias("n_a"),
+            F.sum(F.lit(1) - F.col("__a")).cast("bigint").alias("n_b"),
+            F.sum(F.col("__a") * F.col("__r2")).cast("bigint")
+             .alias("__ra2"))
+        t = F.col("__t")
+        grain = base.groupBy(*keys, F.col("__v")).agg(
+            F.count("*").cast("bigint").alias("__t"))
+        g = _attach_group_aggs(
+            g, grain, by,
+            F.sum(t * t * t - t).cast("bigint").alias("__ties"))
+    else:
+        grain = base.groupBy(*keys, F.col("__v")).agg(
+            F.sum("__a").cast("bigint").alias("__ta"),
+            F.sum(F.lit(1) - F.col("__a")).cast("bigint")
+             .alias("__tb"))
+        t = (F.col("__ta") + F.col("__tb")).cast("bigint")
+        w = (Window.partitionBy(*keys).orderBy("__v")
+             .rowsBetween(Window.unboundedPreceding, 0))
+        # doubled midrank for this value: 2*cum_before + t + 1
+        r2 = (F.lit(2) * (F.sum(t).over(w) - t) + t + F.lit(1)) \
+            .cast("bigint")
+        ranked = grain.select(*keys, "__ta", "__tb",
+                              t.alias("__t"), r2.alias("__r2"))
+        g = ranked.groupBy(*keys).agg(
+            F.sum("__ta").cast("bigint").alias("n_a"),
+            F.sum("__tb").cast("bigint").alias("n_b"),
+            F.sum(F.col("__ta") * F.col("__r2")).cast("bigint")
+             .alias("__ra2"),
+            F.sum(F.col("__t") * F.col("__t") * F.col("__t")
+                  - F.col("__t")).cast("bigint").alias("__ties"))
     na = F.col("n_a").cast("double")
     nb = F.col("n_b").cast("double")
     n = na + nb
@@ -1858,15 +1610,14 @@ def mann_whitney_u(df: DataFrame, value_col: str, sample_col: str,
               - F.col("__ties").cast("double")
               / (n * (n - F.lit(1.0)))))
     z = F.when(var > 0, (u - na * nb / F.lit(2.0)) / F.sqrt(var))
-    return g.select(
-        *[F.col(c) for c in by], "n_a", "n_b",
-        u.alias("u_a"), z.alias("z"))
+    return g.select(*keys, "n_a", "n_b", u.alias("u_a"), z.alias("z"))
 
 
 def bh_fdr(df: DataFrame, p_col: str, alpha: float = 0.05,
            family_cols: list[str] | None = None,
            tiebreak_cols: list[str] | None = None,
-           distributed: bool | None = None) -> DataFrame:
+           distributed: bool | None = None,
+           buckets: int = 64) -> DataFrame:
     """Benjamini-Hochberg step-up FDR correction over a family of
     hypotheses (one row per test): appends ``p_rank`` (1 = smallest
     p), ``p_adj`` (the monotone step-up adjusted value
@@ -1874,71 +1625,107 @@ def bh_fdr(df: DataFrame, p_col: str, alpha: float = 0.05,
     (``p_adj <= alpha``) — the multiple-testing gate any per-segment
     test battery (ks_test / welch_ttest / mann_whitney_u over dozens
     of segments) must pass through before anyone acts on a
-    "significant" segment.
+    "significant" segment. ``p_rank`` among tied p is made
+    deterministic by ``tiebreak_cols`` (pass the hypothesis key);
+    NULL p ranks first and gets a NULL ``p_adj``.
 
-    Tied p-values share an adjusted value by construction: the
-    reverse running min runs over a RANGE frame on p, so every tied
-    row sees the full tie group (including the largest rank's
-    ``m*p/j``) — the textbook ``min_{j>=i}`` with ties handled
-    exactly. ``p_rank`` among ties is made deterministic by
-    ``tiebreak_cols`` (pass the hypothesis key).
+    Window form: the hypothesis table is POST-AGGREGATION grain — one
+    row per statistical test, bounded by the segment count — so two
+    ordered windows over the family (rank, then the reverse running
+    min) plus one scalar fold of ``m`` suffice; within
+    ``family_cols`` when given, global otherwise. The reverse running
+    min runs over a RANGE frame on p, so every tied row sees the full
+    tie group (including the largest rank's ``m*p/j``) and tied rows
+    share their adjusted value — the textbook ``min_{j>=i}`` with
+    ties handled exactly.
 
-    Scale shape: the hypothesis table is POST-AGGREGATION grain —
-    one row per statistical test, bounded by the segment count, never
-    by the data the tests were computed from. Two ordered windows
-    over that bounded family (rank, then the reverse running min)
-    and one scalar fold of ``m``; within ``family_cols`` when given,
-    global otherwise. For a genuinely huge hypothesis family
+    Bucketed form (``distributed=True``), for a genuinely huge family
     (per-feature×segment batteries past the bounded-grain
-    assumption), ``distributed=None`` (default) auto-dispatches to
-    :func:`bh_fdr_distributed` (IDENTICAL output — driver-hash-
-    proven, q183 vs q160) when Catalyst's size estimate says the
-    per-family share exceeds ``RANK_WINDOW_MAX_BYTES``; explicit
-    True/False forces a path.
-
-    ``distributed=None`` (the default) auto-dispatches: when Catalyst has
-    no size estimate for the input plan, this runs ONE eager ``count()``
-    job to stand in for it (skipped — dispatching distributed — when the
-    plan contains Python-UDF stages that would be expensive to re-run).
-    Pass ``distributed=True/False`` to keep the call fully lazy.
+    assumption): :func:`_bucket_offsets` buckets p, and ``p_rank`` =
+    broadcast prefix-count offset + row_number within (family,
+    bucket); the suffix min splits into a within-bucket running min
+    plus a broadcast per-bucket suffix min over the tiny table
+    (strictly-later buckets), recombined by a NULL-skipping
+    ``least``. Ties of p never span buckets and the max-rank tie
+    candidate is in every tied row's suffix, so the output is
+    IDENTICAL (driver-hash-proven, q183 vs q160). The input is
+    persisted first: the hypothesis table is tiny but its upstream
+    can be a full test pass (q183's per-nation KS), which the bucketed
+    plan would otherwise re-execute 3-4×. ``distributed=None``
+    (default) picks the bucketed form when Catalyst's per-family share
+    exceeds ``RANK_WINDOW_MAX_BYTES`` (:func:`_resolve_rank_path`).
+    Explicit True/False keeps the call lazy; ``None`` on a plan
+    without a size estimate runs one eager ``count()``.
     """
-    if _resolve_rank_path(df, list(family_cols or []), distributed,
-                          "bh_fdr"):
-        return bh_fdr_distributed(df, p_col, alpha=alpha,
-                                  family_cols=family_cols,
-                                  tiebreak_cols=tiebreak_cols)
     if not (0.0 < alpha < 1.0):
         raise ValueError("alpha must be in (0, 1)")
+    from pyspark.sql.functions import broadcast
     from pyspark.sql.window import Window
 
+    from .cache import operator_persist
     from .fold import fold_scalars
 
     fam = list(family_cols or [])
+    dist = _resolve_rank_path(df, fam, distributed, "bh_fdr")
+    if dist:
+        df = operator_persist(df)
     tb = [F.col(c) for c in (tiebreak_cols or [])]
+    out_cols = list(df.columns)
     p = F.col(p_col).cast("double")
     if fam:
-        wm = Window.partitionBy(*fam)
-        m = F.count("*").over(wm)
-        base = df.withColumn("__m", m)
+        base = df.withColumn("__m", F.count("*").over(
+            Window.partitionBy(*fam)))
     else:
         base = fold_scalars(
             df, df.agg(F.count("*").cast("bigint").alias("__m")))
-    wa = (Window.partitionBy(*fam).orderBy(p.asc(), *tb)
-          if fam else Window.orderBy(p.asc(), *tb))
-    # RANGE frame: every member of a p-tie group shares the same
-    # frame, so tied rows get an identical adjusted value
-    wd = (Window.partitionBy(*fam).orderBy(p.desc())
-          if fam else Window.orderBy(p.desc())) \
-        .rangeBetween(Window.unboundedPreceding, 0)
-    ranked = base.withColumn(
-        "p_rank", F.row_number().over(wa).cast("bigint"))
-    adj = F.least(
-        F.min(F.col("__m").cast("double") * p
-              / F.col("p_rank").cast("double")).over(wd),
-        F.lit(1.0))
-    out = ranked.withColumn("p_adj", adj).withColumn(
-        "reject", F.col("p_adj") <= F.lit(float(alpha)))
-    return out.drop("__m")
+    cand = (F.col("__m").cast("double") * p
+            / F.col("p_rank").cast("double"))
+    if not dist:
+        wa = Window.partitionBy(*fam).orderBy(p.asc(), *tb)
+        # RANGE frame: every member of a p-tie group shares the same
+        # frame, so tied rows get an identical adjusted value
+        wd = (Window.partitionBy(*fam).orderBy(p.desc())
+              .rangeBetween(Window.unboundedPreceding, 0))
+        out = base.withColumn(
+            "p_rank", F.row_number().over(wa).cast("bigint")) \
+            .withColumn("p_adj", F.least(F.min(cand).over(wd),
+                                         F.lit(1.0)))
+    else:
+        ranked = _bucket_offsets(
+            base, [p_col], fam, buckets,
+            [F.count("*").cast("bigint").alias("__cnt")],
+            lambda wb, wg: [_prefix("__cnt", wb).alias("__off")],
+            bounds=df)
+        wrn = Window.partitionBy(*fam, "__bkt_0").orderBy(p.asc(), *tb)
+        ranked = ranked.withColumn(
+            "p_rank", (F.col("__off")
+                       + F.row_number().over(wrn)).cast("bigint")) \
+            .withColumn("__cand", cand)
+        wsuf = (Window.partitionBy(*fam, "__bkt_0")
+                .orderBy(F.col("p_rank").desc())
+                .rowsBetween(Window.unboundedPreceding, 0))
+        ranked = ranked.withColumn("__sin", F.min("__cand").over(wsuf))
+        gsel = [F.col(c).alias(f"__g_{c}") for c in fam]
+        bmin = ranked.groupBy(*gsel,
+                              F.col("__bkt_0").alias("__b2")).agg(
+            F.min("__cand").alias("__bmin"))
+        wb = (Window.partitionBy(*[f"__g_{c}" for c in fam])
+              .orderBy(F.col("__b2").desc())
+              .rowsBetween(Window.unboundedPreceding, -1))
+        beyond = bmin.select(
+            *[F.col(f"__g_{c}") for c in fam], "__b2",
+            F.min("__bmin").over(wb).alias("__beyond"))
+        cond = F.col("__bkt_0") == F.col("__b2")
+        for c in fam:
+            cond = cond & F.col(c).eqNullSafe(F.col(f"__g_{c}"))
+        # least() skips NULLs: a last-bucket row (no later bucket) and
+        # a NULL-p row (NULL candidate) both resolve correctly
+        out = ranked.join(broadcast(beyond), cond).withColumn(
+            "p_adj", F.least(F.col("__sin"), F.col("__beyond"),
+                             F.lit(1.0)))
+    return out.withColumn(
+        "reject", F.col("p_adj") <= F.lit(float(alpha))).select(
+        *out_cols, "p_rank", "p_adj", "reject")
 
 
 # Poisson(1) cumulative probabilities (k = 0..8) as repr-exact double
@@ -2076,115 +1863,10 @@ def poisson_bootstrap_ci(df: DataFrame, value_col: str, id_col: str,
         F.when(ln > 0, F.element_at(arr, hi_i)).alias("ci_hi"))
 
 
-def ks_test_distributed(df: DataFrame, group_col: str, value_col: str,
-                        sample_col: str, a, b,
-                        buckets: int = 64) -> DataFrame:
-    """:func:`ks_test` on the range-partitioned scale path: IDENTICAL
-    output (``d_stat``/``d_crit``/``significant`` — exact integer
-    cumulative counts either way), but the ECDF cumulative pass runs
-    ``groups × buckets``-way parallel instead of one ordered window
-    task per group — the variant for a few huge groups (the
-    q180/q182/q183 convention; this closes the rank-window family:
-    every ordered-ECDF operator now has a distributed twin).
-
-    How (the :func:`bh_fdr_distributed` split, fully lazy): (1) the
-    input collapses to the (group, value) grain first
-    (map-side-combined ``(t_a, t_b)`` counts — the
-    :func:`mann_whitney_u` device, so the heavy pass shuffles
-    distinct values, not rows); (2) the deterministic
-    :func:`_slog_bucket` expression buckets the value axis — equal
-    values always share a bucket, so the cumulative count at any
-    value is bucket-split-invariant; (3) the per-(group, bucket)
-    ``(Σt_a, Σt_b)`` table — TINY — prefix-sums by a window over
-    itself into broadcast offsets, and a window WITHIN (group,
-    bucket) adds the local cumulative; (4) ``D`` evaluates row-local
-    from exact bigint cumulatives and one grouped max finishes.
-    Per-group totals ride the same bounded offset row. No internal
-    action anywhere — the caller's one action runs the whole test.
-    Rows with NULL values or labels outside {a, b} are excluded, as
-    in the window form.
-    """
-    from pyspark.sql.functions import broadcast
-    from pyspark.sql.window import Window
-
-    from .cache import operator_persist
-
-    if buckets < 2:
-        raise ValueError("buckets must be >= 2")
-    v = F.col(value_col).cast("double")
-    s = F.col(sample_col)
-    grain = operator_persist(
-        _fanout_if_narrow(
-            df.where(v.isNotNull() & s.isin(a, b)).select(
-                F.col(group_col).alias("__g"), v.alias("__v"),
-                (s == a).cast("bigint").alias("__a")),
-            "__g", "__v")
-        .groupBy("__g", "__v").agg(
-            F.sum("__a").cast("bigint").alias("__ta"),
-            F.sum(F.lit(1) - F.col("__a")).cast("bigint")
-             .alias("__tb")))
-    # fully lazy since r15 (the distributed_midrank_multi rework):
-    # deterministic slog-width bucket ids (no boundary-scan job) and a
-    # prefix-sum window over the tiny count table (no offsets collect)
-    # — the caller's single action executes the whole test. The same
-    # offset row also carries the per-group totals (one more window
-    # frame over the same tiny table), so the separate totals table
-    # and its second broadcast join disappear. Cumulative counts are
-    # bucket-placement-invariant (equal values share a bucket), so
-    # the output is unchanged.
-    nb = int(buckets) * 8
-    mm = grain.agg(*_slog_minmax(F.col("__v"), 0))
-    tagged = grain.crossJoin(broadcast(mm)).withColumn(
-        "__bkt", _slog_bucket(F.col("__v"), F.col("__mn_0"),
-                              F.col("__mx_0"), nb)) \
-        .drop("__mn_0", "__mx_0")
-    counts = tagged.groupBy(
-        F.col("__g").alias("__g2"), F.col("__bkt").alias("__b2")).agg(
-        F.sum("__ta").cast("bigint").alias("__ca"),
-        F.sum("__tb").cast("bigint").alias("__cb"))
-    woff = (Window.partitionBy("__g2").orderBy(F.col("__b2").asc())
-            .rowsBetween(Window.unboundedPreceding, -1))
-    wtot = (Window.partitionBy("__g2")
-            .rowsBetween(Window.unboundedPreceding,
-                         Window.unboundedFollowing))
-    off = counts.select(
-        "__g2", "__b2",
-        F.coalesce(F.sum("__ca").over(woff), F.lit(0))
-         .cast("bigint").alias("__offa"),
-        F.coalesce(F.sum("__cb").over(woff), F.lit(0))
-         .cast("bigint").alias("__offb"),
-        F.sum("__ca").over(wtot).cast("bigint").alias("n_a"),
-        F.sum("__cb").over(wtot).cast("bigint").alias("n_b"))
-    joined = tagged.join(
-        broadcast(off),
-        (F.col("__bkt") == F.col("__b2"))
-        & F.col("__g").eqNullSafe(F.col("__g2"))).drop("__g2", "__b2")
-    wr = (Window.partitionBy("__g", "__bkt").orderBy("__v")
-          .rangeBetween(Window.unboundedPreceding, 0))
-    cum_a = F.col("__offa") + F.sum("__ta").over(wr)
-    cum_b = F.col("__offb") + F.sum("__tb").over(wr)
-    stepped = joined.select(
-            "__g", "n_a", "n_b",
-            F.abs(F.try_divide(cum_a.cast("double"),
-                               F.col("n_a").cast("double"))
-                  - F.try_divide(cum_b.cast("double"),
-                                 F.col("n_b").cast("double")))
-            .alias("__d"))
-    out = (stepped.groupBy(F.col("__g").alias(group_col))
-           .agg(F.min("n_a").alias("n_a"),
-                F.min("n_b").alias("n_b"),
-                F.max("__d").alias("d_stat")))
-    d_crit = 1.358 * F.sqrt(F.try_divide(
-        (F.col("n_a") + F.col("n_b")).cast("double"),
-        (F.col("n_a") * F.col("n_b")).cast("double")))
-    return out.select(
-        group_col, "n_a", "n_b", "d_stat", d_crit.alias("d_crit"),
-        (F.col("d_stat") > d_crit).alias("significant"))
-
-
 def wasserstein_1d(df: DataFrame, group_col: str, value_col: str,
                    sample_col: str, a, b,
-                   distributed: bool | None = None) -> DataFrame:
+                   distributed: bool | None = None,
+                   buckets: int = 64) -> DataFrame:
     """Per-group 1-D Wasserstein-1 (earth mover's) distance between
     two samples — ``(group, n_a, n_b, w1)`` with
     ``W₁ = ∫|F_a − F_b| dx``, the drift MAGNITUDE companion to
@@ -2204,57 +1886,77 @@ def wasserstein_1d(df: DataFrame, group_col: str, value_col: str,
     the sum order is fixed by the grain sort.
 
     Shape: ONE map-side-combined (group, value) grain agg (the
-    ks_test/mann_whitney device), one group-partitioned ordered
-    window pass (cumulatives + lead gap), one grouped sum. Same
-    few-huge-groups caveat as every rank-window op; the grain
-    collapse bounds the window input by distinct values —
-    ``distributed=None`` (default) auto-dispatches to
-    :func:`wasserstein_1d_distributed` (IDENTICAL output on integral
-    values — driver-hash-proven, q190 vs q188 shared oracle) when
-    Catalyst's size estimate says the per-group share exceeds
-    ``RANK_WINDOW_MAX_BYTES``; explicit True/False forces a path.
-
-    ``distributed=None`` (the default) auto-dispatches: when Catalyst has
-    no size estimate for the input plan, this runs ONE eager ``count()``
-    job to stand in for it (skipped — dispatching distributed — when the
-    plan contains Python-UDF stages that would be expensive to re-run).
-    Pass ``distributed=True/False`` to keep the call fully lazy.
+    ks_test/mann_whitney device), one ordered window pass
+    (cumulatives + lead gap), one grouped sum. The window form orders
+    each group in one task. The bucketed form (``distributed=True``,
+    a few huge groups) persists the grain and runs the cumulative pass
+    WITHIN (group, bucket) on :func:`_bucket_offsets`' prefix counts —
+    groups × ``buckets`` parallel; a bucket's last grain point takes
+    its gap from the next bucket's ``min(v)``, carried on the same
+    broadcast offset row (the true global successor: bucket ids are
+    monotone in v and only non-empty buckets exist). Output is
+    IDENTICAL on integral values (driver-hash-proven, q190 vs q188).
+    ``distributed=None`` (default) picks the bucketed form when
+    Catalyst's per-group share exceeds ``RANK_WINDOW_MAX_BYTES``
+    (:func:`_resolve_rank_path`).
+    Explicit True/False keeps the call lazy; ``None`` on a plan
+    without a size estimate runs one eager ``count()``.
     """
     from pyspark.sql.window import Window
 
-    if _resolve_rank_path(df, [group_col], distributed,
-                          "wasserstein_1d"):
-        return wasserstein_1d_distributed(df, group_col, value_col,
-                                          sample_col, a, b)
+    from .cache import operator_persist
+
     v = F.col(value_col)
     s = F.col(sample_col)
     integral = dict(df.select(v.alias("__t")).dtypes)["__t"] in (
         "bigint", "int", "smallint", "tinyint")
-    grain = (df.where(v.isNotNull() & s.isin(a, b)).select(
+    base = df.where(v.isNotNull() & s.isin(a, b)).select(
         F.col(group_col).alias("__g"),
         (v.cast("bigint") if integral else v.cast("double"))
         .alias("__v"),
         (s == a).cast("bigint").alias("__a"))
-        .groupBy("__g", "__v").agg(
-            F.sum("__a").cast("bigint").alias("__ta"),
-            F.sum(F.lit(1) - F.col("__a")).cast("bigint")
-             .alias("__tb")))
-    wr = (Window.partitionBy("__g").orderBy("__v")
-          .rowsBetween(Window.unboundedPreceding, 0))
-    wp = Window.partitionBy("__g")
-    wo = Window.partitionBy("__g").orderBy("__v")
+    dist = _resolve_rank_path(df, [group_col], distributed,
+                              "wasserstein_1d")
+    if dist:
+        base = _fanout_if_narrow(base, "__g", "__v")
+    grain = base.groupBy("__g", "__v").agg(
+        F.sum("__a").cast("bigint").alias("__ta"),
+        F.sum(F.lit(1) - F.col("__a")).cast("bigint").alias("__tb"))
+    if dist:
+        rows = _bucket_offsets(
+            operator_persist(grain), ["__v"], ["__g"], buckets,
+            [F.sum("__ta").cast("bigint").alias("__ca"),
+             F.sum("__tb").cast("bigint").alias("__cb"),
+             F.min("__v").alias("__vmin")],
+            lambda wb, wg: [
+                _prefix("__ca", wb).alias("__offa"),
+                _prefix("__cb", wb).alias("__offb"),
+                F.lead("__vmin").over(wb).alias("__nextv"),
+                F.sum("__ca").over(wg).cast("bigint").alias("n_a"),
+                F.sum("__cb").over(wg).cast("bigint").alias("n_b")])
+        part = ["__g", "__bkt_0"]
+        n_a, n_b = F.col("n_a"), F.col("n_b")
+    else:
+        rows, part = grain, ["__g"]
+        n_a = F.sum("__ta").over(Window.partitionBy("__g"))
+        n_b = F.sum("__tb").over(Window.partitionBy("__g"))
+    wo = Window.partitionBy(*part).orderBy("__v")
+    wr = wo.rowsBetween(Window.unboundedPreceding, 0)
     cum_a = F.sum("__ta").over(wr)
     cum_b = F.sum("__tb").over(wr)
-    n_a = F.sum("__ta").over(wp)
-    n_b = F.sum("__tb").over(wp)
-    gap = F.lead("__v").over(wo) - F.col("__v")
+    nxt = F.lead("__v").over(wo)
+    if dist:
+        cum_a = F.col("__offa") + cum_a
+        cum_b = F.col("__offb") + cum_b
+        nxt = F.coalesce(nxt, F.col("__nextv"))
+    gap = nxt - F.col("__v")
     # products in DECIMAL: cum·n reaches n² — past bigint near n≈3e9
     dec = "decimal(38,0)"
     term = F.abs(cum_a.cast(dec) * n_b.cast(dec)
                  - cum_b.cast(dec) * n_a.cast(dec))
     contrib = (term * gap.cast(dec) if integral else
                term.cast("double") * gap.cast("double"))
-    stepped = grain.select(
+    stepped = rows.select(
         "__g", n_a.alias("__na"), n_b.alias("__nb"),
         F.when(gap.isNotNull(), contrib).alias("__c"))
     out = (stepped.groupBy(F.col("__g").alias(group_col))
@@ -2375,190 +2077,31 @@ def kendall_tau_b(df: DataFrame, x_col: str, y_col: str,
         F.when(den > 0, num / den).alias("tau_b"))
 
 
-def wasserstein_1d_distributed(df: DataFrame, group_col: str,
-                               value_col: str, sample_col: str, a, b,
-                               buckets: int = 64) -> DataFrame:
-    """:func:`wasserstein_1d` on the range-partitioned scale path:
-    IDENTICAL output (the ECDF-gap integral is a finite sum of exact
-    per-grain terms either way), but the cumulative pass runs
-    ``groups × buckets``-way parallel instead of one ordered window
-    task per group — the q187/q180 convention, completing the twin
-    for this round's newest ECDF operator.
-
-    Mechanics beyond :func:`ks_test_distributed`'s offset split: the
-    integral needs each grain point's gap to the NEXT distinct value,
-    which for a bucket's LAST row lives in the next bucket — the
-    bounded per-(group, bucket) table therefore carries each bucket's
-    ``min(v)`` alongside the count offsets, and the seam gap is
-    ``coalesce(lead(v) within bucket, broadcast next-bucket min) − v``
-    (the true global successor: bucket ids are monotone in v, and
-    empty buckets cannot occur — they exist only where some grain row
-    landed). The |cumA·n_b − cumB·n_a| term stays exact
-    bigint/DECIMAL for integral values exactly as the window form.
-    """
+def _attach_group_aggs(g: DataFrame, src: DataFrame, by: list[str],
+                       *aggs) -> DataFrame:
+    """Append the per-``by``-group aggregates ``aggs`` of ``src`` to
+    every row of ``g``: a broadcast join on NULL-safe ``by`` keys (a
+    NULL group key must still find its row), or a scalar fold when
+    ``by`` is empty. The per-group table is bounded by the group
+    count."""
     from pyspark.sql.functions import broadcast
-    from pyspark.sql.window import Window
 
-    from .cache import operator_persist
+    from .fold import fold_scalars
 
-    if buckets < 2:
-        raise ValueError("buckets must be >= 2")
-    v = F.col(value_col)
-    s = F.col(sample_col)
-    integral = dict(df.select(v.alias("__t")).dtypes)["__t"] in (
-        "bigint", "int", "smallint", "tinyint")
-    grain = operator_persist(
-        _fanout_if_narrow(
-            df.where(v.isNotNull() & s.isin(a, b)).select(
-                F.col(group_col).alias("__g"),
-                (v.cast("bigint") if integral else v.cast("double"))
-                .alias("__v"),
-                (s == a).cast("bigint").alias("__a")),
-            "__g", "__v")
-        .groupBy("__g", "__v").agg(
-            F.sum("__a").cast("bigint").alias("__ta"),
-            F.sum(F.lit(1) - F.col("__a")).cast("bigint")
-             .alias("__tb")))
-    # fully lazy since r15 (the distributed_midrank_multi rework): no
-    # boundary-scan job, no offsets collect — bucket ids are the
-    # deterministic slog-width expression and the per-(group, bucket)
-    # table prefix-sums by a window over itself, carrying the count
-    # offsets, the per-group totals AND the next bucket's min(v)
-    # (a lead over the same tiny table) in one broadcast row.
-    nb = int(buckets) * 8
-    mm = grain.agg(*_slog_minmax(F.col("__v").cast("double"), 0))
-    tagged = grain.crossJoin(broadcast(mm)).withColumn(
-        "__bkt", _slog_bucket(F.col("__v").cast("double"),
-                              F.col("__mn_0"), F.col("__mx_0"), nb)) \
-        .drop("__mn_0", "__mx_0")
-    counts = tagged.groupBy(
-        F.col("__g").alias("__g2"), F.col("__bkt").alias("__b2")).agg(
-        F.sum("__ta").cast("bigint").alias("__ca"),
-        F.sum("__tb").cast("bigint").alias("__cb"),
-        F.min("__v").alias("__vmin"))
-    wb = Window.partitionBy("__g2").orderBy(F.col("__b2").asc())
-    woff = wb.rowsBetween(Window.unboundedPreceding, -1)
-    wtot = (Window.partitionBy("__g2")
-            .rowsBetween(Window.unboundedPreceding,
-                         Window.unboundedFollowing))
-    off = counts.select(
-        "__g2", "__b2",
-        F.coalesce(F.sum("__ca").over(woff), F.lit(0))
-         .cast("bigint").alias("__offa"),
-        F.coalesce(F.sum("__cb").over(woff), F.lit(0))
-         .cast("bigint").alias("__offb"),
-        F.lead("__vmin").over(wb).alias("__nextv"),
-        F.sum("__ca").over(wtot).cast("bigint").alias("n_a"),
-        F.sum("__cb").over(wtot).cast("bigint").alias("n_b"))
-    joined = tagged.join(
-        broadcast(off),
-        (F.col("__bkt") == F.col("__b2"))
-        & F.col("__g").eqNullSafe(F.col("__g2"))).drop("__g2", "__b2")
-    wr = (Window.partitionBy("__g", "__bkt").orderBy("__v")
-          .rowsBetween(Window.unboundedPreceding, 0))
-    wo = Window.partitionBy("__g", "__bkt").orderBy("__v")
-    cum_a = F.col("__offa") + F.sum("__ta").over(wr)
-    cum_b = F.col("__offb") + F.sum("__tb").over(wr)
-    gap = F.coalesce(F.lead("__v").over(wo), F.col("__nextv")) \
-        - F.col("__v")
-    dec = "decimal(38,0)"
-    term = F.abs(cum_a.cast(dec) * F.col("n_b").cast(dec)
-                 - cum_b.cast(dec) * F.col("n_a").cast(dec))
-    contrib = (term * gap.cast(dec) if integral else
-               term.cast("double") * gap.cast("double"))
-    stepped = joined.select(
-        "__g", "n_a", "n_b",
-        F.when(gap.isNotNull(), contrib).alias("__c"))
-    out = (stepped.groupBy(F.col("__g").alias(group_col))
-           .agg(F.min("n_a").alias("n_a"),
-                F.min("n_b").alias("n_b"),
-                F.sum("__c").alias("__sum")))
-    return out.select(
-        group_col, "n_a", "n_b",
-        F.try_divide(
-            F.col("__sum").cast("double"),
-            F.col("n_a").cast("double")
-            * F.col("n_b").cast("double")).alias("w1"))
-
-
-def _kw_finish(ranked: DataFrame, by: list[str],
-               grp: str = "__grp", r2: str = "__r2",
-               v: str = "__v",
-               grain_src: DataFrame | None = None) -> DataFrame:
-    """Shared tail of both Kruskal-Wallis paths: given rows carrying
-    the doubled midrank ``r2`` of ``v`` within ``by`` and the level
-    column ``grp``, produce per-``by`` ``(k, n, h)``.
-
-    Determinism across engines: every aggregate is an exact integer
-    (bigint counts, DECIMAL(38,0) doubled-rank sums — ``Σ2r ≤ 2n²``
-    passes bigint near n≈2.1e9 per group) and the one float SUM that
-    the H statistic genuinely needs — ``S = Σ_i R_i²/n_i`` over the
-    k levels — is folded LEFT-TO-RIGHT over the level-sorted array
-    (``aggregate(sort_array(...))``), so the float op order is pinned
-    and the oracle (DuckDB ``list_sum(list(...ORDER BY level))``)
-    adds the same doubles in the same order. Tie term ``Σ(t³−t)``
-    stays bigint (same documented t≈2M-ties-per-value bound as
-    :func:`mann_whitney_u`)."""
-    per_level = [
-        F.count(F.lit(1)).cast("bigint").alias("__ni"),
-        F.sum(F.col(r2).cast("decimal(38,0)")).alias("__rs2"),
-    ]
-    lvl = ranked.groupBy(*[F.col(c) for c in by], F.col(grp)) \
-        .agg(*per_level)
-    # term_i = (R_i)²/n_i = (rs2/2)²/n_i, row-local from exact ints
-    term = (F.col("__rs2").cast("double")
-            * F.col("__rs2").cast("double")
-            / (F.lit(4.0) * F.col("__ni").cast("double")))
-    lvl = lvl.select(
-        *[F.col(c) for c in by],
-        F.struct(F.col(grp).alias("g"),
-                 term.alias("term")).alias("__s"),
-        F.col("__ni"))
-    top = [
-        F.count(F.lit(1)).cast("bigint").alias("k"),
-        F.sum("__ni").cast("bigint").alias("n"),
-        F.aggregate(F.sort_array(F.collect_list("__s")),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x["term"]).alias("__S"),
-    ]
-    g = (lvl.groupBy(*[F.col(c) for c in by]).agg(*top)
-         if by else lvl.agg(*top))
-    # tie correction from the (by, value) grain: Σ(t³ − t). Ranks are
-    # irrelevant to it, so callers pass the PRE-RANK frame as
-    # grain_src — counting `ranked` instead drags the whole rank pass
-    # (window sort, or the midrank bucket join) into this subtree's
-    # broadcast build, re-executing it once per action (identical
-    # counts either way: same rows, keyed by the same (by, v)).
-    tie_agg = F.sum(F.col("__t") * F.col("__t") * F.col("__t")
-                    - F.col("__t")).cast("bigint").alias("__ties")
-    grain = (grain_src if grain_src is not None else ranked) \
-        .groupBy(*[F.col(c) for c in by], F.col(v)).agg(
-        F.count(F.lit(1)).cast("bigint").alias("__t"))
-    if by:
-        from pyspark.sql.functions import broadcast
-        ties = grain.groupBy(
-            *[F.col(c).alias(f"__g_{c}") for c in by]).agg(tie_agg)
-        cond = None
-        for c in by:
-            eq = F.col(c).eqNullSafe(F.col(f"__g_{c}"))
-            cond = eq if cond is None else (cond & eq)
-        g = g.join(broadcast(ties), cond) \
-             .drop(*[f"__g_{c}" for c in by])
-    else:
-        from .fold import fold_scalars
-        g = fold_scalars(g, grain.agg(tie_agg))
-    nd = F.col("n").cast("double")
-    h_raw = (F.lit(12.0) / (nd * (nd + F.lit(1.0))) * F.col("__S")
-             - F.lit(3.0) * (nd + F.lit(1.0)))
-    corr = (F.lit(1.0) - F.col("__ties").cast("double")
-            / (nd * nd * nd - nd))
-    h = F.when((F.col("n") > 1) & (corr > 0), h_raw / corr)
-    return g.select(*[F.col(c) for c in by], "k", "n", h.alias("h"))
+    if not by:
+        return fold_scalars(g, src.agg(*aggs))
+    per = src.groupBy(*[F.col(c).alias(f"__g_{c}") for c in by]).agg(*aggs)
+    cond = None
+    for c in by:
+        eq = F.col(c).eqNullSafe(F.col(f"__g_{c}"))
+        cond = eq if cond is None else (cond & eq)
+    return g.join(broadcast(per), cond).drop(*[f"__g_{c}" for c in by])
 
 
 def kruskal_wallis(df: DataFrame, value_col: str, group_col: str,
                    by: list[str] | None = None,
-                   distributed: bool | None = None) -> DataFrame:
+                   distributed: bool | None = None,
+                   buckets: int = 64) -> DataFrame:
     """Per-``by`` Kruskal-Wallis H test — the k-sample extension of
     :func:`mann_whitney_u` (one-way ANOVA on ranks): for each ``by``
     group, ``(k, n, h)`` where ``k`` is the number of ``group_col``
@@ -2567,79 +2110,74 @@ def kruskal_wallis(df: DataFrame, value_col: str, group_col: str,
     (``T = t³−t`` over tie groups) — asymptotically χ²(k−1) under
     "all k level distributions are equal".
 
-    Determinism: doubled midranks (the q159 device) keep every rank
-    sum an exact integer; the single per-``by`` float sum over the k
-    level terms folds in level-sorted order, so both engines add the
-    same exact-derived doubles in the same order (see
-    :func:`_kw_finish`).
+    Determinism across engines: every aggregate is an exact integer
+    (bigint counts, DECIMAL(38,0) doubled-rank sums — ``Σ2r ≤ 2n²``
+    passes bigint near n≈2.1e9 per group) and the one float SUM that
+    H genuinely needs — ``S = Σ_i R_i²/n_i`` over the k levels — is
+    folded LEFT-TO-RIGHT over the level-sorted array
+    (``aggregate(sort_array(...))``), so the float op order is pinned
+    and the oracle (DuckDB ``list_sum(list(...ORDER BY level))``)
+    adds the same doubles in the same order. Tie term ``Σ(t³−t)``
+    stays bigint (same documented t≈2M-ties-per-value bound as
+    :func:`mann_whitney_u`).
 
-    Scale shape (window path): two ordered windows over the ``by``
-    partition assign doubled midranks on raw rows (the spearman_corr
-    device — no value-grain collapse needed), then two map-side-
-    combined aggregations (levels, then ``by``) whose shuffles are
-    bounded by ``groups × k`` and the (group, value) tie grain.
-    Parallelism equals the ``by``-group count — the shared rank-
-    window caveat — so ``distributed=None`` auto-dispatches to
-    :func:`kruskal_wallis_distributed` (IDENTICAL output) when
-    Catalyst's size estimate says a few huge groups dominate.
-
-    ``distributed=None`` (the default) auto-dispatches: when Catalyst has
-    no size estimate for the input plan, this runs ONE eager ``count()``
-    job to stand in for it (skipped — dispatching distributed — when the
-    plan contains Python-UDF stages that would be expensive to re-run).
-    Pass ``distributed=True/False`` to keep the call fully lazy.
+    Scale shape: :func:`_midranks` assigns doubled midranks on raw
+    rows, then two map-side-combined aggregations (levels, then
+    ``by``) whose shuffles are bounded by ``groups × k`` and the
+    (group, value) tie grain. The window device's parallelism equals
+    the ``by``-group count; ``distributed=True`` ranks groups ×
+    ``buckets`` parallel instead (IDENTICAL output, driver-hash-proven
+    q192 vs q191), reading a base persisted here so the tie grain
+    shares its cache entry (ADVICE r14). ``distributed=None``
+    (default) picks the bucketed device when Catalyst's per-group
+    share exceeds ``RANK_WINDOW_MAX_BYTES`` (:func:`_resolve_rank_path`).
+    Explicit True/False keeps the call lazy; ``None`` on a plan
+    without a size estimate runs one eager ``count()``.
     """
-    from pyspark.sql.window import Window
-
-    by = list(by or [])
-    if _resolve_rank_path(df, by, distributed, "kruskal_wallis"):
-        return kruskal_wallis_distributed(df, value_col, group_col,
-                                          by=by)
-    base = df.where(F.col(value_col).isNotNull()
-                    & F.col(group_col).isNotNull()).select(
-        *[F.col(c) for c in by],
-        F.col(value_col).alias("__v"),
-        F.col(group_col).alias("__grp"))
-    wo = (Window.partitionBy(*by).orderBy("__v")
-          .rangeBetween(Window.unboundedPreceding, 0)
-          if by else
-          Window.orderBy("__v").rangeBetween(
-              Window.unboundedPreceding, 0))
-    wt = (Window.partitionBy(*by, "__v") if by
-          else Window.partitionBy("__v"))
-    cum_le = F.count(F.lit(1)).over(wo)   # RANGE frame includes peers
-    t = F.count(F.lit(1)).over(wt)
-    r2 = (F.lit(2) * (cum_le - t) + t + F.lit(1)).cast("bigint")
-    ranked = base.select(
-        *[F.col(c) for c in by], "__grp", "__v", r2.alias("__r2"))
-    return _kw_finish(ranked, by, grain_src=base)
-
-
-def kruskal_wallis_distributed(df: DataFrame, value_col: str,
-                               group_col: str,
-                               by: list[str] | None = None,
-                               buckets: int = 64) -> DataFrame:
-    """:func:`kruskal_wallis` on the :func:`distributed_midrank`
-    scale path: IDENTICAL output (doubled midranks are exact either
-    way), but ranking runs ``groups × buckets``-way parallel instead
-    of one ordered window task per ``by`` group — the variant for a
-    FEW huge groups. The midrank pass is fully lazy (zero internal
-    actions); everything after the rank is the same exact-integer
-    aggregation tail (:func:`_kw_finish`), whose tie grain reads the
-    base persisted HERE (same cache entry as the rank pass —
-    ADVICE r14)."""
     from .cache import operator_persist
 
     by = list(by or [])
+    keys = [F.col(c) for c in by]
+    dist = _resolve_rank_path(df, by, distributed, "kruskal_wallis")
     base = df.where(F.col(value_col).isNotNull()
                     & F.col(group_col).isNotNull()).select(
-        *[F.col(c) for c in by],
-        F.col(value_col).alias("__v"),
+        *keys, F.col(value_col).alias("__v"),
         F.col(group_col).alias("__grp"))
-    base = operator_persist(_fanout_if_narrow(base, "__v"))
-    ranked = distributed_midrank(base, "__v", by=by,
-                                 buckets=buckets, out_col="__r2")
-    return _kw_finish(ranked, by, grain_src=base)
+    if dist:
+        base = operator_persist(_fanout_if_narrow(base, "__v"))
+    ranked = _midranks(base, ["__v"], ["__r2"], by, dist, buckets)
+    lvl = ranked.groupBy(*keys, F.col("__grp")).agg(
+        F.count(F.lit(1)).cast("bigint").alias("__ni"),
+        F.sum(F.col("__r2").cast("decimal(38,0)")).alias("__rs2"))
+    # term_i = (R_i)²/n_i = (rs2/2)²/n_i, row-local from exact ints
+    term = (F.col("__rs2").cast("double")
+            * F.col("__rs2").cast("double")
+            / (F.lit(4.0) * F.col("__ni").cast("double")))
+    lvl = lvl.select(
+        *keys, F.struct(F.col("__grp").alias("g"),
+                        term.alias("term")).alias("__s"),
+        F.col("__ni"))
+    g = lvl.groupBy(*keys).agg(
+        F.count(F.lit(1)).cast("bigint").alias("k"),
+        F.sum("__ni").cast("bigint").alias("n"),
+        F.aggregate(F.sort_array(F.collect_list("__s")),
+                    F.lit(0.0),
+                    lambda acc, x: acc + x["term"]).alias("__S"))
+    # tie correction Σ(t³ − t) from the PRE-RANK (by, value) grain:
+    # counting `ranked` instead would drag the whole rank pass into
+    # this subtree's broadcast build, re-executing it once per action
+    t = F.col("__t")
+    g = _attach_group_aggs(
+        g, base.groupBy(*keys, F.col("__v")).agg(
+            F.count(F.lit(1)).cast("bigint").alias("__t")),
+        by, F.sum(t * t * t - t).cast("bigint").alias("__ties"))
+    nd = F.col("n").cast("double")
+    h_raw = (F.lit(12.0) / (nd * (nd + F.lit(1.0))) * F.col("__S")
+             - F.lit(3.0) * (nd + F.lit(1.0)))
+    corr = (F.lit(1.0) - F.col("__ties").cast("double")
+            / (nd * nd * nd - nd))
+    h = F.when((F.col("n") > 1) & (corr > 0), h_raw / corr)
+    return g.select(*keys, "k", "n", h.alias("h"))
 
 
 def cramers_v_matrix(df: DataFrame, cols: list[str]) -> DataFrame:
@@ -3054,62 +2592,35 @@ def dunn_test(df: DataFrame, value_col: str, group_col: str,
     expression tree in the oracle); BH runs on the bounded pair
     family.
 
-    Scale shape: the rank pass is the KW window path (one ordered
-    window per ``by`` group over raw rows); everything after is
-    post-aggregation grain - k rows per group, then a k x k/2
-    self-join on the bounded level table. ``distributed=None``
-    (default) auto-dispatches the RANK pass to
-    :func:`distributed_midrank` (groups x buckets parallel,
-    IDENTICAL midranks) when Catalyst's size estimate says a few
-    huge groups dominate - the z/BH stages are grain-bounded either
-    way; explicit True/False forces a path.
-
-    ``distributed=None`` (the default) auto-dispatches: when Catalyst has
-    no size estimate for the input plan, this runs ONE eager ``count()``
-    job to stand in for it (skipped — dispatching distributed — when the
-    plan contains Python-UDF stages that would be expensive to re-run).
-    Pass ``distributed=True/False`` to keep the call fully lazy.
+    Scale shape: the rank pass is :func:`_midranks` over raw rows,
+    with the tie count from the rank's own tie frame; everything after
+    is post-aggregation grain — k rows per group, then a k x k/2
+    self-join on the bounded level table. ``distributed=True`` ranks
+    on the bucketed device (groups × buckets parallel, IDENTICAL
+    midranks — q201 vs q197) instead of one ordered window per ``by``
+    group — the z/BH stages are grain-bounded either way;
+    ``distributed=None`` (default) picks it when Catalyst's per-group
+    share exceeds ``RANK_WINDOW_MAX_BYTES`` (:func:`_resolve_rank_path`).
+    Explicit True/False keeps the call lazy; ``None`` on a plan
+    without a size estimate runs one eager ``count()``.
     """
-    from pyspark.sql.functions import broadcast
-    from pyspark.sql.window import Window
-
     by = list(by or [])
     base = df.where(F.col(value_col).isNotNull()
                     & F.col(group_col).isNotNull()).select(
         *[F.col(c) for c in by],
         F.col(value_col).alias("__v"),
         F.col(group_col).cast("string").alias("__grp"))
-    # the tie contribution is a VALUE-grain window either way
-    # (groups x values parallel - never one task per group)
-    wt = (Window.partitionBy(*by, "__v") if by
-          else Window.partitionBy("__v"))
-    t = F.count(F.lit(1)).over(wt)
-    if _resolve_rank_path(df, by, distributed, "dunn_test"):
-        # few-huge-groups shape: midranks from the groups x buckets
-        # two-pass rank instead of one ordered window per group -
-        # IDENTICAL doubled midranks (the q192 contract). The tie
-        # count rides the midrank's own window frame (tie_col —
-        # equal values share a bucket, so the within-bucket count is
-        # the group-wide count), saving the separate full-data
-        # (by, value) window exchange the old form paid (r15).
-        td = F.col("__t")
-        ranked = distributed_midrank(base, "__v", by=by,
-                                     out_col="__r2",
-                                     tie_col="__t").select(
-            *[F.col(c) for c in by], "__grp", "__r2",
-            (td * td - 1).cast("bigint").alias("__tie1"))
-    else:
-        wo = (Window.partitionBy(*by).orderBy("__v")
-              .rangeBetween(Window.unboundedPreceding, 0)
-              if by else
-              Window.orderBy("__v").rangeBetween(
-                  Window.unboundedPreceding, 0))
-        cum_le = F.count(F.lit(1)).over(wo)
-        r2 = (F.lit(2) * (cum_le - t) + t + F.lit(1)).cast("bigint")
-        ranked = base.select(
-            *[F.col(c) for c in by], "__grp",
-            r2.alias("__r2"),
-            (t * t - 1).cast("bigint").alias("__tie1"))
+    # the tie count rides the rank's own tie frame (a (by, value)
+    # window; on the bucketed device equal values share a bucket, so
+    # the within-bucket count is the group-wide count) — no separate
+    # full-data tie exchange (r15)
+    td = F.col("__t")
+    ranked = _midranks(
+        base, ["__v"], ["__r2"], by,
+        _resolve_rank_path(df, by, distributed, "dunn_test"),
+        tie_cols=["__t"]).select(
+        *[F.col(c) for c in by], "__grp", "__r2",
+        (td * td - 1).cast("bigint").alias("__tie1"))
     # ONE pass over the ranked rows: the family totals (__N, __ties)
     # re-aggregate exactly from the bounded level grain (rows belong
     # to exactly one level, so the integer sums are unchanged) — the
@@ -3126,22 +2637,10 @@ def dunn_test(df: DataFrame, value_col: str, group_col: str,
              F.sum(F.col("__r2").cast("decimal(38,0)"))
               .alias("__rs2"),
              F.sum("__tie1").cast("bigint").alias("__t1")))
-    meta_aggs = [
+    lvl = _attach_group_aggs(
+        lvl, lvl, by,
         F.sum("__ni").cast("bigint").alias("__N"),
-        F.sum("__t1").cast("bigint").alias("__ties"),
-    ]
-    if by:
-        meta = lvl.groupBy(
-            *[F.col(c).alias(f"__g_{c}") for c in by]).agg(*meta_aggs)
-        cond = None
-        for c in by:
-            eq = F.col(c).eqNullSafe(F.col(f"__g_{c}"))
-            cond = eq if cond is None else (cond & eq)
-        lvl = lvl.join(broadcast(meta), cond) \
-            .drop(*[f"__g_{c}" for c in by])
-    else:
-        from .fold import fold_scalars
-        lvl = fold_scalars(lvl, lvl.agg(*meta_aggs))
+        F.sum("__t1").cast("bigint").alias("__ties"))
     left = lvl.select(
         *[F.col(c).alias(f"__l_{c}") for c in by],
         F.col("__grp").alias("lev_a"),

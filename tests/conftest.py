@@ -56,3 +56,23 @@ def sorted_rows(obj):
     """
     rows = [tuple(r) for r in (obj.collect() if hasattr(obj, "collect") else obj)]
     return sorted(rows, key=lambda t: tuple(str(x) for x in t))
+
+
+@pytest.fixture
+def rank_paths(monkeypatch):
+    """Record every rank/ECDF dispatch decision as ``(op, distributed)``
+    — a spy on ``stats._resolve_rank_path``, the one place all
+    rank-family operators choose between the window form and the
+    bucketed device."""
+    from pandas_ai_spark.functions import stats
+
+    calls = []
+    orig = stats._resolve_rank_path
+
+    def spy(df, by, distributed, op):
+        path = orig(df, by, distributed, op)
+        calls.append((op, path))
+        return path
+
+    monkeypatch.setattr(stats, "_resolve_rank_path", spy)
+    return calls

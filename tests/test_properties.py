@@ -136,8 +136,8 @@ def test_quantile_buckets_range_and_cover(spark, vs, k):
 
 
 # ---------------------------------------------------------------------------
-# Round-10 distributed rank-path laws: the _distributed variants must be
-# EXTENSIONALLY EQUAL to their window-form originals on arbitrary input
+# Round-10 bucketed rank-path laws: distributed=True must be
+# EXTENSIONALLY EQUAL to the window form on arbitrary input
 # (ties, NULLs, degenerate groups) — not just on the curated cases.
 # ---------------------------------------------------------------------------
 
@@ -151,13 +151,13 @@ _ranks = st.lists(
 @given(_ranks, st.integers(min_value=2, max_value=5))
 @settings(max_examples=5, deadline=None)
 def test_distributed_midrank_equals_reference(spark, vs, buckets):
-    from pandas_ai_spark.functions.stats import distributed_midrank
+    from pandas_ai_spark.functions.stats import _midranks
 
     df = spark.createDataFrame([("g", v) for v in vs],
                                "g string, v double")
     got = sorted(((r.v, r.r2) for r in
-                  distributed_midrank(df, "v", by=["g"],
-                                      buckets=buckets).collect()),
+                  _midranks(df, ["v"], ["r2"], ["g"], True,
+                            buckets=buckets).collect()),
                  key=lambda t: (t[0] is not None, t[0], t[1]))
     # reference doubled midrank, NULLs tied lowest (NULLS FIRST)
     def r2(x):
@@ -179,16 +179,15 @@ def test_distributed_midrank_equals_reference(spark, vs, buckets):
        st.integers(min_value=2, max_value=4))
 @settings(max_examples=5, deadline=None)
 def test_mann_whitney_distributed_equals_window(spark, rows, buckets):
-    from pandas_ai_spark.functions.stats import (
-        mann_whitney_u, mann_whitney_u_distributed)
+    from pandas_ai_spark.functions.stats import mann_whitney_u
 
     df = spark.createDataFrame(
         [(s, float(v)) for s, v in rows], "s string, v double")
     a = [tuple(r) for r in
          mann_whitney_u(df, "v", "s", "a", "b").collect()]
     b = [tuple(r) for r in
-         mann_whitney_u_distributed(df, "v", "s", "a", "b",
-                                    buckets=buckets).collect()]
+         mann_whitney_u(df, "v", "s", "a", "b", distributed=True,
+                        buckets=buckets).collect()]
     assert a == b
 
 
@@ -197,14 +196,13 @@ def test_mann_whitney_distributed_equals_window(spark, rows, buckets):
        st.integers(min_value=2, max_value=4))
 @settings(max_examples=5, deadline=None)
 def test_bh_fdr_distributed_equals_window(spark, ps, buckets):
-    from pandas_ai_spark.functions.stats import (bh_fdr,
-                                                 bh_fdr_distributed)
+    from pandas_ai_spark.functions.stats import bh_fdr
 
     df = spark.createDataFrame(
         [(i, p) for i, p in enumerate(ps)], "hid long, p double")
     a = sorted(tuple(r) for r in
                bh_fdr(df, "p", tiebreak_cols=["hid"]).collect())
     b = sorted(tuple(r) for r in
-               bh_fdr_distributed(df, "p", tiebreak_cols=["hid"],
-                                  buckets=buckets).collect())
+               bh_fdr(df, "p", tiebreak_cols=["hid"], distributed=True,
+                      buckets=buckets).collect())
     assert a == b

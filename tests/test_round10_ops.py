@@ -1,4 +1,4 @@
-"""Round-10 tests: the four r9 ADVICE regressions (distributed_midrank
+"""Round-10 tests: the four r9 ADVICE regressions (bucketed midrank
 NULLs, conformal_interval fractional y, stateful_reservoir duplicate
 ids, neighborhood_pairs 'id' carry collision) and the round-10
 additions.
@@ -9,38 +9,39 @@ from pyspark.sql import functions as F
 
 
 # ---------------------------------------------------------------------------
-# ADVICE r9: stats.distributed_midrank must survive NULL value_col
+# ADVICE r9: the bucketed midrank (stats._midranks) must survive NULL
+# value_col
 # ---------------------------------------------------------------------------
 
 class TestDistributedMidrankNulls:
     def test_nulls_route_to_lowest_tied_bucket(self, spark):
-        from pandas_ai_spark.functions.stats import distributed_midrank
+        from pandas_ai_spark.functions.stats import _midranks
 
         df = spark.createDataFrame(
             [("g", None), ("g", None), ("g", 1.0), ("g", 1.0),
              ("g", 2.0)],
             "grp: string, v: double")
-        out = {(r.grp, r.v): r.r2 for r in distributed_midrank(
-            df, "v", by=["grp"], buckets=4).collect()}
+        out = {(r.grp, r.v): r.r2 for r in _midranks(
+            df, ["v"], ["r2"], ["grp"], True, buckets=4).collect()}
         # NULLS FIRST parity with the window form: the two NULLs tie
         # at doubled midrank n_null+1=3; then 2*cnt_less+cnt_eq+1
         assert out[("g", None)] == 3
         assert out[("g", 1.0)] == 2 * 2 + 2 + 1
         assert out[("g", 2.0)] == 2 * 4 + 1 + 1
         # no row dropped
-        assert len(distributed_midrank(
-            df, "v", by=["grp"], buckets=4).collect()) == 5
+        assert len(_midranks(
+            df, ["v"], ["r2"], ["grp"], True, buckets=4).collect()) == 5
 
     def test_all_null_group_and_single_distinct_value(self, spark):
-        from pandas_ai_spark.functions.stats import distributed_midrank
+        from pandas_ai_spark.functions.stats import _midranks
 
         # <2 distinct boundary values + an all-NULL group used to
         # TypeError in the driver prefix sum (None vs int sort)
         df = spark.createDataFrame(
             [("a", None), ("a", None), ("b", 7.0), ("b", 7.0)],
             "grp: string, v: double")
-        rows = distributed_midrank(df, "v", by=["grp"],
-                                   buckets=8).collect()
+        rows = _midranks(df, ["v"], ["r2"], ["grp"], True,
+                         buckets=8).collect()
         got = {(r.grp, r.v): r.r2 for r in rows}
         assert got[("a", None)] == 3       # two tied NULLs
         assert got[("b", 7.0)] == 3        # two tied values
@@ -199,14 +200,13 @@ class TestCorpusProfileExact:
 
 
 # ---------------------------------------------------------------------------
-# Distributed rank-path variants (q182-q184): mann_whitney_u_distributed,
-# bh_fdr_distributed, auc_distributed == their window-form originals
+# Bucketed rank paths (q182-q184): mann_whitney_u / bh_fdr / auc with
+# distributed=True == their window forms
 # ---------------------------------------------------------------------------
 
 class TestMannWhitneyDistributed:
     def test_equals_window_form_with_ties(self, spark):
-        from pandas_ai_spark.functions.stats import (
-            mann_whitney_u, mann_whitney_u_distributed)
+        from pandas_ai_spark.functions.stats import mann_whitney_u
 
         rows = [("g1", "a" if i % 3 else "b", float(i % 7))
                 for i in range(90)]
@@ -215,33 +215,33 @@ class TestMannWhitneyDistributed:
         df = spark.createDataFrame(rows, "g: string, s: string, v: double")
         a = {r.g: tuple(r) for r in mann_whitney_u(
             df, "v", "s", "a", "b", by=["g"]).collect()}
-        b = {r.g: tuple(r) for r in mann_whitney_u_distributed(
-            df, "v", "s", "a", "b", by=["g"], buckets=3).collect()}
+        b = {r.g: tuple(r) for r in mann_whitney_u(
+            df, "v", "s", "a", "b", by=["g"], distributed=True,
+            buckets=3).collect()}
         assert a == b
 
     def test_global_no_by(self, spark):
-        from pandas_ai_spark.functions.stats import (
-            mann_whitney_u, mann_whitney_u_distributed)
+        from pandas_ai_spark.functions.stats import mann_whitney_u
 
         df = spark.createDataFrame(
             [("a" if i % 2 else "b", float((i * 7) % 13))
              for i in range(60)], "s: string, v: double")
         a = mann_whitney_u(df, "v", "s", "a", "b").collect()
-        b = mann_whitney_u_distributed(df, "v", "s", "a", "b",
-                                       buckets=4).collect()
+        b = mann_whitney_u(df, "v", "s", "a", "b", distributed=True,
+                           buckets=4).collect()
         assert [tuple(r) for r in a] == [tuple(r) for r in b]
 
     def test_rank_window_is_bucket_partitioned(self, spark):
-        from pandas_ai_spark.functions.stats import (
-            mann_whitney_u_distributed)
+        from pandas_ai_spark.functions.stats import mann_whitney_u
 
         df = spark.range(500).select(
             (F.col("id") % 2).cast("string").alias("g"),
             F.when(F.col("id") % 3 == 0, "a").otherwise("b")
              .alias("s"),
             (F.col("id") % 97).cast("double").alias("v"))
-        plan = mann_whitney_u_distributed(
-            df, "v", "s", "a", "b", by=["g"], buckets=8) \
+        plan = mann_whitney_u(
+            df, "v", "s", "a", "b", by=["g"], distributed=True,
+            buckets=8) \
             ._jdf.queryExecution().executedPlan().toString()
         assert "__bkt" in plan  # rank window partitioned by bucket
 
@@ -254,20 +254,18 @@ class TestBhFdrDistributed:
         return spark.createDataFrame(rows, "hid: long, p: double")
 
     def test_equals_window_form(self, spark):
-        from pandas_ai_spark.functions.stats import (bh_fdr,
-                                                     bh_fdr_distributed)
+        from pandas_ai_spark.functions.stats import bh_fdr
 
         df = self._hyp(spark)
         a = sorted(tuple(r) for r in bh_fdr(
             df, "p", alpha=0.05, tiebreak_cols=["hid"]).collect())
-        b = sorted(tuple(r) for r in bh_fdr_distributed(
+        b = sorted(tuple(r) for r in bh_fdr(
             df, "p", alpha=0.05, tiebreak_cols=["hid"],
-            buckets=3).collect())
+            distributed=True, buckets=3).collect())
         assert a == b
 
     def test_family_cols_and_columns(self, spark):
-        from pandas_ai_spark.functions.stats import (bh_fdr,
-                                                     bh_fdr_distributed)
+        from pandas_ai_spark.functions.stats import bh_fdr
 
         rows = [(f, i, ((i * 17 + f * 7) % 100) / 100.0 + 0.001)
                 for f in range(3) for i in range(20)]
@@ -275,32 +273,31 @@ class TestBhFdrDistributed:
         a = sorted(tuple(r) for r in bh_fdr(
             df, "p", family_cols=["fam"],
             tiebreak_cols=["hid"]).collect())
-        out = bh_fdr_distributed(df, "p", family_cols=["fam"],
-                                 tiebreak_cols=["hid"], buckets=4)
+        out = bh_fdr(df, "p", family_cols=["fam"],
+                     tiebreak_cols=["hid"], distributed=True, buckets=4)
         assert out.columns == ["fam", "hid", "p", "p_rank", "p_adj",
                                "reject"]
         assert sorted(tuple(r) for r in out.collect()) == a
 
     def test_validation(self, spark):
-        from pandas_ai_spark.functions.stats import bh_fdr_distributed
+        from pandas_ai_spark.functions.stats import bh_fdr
 
         df = self._hyp(spark)
         with pytest.raises(ValueError):
-            bh_fdr_distributed(df, "p", alpha=1.5)
+            bh_fdr(df, "p", alpha=1.5, distributed=True)
         with pytest.raises(ValueError):
-            bh_fdr_distributed(df, "p", buckets=1)
+            bh_fdr(df, "p", distributed=True, buckets=1)
 
 
 class TestAucDistributed:
     def test_equals_window_form(self, spark):
-        from pandas_ai_spark.functions.classify import (auc,
-                                                        auc_distributed)
+        from pandas_ai_spark.functions.classify import auc
 
         df = spark.createDataFrame(
             [(((i * 31) % 100) / 100.0, i % 3 == 0)
              for i in range(200)], "score: double, y: boolean")
         a = auc(df, "score", "y").collect()
-        b = auc_distributed(df, "score", "y", buckets=5).collect()
+        b = auc(df, "score", "y", distributed=True, buckets=5).collect()
         assert [tuple(r) for r in a] == [tuple(r) for r in b]
 
 
@@ -405,8 +402,7 @@ class TestDpRelease:
 
 class TestBhFdrDistributedNullP:
     def test_null_p_matches_window_form(self, spark):
-        from pandas_ai_spark.functions.stats import (bh_fdr,
-                                                     bh_fdr_distributed)
+        from pandas_ai_spark.functions.stats import bh_fdr
 
         rows = [(0, 0.01), (1, None), (2, 0.5), (3, 0.03),
                 (4, None), (5, 0.9)]
@@ -415,7 +411,7 @@ class TestBhFdrDistributedNullP:
                    for r in bh_fdr(df, "p",
                                    tiebreak_cols=["hid"]).collect())
         b = sorted((r.hid, r.p_rank, r.p_adj, r.reject)
-                   for r in bh_fdr_distributed(
-                       df, "p", tiebreak_cols=["hid"],
+                   for r in bh_fdr(
+                       df, "p", tiebreak_cols=["hid"], distributed=True,
                        buckets=3).collect())
         assert a == b

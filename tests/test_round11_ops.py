@@ -17,32 +17,14 @@ def events(spark):
     return spark.read.parquet(f"{SF_SMOKE}/events.parquet")
 
 
-def _flagged(module, name, calls):
-    """Wrap module.<name> to record invocations (dispatch detector)."""
-    orig = getattr(module, name)
-
-    def wrapper(*a, **k):
-        calls.append(name)
-        return orig(*a, **k)
-
-    return orig, wrapper
-
-
 # ---------------------------------------------------------------------------
 # dispatch: default stays on the window form at test scale
 # ---------------------------------------------------------------------------
 
 class TestRankPathDispatchWindowDirection:
     def test_small_input_never_routes_distributed(self, spark, events,
-                                                  monkeypatch):
+                                                  rank_paths):
         from pandas_ai_spark.functions import classify, stats
-
-        calls: list = []
-        for mod, name in ((stats, "mann_whitney_u_distributed"),
-                          (stats, "bh_fdr_distributed"),
-                          (stats, "spearman_corr_distributed")):
-            _, w = _flagged(mod, name, calls)
-            monkeypatch.setattr(mod, name, w)
 
         stats.mann_whitney_u(events, "value", "event_type",
                              "view", "click").collect()
@@ -51,20 +33,22 @@ class TestRankPathDispatchWindowDirection:
             (F.rand(7)).alias("p"))  # tiny post-agg hypothesis grain
         stats.bh_fdr(hyp, "p", tiebreak_cols=["event_type"]).collect()
         classify.auc(events, "value", "event_type = 'click'").collect()
-        assert calls == []  # sf0.001 is far below RANK_WINDOW_MAX_BYTES
+        # sf0.001 is far below RANK_WINDOW_MAX_BYTES
+        assert rank_paths == [("mann_whitney_u", False),
+                              ("spearman_corr", False),
+                              ("bh_fdr", False),
+                              ("mann_whitney_u", False)]
 
     def test_explicit_false_wins_over_low_threshold(self, spark, events,
-                                                    monkeypatch):
+                                                    monkeypatch,
+                                                    rank_paths):
         from pandas_ai_spark.functions import stats
 
         monkeypatch.setattr(stats, "RANK_WINDOW_MAX_BYTES", 1)
-        calls: list = []
-        _, w = _flagged(stats, "mann_whitney_u_distributed", calls)
-        monkeypatch.setattr(stats, "mann_whitney_u_distributed", w)
         stats.mann_whitney_u(events, "value", "event_type",
                              "view", "click",
                              distributed=False).collect()
-        assert calls == []
+        assert rank_paths == [("mann_whitney_u", False)]
 
 
 # ---------------------------------------------------------------------------
@@ -74,23 +58,21 @@ class TestRankPathDispatchWindowDirection:
 
 class TestRankPathDispatchDistributedDirection:
     def test_mann_whitney_routes_and_matches(self, spark, events,
-                                             monkeypatch):
+                                             monkeypatch, rank_paths):
         from pandas_ai_spark.functions import stats
 
         window = stats.mann_whitney_u(
             events, "value", "event_type", "view", "click",
             distributed=False).collect()
         monkeypatch.setattr(stats, "RANK_WINDOW_MAX_BYTES", 1)
-        calls: list = []
-        _, w = _flagged(stats, "mann_whitney_u_distributed", calls)
-        monkeypatch.setattr(stats, "mann_whitney_u_distributed", w)
         routed = stats.mann_whitney_u(
             events, "value", "event_type", "view", "click").collect()
-        assert calls == ["mann_whitney_u_distributed"]
+        assert rank_paths == [("mann_whitney_u", False),
+                              ("mann_whitney_u", True)]
         assert [tuple(r) for r in routed] == [tuple(r) for r in window]
 
     def test_grouped_mann_whitney_routes_by_per_group_share(
-            self, spark, events, monkeypatch):
+            self, spark, events, monkeypatch, rank_paths):
         # few groups (user_id % 3) -> per-group share stays over a
         # 1-byte threshold -> distributed; the group-count HLL pass
         # runs only because size > threshold
@@ -98,32 +80,27 @@ class TestRankPathDispatchDistributedDirection:
 
         grouped = events.withColumn("grp", F.pmod("user_id", F.lit(3)))
         monkeypatch.setattr(stats, "RANK_WINDOW_MAX_BYTES", 1)
-        calls: list = []
-        _, w = _flagged(stats, "mann_whitney_u_distributed", calls)
-        monkeypatch.setattr(stats, "mann_whitney_u_distributed", w)
         out = stats.mann_whitney_u(
             grouped, "value", "event_type", "view", "click",
             by=["grp"]).collect()
-        assert calls == ["mann_whitney_u_distributed"]
+        assert rank_paths == [("mann_whitney_u", True)]
         assert len(out) > 0
 
     def test_spearman_routes_and_matches(self, spark, events,
-                                         monkeypatch):
+                                         monkeypatch, rank_paths):
         from pandas_ai_spark.functions import stats
 
         window = stats.spearman_corr(
             events, "value", "user_id", distributed=False).collect()
         monkeypatch.setattr(stats, "RANK_WINDOW_MAX_BYTES", 1)
-        calls: list = []
-        _, w = _flagged(stats, "spearman_corr_distributed", calls)
-        monkeypatch.setattr(stats, "spearman_corr_distributed", w)
         routed = stats.spearman_corr(events, "value",
                                      "user_id").collect()
-        assert calls == ["spearman_corr_distributed"]
+        assert rank_paths == [("spearman_corr", False),
+                              ("spearman_corr", True)]
         assert [tuple(r) for r in routed] == [tuple(r) for r in window]
 
     def test_bh_fdr_routes_and_matches(self, spark, events,
-                                       monkeypatch):
+                                       monkeypatch, rank_paths):
         from pandas_ai_spark.functions import stats
 
         hyp = events.groupBy(
@@ -136,39 +113,35 @@ class TestRankPathDispatchDistributedDirection:
                 hyp, "p", tiebreak_cols=["event_type", "seg"],
                 distributed=False).collect())
         monkeypatch.setattr(stats, "RANK_WINDOW_MAX_BYTES", 1)
-        calls: list = []
-        _, w = _flagged(stats, "bh_fdr_distributed", calls)
-        monkeypatch.setattr(stats, "bh_fdr_distributed", w)
         routed = sorted(
             tuple(r) for r in stats.bh_fdr(
                 hyp, "p",
                 tiebreak_cols=["event_type", "seg"]).collect())
-        assert calls == ["bh_fdr_distributed"]
+        assert rank_paths == [("bh_fdr", False), ("bh_fdr", True)]
         assert routed == window
 
-    def test_auc_inherits_dispatch(self, spark, events, monkeypatch):
+    def test_auc_inherits_dispatch(self, spark, events, monkeypatch,
+                                   rank_paths):
         from pandas_ai_spark.functions import classify, stats
 
         window = classify.auc(events, "value", "event_type = 'click'",
                               distributed=False).collect()
         monkeypatch.setattr(stats, "RANK_WINDOW_MAX_BYTES", 1)
-        calls: list = []
-        _, w = _flagged(stats, "mann_whitney_u_distributed", calls)
-        monkeypatch.setattr(stats, "mann_whitney_u_distributed", w)
         routed = classify.auc(events, "value",
                               "event_type = 'click'").collect()
-        assert calls == ["mann_whitney_u_distributed"]
+        assert rank_paths == [("mann_whitney_u", False),
+                              ("mann_whitney_u", True)]
         assert [tuple(r) for r in routed] == [tuple(r) for r in window]
 
 
 # ---------------------------------------------------------------------------
-# r11 additions: ks_test_distributed / wasserstein_1d / kendall_tau_b
+# r11 additions: ks_test(distributed=True) / wasserstein_1d /
+# kendall_tau_b
 # ---------------------------------------------------------------------------
 
 class TestKsTestDistributed:
     def test_matches_window_form_with_ties(self, spark):
-        from pandas_ai_spark.functions.stats import (ks_test,
-                                                     ks_test_distributed)
+        from pandas_ai_spark.functions.stats import ks_test
 
         rows = [("g1", float(v % 7), "a" if i % 3 else "b")
                 for i, v in enumerate(range(200))] + \
@@ -178,13 +151,13 @@ class TestKsTestDistributed:
         df = spark.createDataFrame(rows, "g string, v double, s string")
         w = sorted(tuple(r) for r in ks_test(
             df, "g", "v", "s", "a", "b", distributed=False).collect())
-        d = sorted(tuple(r) for r in ks_test_distributed(
-            df, "g", "v", "s", "a", "b", buckets=5).collect())
+        d = sorted(tuple(r) for r in ks_test(
+            df, "g", "v", "s", "a", "b", distributed=True,
+            buckets=5).collect())
         assert w == d
 
     def test_events_parity(self, spark, events):
-        from pandas_ai_spark.functions.stats import (ks_test,
-                                                     ks_test_distributed)
+        from pandas_ai_spark.functions.stats import ks_test
         from pyspark.sql import functions as F
 
         ev = events.withColumn(
@@ -193,30 +166,29 @@ class TestKsTestDistributed:
         w = sorted(tuple(r) for r in ks_test(
             ev, "event_type", "value", "wk", "we", "wd",
             distributed=False).collect())
-        d = sorted(tuple(r) for r in ks_test_distributed(
-            ev, "event_type", "value", "wk", "we", "wd").collect())
+        d = sorted(tuple(r) for r in ks_test(
+            ev, "event_type", "value", "wk", "we", "wd",
+            distributed=True, buckets=64).collect())
         assert w == d
 
-    def test_dispatch_routes(self, spark, events, monkeypatch):
+    def test_dispatch_routes(self, spark, events, monkeypatch,
+                             rank_paths):
         from pandas_ai_spark.functions import stats
 
         monkeypatch.setattr(stats, "RANK_WINDOW_MAX_BYTES", 1)
-        calls: list = []
-        _, w = _flagged(stats, "ks_test_distributed", calls)
-        monkeypatch.setattr(stats, "ks_test_distributed", w)
         ev = events.withColumn(
             "wk", F.when(F.dayofweek("ts").isin(1, 7), "we")
                    .otherwise("wd"))
         stats.ks_test(ev, "event_type", "value", "wk",
                       "we", "wd").collect()
-        assert calls == ["ks_test_distributed"]
+        assert rank_paths == [("ks_test", True)]
 
     def test_validation(self, spark, events):
-        from pandas_ai_spark.functions.stats import ks_test_distributed
+        from pandas_ai_spark.functions.stats import ks_test
 
         with pytest.raises(ValueError):
-            ks_test_distributed(events, "event_type", "value",
-                                "event_type", "a", "b", buckets=1)
+            ks_test(events, "event_type", "value", "event_type", "a",
+                    "b", distributed=True, buckets=1)
 
 
 class TestWasserstein1d:
@@ -337,8 +309,7 @@ class TestKendallTauB:
 
 class TestWassersteinDistributed:
     def test_matches_window_form_integral_exact(self, spark):
-        from pandas_ai_spark.functions.stats import (
-            wasserstein_1d, wasserstein_1d_distributed)
+        from pandas_ai_spark.functions.stats import wasserstein_1d
 
         rows = [("g1", (i * 13) % 29, "a" if i % 3 else "b")
                 for i in range(300)] + \
@@ -348,13 +319,13 @@ class TestWassersteinDistributed:
         w = sorted(tuple(r) for r in wasserstein_1d(
             df, "g", "v", "s", "a", "b",
             distributed=False).collect())
-        d = sorted(tuple(r) for r in wasserstein_1d_distributed(
-            df, "g", "v", "s", "a", "b", buckets=5).collect())
+        d = sorted(tuple(r) for r in wasserstein_1d(
+            df, "g", "v", "s", "a", "b", distributed=True,
+            buckets=5).collect())
         assert w == d  # exact integral arithmetic both paths
 
     def test_events_cents_parity(self, spark, events):
-        from pandas_ai_spark.functions.stats import (
-            wasserstein_1d, wasserstein_1d_distributed)
+        from pandas_ai_spark.functions.stats import wasserstein_1d
 
         ev = events.withColumn(
             "wk", F.when(F.dayofweek("ts").isin(1, 7), "we")
@@ -363,30 +334,27 @@ class TestWassersteinDistributed:
         w = sorted(tuple(r) for r in wasserstein_1d(
             ev, "event_type", "vc", "wk", "we", "wd",
             distributed=False).collect())
-        d = sorted(tuple(r) for r in wasserstein_1d_distributed(
-            ev, "event_type", "vc", "wk", "we", "wd").collect())
+        d = sorted(tuple(r) for r in wasserstein_1d(
+            ev, "event_type", "vc", "wk", "we", "wd",
+            distributed=True, buckets=64).collect())
         assert w == d
 
-    def test_dispatch_routes(self, spark, events, monkeypatch):
+    def test_dispatch_routes(self, spark, events, monkeypatch,
+                             rank_paths):
         from pandas_ai_spark.functions import stats
 
         monkeypatch.setattr(stats, "RANK_WINDOW_MAX_BYTES", 1)
-        calls: list = []
-        _, w = _flagged(stats, "wasserstein_1d_distributed", calls)
-        monkeypatch.setattr(stats, "wasserstein_1d_distributed", w)
         ev = events.withColumn(
             "wk", F.when(F.dayofweek("ts").isin(1, 7), "we")
                    .otherwise("wd")).withColumn(
             "vc", F.round(F.col("value") * 100).cast("bigint"))
         stats.wasserstein_1d(ev, "event_type", "vc", "wk",
                              "we", "wd").collect()
-        assert calls == ["wasserstein_1d_distributed"]
+        assert rank_paths == [("wasserstein_1d", True)]
 
     def test_validation(self, spark, events):
-        from pandas_ai_spark.functions.stats import \
-            wasserstein_1d_distributed
+        from pandas_ai_spark.functions.stats import wasserstein_1d
 
         with pytest.raises(ValueError):
-            wasserstein_1d_distributed(events, "event_type", "value",
-                                       "event_type", "a", "b",
-                                       buckets=1)
+            wasserstein_1d(events, "event_type", "value", "event_type",
+                           "a", "b", distributed=True, buckets=1)

@@ -1,5 +1,5 @@
 """Round-11 additions, second batch: Kruskal-Wallis H (window +
-distributed_midrank paths, auto-dispatch), and the operators added
+bucketed rank paths, auto-dispatch), and the operators added
 alongside it this session."""
 import math
 
@@ -93,56 +93,40 @@ class TestKruskalWallis:
         assert r["h"] is None
 
     def test_distributed_equals_window_on_events(self, spark):
-        from pandas_ai_spark.functions.stats import (
-            kruskal_wallis, kruskal_wallis_distributed)
+        from pandas_ai_spark.functions.stats import kruskal_wallis
 
         ev = spark.read.parquet(f"{SF_SMOKE}/events.parquet") \
             .withColumn("grp", F.pmod("user_id", F.lit(4)))
         a = sorted(tuple(r) for r in kruskal_wallis(
             ev, "value", "event_type", by=["grp"],
             distributed=False).collect())
-        b = sorted(tuple(r) for r in kruskal_wallis_distributed(
+        b = sorted(tuple(r) for r in kruskal_wallis(
             ev, "value", "event_type", by=["grp"],
-            buckets=8).collect())
+            distributed=True, buckets=8).collect())
         assert a == b  # bit-identical, not approx
 
     def test_auto_dispatch_routes_distributed(self, spark,
-                                              monkeypatch):
+                                              monkeypatch, rank_paths):
         from pandas_ai_spark.functions import stats
 
         ev = spark.read.parquet(f"{SF_SMOKE}/events.parquet")
         window = stats.kruskal_wallis(
             ev, "value", "event_type", distributed=False).collect()
         monkeypatch.setattr(stats, "RANK_WINDOW_MAX_BYTES", 1)
-        calls: list = []
-        orig = stats.kruskal_wallis_distributed
-
-        def spy(*a, **k):
-            calls.append("kw_distributed")
-            return orig(*a, **k)
-
-        monkeypatch.setattr(stats, "kruskal_wallis_distributed", spy)
         routed = stats.kruskal_wallis(ev, "value",
                                       "event_type").collect()
-        assert calls == ["kw_distributed"]
+        assert rank_paths == [("kruskal_wallis", False),
+                              ("kruskal_wallis", True)]
         assert [tuple(r) for r in routed] == \
             [tuple(r) for r in window]
 
     def test_auto_dispatch_stays_window_when_small(self, spark,
-                                                   monkeypatch):
+                                                   rank_paths):
         from pandas_ai_spark.functions import stats
 
         ev = spark.read.parquet(f"{SF_SMOKE}/events.parquet")
-        calls: list = []
-        orig = stats.kruskal_wallis_distributed
-
-        def spy(*a, **k):
-            calls.append("kw_distributed")
-            return orig(*a, **k)
-
-        monkeypatch.setattr(stats, "kruskal_wallis_distributed", spy)
         stats.kruskal_wallis(ev, "value", "event_type").collect()
-        assert calls == []
+        assert rank_paths == [("kruskal_wallis", False)]
 
     def test_two_levels_consistent_with_mann_whitney(self, spark):
         # with k=2, H == z² of the (tie-corrected) Mann-Whitney —
@@ -168,16 +152,15 @@ class TestKruskalWallis:
        st.integers(min_value=2, max_value=4))
 @settings(max_examples=5, deadline=None)
 def test_kw_distributed_equals_window_property(spark, rows, buckets):
-    from pandas_ai_spark.functions.stats import (
-        kruskal_wallis, kruskal_wallis_distributed)
+    from pandas_ai_spark.functions.stats import kruskal_wallis
 
     df = spark.createDataFrame(
         [(g, float(v)) for g, v in rows], "lev string, v double")
     a = [tuple(r) for r in
          kruskal_wallis(df, "v", "lev", distributed=False).collect()]
     b = [tuple(r) for r in
-         kruskal_wallis_distributed(df, "v", "lev",
-                                    buckets=buckets).collect()]
+         kruskal_wallis(df, "v", "lev", distributed=True,
+                        buckets=buckets).collect()]
     assert a == b
 
 
@@ -618,24 +601,19 @@ class TestDunnDispatch:
             distributed=True).collect())
         assert a == b  # bit-identical
 
-    def test_auto_dispatch_routes(self, spark, monkeypatch):
+    def test_auto_dispatch_routes(self, spark, monkeypatch,
+                                  rank_paths):
         from pandas_ai_spark.functions import stats
 
         ev = spark.read.parquet(f"{SF_SMOKE}/events.parquet")
         window = sorted(tuple(r) for r in stats.dunn_test(
             ev, "value", "event_type", distributed=False).collect())
         monkeypatch.setattr(stats, "RANK_WINDOW_MAX_BYTES", 1)
-        calls: list = []
-        orig = stats.distributed_midrank
-
-        def spy(*a, **k):
-            calls.append("distributed_midrank")
-            return orig(*a, **k)
-
-        monkeypatch.setattr(stats, "distributed_midrank", spy)
         routed = sorted(tuple(r) for r in stats.dunn_test(
             ev, "value", "event_type").collect())
-        assert calls == ["distributed_midrank"]
+        # the pair family's BH step is pinned to the window form
+        assert rank_paths == [("dunn_test", False), ("bh_fdr", False),
+                              ("dunn_test", True), ("bh_fdr", False)]
         assert routed == window
 
 

@@ -56,17 +56,8 @@ class TestRankDispatchNoEstimate:
     the single-partition window form — the dispatch counts rows once
     and decides on a width×rows stand-in estimate."""
 
-    def _wrap(self, stats, monkeypatch, calls):
-        orig = stats.mann_whitney_u_distributed
-
-        def w(*a, **k):
-            calls.append("distributed")
-            return orig(*a, **k)
-
-        monkeypatch.setattr(stats, "mann_whitney_u_distributed", w)
-
     def test_no_estimate_source_routes_distributed_over_threshold(
-            self, spark, monkeypatch):
+            self, spark, monkeypatch, rank_paths):
         from pandas_ai_spark.functions import stats
 
         df = spark.createDataFrame(
@@ -74,26 +65,22 @@ class TestRankDispatchNoEstimate:
              for i in range(40)], ["value", "grp"])
         assert stats._plan_size(df) is None  # the shape under test
         monkeypatch.setattr(stats, "RANK_WINDOW_MAX_BYTES", 1)
-        calls: list = []
-        self._wrap(stats, monkeypatch, calls)
         out = stats.mann_whitney_u(
             df, "value", "grp", "view", "click").collect()
-        assert calls == ["distributed"]
+        assert rank_paths == [("mann_whitney_u", True)]
         assert len(out) == 1
 
     def test_no_estimate_small_input_keeps_window_form(
-            self, spark, monkeypatch):
+            self, spark, rank_paths):
         from pandas_ai_spark.functions import stats
 
         df = spark.createDataFrame(
             [(float(i), "view" if i % 2 else "click")
              for i in range(40)], ["value", "grp"])
-        calls: list = []
-        self._wrap(stats, monkeypatch, calls)
         # default 1 GiB threshold: 40 counted rows stay on the window
         out = stats.mann_whitney_u(
             df, "value", "grp", "view", "click").collect()
-        assert calls == []
+        assert rank_paths == [("mann_whitney_u", False)]
         assert len(out) == 1
 
 

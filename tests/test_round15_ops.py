@@ -3,8 +3,8 @@
 Covers the operator-internal restructurings of this round — every one
 is REQUIRED to be output-identical to the shape it replaced:
 
-- distributed_midrank/_multi, ks_test_distributed,
-  wasserstein_1d_distributed, bh_fdr_distributed: fully lazy form
+- the bucketed rank/ECDF device (midranks, ks_test, wasserstein_1d,
+  bh_fdr with distributed=True): fully lazy form
   (deterministic slog-width buckets + window prefix-sum offsets) —
   zero internal Spark jobs at plan-build, outputs identical to the
   window forms across ties / negatives / wide magnitudes / NULLs.
@@ -20,6 +20,7 @@ from __future__ import annotations
 
 import math
 
+import pytest
 from pyspark.sql import functions as F
 
 def _rows(df, cols=None):
@@ -29,8 +30,30 @@ def _rows(df, cols=None):
 
 
 # ---------------------------------------------------------------------
-# lazy distributed twins: zero internal jobs, window-form equality
+# merged rank/ECDF operators: zero build jobs on both devices, and the
+# bucketed device (distributed=True) equals the window form
 # ---------------------------------------------------------------------
+
+def _merged_ops():
+    """The seven rank/ECDF operators with one body and two devices,
+    each over the fixture frame ``(g, s, v, w)``."""
+    from pandas_ai_spark.functions import classify, stats
+    return {
+        "spearman_corr": lambda df, **k: stats.spearman_corr(
+            df, "v", "w", by=["g"], **k),
+        "mann_whitney_u": lambda df, **k: stats.mann_whitney_u(
+            df, "v", "s", "x", "y", by=["g"], **k),
+        "bh_fdr": lambda df, **k: stats.bh_fdr(
+            df, "w", family_cols=["g"], tiebreak_cols=["v"], **k),
+        "ks_test": lambda df, **k: stats.ks_test(
+            df, "g", "v", "s", "x", "y", **k),
+        "wasserstein_1d": lambda df, **k: stats.wasserstein_1d(
+            df, "g", "v", "s", "x", "y", **k),
+        "kruskal_wallis": lambda df, **k: stats.kruskal_wallis(
+            df, "v", "s", by=["g"], **k),
+        "auc": lambda df, **k: classify.auc(df, "v", "s = 'x'", **k),
+    }
+
 
 class TestLazyTwins:
     def _mixed_df(self, spark):
@@ -44,12 +67,12 @@ class TestLazyTwins:
         return spark.createDataFrame(vals, "grp string, v double")
 
     def test_midrank_build_runs_zero_jobs(self, spark):
-        from pandas_ai_spark.functions.stats import distributed_midrank
+        from pandas_ai_spark.functions.stats import _midranks
         df = self._mixed_df(spark)
         sc = spark.sparkContext
         sc.setJobGroup("midrank_build_r15", "lazy check")
         try:
-            out = distributed_midrank(df, "v", by=["grp"], buckets=4)
+            out = _midranks(df, ["v"], ["r2"], ["grp"], True, buckets=4)
             jobs = sc.statusTracker().getJobIdsForGroup(
                 "midrank_build_r15")
         finally:
@@ -61,7 +84,7 @@ class TestLazyTwins:
 
     def test_midrank_matches_window_form(self, spark):
         from pyspark.sql.window import Window
-        from pandas_ai_spark.functions.stats import distributed_midrank
+        from pandas_ai_spark.functions.stats import _midranks
         df = self._mixed_df(spark)
         wo = (Window.partitionBy("grp").orderBy("v")
               .rangeBetween(Window.unboundedPreceding, 0))
@@ -70,26 +93,27 @@ class TestLazyTwins:
         t = F.count(F.lit(1)).over(wt)
         r2w = (F.lit(2) * (cum - t) + t + F.lit(1)).cast("bigint")
         want = _rows(df.select("grp", "v", r2w.alias("r2")))
-        got = _rows(distributed_midrank(
-            df, "v", by=["grp"], buckets=4).select("grp", "v", "r2"))
+        got = _rows(_midranks(
+            df, ["v"], ["r2"], ["grp"], True, buckets=4)
+            .select("grp", "v", "r2"))
         assert got == want
 
     def test_midrank_single_value_and_all_null_groups(self, spark):
-        from pandas_ai_spark.functions.stats import distributed_midrank
+        from pandas_ai_spark.functions.stats import _midranks
         df = spark.createDataFrame(
             [("a", 5.0), ("b", None), ("b", None)],
             "grp string, v double")
         got = {(r["grp"], r["v"]): r["r2"]
-               for r in distributed_midrank(
-                   df, "v", by=["grp"], buckets=4).collect()}
+               for r in _midranks(
+                   df, ["v"], ["r2"], ["grp"], True,
+                   buckets=4).collect()}
         # single value: midrank 1 doubled -> 2*0+1+1... r2 = 2*(1-1)+1+1
         assert got[("a", 5.0)] == 2
         # two tied NULLs share the lowest midrank: r2 = 2*(2-2)+2+1 = 3
         assert got[("b", None)] == 3
 
     def test_ks_distributed_matches_window_form(self, spark):
-        from pandas_ai_spark.functions.stats import (ks_test,
-                                                     ks_test_distributed)
+        from pandas_ai_spark.functions.stats import ks_test
         import random
         rnd = random.Random(7)
         rows = [("k%d" % (i % 3), rnd.choice(["x", "y"]),
@@ -98,27 +122,33 @@ class TestLazyTwins:
         df = spark.createDataFrame(rows, "g string, s string, v double")
         want = _rows(ks_test(df, "g", "v", "s", "x", "y",
                              distributed=False))
-        got = _rows(ks_test_distributed(df, "g", "v", "s", "x", "y",
-                                        buckets=4))
+        got = _rows(ks_test(df, "g", "v", "s", "x", "y",
+                            distributed=True, buckets=4))
         assert got == want
 
-    def test_ks_distributed_build_runs_zero_jobs(self, spark):
-        from pandas_ai_spark.functions.stats import ks_test_distributed
+    @pytest.mark.parametrize("distributed", [True, False],
+                             ids=["bucketed", "window"])
+    @pytest.mark.parametrize("op", sorted(_merged_ops()))
+    def test_merged_op_build_runs_zero_jobs(self, spark, op,
+                                            distributed):
+        # lazy by contract: with the path chosen explicitly, building
+        # the plan launches no Spark job on either device
         df = spark.createDataFrame(
-            [("g", "x", 1.0), ("g", "y", 2.0), ("g", "x", 3.0)],
-            "g string, s string, v double")
+            [("g", "x", 1.0, 0.5), ("g", "y", 2.0, 0.25),
+             ("g", "x", 3.0, 0.75)],
+            "g string, s string, v double, w double")
         sc = spark.sparkContext
-        sc.setJobGroup("ks_build_r15", "lazy check")
+        group = f"build_{op}_{distributed}"
+        sc.setJobGroup(group, "lazy check")
         try:
-            ks_test_distributed(df, "g", "v", "s", "x", "y", buckets=4)
-            jobs = sc.statusTracker().getJobIdsForGroup("ks_build_r15")
+            _merged_ops()[op](df, distributed=distributed, buckets=4)
+            jobs = sc.statusTracker().getJobIdsForGroup(group)
         finally:
             sc.setJobGroup(None, None)
         assert list(jobs) == []
 
     def test_wasserstein_distributed_matches_window_form(self, spark):
-        from pandas_ai_spark.functions.stats import (
-            wasserstein_1d, wasserstein_1d_distributed)
+        from pandas_ai_spark.functions.stats import wasserstein_1d
         import random
         rnd = random.Random(11)
         rows = [("k%d" % (i % 2), rnd.choice(["x", "y"]),
@@ -127,28 +157,25 @@ class TestLazyTwins:
         df = spark.createDataFrame(rows, "g string, s string, v double")
         want = _rows(wasserstein_1d(df, "g", "v", "s", "x", "y",
                                     distributed=False))
-        got = _rows(wasserstein_1d_distributed(df, "g", "v", "s",
-                                               "x", "y", buckets=4))
+        got = _rows(wasserstein_1d(df, "g", "v", "s", "x", "y",
+                                   distributed=True, buckets=4))
         assert got == want
 
     def test_bh_fdr_distributed_matches_window_form(self, spark):
-        from pandas_ai_spark.functions.stats import (bh_fdr,
-                                                     bh_fdr_distributed)
+        from pandas_ai_spark.functions.stats import bh_fdr
         rows = [("t%02d" % i, p) for i, p in enumerate(
             [0.001, 0.004, 0.004, 0.02, 0.03, 0.5, 0.5, 0.8, None,
              0.049, 0.051, 1.0, 0.0001, 0.25])]
         df = spark.createDataFrame(rows, "test string, p double")
         want = _rows(bh_fdr(df, "p", alpha=0.05,
                             tiebreak_cols=["test"], distributed=False))
-        got = _rows(bh_fdr_distributed(df, "p", alpha=0.05,
-                                       tiebreak_cols=["test"],
-                                       buckets=4))
+        got = _rows(bh_fdr(df, "p", alpha=0.05, tiebreak_cols=["test"],
+                           distributed=True, buckets=4))
         assert got == want
 
     def test_mw_kw_distributed_match_window_forms(self, spark):
         from pandas_ai_spark.functions.stats import (
-            kruskal_wallis, kruskal_wallis_distributed, mann_whitney_u,
-            mann_whitney_u_distributed)
+            kruskal_wallis, mann_whitney_u)
         import random
         rnd = random.Random(3)
         rows = [("b%d" % (i % 2), "l%d" % (i % 3),
@@ -158,15 +185,63 @@ class TestLazyTwins:
                                          "v double")
         want = _rows(mann_whitney_u(df, "v", "lev", "l0", "l1",
                                     by=["byk"], distributed=False))
-        got = _rows(mann_whitney_u_distributed(df, "v", "lev",
-                                               "l0", "l1", by=["byk"],
-                                               buckets=4))
+        got = _rows(mann_whitney_u(df, "v", "lev", "l0", "l1",
+                                   by=["byk"], distributed=True,
+                                   buckets=4))
         assert got == want
         want = _rows(kruskal_wallis(df, "v", "lev", by=["byk"],
                                     distributed=False))
-        got = _rows(kruskal_wallis_distributed(df, "v", "lev",
-                                               by=["byk"], buckets=4))
+        got = _rows(kruskal_wallis(df, "v", "lev", by=["byk"],
+                                   distributed=True, buckets=4))
         assert got == want
+
+
+class TestInfiniteValues:
+    """ADVICE r15: one ±inf made the slog span infinite, collapsing
+    every finite value into a single bucket (a one-task rank/ECDF pass
+    — the parallelism the bucketed device exists for). Infinities are
+    now excluded from the bucket bounds like NaN, and still sort into
+    the end buckets."""
+
+    def _df(self, spark):
+        import random
+        rnd = random.Random(15)
+        vals = [round(rnd.gauss(0, 10 ** rnd.randint(-2, 4)), 3)
+                for _ in range(1000)]
+        rows = [("g%d" % (i % 2), "a" if rnd.random() < 0.5 else "b",
+                 v, float(i % 17)) for i, v in enumerate(vals)]
+        rows += [("g0", "a", math.inf, 1.0), ("g1", "b", -math.inf, 2.0)]
+        return spark.createDataFrame(
+            rows, "g string, s string, v double, w double")
+
+    def test_finite_values_span_several_buckets(self, spark):
+        from pandas_ai_spark.functions.stats import _bucket_offsets
+        tagged = _bucket_offsets(
+            self._df(spark), ["v"], [], 4,
+            [F.count(F.lit(1)).alias("__cnt")], lambda wb, wg: [])
+        finite = {r["__bkt_0"] for r in tagged.collect()
+                  if math.isfinite(r["v"])}
+        assert len(finite) > 1
+
+    def test_distributed_equals_window_with_inf_nan_null(self, spark):
+        # NaN sorts above +inf, so it must land in the TOP bucket; the
+        # NaN-only frame keeps a finite span (floor(NaN) casts to 0)
+        from pandas_ai_spark.functions.stats import (
+            ks_test, mann_whitney_u, spearman_corr)
+        df = self._df(spark).unionByName(spark.createDataFrame(
+            [("g0", "a", math.nan, 3.0), ("g1", "b", math.nan, 4.0),
+             ("g0", "b", None, 5.0), ("g1", "a", None, 6.0)],
+            "g string, s string, v double, w double"))
+        nan_only = df.where(F.col("v").isNull()
+                            | ~F.col("v").isin(math.inf, -math.inf))
+        for d in (df, nan_only):
+            for op in (
+                    lambda **k: spearman_corr(d, "v", "w", by=["g"], **k),
+                    lambda **k: mann_whitney_u(d, "v", "s", "a", "b",
+                                               by=["g"], **k),
+                    lambda **k: ks_test(d, "g", "v", "s", "a", "b", **k)):
+                assert _rows(op(distributed=True, buckets=4)) == \
+                    _rows(op(distributed=False))
 
 
 # ---------------------------------------------------------------------

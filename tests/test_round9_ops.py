@@ -546,20 +546,21 @@ class TestInformationGain:
 
 
 # ---------------------------------------------------------------------------
-# stats.distributed_midrank / spearman_corr_distributed (q180)
+# stats._midranks bucketed device / spearman_corr(distributed=True)
+# (q180)
 # ---------------------------------------------------------------------------
 
 class TestDistributedRank:
     def test_midranks_match_window_form(self, spark):
-        from pandas_ai_spark.functions.stats import distributed_midrank
+        from pandas_ai_spark.functions.stats import _midranks
 
         rows = [("g1", float(v)) for v in
                 [5, 3, 3, 8, 1, 3, 8, 9, 2, 7]] + \
                [("g2", float(v)) for v in [4, 4, 4, 4]]
         df = spark.createDataFrame(rows, "g: string, v: double")
         got = sorted((r.g, r.v, r.r2) for r in
-                     distributed_midrank(df, "v", by=["g"],
-                                         buckets=4).collect())
+                     _midranks(df, ["v"], ["r2"], ["g"], True,
+                               buckets=4).collect())
         # reference doubled midranks: 2*count_lt + count_eq + 1
         import collections
         by_g = collections.defaultdict(list)
@@ -572,8 +573,7 @@ class TestDistributedRank:
         assert got == want
 
     def test_spearman_distributed_equals_window_path(self, spark):
-        from pandas_ai_spark.functions.stats import (
-            spearman_corr, spearman_corr_distributed)
+        from pandas_ai_spark.functions.stats import spearman_corr
 
         df = spark.createDataFrame(
             [("a", float(i % 7), float((i * 13) % 11))
@@ -583,28 +583,28 @@ class TestDistributedRank:
         a = {r.g: (r.n, r.rho) for r in
              spearman_corr(df, "x", "y", by=["g"]).collect()}
         b = {r.g: (r.n, r.rho) for r in
-             spearman_corr_distributed(df, "x", "y", by=["g"],
-                                       buckets=5).collect()}
+             spearman_corr(df, "x", "y", by=["g"], distributed=True,
+                           buckets=5).collect()}
         assert a.keys() == b.keys()
         for g in a:
             assert a[g][0] == b[g][0]
             assert b[g][1] == pytest.approx(a[g][1], abs=1e-12)
 
     def test_bucketed_parallelism_in_plan(self, spark):
-        from pandas_ai_spark.functions.stats import distributed_midrank
+        from pandas_ai_spark.functions.stats import _midranks
 
         df = spark.range(1000).select(
             (F.col("id") % 2).cast("string").alias("g"),
             (F.col("id") % 97).cast("double").alias("v"))
-        plan = distributed_midrank(df, "v", by=["g"], buckets=8) \
+        plan = _midranks(df, ["v"], ["r2"], ["g"], True, buckets=8) \
             ._jdf.queryExecution().executedPlan().toString()
         # the rank window partitions by (group, bucket) — never the
         # single-task per-group sort
         assert "hashpartitioning(g" in plan and "__bkt" in plan
 
     def test_validation(self, spark):
-        from pandas_ai_spark.functions.stats import distributed_midrank
+        from pandas_ai_spark.functions.stats import _midranks
 
         df = spark.createDataFrame([("g", 1.0)], "g: string, v: double")
         with pytest.raises(ValueError):
-            distributed_midrank(df, "v", by=["g"], buckets=1)
+            _midranks(df, ["v"], ["r2"], ["g"], True, buckets=1)
