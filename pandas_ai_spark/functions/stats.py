@@ -238,6 +238,15 @@ def _exact_state_max_bytes(df: DataFrame) -> int:
     return EXACT_STATE_MAX_BYTES
 
 
+def _eq_all(pairs, cond=None):
+    """AND-fold of eqNullSafe over (left, right) column-name pairs onto
+    ``cond`` (None for no pairs and no ``cond``)."""
+    for a, b in pairs:
+        eq = F.col(a).eqNullSafe(F.col(b))
+        cond = eq if cond is None else (cond & eq)
+    return cond
+
+
 def _left_join_nullsafe(left: DataFrame, right: DataFrame,
                         by: list[str]) -> DataFrame:
     """Left join on the by-columns with NULL-safe equality: a by-group
@@ -249,10 +258,7 @@ def _left_join_nullsafe(left: DataFrame, right: DataFrame,
     r = right
     for c in by:
         r = r.withColumnRenamed(c, f"__rj_{c}")
-    cond = None
-    for c in by:
-        e = F.col(c).eqNullSafe(F.col(f"__rj_{c}"))
-        cond = e if cond is None else (cond & e)
+    cond = _eq_all([(c, f"__rj_{c}") for c in by])
     return left.join(r, cond, "left").drop(
         *[f"__rj_{c}" for c in by])
 
@@ -1371,9 +1377,19 @@ def _fanout_if_narrow(df: DataFrame, *key_cols: str) -> DataFrame:
     round-robin pre-sort, and every caller computes
     placement-independent exact aggregates/ranks so results are
     unchanged. At real scale input splits >= cores and this is a
-    no-op."""
+    no-op.
+
+    Decided from the physical plan, without an action: an input that
+    an exchange feeds is left as it is, since reading its partition
+    count would run that exchange under adaptive execution (a shuffle
+    has spread it already; a narrow scan broadcast-joined to a small
+    table stays narrow — the price of a lazy build). Only an
+    exchange-free plan has its partition count read, which a file
+    scan answers from its file listing."""
     sc = df.sparkSession.sparkContext
     n = sc.defaultParallelism
+    if "Exchange" in df._jdf.queryExecution().executedPlan().toString():
+        return df
     if df.rdd.getNumPartitions() < n:
         return df.repartition(n, *[F.col(c) for c in key_cols])
     return df
@@ -1450,8 +1466,7 @@ def _bucket_offsets(df: DataFrame, value_cols: list[str],
         cond = F.col(f"__bkt_{i}") == F.col("__b2")
         if which:
             cond = cond & (F.col("__which") == F.lit(i))
-        for g in by:
-            cond = cond & F.col(g).eqNullSafe(F.col(f"__g_{g}"))
+        cond = _eq_all([(g, f"__g_{g}") for g in by], cond)
         rows = rows.join(broadcast(offs), cond).drop("__b2", *keys)
         if then is not None:
             rows = then(rows, i)
@@ -1460,7 +1475,8 @@ def _bucket_offsets(df: DataFrame, value_cols: list[str],
 
 def _midranks(df: DataFrame, value_cols: list[str], out_cols: list[str],
               by: list[str], distributed: bool, buckets: int = 64,
-              tie_cols: list[str | None] | None = None) -> DataFrame:
+              tie_cols: list[str | None] | None = None,
+              weight: str | None = None) -> DataFrame:
     """Append the EXACT doubled midrank
     ``r2 = 2·count(v < x) + count(v = x) + 1`` of each
     ``value_cols[i]`` within its ``by`` group as ``out_cols[i]`` (an
@@ -1468,6 +1484,16 @@ def _midranks(df: DataFrame, value_cols: list[str], out_cols: list[str],
     count ``t = count(v = x)`` as ``tie_cols[i]`` where one is named.
     NULL values tie together at the lowest midrank (Spark's ascending
     NULLS FIRST) and no row is dropped, on either device.
+
+    ``weight`` ranks a pre-aggregated CELL grain — one row per
+    distinct (group, value), the weight its row count — exactly as its
+    expanded rows would rank (Mann-Whitney, Wilcoxon signed-rank,
+    Mood's scale test): the cumulative counts above become sums of the
+    weight, on both devices, and a cell's tie count is its own weight.
+    Reading the weight instead of a tie window keeps the cell plans
+    free of a second sort, which a window partitioned by a double
+    value would need (Spark partitions on the NaN/-0.0-normalized
+    value). Without a weight both devices count rows.
 
     Window device (``distributed=False``): RANGE-frame cumulative
     counts over the ``by`` partition — one ordered task per group.
@@ -1478,22 +1504,25 @@ def _midranks(df: DataFrame, value_cols: list[str], out_cols: list[str],
     within-bucket tie frame IS the group-wide tie count and the
     output is identical. The bucketed plan reads its input three
     times, so the input is fanned out and persisted here unless the
-    caller already persisted it (``_is_persisted``) — the tie-grain
-    callers (Mann-Whitney, Kruskal-Wallis) persist their base
-    themselves so their grain aggregation reads the same cache entry
-    (ADVICE r14)."""
+    caller already persisted it (``_is_persisted``) — Kruskal-Wallis
+    persists its base itself so its tie-grain aggregation reads the
+    same cache entry instead of re-running the upstream plan."""
     from pyspark.sql.window import Window
 
     from .cache import operator_persist
 
     tie_cols = list(tie_cols or [None] * len(value_cols))
 
+    def cnt():
+        return F.count(F.lit(1)) if weight is None else F.sum(weight)
+
     def rank(rows, i, part, off=None):
         c = value_cols[i]
         wo = (Window.partitionBy(*part).orderBy(c)
               .rangeBetween(Window.unboundedPreceding, 0))
-        cum_le = F.count(F.lit(1)).over(wo)   # RANGE: includes peers
-        t = F.count(F.lit(1)).over(Window.partitionBy(*part, c))
+        cum_le = cnt().over(wo)   # RANGE: includes peers
+        t = (F.count(F.lit(1)).over(Window.partitionBy(*part, c))
+             if weight is None else F.col(weight))
         lt = cum_le - t if off is None else off + cum_le - t
         rows = rows.withColumn(
             out_cols[i], (F.lit(2) * lt + t + F.lit(1)).cast("bigint"))
@@ -1513,7 +1542,7 @@ def _midranks(df: DataFrame, value_cols: list[str], out_cols: list[str],
         df = operator_persist(_fanout_if_narrow(df, *value_cols))
     return _bucket_offsets(
         df, value_cols, by, buckets,
-        [F.count(F.lit(1)).cast("bigint").alias("__cnt")],
+        [cnt().cast("bigint").alias("__cnt")],
         lambda wb, wg: [_prefix("__cnt", wb).alias("__off")],
         then=bucketed_rank)
 
@@ -1536,29 +1565,23 @@ def mann_whitney_u(df: DataFrame, value_col: str, sample_col: str,
     row-local — bit-identical across engines, no float-sum-order
     dependence.
 
-    Scale shape, two devices with IDENTICAL output (driver-hash-proven,
-    q182 vs q159). Window form: the input collapses to the (group,
-    value) grain first (one map-side-combined aggregation — shuffle
-    bounded by distinct values per group, the q114/ks_test
-    post-aggregation pattern); ONE group-partitioned ordered window
-    over that grain assigns midranks; one grouped aggregation
-    finishes. It suits discrete/bucketed value grains (counts,
-    quantities, buckets). Bucketed form (``distributed=True``, a FEW
-    huge groups, e.g. continuous scores — q167's AUC device): rows
-    carry :func:`_midranks`' bucketed doubled ranks (groups ×
-    ``buckets`` parallel) into a map-side-combined rank-sum
-    aggregation, and the tie term comes from a separate (group, value)
-    grain aggregation over the SAME persisted base, broadcast back
-    (ADVICE r14). ``distributed=None`` (default) picks the bucketed
-    form when Catalyst's per-group share exceeds
-    ``RANK_WINDOW_MAX_BYTES`` (:func:`_resolve_rank_path`).
-    Explicit True/False keeps the call lazy; ``None`` on a plan
-    without a size estimate runs one eager ``count()``.
+    Scale shape: the input collapses to the (group, value) grain of
+    ``(t_a, t_b)`` counts first (one map-side-combined aggregation —
+    shuffle bounded by distinct values per group, the ks_test
+    pattern); :func:`_midranks` ranks that grain with the cell count
+    as its weight, so each cell carries the midrank its expanded rows
+    would; one grouped aggregation finishes — rank sum and tie term
+    ``sum(t^3 - t)`` over the same cells. The window device
+    (``distributed=False``) ranks one ordered task per group; the
+    bucketed device (``distributed=True``, a FEW huge groups, e.g.
+    continuous scores — q167's AUC device) ranks groups × ``buckets``
+    parallel, with IDENTICAL output (hash-proven against one shared
+    oracle, q182 vs q159). ``distributed=None`` (default) picks the bucketed device
+    when Catalyst's per-group share exceeds ``RANK_WINDOW_MAX_BYTES``
+    (:func:`_resolve_rank_path`). Explicit True/False keeps the call
+    lazy; ``None`` on a plan without a size estimate runs one eager
+    ``count()``.
     """
-    from pyspark.sql.window import Window
-
-    from .cache import operator_persist
-
     by = list(by or [])
     keys = [F.col(c) for c in by]
     s = F.col(sample_col)
@@ -1566,40 +1589,23 @@ def mann_whitney_u(df: DataFrame, value_col: str, sample_col: str,
                     & s.isin(a, b)).select(
         *keys, F.col(value_col).alias("__v"),
         (s == a).cast("bigint").alias("__a"))
-    if _resolve_rank_path(df, by, distributed, "mann_whitney_u"):
-        base = operator_persist(_fanout_if_narrow(base, "__v"))
-        ranked = _midranks(base, ["__v"], ["__r2"], by, True, buckets)
-        g = ranked.groupBy(*keys).agg(
-            F.sum("__a").cast("bigint").alias("n_a"),
-            F.sum(F.lit(1) - F.col("__a")).cast("bigint").alias("n_b"),
-            F.sum(F.col("__a") * F.col("__r2")).cast("bigint")
-             .alias("__ra2"))
-        t = F.col("__t")
-        grain = base.groupBy(*keys, F.col("__v")).agg(
-            F.count("*").cast("bigint").alias("__t"))
-        g = _attach_group_aggs(
-            g, grain, by,
-            F.sum(t * t * t - t).cast("bigint").alias("__ties"))
-    else:
-        grain = base.groupBy(*keys, F.col("__v")).agg(
-            F.sum("__a").cast("bigint").alias("__ta"),
-            F.sum(F.lit(1) - F.col("__a")).cast("bigint")
-             .alias("__tb"))
-        t = (F.col("__ta") + F.col("__tb")).cast("bigint")
-        w = (Window.partitionBy(*keys).orderBy("__v")
-             .rowsBetween(Window.unboundedPreceding, 0))
-        # doubled midrank for this value: 2*cum_before + t + 1
-        r2 = (F.lit(2) * (F.sum(t).over(w) - t) + t + F.lit(1)) \
-            .cast("bigint")
-        ranked = grain.select(*keys, "__ta", "__tb",
-                              t.alias("__t"), r2.alias("__r2"))
-        g = ranked.groupBy(*keys).agg(
-            F.sum("__ta").cast("bigint").alias("n_a"),
-            F.sum("__tb").cast("bigint").alias("n_b"),
-            F.sum(F.col("__ta") * F.col("__r2")).cast("bigint")
-             .alias("__ra2"),
-            F.sum(F.col("__t") * F.col("__t") * F.col("__t")
-                  - F.col("__t")).cast("bigint").alias("__ties"))
+    dist = _resolve_rank_path(df, by, distributed, "mann_whitney_u")
+    if dist:
+        base = _fanout_if_narrow(base, "__v")
+    grain = base.groupBy(*keys, F.col("__v")).agg(
+        F.sum("__a").cast("bigint").alias("__ta"),
+        F.sum(F.lit(1) - F.col("__a")).cast("bigint").alias("__tb"))
+    grain = grain.withColumn(
+        "__t", (F.col("__ta") + F.col("__tb")).cast("bigint"))
+    ranked = _midranks(grain, ["__v"], ["__r2"], by, dist, buckets,
+                       weight="__t")
+    t = F.col("__t")
+    g = ranked.groupBy(*keys).agg(
+        F.sum("__ta").cast("bigint").alias("n_a"),
+        F.sum("__tb").cast("bigint").alias("n_b"),
+        F.sum(F.col("__ta") * F.col("__r2")).cast("bigint")
+         .alias("__ra2"),
+        F.sum(t * t * t - t).cast("bigint").alias("__ties"))
     na = F.col("n_a").cast("double")
     nb = F.col("n_b").cast("double")
     n = na + nb
@@ -1715,9 +1721,8 @@ def bh_fdr(df: DataFrame, p_col: str, alpha: float = 0.05,
         beyond = bmin.select(
             *[F.col(f"__g_{c}") for c in fam], "__b2",
             F.min("__bmin").over(wb).alias("__beyond"))
-        cond = F.col("__bkt_0") == F.col("__b2")
-        for c in fam:
-            cond = cond & F.col(c).eqNullSafe(F.col(f"__g_{c}"))
+        cond = _eq_all([(c, f"__g_{c}") for c in fam],
+                       F.col("__bkt_0") == F.col("__b2"))
         # least() skips NULLs: a last-bucket row (no later bucket) and
         # a NULL-p row (NULL candidate) both resolve correctly
         out = ranked.join(broadcast(beyond), cond).withColumn(
@@ -2011,9 +2016,8 @@ def kendall_tau_b(df: DataFrame, x_col: str, y_col: str,
     l = cells.repartition(*[F.col(c) for c in by], F.col("__x")) \
         .alias("l")
     r = F.broadcast(cells).alias("r")
-    cond = (F.col("l.__x") < F.col("r.__x"))
-    for c in by:
-        cond = cond & F.col(f"l.{c}").eqNullSafe(F.col(f"r.{c}"))
+    cond = _eq_all([(f"l.{c}", f"r.{c}") for c in by],
+                   F.col("l.__x") < F.col("r.__x"))
     # every unordered cell pair with x_l < x_r exactly once; y decides
     # concordant/discordant, y-tie contributes to neither. Products
     # AND accumulators stay in codegen'd LONG arithmetic over the
@@ -2091,11 +2095,8 @@ def _attach_group_aggs(g: DataFrame, src: DataFrame, by: list[str],
     if not by:
         return fold_scalars(g, src.agg(*aggs))
     per = src.groupBy(*[F.col(c).alias(f"__g_{c}") for c in by]).agg(*aggs)
-    cond = None
-    for c in by:
-        eq = F.col(c).eqNullSafe(F.col(f"__g_{c}"))
-        cond = eq if cond is None else (cond & eq)
-    return g.join(broadcast(per), cond).drop(*[f"__g_{c}" for c in by])
+    return g.join(broadcast(per), _eq_all([(c, f"__g_{c}") for c in by])) \
+        .drop(*[f"__g_{c}" for c in by])
 
 
 def kruskal_wallis(df: DataFrame, value_col: str, group_col: str,
@@ -2390,11 +2391,7 @@ def permutation_test(df: DataFrame, value_col: str, sample_col: str,
          / F.lit(float(scale))).alias("__diff"))
 
     def _obs_cond():
-        cond = None
-        for c in by:
-            eq = F.col(c).eqNullSafe(F.col(f"__g_{c}"))
-            cond = eq if cond is None else (cond & eq)
-        return cond
+        return _eq_all([(c, f"__g_{c}") for c in by])
 
     perms = base.withColumn(
         "__k", F.explode(F.sequence(F.lit(1), F.lit(int(n_perm)))))
@@ -2652,9 +2649,8 @@ def dunn_test(df: DataFrame, value_col: str, group_col: str,
         F.col("__grp").alias("lev_b"),
         F.col("__ni").alias("n_b"),
         F.col("__rs2").alias("__rs2b"))
-    jcond = F.col("lev_a") < F.col("lev_b")
-    for c in by:
-        jcond = jcond & F.col(f"__l_{c}").eqNullSafe(F.col(f"__r_{c}"))
+    jcond = _eq_all([(f"__l_{c}", f"__r_{c}") for c in by],
+                    F.col("lev_a") < F.col("lev_b"))
     pairs = left.join(right, jcond)
     nd = F.col("__N").cast("double")
     sigma2 = (nd * (nd + 1)
@@ -2727,9 +2723,8 @@ def theil_sen(df: DataFrame, x_col: str, y_col: str,
         *[F.col(c).alias(f"__r_{c}") for c in by],
         F.col("__x").alias("__xr"), F.col("__y").alias("__yr"),
         F.col("__n").alias("__nr"))
-    jcond = F.col("__xl") < F.col("__xr")
-    for c in by:
-        jcond = jcond & F.col(f"__l_{c}").eqNullSafe(F.col(f"__r_{c}"))
+    jcond = _eq_all([(f"__l_{c}", f"__r_{c}") for c in by],
+                    F.col("__xl") < F.col("__xr"))
     pairs = left.join(right, jcond).select(
         *[F.col(f"__l_{c}").alias(c) for c in by],
         ((F.col("__yr").cast("double") - F.col("__yl").cast("double"))
@@ -2740,13 +2735,10 @@ def theil_sen(df: DataFrame, x_col: str, y_col: str,
     slope = _weighted_lower_median(pairs, by, "__slope", "__w",
                                    "slope")
     if by:
-        cond = None
         scols = slope.select(
             *[F.col(c).alias(f"__s_{c}") for c in by], "slope")
-        for c in by:
-            eq = F.col(c).eqNullSafe(F.col(f"__s_{c}"))
-            cond = eq if cond is None else (cond & eq)
-        withs = cells.join(broadcast(scols), cond) \
+        withs = cells.join(broadcast(scols),
+                           _eq_all([(c, f"__s_{c}") for c in by])) \
             .drop(*[f"__s_{c}" for c in by])
     else:
         from .fold import fold_scalars
@@ -2778,10 +2770,7 @@ def theil_sen(df: DataFrame, x_col: str, y_col: str,
         out = stats_agg
         for frame, pre in ((scols, "__m_"), (pair_tot, "__p_"),
                            (icols, "__i_")):
-            cond = None
-            for c in by:
-                eq = F.col(f"__t_{c}").eqNullSafe(F.col(f"{pre}{c}"))
-                cond = eq if cond is None else (cond & eq)
+            cond = _eq_all([(f"__t_{c}", f"{pre}{c}") for c in by])
             out = out.join(broadcast(frame), cond, "left") \
                 .drop(*[f"{pre}{c}" for c in by])
         out = out.select(*[F.col(f"__t_{c}").alias(c) for c in by],
@@ -2902,9 +2891,8 @@ def brown_forsythe(df: DataFrame, value_col: str, group_col: str,
         F.col("__grp").alias("__g_grp")).agg(
         F.round(F.percentile(F.col("__vu"), F.lit(0.5)) * 2)
          .cast("bigint").alias("__med2"))
-    cond = F.col("__grp") == F.col("__g_grp")
-    for c in by:
-        cond = cond & F.col(c).eqNullSafe(F.col(f"__g_{c}"))
+    cond = _eq_all([(c, f"__g_{c}") for c in by],
+                   F.col("__grp") == F.col("__g_grp"))
     joined = base.join(broadcast(med), cond) \
         .drop("__g_grp", *[f"__g_{c}" for c in by])
     z2 = F.abs(F.lit(2) * F.col("__vu") - F.col("__med2")) \
@@ -3028,9 +3016,8 @@ def cliffs_delta(df: DataFrame, value_col: str, sample_col: str,
         *[F.col(c).alias(f"__r_{c}") for c in by],
         F.col("__v").alias("__vr"), F.col("__ta").alias("__tar"),
         F.col("__tb").alias("__tbr"))
-    jcond = F.col("__vl") < F.col("__vr")
-    for c in by:
-        jcond = jcond & F.col(f"__l_{c}").eqNullSafe(F.col(f"__r_{c}"))
+    jcond = _eq_all([(f"__l_{c}", f"__r_{c}") for c in by],
+                    F.col("__vl") < F.col("__vr"))
     # for each ordered cell pair (l < r): a-above-b pairs are
     # (a at r) x (b at l); a-below-b pairs are (a at l) x (b at r)
     dom = left.join(right, jcond).groupBy(
@@ -3048,10 +3035,7 @@ def cliffs_delta(df: DataFrame, value_col: str, sample_col: str,
         # dominance counts LEFT-join on so a constant-valued group -
         # no ordered cell pair, hence no dom row - still emits, with
         # __gt/__lt coalesced to 0 below (delta = 0, not a lost row)
-        cond = None
-        for c in by:
-            eq = F.col(f"__t_{c}").eqNullSafe(F.col(c))
-            cond = eq if cond is None else (cond & eq)
+        cond = _eq_all([(f"__t_{c}", c) for c in by])
         out = totals.join(broadcast(dom), cond, "left") \
             .select(*[F.col(f"__t_{c}").alias(c) for c in by],
                     "n_a", "n_b", "__gt", "__lt")
@@ -3101,10 +3085,7 @@ def hodges_lehmann(df: DataFrame, value_col: str, sample_col: str,
     right = cells.where(F.col("__tb") > 0).select(
         *[F.col(c).alias(f"__r_{c}") for c in by],
         F.col("__v").alias("__vb"), F.col("__tb").alias("__wb"))
-    jcond = None
-    for c in by:
-        eq = F.col(f"__l_{c}").eqNullSafe(F.col(f"__r_{c}"))
-        jcond = eq if jcond is None else (jcond & eq)
+    jcond = _eq_all([(f"__l_{c}", f"__r_{c}") for c in by])
     pairs = (left.join(right, jcond) if jcond is not None
              else left.crossJoin(right)).select(
         *[F.col(f"__l_{c}").alias(c) for c in by],
@@ -3117,17 +3098,77 @@ def hodges_lehmann(df: DataFrame, value_col: str, sample_col: str,
         F.sum("__tb").cast("bigint").alias("n_b"))
     if by:
         from pyspark.sql.functions import broadcast
-        cond = None
-        for c in by:
-            eq = F.col(c).eqNullSafe(F.col(f"__t_{c}"))
-            cond = eq if cond is None else (cond & eq)
-        out = med.join(broadcast(totals), cond) \
+        out = med.join(broadcast(totals),
+                       _eq_all([(c, f"__t_{c}") for c in by])) \
             .drop(*[f"__t_{c}" for c in by])
     else:
         from .fold import fold_scalars
         out = fold_scalars(med, totals.select("n_a", "n_b"))
     return out.select(*[F.col(c) for c in by],
                       "n_a", "n_b", "shift")
+
+
+def _complete_blocks(df: DataFrame, by: list[str], block_col: str,
+                     item_col: str, value_col: str,
+                     item_type: str = "string", value=None,
+                     rank_range: bool = False) -> DataFrame:
+    """The complete-block preamble shared by the blocked designs
+    (:func:`friedman_test`, :func:`page_trend`, :func:`kendalls_w`,
+    :func:`quade_test`, :func:`cronbach_alpha`). Rows with a NULL
+    value, block or item are dropped; the rest come back as
+    ``(*by, __blk, __trt, __v, __k)`` — block cast to string, item to
+    ``item_type``, ``__v`` the value (or the ``value`` expression) and
+    ``__k`` the number of distinct items in the ``by`` group
+    (:func:`_attach_group_aggs`) — keeping only the blocks that hold
+    each of the k items exactly once.
+
+    The completeness table has one row per (group, block): unlike the
+    group grain it is NOT bounded by design, so its join broadcasts it
+    only while Catalyst's input estimate stays under
+    ``RANK_WINDOW_MAX_BYTES``; past it, or without an estimate, a
+    plain join lets AQE pick the strategy from runtime sizes, and a
+    billion-block input cannot OOM the executors on a forced
+    broadcast.
+
+    ``rank_range`` (Quade): the complete blocks are filtered at the
+    block grain first and ranked by value range (``max - min``) with
+    :func:`_midranks` — one ordered window per group over the bounded
+    block grain — and that ranked table is the one joined back: the
+    rows gain the block's doubled range midrank ``__q2`` and the inner
+    join doubles as the completeness filter."""
+    from pyspark.sql.functions import broadcast
+
+    base = df.where(F.col(value_col).isNotNull()
+                    & F.col(block_col).isNotNull()
+                    & F.col(item_col).isNotNull()).select(
+        *[F.col(c) for c in by],
+        F.col(block_col).cast("string").alias("__blk"),
+        F.col(item_col).cast(item_type).alias("__trt"),
+        (F.col(value_col) if value is None else value).alias("__v"))
+    k = F.countDistinct("__trt").cast("bigint")
+    rows = _attach_group_aggs(base, base, by, k.alias("__k"))
+    rng = [(F.max("__v") - F.min("__v")).alias("__rng")] if rank_range \
+        else []
+    blocks = base.groupBy(*by, "__blk").agg(
+        k.alias("__bk"), F.count(F.lit(1)).cast("bigint").alias("__bn"),
+        *rng)
+    complete = ((F.col("__bk") == F.col("__k"))
+                & (F.col("__bn") == F.col("__k")))
+    if rank_range:
+        blocks = _midranks(
+            _attach_group_aggs(blocks, base, by, k.alias("__k"))
+            .where(complete), ["__rng"], ["__q2"], by, False) \
+            .select(*by, "__blk", "__q2")
+    names = {**{c: f"__b_{c}" for c in by}, "__blk": "__b_blk"}
+    blocks = blocks.select(*[F.col(c).alias(names.get(c, c))
+                             for c in blocks.columns])
+    in_size = _plan_size(df)
+    if in_size is not None and in_size <= RANK_WINDOW_MAX_BYTES:
+        blocks = broadcast(blocks)
+    cond = _eq_all([(c, f"__b_{c}") for c in by],
+                   F.col("__blk") == F.col("__b_blk"))
+    rows = rows.join(blocks, cond).drop(*names.values())
+    return rows if rank_range else rows.where(complete)
 
 
 def friedman_test(df: DataFrame, block_col: str, treatment_col: str,
@@ -3153,72 +3194,18 @@ def friedman_test(df: DataFrame, block_col: str, treatment_col: str,
     cross-treatment float sum (k R_j^2 terms) folds treatment-sorted
     on both engines (the q191 device).
 
-    Scale shape: ranking windows partition by (group, BLOCK) -
-    blocks x groups parallel, each sorting k values; one filter pass
-    drops incomplete blocks; then two bounded aggregations. Nothing
-    scales worse than the BLOCK COUNT - which, unlike the group
-    count, is NOT bounded by design (one row per (by, block)): the
-    completeness join therefore broadcasts the block-grain table
-    only while Catalyst's input estimate stays under
-    ``RANK_WINDOW_MAX_BYTES``; above it (or when no estimate
-    exists) it falls back to a plain key join and lets AQE pick the
-    runtime strategy, so a billion-block input cannot OOM the
-    executors on a forced broadcast.
+    Scale shape: :func:`_complete_blocks` drops incomplete blocks
+    (its block-grain completeness join is size-gated);
+    :func:`_midranks` ranks within (group, BLOCK) partitions - blocks
+    x groups parallel, each sorting k values; then two bounded
+    aggregations. Nothing scales worse than the BLOCK COUNT.
     """
-    from pyspark.sql.functions import broadcast
-    from pyspark.sql.window import Window
-
     by = list(by or [])
-    base = df.where(F.col(value_col).isNotNull()
-                    & F.col(block_col).isNotNull()
-                    & F.col(treatment_col).isNotNull()).select(
-        *[F.col(c) for c in by],
-        F.col(block_col).cast("string").alias("__blk"),
-        F.col(treatment_col).cast("string").alias("__trt"),
-        F.col(value_col).alias("__v"))
-    kdf = base.groupBy(
-        *[F.col(c).alias(f"__g_{c}") for c in by]).agg(
-        F.countDistinct("__trt").cast("bigint").alias("__k"))
-    bsz = base.groupBy(
-        *[F.col(c).alias(f"__b_{c}") for c in by],
-        F.col("__blk").alias("__b_blk")).agg(
-        F.countDistinct("__trt").cast("bigint").alias("__bk"),
-        F.count(F.lit(1)).cast("bigint").alias("__bn"))
-    condk = None
-    for c in by:
-        eq = F.col(c).eqNullSafe(F.col(f"__g_{c}"))
-        condk = eq if condk is None else (condk & eq)
-    condb = F.col("__blk") == F.col("__b_blk")
-    for c in by:
-        condb = condb & F.col(c).eqNullSafe(F.col(f"__b_{c}"))
-    if by:
-        work = base.join(broadcast(kdf), condk) \
-            .drop(*[f"__g_{c}" for c in by])
-    else:
-        from .fold import fold_scalars
-        work = fold_scalars(base, kdf.select("__k"))
-    # bsz is BLOCK-grain (unbounded, unlike the group-grain kdf):
-    # force the broadcast only under the rank-family size gate;
-    # past it - or with no estimate - use a plain join and let AQE
-    # decide from runtime sizes
-    in_size = _plan_size(df)
-    if in_size is not None and in_size <= RANK_WINDOW_MAX_BYTES:
-        bsz = broadcast(bsz)
-    work = work.join(bsz, condb) \
-        .drop("__b_blk", *[f"__b_{c}" for c in by])
-    # complete blocks only, and exactly one row per cell
-    work = work.where((F.col("__bk") == F.col("__k"))
-                      & (F.col("__bn") == F.col("__k")))
-    wo = Window.partitionBy(*by, "__blk").orderBy("__v") \
-        .rangeBetween(Window.unboundedPreceding, 0)
-    wt = Window.partitionBy(*by, "__blk", "__v")
-    cum_le = F.count(F.lit(1)).over(wo)
-    t = F.count(F.lit(1)).over(wt)
-    r2 = (F.lit(2) * (cum_le - t) + t + F.lit(1)).cast("bigint")
-    ranked = work.select(
-        *[F.col(c) for c in by], "__trt", "__k",
-        r2.alias("__r2"),
-        (t * t - 1).cast("bigint").alias("__tie1"))
+    work = _complete_blocks(df, by, block_col, treatment_col, value_col)
+    ranked = _midranks(work, ["__v"], ["__r2"], [*by, "__blk"], False,
+                       tie_cols=["__t"]).select(
+        *[F.col(c) for c in by], "__trt", "__k", "__r2",
+        (F.col("__t") * F.col("__t") - 1).cast("bigint").alias("__tie1"))
     lvl = ranked.groupBy(*[F.col(c) for c in by], F.col("__trt")) \
         .agg(F.sum(F.col("__r2").cast("decimal(38,0)"))
               .alias("__rs2"),
@@ -3230,7 +3217,6 @@ def friedman_test(df: DataFrame, block_col: str, treatment_col: str,
         *[F.col(c) for c in by], "__nb", "__k",
         F.struct(F.col("__trt").alias("g"), term.alias("term"))
         .alias("__t"))
-    tie_aggs = [F.sum("__tie1").cast("bigint").alias("__ties")]
     aggs = [
         F.min("__k").cast("bigint").alias("k"),
         F.min("__nb").cast("bigint").alias("n_blocks"),
@@ -3240,18 +3226,8 @@ def friedman_test(df: DataFrame, block_col: str, treatment_col: str,
     ]
     g = (staged.groupBy(*[F.col(c) for c in by]).agg(*aggs)
          if by else staged.agg(*aggs))
-    if by:
-        ties = ranked.groupBy(
-            *[F.col(c).alias(f"__g_{c}") for c in by]).agg(*tie_aggs)
-        cond = None
-        for c in by:
-            eq = F.col(c).eqNullSafe(F.col(f"__g_{c}"))
-            cond = eq if cond is None else (cond & eq)
-        g = g.join(broadcast(ties), cond) \
-            .drop(*[f"__g_{c}" for c in by])
-    else:
-        from .fold import fold_scalars
-        g = fold_scalars(g, ranked.agg(*tie_aggs))
+    g = _attach_group_aggs(
+        g, ranked, by, F.sum("__tie1").cast("bigint").alias("__ties"))
     nd = F.col("n_blocks").cast("double")
     kd = F.col("k").cast("double")
     q_raw = (F.lit(12.0) / (nd * kd * (kd + 1)) * F.col("__fold")
@@ -3324,9 +3300,8 @@ def jonckheere_terpstra(df: DataFrame, value_col: str,
         *[F.col(c).alias(f"__r_{c}") for c in by],
         F.col("__v").alias("__vr"), F.col("__d").alias("__dr"),
         F.col("__n").alias("__nr"))
-    jcond = F.col("__dl") < F.col("__dr")
-    for c in by:
-        jcond = jcond & F.col(f"__l_{c}").eqNullSafe(F.col(f"__r_{c}"))
+    jcond = _eq_all([(f"__l_{c}", f"__r_{c}") for c in by],
+                    F.col("__dl") < F.col("__dr"))
     pairs = left.join(right, jcond)
     # 2*U contribution: 2 per strictly-below pair, 1 per tie pair
     contrib = F.when(F.col("__vl") < F.col("__vr"), F.lit(2)) \
@@ -3363,17 +3338,11 @@ def jonckheere_terpstra(df: DataFrame, value_col: str,
         F.sum(tu.cast(dec) * (tu - 1) * (tu - 2)).alias("__st3"),
         F.sum(tu.cast(dec) * (tu - 1)).alias("__st2"))
     if by:
-        cond = None
-        for c in by:
-            eq = F.col(c).eqNullSafe(F.col(f"__s_{c}"))
-            cond = eq if cond is None else (cond & eq)
-        out = jt2.join(broadcast(tots), cond) \
+        out = jt2.join(broadcast(tots),
+                       _eq_all([(c, f"__s_{c}") for c in by])) \
             .drop(*[f"__s_{c}" for c in by])
-        cond = None
-        for c in by:
-            eq = F.col(c).eqNullSafe(F.col(f"__q_{c}"))
-            cond = eq if cond is None else (cond & eq)
-        out = out.join(broadcast(ties), cond) \
+        out = out.join(broadcast(ties),
+                       _eq_all([(c, f"__q_{c}") for c in by])) \
             .drop(*[f"__q_{c}" for c in by])
     else:
         from .fold import fold_scalars
@@ -3452,8 +3421,7 @@ def ordinal_association(df: DataFrame, x_col: str, y_col: str,
     cond = (F.col("l.__x") < F.col("r.__x")) \
         | ((F.col("l.__x") == F.col("r.__x"))
            & (F.col("l.__y") < F.col("r.__y")))
-    for c in by:
-        cond = cond & F.col(f"l.{c}").eqNullSafe(F.col(f"r.{c}"))
+    cond = _eq_all([(f"l.{c}", f"r.{c}") for c in by], cond)
     m = F.col("l.__n") * F.col("r.__n")
     xlt = F.col("l.__x") < F.col("r.__x")
     pairs = l.join(r, cond).select(
@@ -3585,63 +3553,21 @@ def page_trend(df: DataFrame, block_col: str, treatment_col: str,
     Determinism: doubled within-block midranks are exact integers,
     so ``2L`` accumulates exactly (DECIMAL(38,0)); the dose order j
     is a dense_rank over the bounded (group, treatment) grain; z is
-    one row-local expression. Scale shape: ranking windows partition
-    by (group, block) - blocks x groups parallel over k values each;
-    everything else is bounded-grain aggregation.
+    one row-local expression. Scale shape: :func:`_complete_blocks`
+    keeps the complete blocks and :func:`_midranks` ranks within
+    (group, block) partitions - blocks x groups parallel over k
+    values each; everything else is bounded-grain aggregation.
     """
     from pyspark.sql.functions import broadcast
     from pyspark.sql.window import Window
 
     by = list(by or [])
     dec = "decimal(38,0)"
-    base = df.where(F.col(value_col).isNotNull()
-                    & F.col(block_col).isNotNull()
-                    & F.col(treatment_col).isNotNull()).select(
-        *[F.col(c) for c in by],
-        F.col(block_col).cast("string").alias("__blk"),
-        F.col(treatment_col).cast("bigint").alias("__trt"),
-        F.col(value_col).alias("__v"))
-    kdf = base.groupBy(
-        *[F.col(c).alias(f"__g_{c}") for c in by]).agg(
-        F.countDistinct("__trt").cast("bigint").alias("__k"))
-    bsz = base.groupBy(
-        *[F.col(c).alias(f"__b_{c}") for c in by],
-        F.col("__blk").alias("__b_blk")).agg(
-        F.countDistinct("__trt").cast("bigint").alias("__bk"),
-        F.count(F.lit(1)).cast("bigint").alias("__bn"))
-    condk = None
-    for c in by:
-        eq = F.col(c).eqNullSafe(F.col(f"__g_{c}"))
-        condk = eq if condk is None else (condk & eq)
-    condb = F.col("__blk") == F.col("__b_blk")
-    for c in by:
-        condb = condb & F.col(c).eqNullSafe(F.col(f"__b_{c}"))
-    if by:
-        work = base.join(broadcast(kdf), condk) \
-            .drop(*[f"__g_{c}" for c in by])
-    else:
-        from .fold import fold_scalars
-        work = fold_scalars(base, kdf.select("__k"))
-    # block-grain completeness table: same size gate as friedman_test
-    # (block count is unbounded; force the broadcast only under the
-    # rank-family input estimate, else plain join + AQE)
-    in_size = _plan_size(df)
-    if in_size is not None and in_size <= RANK_WINDOW_MAX_BYTES:
-        bsz = broadcast(bsz)
-    work = work.join(bsz, condb) \
-        .drop("__b_blk", *[f"__b_{c}" for c in by])
-    work = work.where((F.col("__bk") == F.col("__k"))
-                      & (F.col("__bn") == F.col("__k")))
-    # within-block doubled midranks (the friedman device)
-    wo = Window.partitionBy(*by, "__blk").orderBy("__v") \
-        .rangeBetween(Window.unboundedPreceding, 0)
-    wt = Window.partitionBy(*by, "__blk", "__v")
-    cum_le = F.count(F.lit(1)).over(wo)
-    t = F.count(F.lit(1)).over(wt)
-    r2 = (F.lit(2) * (cum_le - t) + t + F.lit(1)).cast("bigint")
-    ranked = work.select(
-        *[F.col(c) for c in by], "__trt", "__k",
-        r2.alias("__r2"))
+    work = _complete_blocks(df, by, block_col, treatment_col, value_col,
+                            item_type="bigint")
+    ranked = _midranks(work, ["__v"], ["__r2"], [*by, "__blk"],
+                       False).select(
+        *[F.col(c) for c in by], "__trt", "__k", "__r2")
     # dose order j = dense_rank of the treatment within the group
     # (bounded grain: k rows per group)
     wj = (Window.partitionBy(*by).orderBy("__trt") if by
@@ -3649,12 +3575,11 @@ def page_trend(df: DataFrame, block_col: str, treatment_col: str,
     trt = ranked.select(*[F.col(c) for c in by], "__trt") \
         .distinct().withColumn(
         "__j", F.dense_rank().over(wj).cast("bigint"))
-    jcond = F.col("__trt").eqNullSafe(F.col("__t_trt"))
     tsel = trt.select(
         *[F.col(c).alias(f"__t_{c}") for c in by],
         F.col("__trt").alias("__t_trt"), "__j")
-    for c in by:
-        jcond = jcond & F.col(c).eqNullSafe(F.col(f"__t_{c}"))
+    jcond = _eq_all([("__trt", "__t_trt"),
+                     *[(c, f"__t_{c}") for c in by]])
     ranked = ranked.join(broadcast(tsel), jcond) \
         .drop("__t_trt", *[f"__t_{c}" for c in by])
     aggs = [
@@ -3712,13 +3637,10 @@ def mood_median_test(df: DataFrame, value_col: str, group_col: str,
         F.count(F.lit(1)).cast("bigint").alias("__w"))
     med = _weighted_lower_median(grain, by, "__v", "__w", "__med")
     if by:
-        cond = None
         msel = med.select(
             *[F.col(c).alias(f"__m_{c}") for c in by], "__med")
-        for c in by:
-            eq = F.col(c).eqNullSafe(F.col(f"__m_{c}"))
-            cond = eq if cond is None else (cond & eq)
-        work = base.join(broadcast(msel), cond) \
+        work = base.join(broadcast(msel),
+                         _eq_all([(c, f"__m_{c}") for c in by])) \
             .drop(*[f"__m_{c}" for c in by])
     else:
         from .fold import fold_scalars
@@ -3787,73 +3709,25 @@ def kendalls_w(df: DataFrame, rater_col: str, object_col: str,
     DECIMAL(38,0) (``2 mean R = m(k+1)`` exactly); tie terms are
     exact integer sums; W is one row-local double division.
 
-    Scale shape: ranking windows partition by (group, RATER) -
+    Scale shape: :func:`_complete_blocks` keeps the complete raters
+    and :func:`_midranks` ranks within (group, RATER) partitions -
     raters x groups parallel over k values each; then two bounded
     aggregations (object grain, group grain).
     """
-    from pyspark.sql.functions import broadcast
-    from pyspark.sql.window import Window
-
     by = list(by or [])
     dec = "decimal(38,0)"
-    base = df.where(F.col(value_col).isNotNull()
-                    & F.col(rater_col).isNotNull()
-                    & F.col(object_col).isNotNull()).select(
-        *[F.col(c) for c in by],
-        F.col(rater_col).cast("string").alias("__rtr"),
-        F.col(object_col).cast("string").alias("__obj"),
-        F.col(value_col).alias("__v"))
-    kdf = base.groupBy(
-        *[F.col(c).alias(f"__g_{c}") for c in by]).agg(
-        F.countDistinct("__obj").cast("bigint").alias("__k"))
-    rsz = base.groupBy(
-        *[F.col(c).alias(f"__b_{c}") for c in by],
-        F.col("__rtr").alias("__b_rtr")).agg(
-        F.countDistinct("__obj").cast("bigint").alias("__bk"),
-        F.count(F.lit(1)).cast("bigint").alias("__bn"))
-    condk = None
-    for c in by:
-        eq = F.col(c).eqNullSafe(F.col(f"__g_{c}"))
-        condk = eq if condk is None else (condk & eq)
-    condb = F.col("__rtr") == F.col("__b_rtr")
-    for c in by:
-        condb = condb & F.col(c).eqNullSafe(F.col(f"__b_{c}"))
-    if by:
-        work = base.join(broadcast(kdf), condk) \
-            .drop(*[f"__g_{c}" for c in by])
-    else:
-        from .fold import fold_scalars
-        work = fold_scalars(base, kdf.select("__k"))
-    # rater-grain completeness: same size gate as friedman_test
-    in_size = _plan_size(df)
-    if in_size is not None and in_size <= RANK_WINDOW_MAX_BYTES:
-        rsz = broadcast(rsz)
-    work = work.join(rsz, condb) \
-        .drop("__b_rtr", *[f"__b_{c}" for c in by])
-    work = work.where((F.col("__bk") == F.col("__k"))
-                      & (F.col("__bn") == F.col("__k")))
-    wo = Window.partitionBy(*by, "__rtr").orderBy("__v") \
-        .rangeBetween(Window.unboundedPreceding, 0)
-    wt = Window.partitionBy(*by, "__rtr", "__v")
-    cum_le = F.count(F.lit(1)).over(wo)
-    t = F.count(F.lit(1)).over(wt)
-    r2 = (F.lit(2) * (cum_le - t) + t + F.lit(1)).cast("bigint")
-    ranked = work.select(
-        *[F.col(c) for c in by], "__rtr", "__obj", "__k",
-        r2.alias("__r2"))
+    # raters are the blocks (__blk), objects the items (__trt)
+    work = _complete_blocks(df, by, rater_col, object_col, value_col)
+    ranked = _midranks(work, ["__v"], ["__r2"], [*by, "__blk"],
+                       False).select(
+        *[F.col(c) for c in by], "__blk", "__trt", "__k", "__r2")
     # per-rater tie correction: aggregate t^3 - t at the
     # (rater, value) cell grain, then sum to the group grain
-    tie = work.groupBy(
-        *[F.col(c).alias(f"__q_{c}") for c in by],
-        F.col("__rtr").alias("__q_rtr"), F.col("__v")).agg(
+    tie = work.groupBy(*[F.col(c) for c in by], "__blk", "__v").agg(
         F.count(F.lit(1)).cast("bigint").alias("__t"))
-    tsum = tie.groupBy(
-        *[F.col(c) for c in [f"__q_{c}" for c in by]]).agg(
-        F.sum(F.col("__t").cast(dec) * F.col("__t") * F.col("__t")
-              - F.col("__t")).alias("__T"))
     # per-object doubled rank sums, then 4S at the group grain
     objsum = ranked.groupBy(
-        *[F.col(c) for c in by], F.col("__obj")).agg(
+        *[F.col(c) for c in by], F.col("__trt")).agg(
         F.sum("__r2").cast(dec).alias("__R2"),
         F.min("__k").cast("bigint").alias("k"),
         F.count(F.lit(1)).cast("bigint").alias("m"))
@@ -3866,16 +3740,9 @@ def kendalls_w(df: DataFrame, rater_col: str, object_col: str,
     ]
     g = (objsum.groupBy(*[F.col(c) for c in by]).agg(*aggs)
          if by else objsum.agg(*aggs))
-    if by:
-        cond = None
-        for c in by:
-            eq = F.col(c).eqNullSafe(F.col(f"__q_{c}"))
-            cond = eq if cond is None else (cond & eq)
-        g = g.join(broadcast(tsum), cond) \
-            .drop(*[f"__q_{c}" for c in by])
-    else:
-        from .fold import fold_scalars
-        g = fold_scalars(g, tsum)
+    g = _attach_group_aggs(
+        g, tie, by, F.sum(F.col("__t").cast(dec) * F.col("__t")
+                          * F.col("__t") - F.col("__t")).alias("__T"))
     kd = F.col("k").cast("double")
     md = F.col("m").cast("double")
     s = F.col("__S4").cast("double") / F.lit(4.0)
@@ -3914,90 +3781,22 @@ def quade_test(df: DataFrame, block_col: str, treatment_col: str,
     is one row-local double expression with the 1/n cleared.
     Block ranges of integral values are exact.
 
-    Scale shape: ranking windows partition by (group, BLOCK); the
-    block-range ranking is ONE ordered window over the COMPLETE-block
-    grain per group - bounded by the block count (pre-aggregate
-    upstream; same block-grain contract as friedman_test, same
-    size-gated broadcast).
+    Scale shape: :func:`_complete_blocks` ranks the COMPLETE blocks
+    by value range - one ordered window per group over the block
+    grain, bounded by the block count (pre-aggregate upstream) - and
+    joins the ranks back, the join doubling as the completeness
+    filter; :func:`_midranks` then ranks within (group, BLOCK)
+    partitions.
     """
-    from pyspark.sql.functions import broadcast
-    from pyspark.sql.window import Window
-
     by = list(by or [])
     dec = "decimal(38,0)"
-    base = df.where(F.col(value_col).isNotNull()
-                    & F.col(block_col).isNotNull()
-                    & F.col(treatment_col).isNotNull()).select(
-        *[F.col(c) for c in by],
-        F.col(block_col).cast("string").alias("__blk"),
-        F.col(treatment_col).cast("string").alias("__trt"),
-        F.col(value_col).alias("__v"))
-    kdf = base.groupBy(
-        *[F.col(c).alias(f"__g_{c}") for c in by]).agg(
-        F.countDistinct("__trt").cast("bigint").alias("__k"))
-    bsz = base.groupBy(
-        *[F.col(c).alias(f"__b_{c}") for c in by],
-        F.col("__blk").alias("__b_blk")).agg(
-        F.countDistinct("__trt").cast("bigint").alias("__bk"),
-        F.count(F.lit(1)).cast("bigint").alias("__bn"),
-        (F.max("__v") - F.min("__v")).alias("__rng"))
-    condk = None
-    for c in by:
-        eq = F.col(c).eqNullSafe(F.col(f"__g_{c}"))
-        condk = eq if condk is None else (condk & eq)
-    if by:
-        work = base.join(broadcast(kdf), condk) \
-            .drop(*[f"__g_{c}" for c in by])
-        cblk = bsz.join(broadcast(kdf.select(
-            *[F.col(f"__g_{c}") for c in by],
-            F.col("__k").alias("__kk"))), _eq_all(
-            [(f"__b_{c}", f"__g_{c}") for c in by])) \
-            .where((F.col("__bk") == F.col("__kk"))
-                   & (F.col("__bn") == F.col("__kk"))) \
-            .drop(*[f"__g_{c}" for c in by], "__kk")
-    else:
-        from .fold import fold_scalars
-        work = fold_scalars(base, kdf.select("__k"))
-        cblk = fold_scalars(bsz, kdf.select(
-            F.col("__k").alias("__kk"))) \
-            .where((F.col("__bk") == F.col("__kk"))
-                   & (F.col("__bn") == F.col("__kk"))) \
-            .drop("__kk")
-    # block-range doubled midranks over COMPLETE blocks only - one
-    # ordered window over the bounded block grain per group
-    wqo = Window.partitionBy(
-        *[F.col(f"__b_{c}") for c in by]).orderBy("__rng") \
-        .rangeBetween(Window.unboundedPreceding, 0)
-    wqt = Window.partitionBy(
-        *[F.col(f"__b_{c}") for c in by], F.col("__rng"))
-    cum_le = F.count(F.lit(1)).over(wqo)
-    tq = F.count(F.lit(1)).over(wqt)
-    q2 = (F.lit(2) * (cum_le - tq) + tq + F.lit(1)).cast("bigint")
-    qblk = cblk.select(
-        *[F.col(f"__b_{c}") for c in by],
-        F.col("__b_blk"), q2.alias("__q2"))
-    condq = F.col("__blk") == F.col("__b_blk")
-    for c in by:
-        condq = condq & F.col(c).eqNullSafe(F.col(f"__b_{c}"))
-    # the qblk join doubles as the complete-block filter (inner join
-    # on the completeness-filtered block grain); size-gate like
-    # friedman_test
-    in_size = _plan_size(df)
-    if in_size is not None and in_size <= RANK_WINDOW_MAX_BYTES:
-        qblk = broadcast(qblk)
-    work = work.join(qblk, condq) \
-        .drop("__b_blk", *[f"__b_{c}" for c in by])
-    wo = Window.partitionBy(*by, "__blk").orderBy("__v") \
-        .rangeBetween(Window.unboundedPreceding, 0)
-    wt = Window.partitionBy(*by, "__blk", "__v")
-    cum_le2 = F.count(F.lit(1)).over(wo)
-    t = F.count(F.lit(1)).over(wt)
-    r2 = (F.lit(2) * (cum_le2 - t) + t + F.lit(1)).cast("bigint")
+    work = _complete_blocks(df, by, block_col, treatment_col, value_col,
+                            rank_range=True)
+    ranked = _midranks(work, ["__v"], ["__r2"], [*by, "__blk"], False)
     s4 = (F.col("__q2").cast(dec)
-          * (r2 - (F.col("__k") + 1)))  # 4*S_ij exact
-    ranked = work.select(
-        *[F.col(c) for c in by], "__trt", "__k",
-        s4.alias("__s4"))
+          * (F.col("__r2") - (F.col("__k") + 1)))  # 4*S_ij exact
+    ranked = ranked.select(
+        *[F.col(c) for c in by], "__trt", "__k", s4.alias("__s4"))
     tr = ranked.groupBy(
         *[F.col(c) for c in by], F.col("__trt")).agg(
         F.sum("__s4").alias("__sj4"),
@@ -4023,15 +3822,6 @@ def quade_test(df: DataFrame, block_col: str, treatment_col: str,
                     f_stat.alias("f"))
 
 
-def _eq_all(pairs):
-    """AND-fold of eqNullSafe over (left, right) column-name pairs."""
-    cond = None
-    for a, b in pairs:
-        eq = F.col(a).eqNullSafe(F.col(b))
-        cond = eq if cond is None else (cond & eq)
-    return cond
-
-
 def cronbach_alpha(df: DataFrame, subject_col: str, item_col: str,
                    value_col: str,
                    by: list[str] | None = None) -> DataFrame:
@@ -4048,56 +3838,23 @@ def cronbach_alpha(df: DataFrame, subject_col: str, item_col: str,
     sum of per-item variance terms folds item-sorted (the q191
     device); alpha is one row-local double expression.
 
-    Scale shape: one completeness pass (subject grain, size-gated
-    broadcast like friedman_test's blocks), one item-grain
-    aggregation, one subject-grain total aggregation - nothing
-    scales worse than the subject count.
+    Scale shape: one completeness pass (:func:`_complete_blocks`,
+    subjects as blocks), one item-grain aggregation, one
+    subject-grain total aggregation - nothing scales worse than the
+    subject count.
     """
-    from pyspark.sql.functions import broadcast
-
     by = list(by or [])
     dec = "decimal(38,0)"
-    base = df.where(F.col(value_col).isNotNull()
-                    & F.col(subject_col).isNotNull()
-                    & F.col(item_col).isNotNull()).select(
-        *[F.col(c) for c in by],
-        F.col(subject_col).cast("string").alias("__sub"),
-        F.col(item_col).cast("string").alias("__itm"),
-        # HALF_UP round, not a truncating bare cast (ADVICE r12);
-        # identity on integral inputs, pre-quantize for resolution
-        F.round(F.col(value_col)).cast("bigint").alias("__v"))
-    kdf = base.groupBy(
-        *[F.col(c).alias(f"__g_{c}") for c in by]).agg(
-        F.countDistinct("__itm").cast("bigint").alias("__k"))
-    ssz = base.groupBy(
-        *[F.col(c).alias(f"__b_{c}") for c in by],
-        F.col("__sub").alias("__b_sub")).agg(
-        F.countDistinct("__itm").cast("bigint").alias("__bk"),
-        F.count(F.lit(1)).cast("bigint").alias("__bn"))
-    condk = None
-    for c in by:
-        eq = F.col(c).eqNullSafe(F.col(f"__g_{c}"))
-        condk = eq if condk is None else (condk & eq)
-    condb = F.col("__sub") == F.col("__b_sub")
-    for c in by:
-        condb = condb & F.col(c).eqNullSafe(F.col(f"__b_{c}"))
-    if by:
-        work = base.join(broadcast(kdf), condk) \
-            .drop(*[f"__g_{c}" for c in by])
-    else:
-        from .fold import fold_scalars
-        work = fold_scalars(base, kdf.select("__k"))
-    in_size = _plan_size(df)
-    if in_size is not None and in_size <= RANK_WINDOW_MAX_BYTES:
-        ssz = broadcast(ssz)
-    work = work.join(ssz, condb) \
-        .drop("__b_sub", *[f"__b_{c}" for c in by])
-    work = work.where((F.col("__bk") == F.col("__k"))
-                      & (F.col("__bn") == F.col("__k")))
+    # subjects are the blocks (__blk), items the __trt column; HALF_UP
+    # round, not a truncating bare cast - identity on integral
+    # inputs, pre-quantize for resolution
+    work = _complete_blocks(
+        df, by, subject_col, item_col, value_col,
+        value=F.round(F.col(value_col)).cast("bigint"))
     # per-item co-moments -> per-item variance terms, folded
     # item-sorted for cross-engine float determinism
     item = work.groupBy(*[F.col(c) for c in by],
-                        F.col("__itm")).agg(
+                        F.col("__trt")).agg(
         F.sum(F.col("__v").cast(dec)).alias("__s"),
         F.sum(F.col("__v").cast(dec) * F.col("__v")).alias("__s2"),
         F.count(F.lit(1)).cast("bigint").alias("__n"))
@@ -4109,7 +3866,7 @@ def cronbach_alpha(df: DataFrame, subject_col: str, item_col: str,
            * (F.col("__n").cast("double") - 1))
     staged = item.select(
         *[F.col(c) for c in by], "__n",
-        F.struct(F.col("__itm").alias("i"), ivar.alias("v"))
+        F.struct(F.col("__trt").alias("i"), ivar.alias("v"))
         .alias("__t"))
     aggs = [
         F.count(F.lit(1)).cast("bigint").alias("k_items"),
@@ -4121,24 +3878,12 @@ def cronbach_alpha(df: DataFrame, subject_col: str, item_col: str,
     g = (staged.groupBy(*[F.col(c) for c in by]).agg(*aggs)
          if by else staged.agg(*aggs))
     # total-score variance from the subject grain
-    tot = work.groupBy(*[F.col(c).alias(f"__q_{c}") for c in by],
-                       F.col("__sub")).agg(
+    tot = work.groupBy(*[F.col(c) for c in by], "__blk").agg(
         F.sum(F.col("__v").cast(dec)).alias("__x"))
-    tvar_agg = tot.groupBy(
-        *[F.col(c) for c in [f"__q_{c}" for c in by]]).agg(
-        F.sum("__x").alias("__xs"),
+    g = _attach_group_aggs(
+        g, tot, by, F.sum("__x").alias("__xs"),
         F.sum(F.col("__x") * F.col("__x")).alias("__xs2"),
         F.count(F.lit(1)).cast("bigint").alias("__xn"))
-    if by:
-        cond = None
-        for c in by:
-            eq = F.col(c).eqNullSafe(F.col(f"__q_{c}"))
-            cond = eq if cond is None else (cond & eq)
-        g = g.join(broadcast(tvar_agg), cond) \
-            .drop(*[f"__q_{c}" for c in by])
-    else:
-        from .fold import fold_scalars
-        g = fold_scalars(g, tvar_agg)
     tvar = (F.col("__xn").cast("double")
             * F.col("__xs2").cast("double")
             - F.col("__xs").cast("double")
@@ -4228,9 +3973,8 @@ def siegel_slopes(df: DataFrame, x_col: str, y_col: str,
         *[F.col(c).alias(f"__r_{c}") for c in by],
         F.col("__x").alias("__xj"), F.col("__y").alias("__yj"),
         F.col("__n").alias("__nj"))
-    jcond = F.col("__xi") != F.col("__xj")
-    for c in by:
-        jcond = jcond & F.col(f"__l_{c}").eqNullSafe(F.col(f"__r_{c}"))
+    jcond = _eq_all([(f"__l_{c}", f"__r_{c}") for c in by],
+                    F.col("__xi") != F.col("__xj"))
     pairs = left.join(right, jcond).select(
         *[F.col(f"__l_{c}").alias(c) for c in by],
         "__xi", "__yi",
@@ -4245,10 +3989,8 @@ def siegel_slopes(df: DataFrame, x_col: str, y_col: str,
         *[F.col(c).alias(f"__c_{c}") for c in by],
         F.col("__x").alias("__c_x"), F.col("__y").alias("__c_y"),
         F.col("__n").alias("__ni"))
-    icond = (F.col("__xi").eqNullSafe(F.col("__c_x"))
-             & F.col("__yi").eqNullSafe(F.col("__c_y")))
-    for c in by:
-        icond = icond & F.col(c).eqNullSafe(F.col(f"__c_{c}"))
+    icond = _eq_all([("__xi", "__c_x"), ("__yi", "__c_y"),
+                     *[(c, f"__c_{c}") for c in by]])
     innerw = inner.join(broadcast(csel), icond) \
         .select(*[F.col(c) for c in by], "__med", "__ni")
     slope = _weighted_lower_median(innerw, by, "__med", "__ni",
@@ -4262,21 +4004,15 @@ def siegel_slopes(df: DataFrame, x_col: str, y_col: str,
             F.count(F.lit(1)).cast("bigint").alias("n_cells"))
         scols = slope.select(
             *[F.col(c).alias(f"__m_{c}") for c in by], "slope")
-        cond = None
-        for c in by:
-            eq = F.col(f"__t_{c}").eqNullSafe(F.col(f"__m_{c}"))
-            cond = eq if cond is None else (cond & eq)
+        cond = _eq_all([(f"__t_{c}", f"__m_{c}") for c in by])
         out = tot.join(broadcast(scols), cond, "left") \
             .drop(*[f"__m_{c}" for c in by])
         # intercept: weighted lower median of y - slope*x per cell
-        icond2 = None
         ssel = slope.select(
             *[F.col(c).alias(f"__s_{c}") for c in by],
             F.col("slope").alias("__sl"))
-        for c in by:
-            eq = F.col(c).eqNullSafe(F.col(f"__s_{c}"))
-            icond2 = eq if icond2 is None else (icond2 & eq)
-        withs = cells.join(broadcast(ssel), icond2) \
+        withs = cells.join(broadcast(ssel),
+                           _eq_all([(c, f"__s_{c}") for c in by])) \
             .drop(*[f"__s_{c}" for c in by])
     else:
         from .fold import fold_scalars
@@ -4298,10 +4034,7 @@ def siegel_slopes(df: DataFrame, x_col: str, y_col: str,
     if by:
         isel = inter.select(
             *[F.col(c).alias(f"__i_{c}") for c in by], "intercept")
-        cond = None
-        for c in by:
-            eq = F.col(f"__t_{c}").eqNullSafe(F.col(f"__i_{c}"))
-            cond = eq if cond is None else (cond & eq)
+        cond = _eq_all([(f"__t_{c}", f"__i_{c}") for c in by])
         out = out.join(broadcast(isel), cond, "left") \
             .drop(*[f"__i_{c}" for c in by])
         out = out.select(
@@ -4336,11 +4069,9 @@ def wilcoxon_signed_rank(df: DataFrame, a_col: str, b_col: str,
     one row-local expression.
 
     Scale shape: one map-side-combined cell aggregation (the raw
-    table's only shuffle) + cumulative windows over the bounded
-    grain + one bounded aggregation.
+    table's only shuffle) + :func:`_midranks` over the bounded grain,
+    weighted by the cell count + one bounded aggregation.
     """
-    from pyspark.sql.window import Window
-
     by = list(by or [])
     dec = "decimal(38,0)"
     # HALF_UP round before the integer grain: a bare bigint cast
@@ -4356,16 +4087,9 @@ def wilcoxon_signed_rank(df: DataFrame, a_col: str, b_col: str,
         *[F.col(c) for c in by], F.abs(d).alias("__ad")).agg(
         F.sum((d > 0).cast("bigint")).cast("bigint").alias("__np"),
         F.sum((d < 0).cast("bigint")).cast("bigint").alias("__nn"))
-    wo = (Window.partitionBy(*by).orderBy("__ad")
-          .rangeBetween(Window.unboundedPreceding, 0)
-          if by else Window.orderBy("__ad")
-          .rangeBetween(Window.unboundedPreceding, 0))
-    t = F.col("__np") + F.col("__nn")
-    cum_le = F.sum(t).over(wo)
-    r2 = (F.lit(2) * (cum_le - t) + t + F.lit(1)).cast("bigint")
-    ranked = cells.select(
-        *[F.col(c) for c in by], "__np",
-        t.alias("__t"), r2.alias("__r2"))
+    cells = cells.withColumn("__t", F.col("__np") + F.col("__nn"))
+    ranked = _midranks(cells, ["__ad"], ["__r2"], by, False,
+                       weight="__t")
     aggs = [
         F.sum("__t").cast("bigint").alias("n"),
         F.sum((F.col("__np") * F.col("__r2")).cast(dec))
@@ -4405,10 +4129,10 @@ def mood_scale_test(df: DataFrame, value_col: str, sample_col: str,
     so the per-cell contribution is exact - no fractional average
     scores, unlike Ansari-Bradley); z is one row-local expression.
 
-    Scale shape: one map-side-combined cell aggregation + cumulative
-    windows over the bounded value grain (the :func:`mann_whitney_u`
-    contract - bucket continuous values upstream) + one bounded
-    aggregation.
+    Scale shape: one map-side-combined cell aggregation +
+    :func:`_midranks` over the bounded value grain, weighted by the
+    cell count (the :func:`mann_whitney_u` contract - bucket
+    continuous values upstream) + one bounded aggregation.
     """
     from pyspark.sql.window import Window
 
@@ -4421,16 +4145,9 @@ def mood_scale_test(df: DataFrame, value_col: str, sample_col: str,
         F.col(value_col).alias("__v")).agg(
         F.sum((s == a).cast("bigint")).cast("bigint").alias("__ta"),
         F.sum((s == b).cast("bigint")).cast("bigint").alias("__tb"))
-    wo = (Window.partitionBy(*by).orderBy("__v")
-          .rangeBetween(Window.unboundedPreceding, 0)
-          if by else Window.orderBy("__v")
-          .rangeBetween(Window.unboundedPreceding, 0))
-    t = F.col("__ta") + F.col("__tb")
-    cum_le = F.sum(t).over(wo)
-    r2 = (F.lit(2) * (cum_le - t) + t + F.lit(1)).cast("bigint")
-    ranked = cells.select(
-        *[F.col(c) for c in by], "__ta", "__tb",
-        r2.alias("__r2"))
+    cells = cells.withColumn("__t", F.col("__ta") + F.col("__tb"))
+    ranked = _midranks(cells, ["__v"], ["__r2"], by, False,
+                       weight="__t")
     aggs = [
         F.sum("__ta").cast("bigint").alias("n_a"),
         F.sum("__tb").cast("bigint").alias("n_b"),
@@ -4443,8 +4160,7 @@ def mood_scale_test(df: DataFrame, value_col: str, sample_col: str,
     # pass over the raw table)
     wn = (Window.partitionBy(*by) if by else Window.partitionBy())
     ranked = ranked.withColumn(
-        "__n1", F.sum(F.col("__ta") + F.col("__tb")).over(wn)
-        .cast("bigint"))
+        "__n1", F.sum("__t").over(wn).cast("bigint"))
     g = (ranked.groupBy(*[F.col(c) for c in by]).agg(*aggs)
          if by else ranked.agg(*aggs))
     na = F.col("n_a").cast("double")

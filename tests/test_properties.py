@@ -148,9 +148,23 @@ _ranks = st.lists(
     min_size=2, max_size=16)
 
 
-@given(_ranks, st.integers(min_value=2, max_value=5))
+# (value, weight) cells: ties (repeated values merge into one cell),
+# NULL, NaN and +-inf values, weights > 1
+_cells = st.lists(
+    st.tuples(st.one_of(st.none(),
+                        st.integers(min_value=0, max_value=4)
+                        .map(lambda i: float(i)),
+                        st.sampled_from([float("nan"), float("inf"),
+                                         float("-inf")])),
+              st.integers(min_value=1, max_value=3)),
+    min_size=1, max_size=10)
+
+
+@given(_ranks, st.integers(min_value=2, max_value=5), _cells)
 @settings(max_examples=5, deadline=None)
-def test_distributed_midrank_equals_reference(spark, vs, buckets):
+def test_distributed_midrank_equals_reference(spark, vs, buckets, cells):
+    from pyspark.sql import functions as F
+
     from pandas_ai_spark.functions.stats import _midranks
 
     df = spark.createDataFrame([("g", v) for v in vs],
@@ -171,6 +185,24 @@ def test_distributed_midrank_equals_reference(spark, vs, buckets):
                   key=lambda t: (t[0] is not None, t[0], t[1]))
     assert got == want
     assert len(got) == len(vs)  # no row dropped
+
+    # weighted: on both devices, the (g, v) cell grain ranked with its
+    # row count as the weight equals the unweighted expanded rows
+    raw = spark.createDataFrame([("g", v, w) for v, w in cells],
+                                "g string, v double, w bigint")
+    grain = raw.groupBy("g", "v").agg(F.sum("w").alias("w"))
+    rows = raw.select("g", "v", F.explode(
+        F.sequence(F.lit(1), F.col("w").cast("int"))).alias("i"))
+    for dist in (False, True):
+        ranked = _midranks(grain, ["v"], ["r2"], ["g"], dist,
+                           buckets=buckets, tie_cols=["t"],
+                           weight="w")
+        got = {str(r.v): (r.r2, r.t) for r in ranked.collect()}
+        expanded = _midranks(rows, ["v"], ["r2"], ["g"], dist,
+                             buckets=buckets, tie_cols=["t"])
+        want = {str(r.v): (r.r2, r.t) for r in expanded.collect()}
+        assert got == want
+        assert len(got) == grain.count()
 
 
 @given(st.lists(st.tuples(st.sampled_from("ab"),

@@ -55,6 +55,27 @@ def _merged_ops():
     }
 
 
+def _routed_ops():
+    """The six operators whose ranks come from _midranks with
+    ``distributed=False``, each over the fixture frame
+    ``(g, blk, trt, s, v, w)`` with a ``by`` list."""
+    from pandas_ai_spark.functions import stats
+    return {
+        "friedman_test": lambda df, by: stats.friedman_test(
+            df, "blk", "trt", "v", by=by),
+        "page_trend": lambda df, by: stats.page_trend(
+            df, "blk", "trt", "v", by=by),
+        "kendalls_w": lambda df, by: stats.kendalls_w(
+            df, "blk", "trt", "v", by=by),
+        "quade_test": lambda df, by: stats.quade_test(
+            df, "blk", "trt", "v", by=by),
+        "wilcoxon_signed_rank": lambda df, by:
+            stats.wilcoxon_signed_rank(df, "v", "w", by=by),
+        "mood_scale_test": lambda df, by: stats.mood_scale_test(
+            df, "v", "s", "x", "y", by=by),
+    }
+
+
 class TestLazyTwins:
     def _mixed_df(self, spark):
         # ties, negatives, zero, wide magnitudes, NULLs, two groups
@@ -146,6 +167,49 @@ class TestLazyTwins:
         finally:
             sc.setJobGroup(None, None)
         assert list(jobs) == []
+
+    @pytest.mark.parametrize("by", [["g"], []], ids=["by", "no_by"])
+    @pytest.mark.parametrize("op", sorted(_routed_ops()))
+    def test_routed_op_build_runs_zero_jobs(self, spark, op, by):
+        # the blocked designs and the cell-grain tests rank through
+        # _midranks (and _complete_blocks): building launches no job
+        df = spark.createDataFrame(
+            [("g", "b1", 1, "x", 1.0, 2.0), ("g", "b1", 2, "y", 3.0, 1.0),
+             ("g", "b2", 1, "x", 2.0, 2.0), ("g", "b2", 2, "y", 2.0, 5.0)],
+            "g string, blk string, trt int, s string, v double, w double")
+        sc = spark.sparkContext
+        group = f"build_{op}_{len(by)}"
+        sc.setJobGroup(group, "lazy check")
+        try:
+            _routed_ops()[op](df, by)
+            jobs = sc.statusTracker().getJobIdsForGroup(group)
+        finally:
+            sc.setJobGroup(None, None)
+        assert list(jobs) == []
+
+    def test_mw_distributed_over_joined_input_builds_zero_jobs(
+            self, spark):
+        # an exchange-fed input is left unfanned instead of having its
+        # partition count read, which would run the join under AQE
+        from pandas_ai_spark.functions.stats import mann_whitney_u
+        left = spark.createDataFrame(
+            [(i % 3, float(i % 7), "x" if i % 2 else "y")
+             for i in range(40)], "k int, v double, s string")
+        right = spark.createDataFrame(
+            [(k, f"g{k % 2}") for k in range(3)], "k int, g string")
+        joined = left.join(right, "k")
+        sc = spark.sparkContext
+        sc.setJobGroup("mw_joined_build", "lazy check")
+        try:
+            out = mann_whitney_u(joined, "v", "s", "x", "y", by=["g"],
+                                 distributed=True, buckets=4)
+            jobs = sc.statusTracker().getJobIdsForGroup(
+                "mw_joined_build")
+        finally:
+            sc.setJobGroup(None, None)
+        assert list(jobs) == []
+        assert _rows(out) == _rows(mann_whitney_u(
+            joined, "v", "s", "x", "y", by=["g"], distributed=False))
 
     def test_wasserstein_distributed_matches_window_form(self, spark):
         from pandas_ai_spark.functions.stats import wasserstein_1d
