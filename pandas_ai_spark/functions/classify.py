@@ -27,6 +27,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from pandas_ai_spark.functions.stats import _attach, _cell_pairs
 from pandas_ai_spark.functions.text import normalize_text, whitespace_tokens
 
 
@@ -753,21 +754,15 @@ def weighted_kappa(df: DataFrame, col_a: str, col_b: str,
     cats = (base.select(*by, F.col("__a").alias("__c"))
             .unionByName(base.select(*by, F.col("__b").alias("__c")))
             .distinct())
-    w = (Window.partitionBy(*by).orderBy("__c") if by
-         else Window.orderBy("__c"))  # bounded category grain
+    w = Window.partitionBy(*by).orderBy("__c")  # bounded category grain
     idx = cats.select(
         *by, "__c",
         (F.row_number().over(w) - 1).cast("bigint").alias("__i"))
 
     def attach(dfx: DataFrame, valcol: str, out: str) -> DataFrame:
-        r = idx.select(
-            *[F.col(c).alias(f"__j_{c}") for c in by],
-            F.col("__c").alias("__jc"), F.col("__i").alias(out))
-        cond = F.col(valcol) == F.col("__jc")
-        for c in by:
-            cond = cond & F.col(c).eqNullSafe(F.col(f"__j_{c}"))
-        return dfx.join(F.broadcast(r), cond).drop(
-            "__jc", *[f"__j_{c}" for c in by])
+        return _attach(dfx, idx.select(
+            *by, F.col("__c").alias(valcol), F.col("__i").alias(out)),
+            [*by, valcol], how="inner")
 
     paired = attach(attach(base, "__a", "__ia"), "__b", "__ib")
     d = F.abs(F.col("__ia") - F.col("__ib"))
@@ -776,34 +771,17 @@ def weighted_kappa(df: DataFrame, col_a: str, col_b: str,
         F.count(F.lit(1)).cast("bigint").alias("__nij"))
     gagg = [F.sum("__nij").cast("bigint").alias("n"),
             F.sum(F.col("__nij") * dq).cast("bigint").alias("__D")]
-    g = (cells.groupBy(*[F.col(c) for c in by]).agg(*gagg)
-         if by else cells.agg(*gagg))
+    g = cells.groupBy(*by).agg(*gagg)
     ra = cells.groupBy(*by, F.col("__ia")).agg(
         F.sum("__nij").cast("bigint").alias("__ri"))
-    cb = cells.groupBy(
-        *[F.col(c).alias(f"__x_{c}") for c in by], F.col("__ib")).agg(
+    cb = cells.groupBy(*by, F.col("__ib")).agg(
         F.sum("__nij").cast("bigint").alias("__cj"))
-    cross_cond = F.lit(True)
-    for c in by:
-        cross_cond = cross_cond & F.col(c).eqNullSafe(F.col(f"__x_{c}"))
-    dd = F.abs(F.col("__ia") - F.col("__ib"))
-    ddq = (dd * dd if q == 2 else dd).cast("bigint")
-    eagg = F.sum(F.col("__ri").cast("decimal(38,0)")
-                 * F.col("__cj") * ddq).alias("__E")
-    crossed = ra.join(cb, cross_cond).drop(
-        *[f"__x_{c}" for c in by])
-    e = (crossed.groupBy(*[F.col(c) for c in by]).agg(eagg)
-         if by else crossed.agg(eagg))
-    kk = (idx.groupBy(*[F.col(c) for c in by]).agg(
-        F.count(F.lit(1)).cast("bigint").alias("k"))
-        if by else idx.agg(
-        F.count(F.lit(1)).cast("bigint").alias("k")))
-    if by:
-        from .stats import _left_join_nullsafe
-        out = _left_join_nullsafe(_left_join_nullsafe(g, e, by), kk, by)
-    else:
-        from .fold import fold_scalars
-        out = fold_scalars(fold_scalars(g, e), kk)
+    e = _cell_pairs(ra, cb, by).groupBy(
+        *[F.col(f"l.{c}").alias(c) for c in by]).agg(
+        F.sum(F.col("__ri").cast("decimal(38,0)") * F.col("__cj") * dq)
+        .alias("__E"))
+    kk = idx.groupBy(*by).agg(F.count(F.lit(1)).cast("bigint").alias("k"))
+    out = _attach(_attach(g, e, by), kk, by)
     nd = F.col("n").cast("double")
     kd = F.col("k").cast("double")
     ed = F.col("__E").cast("double")
@@ -860,8 +838,7 @@ def fleiss_kappa(df: DataFrame, item_col: str, category_col: str,
             F.aggregate(F.sort_array(F.collect_list("__s")),
                         F.lit(0.0),
                         lambda acc, x: acc + x["term"]).alias("__P")]
-    pbar = (stk.groupBy(*[F.col(x) for x in by]).agg(*pagg)
-            if by else stk.agg(*pagg))
+    pbar = stk.groupBy(*by).agg(*pagg)
     kept_keys = kept.select(
         *[F.col(x).alias(f"__k_{x}") for x in by],
         F.col("__u").alias("__ku"))
@@ -875,14 +852,7 @@ def fleiss_kappa(df: DataFrame, item_col: str, category_col: str,
             F.sum("__tc").cast("bigint").alias("__T"),
             F.sum(F.col("__tc").cast("decimal(38,0)")
                    * F.col("__tc")).alias("__T2")]
-    cat = (catt.groupBy(*[F.col(x) for x in by]).agg(*cagg)
-           if by else catt.agg(*cagg))
-    if by:
-        from .stats import _left_join_nullsafe
-        out = _left_join_nullsafe(pbar, cat, by)
-    else:
-        from .fold import fold_scalars
-        out = fold_scalars(pbar, cat)
+    out = _attach(pbar, catt.groupBy(*by).agg(*cagg), by)
     p_bar = F.col("__P") / F.col("n_items").cast("double")
     td = F.col("__T").cast("double")
     p_e = F.col("__T2").cast("double") / (td * td)
@@ -934,8 +904,7 @@ def krippendorff_alpha(df: DataFrame, unit_col: str, value_col: str,
             F.aggregate(F.sort_array(F.collect_list("__s")),
                         F.lit(0.0),
                         lambda acc, x: acc + x["term"]).alias("__Do")]
-    dobs = (stk.groupBy(*[F.col(x) for x in by]).agg(*dagg)
-            if by else stk.agg(*dagg))
+    dobs = stk.groupBy(*by).agg(*dagg)
     kept_keys = kept.select(
         *[F.col(x).alias(f"__k_{x}") for x in by],
         F.col("__u").alias("__ku"))
@@ -948,14 +917,7 @@ def krippendorff_alpha(df: DataFrame, unit_col: str, value_col: str,
     cagg = [F.sum("__tc").cast("bigint").alias("n_votes"),
             F.sum(F.col("__tc").cast("decimal(38,0)")
                    * F.col("__tc")).alias("__T2")]
-    cat = (catt.groupBy(*[F.col(x) for x in by]).agg(*cagg)
-           if by else catt.agg(*cagg))
-    if by:
-        from .stats import _left_join_nullsafe
-        out = _left_join_nullsafe(dobs, cat, by)
-    else:
-        from .fold import fold_scalars
-        out = fold_scalars(dobs, cat)
+    out = _attach(dobs, catt.groupBy(*by).agg(*cagg), by)
     td = F.col("n_votes").cast("double")
     de_den = td * td - F.col("__T2").cast("double")
     alpha = F.when(de_den > 0,
@@ -983,8 +945,7 @@ def gwet_ac1(df: DataFrame, col_a: str, col_b: str,
     tagg = [F.count(F.lit(1)).cast("bigint").alias("n"),
             F.sum((F.col("__a") == F.col("__b")).cast("bigint"))
              .cast("bigint").alias("__agree")]
-    tot = (base.groupBy(*[F.col(x) for x in by]).agg(*tagg)
-           if by else base.agg(*tagg))
+    tot = base.groupBy(*by).agg(*tagg)
     stacked = (base.select(*by, F.col("__a").alias("__c"))
                .unionByName(base.select(*by, F.col("__b").alias("__c"))))
     sc = stacked.groupBy(*by, "__c").agg(
@@ -992,14 +953,7 @@ def gwet_ac1(df: DataFrame, col_a: str, col_b: str,
     cagg = [F.count(F.lit(1)).cast("bigint").alias("k"),
             F.sum(F.col("__sc").cast("decimal(38,0)")
                    * F.col("__sc")).alias("__s2")]
-    cat = (sc.groupBy(*[F.col(x) for x in by]).agg(*cagg)
-           if by else sc.agg(*cagg))
-    if by:
-        from .stats import _left_join_nullsafe
-        out = _left_join_nullsafe(tot, cat, by)
-    else:
-        from .fold import fold_scalars
-        out = fold_scalars(tot, cat)
+    out = _attach(tot, sc.groupBy(*by).agg(*cagg), by)
     nd = F.col("n").cast("double")
     kd = F.col("k").cast("double")
     po = F.col("__agree").cast("double") / nd

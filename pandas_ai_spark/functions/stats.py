@@ -247,20 +247,60 @@ def _eq_all(pairs, cond=None):
     return cond
 
 
-def _left_join_nullsafe(left: DataFrame, right: DataFrame,
-                        by: list[str]) -> DataFrame:
-    """Left join on the by-columns with NULL-safe equality: a by-group
-    whose key is NULL must still match its right-side row — the plain
-    name-based ``join(right, by, 'left')`` silently pairs it with
-    nothing (ADVICE r12: ordinal_association / kendall_tau_b emitted
-    c_pairs/d_pairs = 0 and NULL statistics for NULL keys). Right's by
-    columns are prefixed then dropped; still an equi-join shape."""
-    r = right
-    for c in by:
-        r = r.withColumnRenamed(c, f"__rj_{c}")
-    cond = _eq_all([(c, f"__rj_{c}") for c in by])
-    return left.join(r, cond, "left").drop(
-        *[f"__rj_{c}" for c in by])
+def _attach(left: DataFrame, per_group: DataFrame, by: list[str],
+            how: str = "left") -> DataFrame:
+    """Append ``per_group``'s columns to the rows of ``left`` in the same
+    ``by`` group — the one per-group attach of this module.
+
+    Keys match NULL-safely: a group whose key is NULL still finds its
+    row, where a name-based ``join(per_group, by)`` pairs it with
+    nothing (kendall_tau_b and ordinal_association once emitted NULL
+    statistics for NULL keys that way). ``per_group`` holds at most one
+    row per group, so it is bounded by the group count, never by the
+    data: it is always broadcast, and ``left`` keeps its partitioning.
+    Its key columns are prefixed for the join and dropped after, so the
+    keys in the output are ``left``'s. ``how`` is the join type.
+
+    With ``by=[]`` the attach is :func:`fold_scalars`, and ``per_group``
+    must be exactly ONE row (an ungrouped ``agg`` is): an empty frame
+    drops every row of ``left`` whatever ``how`` says, so a caller
+    whose frame can be empty wraps it in an ungrouped ``min``."""
+    from .fold import fold_scalars
+
+    if not by:
+        return fold_scalars(left, per_group)
+    keyed = per_group.withColumnsRenamed({c: f"__a_{c}" for c in by})
+    return left.join(F.broadcast(keyed),
+                     _eq_all([(c, f"__a_{c}") for c in by]), how) \
+        .drop(*[f"__a_{c}" for c in by])
+
+
+def _cell_pairs(left: DataFrame, right: DataFrame, by: list[str],
+                on=None) -> DataFrame:
+    """Every pair of a ``left`` row and a ``right`` row in the same
+    ``by`` group that satisfies ``on`` — the one pairwise self-join
+    behind the dominance and pairwise-difference statistics
+    (:func:`kendall_tau_b`, :func:`ordinal_association`,
+    :func:`theil_sen`, :func:`siegel_slopes`, :func:`cliffs_delta`,
+    :func:`hodges_lehmann`, :func:`jonckheere_terpstra`, and over
+    level tables :func:`dunn_test` and ``classify.weighted_kappa``).
+
+    ``left`` is aliased ``l`` and ``right`` ``r``: ``on`` and the
+    caller's select read their columns as ``l.<c>`` / ``r.<c>``.
+    ``on=None`` pairs every row of a group with every row of the
+    other side (Hodges-Lehmann's cross differences). The group keys
+    match NULL-safely, so a NULL-keyed group pairs its own rows.
+
+    Both sides are a CELL grain (one row per distinct group and
+    value(s) — bounded by the value grains, not by the rows; bucket
+    continuous values upstream), so ``right`` is broadcast: the
+    Θ(cells²) pair work then runs across ``left``'s partitions, never
+    on one task per group as a join shuffled on the group key does (3
+    tasks for a 3-valued key). With ``by=[]`` and ``on=None`` it is a
+    cross join."""
+    l, r = left.alias("l"), F.broadcast(right).alias("r")
+    cond = _eq_all([(f"l.{c}", f"r.{c}") for c in by], on)
+    return l.crossJoin(r) if cond is None else l.join(r, cond)
 
 
 def _resolve_approx(df: DataFrame, approx: bool | None) -> bool:
@@ -826,9 +866,10 @@ def gini_coefficient(df: DataFrame, value_col: str,
     """
     from pyspark.sql.window import Window
 
+    by = list(by or [])
     v = F.col(value_col).cast("double")
     base = df.where(v.isNotNull()).select(
-        *(by or []), v.alias("__x"),
+        *by, v.alias("__x"),
         *( [F.col(tiebreak).alias("__tb")] if tiebreak else []))
     if base.where(F.col("__x") < 0).limit(1).count():
         raise ValueError("gini_coefficient needs non-negative values")
@@ -838,9 +879,8 @@ def gini_coefficient(df: DataFrame, value_col: str,
         ranked = base.withColumn("__i", F.row_number().over(w))
     else:
         ranked = _global_rank(base, order)
-    gb = ranked.groupBy(*by) if by else ranked.groupBy()
     n = F.count("*")
-    return gb.agg(
+    return ranked.groupBy(*by).agg(
         n.alias("n"),
         F.sum("__x").alias("total"),
         # try_divide: an all-zero group is NULL gini (0/0 surfaced,
@@ -1231,15 +1271,13 @@ def trimmed_stats(df: DataFrame, value_col: str,
         joined = df.withColumn("__lo", F.lit(row["__lo"])) \
                    .withColumn("__hi", F.lit(row["__hi"]))
     inside = (v >= F.col("__lo")) & (v <= F.col("__hi"))
-    keys = [F.col(c) for c in by] if by else []
-    out = joined.groupBy(*keys).agg(
+    return joined.groupBy(*(by or [])).agg(
         F.count("*").cast("bigint").alias("n"),
         F.sum((~inside).cast("bigint")).alias("n_trimmed"),
         F.avg(F.when(inside, v)).alias("trimmed_mean"),
         F.stddev_samp(F.when(inside, v)).alias("trimmed_std"),
         F.min("__lo").alias("lo"),
         F.max("__hi").alias("hi"))
-    return out
 
 
 def spearman_corr(df: DataFrame, x_col: str, y_col: str,
@@ -1490,10 +1528,11 @@ def _midranks(df: DataFrame, value_cols: list[str], out_cols: list[str],
     expanded rows would rank (Mann-Whitney, Wilcoxon signed-rank,
     Mood's scale test): the cumulative counts above become sums of the
     weight, on both devices, and a cell's tie count is its own weight.
-    Reading the weight instead of a tie window keeps the cell plans
-    free of a second sort, which a window partitioned by a double
-    value would need (Spark partitions on the NaN/-0.0-normalized
-    value). Without a weight both devices count rows.
+    Without a weight both devices count rows, and the tie count is a
+    RANGE current-row frame over the SAME ordered window as the
+    cumulative count, so it runs in that Window node: a window
+    partitioned by the value instead would sort the rows a second time
+    (Spark partitions on the NaN/-0.0-normalized value).
 
     Window device (``distributed=False``): RANGE-frame cumulative
     counts over the ``by`` partition — one ordered task per group.
@@ -1518,10 +1557,11 @@ def _midranks(df: DataFrame, value_cols: list[str], out_cols: list[str],
 
     def rank(rows, i, part, off=None):
         c = value_cols[i]
-        wo = (Window.partitionBy(*part).orderBy(c)
-              .rangeBetween(Window.unboundedPreceding, 0))
-        cum_le = cnt().over(wo)   # RANGE: includes peers
-        t = (F.count(F.lit(1)).over(Window.partitionBy(*part, c))
+        wo = Window.partitionBy(*part).orderBy(c)
+        # RANGE frames: the cumulative count includes the current
+        # row's peers, and the peers alone are its tie count
+        cum_le = cnt().over(wo.rangeBetween(Window.unboundedPreceding, 0))
+        t = (F.count(F.lit(1)).over(wo.rangeBetween(0, 0))
              if weight is None else F.col(weight))
         lt = cum_le - t if off is None else off + cum_le - t
         rows = rows.withColumn(
@@ -1850,8 +1890,7 @@ def poisson_bootstrap_ci(df: DataFrame, value_col: str, id_col: str,
     rollup = [F.max("__n").alias("__n"),
               F.max("__s").alias("__s"),
               F.sort_array(F.collect_list(mean_b)).alias("__arr")]
-    g = (per_b.groupBy(*[F.col(c) for c in by]).agg(*rollup)
-         if by else per_b.agg(*rollup))
+    g = per_b.groupBy(*by).agg(*rollup)
     arr = F.col("__arr")
     ln = F.size(arr)
     lo_i = F.greatest(F.ceil(F.lit(alpha / 2.0)
@@ -1976,6 +2015,75 @@ def wasserstein_1d(df: DataFrame, group_col: str, value_col: str,
             * F.col("n_b").cast("double")).alias("w1"))
 
 
+def _concordance(df: DataFrame, x_col: str, y_col: str,
+                 by: list[str]) -> DataFrame:
+    """Per ``by`` group, the pair counts of an ordered x vs ordered y
+    table that :func:`kendall_tau_b` and :func:`ordinal_association`
+    read: ``n`` rows, ``__C``/``__D`` concordant/discordant pairs,
+    ``__Tx``/``__Ty`` pairs tied on x/y, and ``__kx``/``__ky`` the
+    distinct x/y counts. Rows with a NULL x or y are dropped; a NULL
+    group key is a group like any other (the joins match it
+    NULL-safely).
+
+    Bounded-grain contract (bucket continuous values upstream): the
+    input collapses to the (group, x, y) CELL grain in one
+    map-side-combined aggregation, so the work is independent of the
+    row count. C/D come from one :func:`_cell_pairs` join on strict x
+    dominance — every unordered cell pair with ``x_l < x_r`` exactly
+    once, y deciding concordant or discordant, a y-tie neither; pairs
+    tied on x can add to neither count and are never formed. C and D
+    accumulate in codegen'd LONG (a per-pair DECIMAL cast measured
+    3.6x the whole aggregation; ANSI fails loudly past n≈4.3e9 rows
+    per group); the tie terms are DECIMAL(38,0). The marginals (per-x
+    and per-y tie totals, the row count) come out of ONE
+    grouping-sets pass over the cell table. The C/D table has one row
+    per group that has an x-ordered pair, so it is bounded by the
+    group count and :func:`_attach` broadcasts it onto the marginals;
+    a group without such a pair keeps its row with C = D = 0. With
+    ``by=[]`` both tables are ungrouped aggregates — exactly one row
+    each, the scalar fold's rule — and so is the result."""
+    from .cache import operator_persist
+
+    x, y = F.col(x_col), F.col(y_col)
+    dec = "decimal(38,0)"
+    cells = operator_persist(
+        df.where(x.isNotNull() & y.isNotNull()).groupBy(
+            *by, x.alias("__x"), y.alias("__y"))
+        .agg(F.count(F.lit(1)).cast("bigint").alias("__n")))
+    m = F.col("l.__n") * F.col("r.__n")
+    ylt = F.col("l.__y") < F.col("r.__y")
+    ygt = F.col("l.__y") > F.col("r.__y")
+    cd = _cell_pairs(cells, cells, by,
+                     F.col("l.__x") < F.col("r.__x")).groupBy(
+        *[F.col(f"l.{c}").alias(c) for c in by]).agg(
+        F.sum(F.when(ylt, m).otherwise(F.lit(0))).cast(dec).alias("__C"),
+        F.sum(F.when(ygt, m).otherwise(F.lit(0))).cast(dec).alias("__D"))
+    # t(t−1)/2 in DECIMAL end-to-end: the product passes bigint near
+    # t≈3e9, t(t−1) is even so /2 is exact
+    marg = cells.groupingSets(
+        [[*by, "__x"], [*by, "__y"], list(by)],
+        *by, F.col("__x"), F.col("__y")).agg(
+        F.sum("__n").cast("bigint").alias("__t"),
+        F.grouping("__x").alias("__gx"),
+        F.grouping("__y").alias("__gy"))
+    tt = (F.col("__t").cast(dec) * (F.col("__t") - 1).cast(dec) / 2) \
+        .cast(dec)
+    is_x = (F.col("__gx") == 0) & (F.col("__gy") == 1)
+    is_y = (F.col("__gy") == 0) & (F.col("__gx") == 1)
+    tot = marg.groupBy(*by).agg(
+        F.sum(F.when(is_x, tt)).alias("__Tx"),
+        F.sum(F.when(is_y, tt)).alias("__Ty"),
+        F.sum(F.when(is_x, 1)).cast("bigint").alias("__kx"),
+        F.sum(F.when(is_y, 1)).cast("bigint").alias("__ky"),
+        F.max(F.when((F.col("__gx") == 1) & (F.col("__gy") == 1),
+                     F.col("__t"))).alias("n"))
+    zero = F.lit(0).cast(dec)
+    return _attach(tot, cd, by).select(
+        *by, "n", "__kx", "__ky",
+        *[F.coalesce(F.col(c), zero).alias(c)
+          for c in ("__C", "__D", "__Tx", "__Ty")])
+
+
 def kendall_tau_b(df: DataFrame, x_col: str, y_col: str,
                   by: list[str] | None = None) -> DataFrame:
     """Per-group Kendall's τ-b rank correlation — the
@@ -1988,115 +2096,22 @@ def kendall_tau_b(df: DataFrame, x_col: str, y_col: str,
 
     Designed for DISCRETE/BUCKETED (x, y) grains (ratings, counts,
     deciles — the :func:`mann_whitney_u` contract; bucket continuous
-    values upstream): the input collapses to the (group, x, y) CELL
-    grain (one map-side-combined agg, cells bounded by
-    |X grain|·|Y grain| per group), and C/D come from a cell
-    self-join on strict dominance — Θ(cells²) comparisons, which for
-    bounded grains (e.g. 10×10 deciles → ≤10⁴ cell pairs per group)
-    is trivia, while the row count n can be anything. Every count is
-    an exact integer — C/D accumulate in codegen'd LONG (fails
-    loudly past n≈4.3e9 rows per group under ANSI; the tie and
-    denominator terms are DECIMAL(38,0)); only the final ratio is
-    float. Tie terms T_x/T_y come from the cell table's marginal
-    aggs — no second pass over the data.
+    values upstream): the counts come from :func:`_concordance` — one
+    cell aggregation (cells bounded by |X grain|·|Y grain| per group)
+    and a :func:`_cell_pairs` dominance join, Θ(cells²) comparisons,
+    which for bounded grains (e.g. 10×10 deciles → ≤10⁴ cell pairs
+    per group) is trivia, while the row count n can be anything.
+    Every count is an exact integer; only the final ratio is float.
     """
     by = list(by or [])
-    x, y = F.col(x_col), F.col(y_col)
-    from .cache import operator_persist
-
-    cells = operator_persist(
-        df.where(x.isNotNull() & y.isNotNull()).groupBy(
-            *[F.col(c) for c in by], x.alias("__x"), y.alias("__y"))
-        .agg(F.count(F.lit(1)).cast("bigint").alias("__n")))
-    # the cell table is TINY (bounded by value grains): broadcast one
-    # side so the dominance join never hash-partitions on the group
-    # key (whose cardinality may be 1-3 — a parallelism collapse),
-    # and spread the stream side across (group, x) so the Θ(cells²)
-    # comparison work runs |x-grain|-way parallel per group
-    l = cells.repartition(*[F.col(c) for c in by], F.col("__x")) \
-        .alias("l")
-    r = F.broadcast(cells).alias("r")
-    cond = _eq_all([(f"l.{c}", f"r.{c}") for c in by],
-                   F.col("l.__x") < F.col("r.__x"))
-    # every unordered cell pair with x_l < x_r exactly once; y decides
-    # concordant/discordant, y-tie contributes to neither. Products
-    # AND accumulators stay in codegen'd LONG arithmetic over the
-    # Θ(cells²) pair rows — a per-row cast to DECIMAL in the C/D sums
-    # was measured 3.6x the whole aggregation (BigDecimal per pair).
-    # Bounds: C, D ≤ n(n−1)/2, inside bigint until n ≈ 4.3e9 rows per
-    # group, where Spark's ANSI sum fails LOUDLY (overflow error, no
-    # silent wrap); the tie/denominator terms below stay DECIMAL.
-    m = F.col("l.__n") * F.col("r.__n")
-    pairs = l.join(r, cond).select(
-        *[F.col(f"l.{c}").alias(c) for c in by],
-        F.when(F.col("l.__y") < F.col("r.__y"), m)
-         .otherwise(F.lit(0)).alias("__mc"),
-        F.when(F.col("l.__y") > F.col("r.__y"), m)
-         .otherwise(F.lit(0)).alias("__md"))
+    g = _concordance(df, x_col, y_col, by)
     dec = "decimal(38,0)"
-    aggs = [F.sum("__mc").cast(dec).alias("__C"),
-            F.sum("__md").cast(dec).alias("__D")]
-    cd = (pairs.groupBy(*[F.col(c) for c in by]).agg(*aggs)
-          if by else pairs.agg(*aggs))
-
-    # the three marginal reductions (per-x tie totals, per-y tie
-    # totals, group row count) come out of ONE groupingSets pass over
-    # the cell table — one shuffle instead of three jobs (measured:
-    # the operator is fixed-overhead-bound, not data-bound, once the
-    # pair join is long-codegen'd). t(t−1)/2 in DECIMAL end-to-end:
-    # the product passes bigint near t≈3e9, t(t−1) is even so /2 is
-    # exact.
-    marg = cells.groupingSets(
-        [[*by, "__x"], [*by, "__y"], list(by)],
-        *[F.col(c) for c in by], F.col("__x"), F.col("__y")).agg(
-        F.sum("__n").cast("bigint").alias("__t"),
-        F.grouping("__x").alias("__gx"),
-        F.grouping("__y").alias("__gy"))
-    tt = (F.col("__t").cast(dec) * (F.col("__t") - 1).cast(dec) / 2) \
-        .cast(dec)
-    fold = [
-        F.sum(F.when((F.col("__gx") == 0) & (F.col("__gy") == 1), tt))
-         .alias("__Tx"),
-        F.sum(F.when((F.col("__gy") == 0) & (F.col("__gx") == 1), tt))
-         .alias("__Ty"),
-        F.max(F.when((F.col("__gx") == 1) & (F.col("__gy") == 1),
-                     F.col("__t"))).alias("n"),
-    ]
-    tot = (marg.groupBy(*[F.col(c) for c in by]).agg(*fold)
-           if by else marg.agg(*fold))
-    g = _left_join_nullsafe(tot, cd, list(by)) if by \
-        else tot.crossJoin(cd)
     n = F.col("n")
     n0 = (n.cast(dec) * (n - 1).cast(dec) / 2).cast(dec)
-    num = (F.coalesce(F.col("__C"), F.lit(0).cast(dec))
-           - F.coalesce(F.col("__D"), F.lit(0).cast(dec))) \
-        .cast("double")
-    den = F.sqrt((n0 - F.coalesce(F.col("__Tx"), F.lit(0).cast(dec)))
-                 .cast("double")
-                 * (n0 - F.coalesce(F.col("__Ty"),
-                                    F.lit(0).cast(dec)))
-                 .cast("double"))
-    return g.select(
-        *[F.col(c) for c in by], "n",
-        F.when(den > 0, num / den).alias("tau_b"))
-
-
-def _attach_group_aggs(g: DataFrame, src: DataFrame, by: list[str],
-                       *aggs) -> DataFrame:
-    """Append the per-``by``-group aggregates ``aggs`` of ``src`` to
-    every row of ``g``: a broadcast join on NULL-safe ``by`` keys (a
-    NULL group key must still find its row), or a scalar fold when
-    ``by`` is empty. The per-group table is bounded by the group
-    count."""
-    from pyspark.sql.functions import broadcast
-
-    from .fold import fold_scalars
-
-    if not by:
-        return fold_scalars(g, src.agg(*aggs))
-    per = src.groupBy(*[F.col(c).alias(f"__g_{c}") for c in by]).agg(*aggs)
-    return g.join(broadcast(per), _eq_all([(c, f"__g_{c}") for c in by])) \
-        .drop(*[f"__g_{c}" for c in by])
+    num = (F.col("__C") - F.col("__D")).cast("double")
+    den = F.sqrt((n0 - F.col("__Tx")).cast("double")
+                 * (n0 - F.col("__Ty")).cast("double"))
+    return g.select(*by, "n", F.when(den > 0, num / den).alias("tau_b"))
 
 
 def kruskal_wallis(df: DataFrame, value_col: str, group_col: str,
@@ -2168,10 +2183,10 @@ def kruskal_wallis(df: DataFrame, value_col: str, group_col: str,
     # counting `ranked` instead would drag the whole rank pass into
     # this subtree's broadcast build, re-executing it once per action
     t = F.col("__t")
-    g = _attach_group_aggs(
-        g, base.groupBy(*keys, F.col("__v")).agg(
-            F.count(F.lit(1)).cast("bigint").alias("__t")),
-        by, F.sum(t * t * t - t).cast("bigint").alias("__ties"))
+    ties = base.groupBy(*keys, F.col("__v")).agg(
+        F.count(F.lit(1)).cast("bigint").alias("__t")).groupBy(*by).agg(
+        F.sum(t * t * t - t).cast("bigint").alias("__ties"))
+    g = _attach(g, ties, by, how="inner")
     nd = F.col("n").cast("double")
     h_raw = (F.lit(12.0) / (nd * (nd + F.lit(1.0))) * F.col("__S")
              - F.lit(3.0) * (nd + F.lit(1.0)))
@@ -2341,7 +2356,6 @@ def permutation_test(df: DataFrame, value_col: str, sample_col: str,
         raise ValueError("n_perm must be >= 1")
     if not id_cols:
         raise ValueError("id_cols must identify rows (hash input)")
-    from pyspark.sql.functions import broadcast
     from pyspark.sql.window import Window
 
     by = list(by or [])
@@ -2372,8 +2386,7 @@ def permutation_test(df: DataFrame, value_col: str, sample_col: str,
                       "identify rows within a by group - duplicate "
                       "ids break cross-engine determinism"))
             .isNull()).drop("__idn")
-    obs = base.groupBy(
-        *[F.col(c).alias(f"__g_{c}") for c in by]).agg(
+    obs = base.groupBy(*by).agg(
         F.sum("__arm").cast("bigint").alias("__na"),
         (F.count(F.lit(1)) - F.sum("__arm")).cast("bigint")
          .alias("__nb"),
@@ -2383,27 +2396,17 @@ def permutation_test(df: DataFrame, value_col: str, sample_col: str,
     d_obs = (F.col("__sa") * F.col("__nb").cast(dec)
              - F.col("__sb") * F.col("__na").cast(dec))
     obs = obs.select(
-        *[F.col(c) for c in [f"__g_{c}" for c in by]],
-        "__na", "__nb", F.abs(d_obs).alias("__dobs"),
+        *by, "__na", "__nb", F.abs(d_obs).alias("__dobs"),
         (d_obs.cast("double")
          / (F.col("__na").cast("double")
             * F.col("__nb").cast("double"))
          / F.lit(float(scale))).alias("__diff"))
 
-    def _obs_cond():
-        return _eq_all([(c, f"__g_{c}") for c in by])
-
     perms = base.withColumn(
         "__k", F.explode(F.sequence(F.lit(1), F.lit(int(n_perm)))))
     # only __na crosses the expensive n_perm x n sort; the other
     # observed aggregates re-join on the bounded per-k stats below
-    na_only = obs.select(*[f"__g_{c}" for c in by], "__na")
-    if by:
-        perms = perms.join(broadcast(na_only), _obs_cond()) \
-            .drop(*[f"__g_{c}" for c in by])
-    else:
-        from .fold import fold_scalars
-        perms = fold_scalars(perms, na_only)
+    perms = _attach(perms, obs.select(*by, "__na"), by, how="inner")
     w = Window.partitionBy(*by, "__k").orderBy(
         F.md5(F.concat_ws("#", F.lit(seed), F.col("__id"),
                           F.col("__k").cast("string"))), "__id")
@@ -2417,21 +2420,13 @@ def permutation_test(df: DataFrame, value_col: str, sample_col: str,
          .alias("__ska"),
         F.sum((F.lit(1) - F.col("__parm")) * F.col("__vc")).cast(dec)
          .alias("__skb"))
-    if by:
-        kstats = kstats.join(broadcast(obs), _obs_cond())
-    else:
-        from .fold import fold_scalars
-        kstats = fold_scalars(kstats, obs)
+    kstats = _attach(kstats, obs, by, how="inner")
     d_k = F.abs(F.col("__ska") * F.col("__nb").cast(dec)
                 - F.col("__skb") * F.col("__na").cast(dec))
     extreme = kstats.groupBy(*[F.col(c) for c in by]).agg(
         F.sum((d_k >= F.col("__dobs")).cast("bigint"))
          .cast("bigint").alias("__c"))
-    if by:
-        out = extreme.join(broadcast(obs), _obs_cond())
-    else:
-        from .fold import fold_scalars
-        out = fold_scalars(extreme, obs)
+    out = _attach(extreme, obs, by, how="inner")
     p = ((F.lit(1) + F.col("__c")).cast("double")
          / F.lit(float(n_perm + 1)))
     return out.select(
@@ -2537,8 +2532,7 @@ def mantel_haenszel(df: DataFrame, exposure_col: str,
         fold("num").alias("__num"),
         fold("var").alias("__var"),
     ]
-    g = (staged.groupBy(*[F.col(col) for col in by]).agg(*aggs)
-         if by else staged.agg(*aggs))
+    g = staged.groupBy(*by).agg(*aggs)
     or_mh = F.when(F.col("__bcn") > 0,
                    F.col("__adn") / F.col("__bcn"))
     chi2 = F.when(F.col("__var") > 0,
@@ -2592,10 +2586,11 @@ def dunn_test(df: DataFrame, value_col: str, group_col: str,
     Scale shape: the rank pass is :func:`_midranks` over raw rows,
     with the tie count from the rank's own tie frame; everything after
     is post-aggregation grain — k rows per group, then a k x k/2
-    self-join on the bounded level table. ``distributed=True`` ranks
-    on the bucketed device (groups × buckets parallel, IDENTICAL
-    midranks — q201 vs q197) instead of one ordered window per ``by``
-    group — the z/BH stages are grain-bounded either way;
+    :func:`_cell_pairs` join on the bounded level table.
+    ``distributed=True`` ranks on the bucketed device (groups ×
+    buckets parallel, IDENTICAL midranks — q201 vs q197) instead of
+    one ordered window per ``by`` group — the z/BH stages are
+    grain-bounded either way;
     ``distributed=None`` (default) picks it when Catalyst's per-group
     share exceeds ``RANK_WINDOW_MAX_BYTES`` (:func:`_resolve_rank_path`).
     Explicit True/False keeps the call lazy; ``None`` on a plan
@@ -2634,24 +2629,16 @@ def dunn_test(df: DataFrame, value_col: str, group_col: str,
              F.sum(F.col("__r2").cast("decimal(38,0)"))
               .alias("__rs2"),
              F.sum("__tie1").cast("bigint").alias("__t1")))
-    lvl = _attach_group_aggs(
-        lvl, lvl, by,
+    lvl = _attach(lvl, lvl.groupBy(*by).agg(
         F.sum("__ni").cast("bigint").alias("__N"),
-        F.sum("__t1").cast("bigint").alias("__ties"))
-    left = lvl.select(
-        *[F.col(c).alias(f"__l_{c}") for c in by],
-        F.col("__grp").alias("lev_a"),
-        F.col("__ni").alias("n_a"),
-        F.col("__rs2").alias("__rs2a"),
-        F.col("__N").alias("__N"), F.col("__ties").alias("__ties"))
-    right = lvl.select(
-        *[F.col(c).alias(f"__r_{c}") for c in by],
-        F.col("__grp").alias("lev_b"),
-        F.col("__ni").alias("n_b"),
-        F.col("__rs2").alias("__rs2b"))
-    jcond = _eq_all([(f"__l_{c}", f"__r_{c}") for c in by],
-                    F.col("lev_a") < F.col("lev_b"))
-    pairs = left.join(right, jcond)
+        F.sum("__t1").cast("bigint").alias("__ties")), by, how="inner")
+    pairs = _cell_pairs(lvl, lvl, by,
+                        F.col("l.__grp") < F.col("r.__grp")).select(
+        *[F.col(f"l.{c}").alias(c) for c in by],
+        F.col("l.__grp").alias("lev_a"), F.col("l.__ni").alias("n_a"),
+        F.col("l.__rs2").alias("__rs2a"), "l.__N", "l.__ties",
+        F.col("r.__grp").alias("lev_b"), F.col("r.__ni").alias("n_b"),
+        F.col("r.__rs2").alias("__rs2b"))
     nd = F.col("__N").cast("double")
     sigma2 = (nd * (nd + 1)
               - F.col("__ties").cast("double") / (nd - 1)) / F.lit(12.0)
@@ -2666,8 +2653,7 @@ def dunn_test(df: DataFrame, value_col: str, group_col: str,
     p = F.least(F.lit(1.0),
                 F.lit(2.0) * _normal_upper_tail(F.abs(z)))
     pairs = pairs.select(
-        *[F.col(f"__l_{c}").alias(c) for c in by],
-        "lev_a", "lev_b", "n_a", "n_b",
+        *by, "lev_a", "lev_b", "n_a", "n_b",
         z.alias("z"), p.alias("p_value"))
     return bh_fdr(pairs, "p_value", alpha=alpha,
                   family_cols=by or None,
@@ -2691,58 +2677,37 @@ def theil_sen(df: DataFrame, x_col: str, y_col: str,
     intercept=NULL)`` - rather than silently vanishing (the group
     totals are the output spine; slope/intercept left-join on).
 
-    Determinism: pairs come from the (x, y) CELL grain (q189's
-    Kendall device) with exact bigint weights ``n_i*n_j``; each slope
-    is one row-local double division of exact integers, so both
+    Determinism: pairs come from the (x, y) CELL grain
+    (:func:`_cell_pairs`) with exact bigint weights ``n_i*n_j``; each
+    slope is one row-local double division of exact integers, so both
     engines materialize the same doubles; the weighted-median pick is
     pure integer arithmetic (first slope where ``2*cumweight >=
     total``), tie-free because weights group by the slope VALUE
     first.
 
     Scale shape: one aggregation to the cell grain (the raw table's
-    only shuffle), then a cell self-join on strict x-dominance -
-    Theta(cells^2) pair weight enumeration that is independent of the
-    ROW count (bounded-grain contract: bucket continuous x/y
-    upstream, exactly like q189). The median windows run over the
-    bounded distinct-slope set per group.
+    only shuffle), then a :func:`_cell_pairs` join on strict
+    x-dominance - Theta(cells^2) pair weight enumeration that is
+    independent of the ROW count (bounded-grain contract: bucket
+    continuous x/y upstream, exactly like q189). The median windows
+    run over the bounded distinct-slope set per group.
     """
-    from pyspark.sql.functions import broadcast
-    from pyspark.sql.window import Window
-
     by = list(by or [])
     cells = df.where(F.col(x_col).isNotNull()
                      & F.col(y_col).isNotNull()).groupBy(
-        *[F.col(c) for c in by],
-        F.col(x_col).alias("__x"), F.col(y_col).alias("__y")).agg(
+        *by, F.col(x_col).alias("__x"), F.col(y_col).alias("__y")).agg(
         F.count(F.lit(1)).cast("bigint").alias("__n"))
-    left = cells.select(
-        *[F.col(c).alias(f"__l_{c}") for c in by],
-        F.col("__x").alias("__xl"), F.col("__y").alias("__yl"),
-        F.col("__n").alias("__nl"))
-    right = cells.select(
-        *[F.col(c).alias(f"__r_{c}") for c in by],
-        F.col("__x").alias("__xr"), F.col("__y").alias("__yr"),
-        F.col("__n").alias("__nr"))
-    jcond = _eq_all([(f"__l_{c}", f"__r_{c}") for c in by],
-                    F.col("__xl") < F.col("__xr"))
-    pairs = left.join(right, jcond).select(
-        *[F.col(f"__l_{c}").alias(c) for c in by],
-        ((F.col("__yr").cast("double") - F.col("__yl").cast("double"))
-         / (F.col("__xr").cast("double")
-            - F.col("__xl").cast("double"))).alias("__slope"),
-        (F.col("__nl") * F.col("__nr")).cast("bigint").alias("__w"))
+    pairs = _cell_pairs(cells, cells, by,
+                        F.col("l.__x") < F.col("r.__x")).select(
+        *[F.col(f"l.{c}").alias(c) for c in by],
+        ((F.col("r.__y").cast("double") - F.col("l.__y").cast("double"))
+         / (F.col("r.__x").cast("double")
+            - F.col("l.__x").cast("double"))).alias("__slope"),
+        (F.col("l.__n") * F.col("r.__n")).cast("bigint").alias("__w"))
 
     slope = _weighted_lower_median(pairs, by, "__slope", "__w",
                                    "slope")
-    if by:
-        scols = slope.select(
-            *[F.col(c).alias(f"__s_{c}") for c in by], "slope")
-        withs = cells.join(broadcast(scols),
-                           _eq_all([(c, f"__s_{c}") for c in by])) \
-            .drop(*[f"__s_{c}" for c in by])
-    else:
-        from .fold import fold_scalars
-        withs = fold_scalars(cells, slope)
+    withs = _attach(cells, slope, by, how="inner")
     resid = withs.select(
         *[F.col(c) for c in by],
         (F.col("__y").cast("double")
@@ -2756,39 +2721,15 @@ def theil_sen(df: DataFrame, x_col: str, y_col: str,
     # frames have no row for it - they LEFT-join onto the totals and
     # the group emits (n, n_pairs=0, slope=NULL, intercept=NULL)
     # instead of vanishing
-    if by:
-        stats_agg = cells.groupBy(
-            *[F.col(c).alias(f"__t_{c}") for c in by]).agg(
-            F.sum("__n").cast("bigint").alias("n"))
-        pair_tot = pairs.groupBy(
-            *[F.col(c).alias(f"__p_{c}") for c in by]).agg(
-            F.sum("__w").cast("bigint").alias("n_pairs"))
-        scols = slope.select(
-            *[F.col(c).alias(f"__m_{c}") for c in by], "slope")
-        icols = inter.select(
-            *[F.col(c).alias(f"__i_{c}") for c in by], "intercept")
-        out = stats_agg
-        for frame, pre in ((scols, "__m_"), (pair_tot, "__p_"),
-                           (icols, "__i_")):
-            cond = _eq_all([(f"__t_{c}", f"{pre}{c}") for c in by])
-            out = out.join(broadcast(frame), cond, "left") \
-                .drop(*[f"{pre}{c}" for c in by])
-        out = out.select(*[F.col(f"__t_{c}").alias(c) for c in by],
-                         "n", "n_pairs", "slope", "intercept")
-    else:
-        from .fold import fold_scalars
-        # min over the <=1-row median frames wraps them to exactly
-        # one row (NULL when empty) so the scalar folds never drop
-        # the output row
-        out = cells.agg(F.sum("__n").cast("bigint").alias("n"))
-        out = fold_scalars(out,
-                           pairs.agg(F.sum("__w").cast("bigint")
-                                     .alias("n_pairs")))
-        out = fold_scalars(out,
-                           slope.agg(F.min("slope").alias("slope")))
-        out = fold_scalars(out,
-                           inter.agg(F.min("intercept")
-                                     .alias("intercept")))
+    if not by:
+        # min wraps the <=1-row median frames to exactly one row
+        # (NULL when empty) so the scalar folds never drop the row
+        slope = slope.agg(F.min("slope").alias("slope"))
+        inter = inter.agg(F.min("intercept").alias("intercept"))
+    out = cells.groupBy(*by).agg(F.sum("__n").cast("bigint").alias("n"))
+    for frame in (slope, pairs.groupBy(*by).agg(
+            F.sum("__w").cast("bigint").alias("n_pairs")), inter):
+        out = _attach(out, frame, by)
     return out.select(
         *[F.col(c) for c in by], "n",
         F.coalesce(F.col("n_pairs"), F.lit(0).cast("bigint"))
@@ -2838,8 +2779,7 @@ def cochran_armitage(df: DataFrame, outcome_col: str,
         F.sum(F.col("__o") * F.col("__w")).cast(dec).alias("__sow"),
         F.sum(F.col("__w") * F.col("__w")).cast(dec).alias("__sw2"),
     ]
-    g = (base.groupBy(*[F.col(c) for c in by]).agg(*aggs)
-         if by else base.agg(*aggs))
+    g = base.groupBy(*by).agg(*aggs)
     nd = F.col("n").cast("double")
     m1 = F.col("n_pos").cast("double")
     sw = F.col("__sw").cast("double")
@@ -2920,8 +2860,7 @@ def brown_forsythe(df: DataFrame, value_col: str, group_col: str,
                     F.lit(0.0),
                     lambda acc, s: acc + s["term"]).alias("__fold"),
     ]
-    g = (staged.groupBy(*[F.col(c) for c in by]).agg(*aggs)
-         if by else staged.agg(*aggs))
+    g = staged.groupBy(*by).agg(*aggs)
     nd = F.col("n").cast("double")
     kd = F.col("k").cast("double")
     s1d = F.col("__S1").cast("double")
@@ -2947,24 +2886,15 @@ def _weighted_lower_median(values: DataFrame, by: list[str],
     post-aggregation grain (bounded distinct values per group)."""
     from pyspark.sql.window import Window
 
-    grouped = values.groupBy(*[F.col(c) for c in by],
-                             F.col(val)).agg(
+    grouped = values.groupBy(*by, F.col(val)).agg(
         F.sum(w).cast("bigint").alias("__gw"))
-    wrun = (Window.partitionBy(*by).orderBy(val)
-            .rowsBetween(Window.unboundedPreceding, 0)
-            if by else
-            Window.orderBy(val).rowsBetween(
-                Window.unboundedPreceding, 0))
-    wtot = (Window.partitionBy(*by) if by
-            else Window.partitionBy())
-    cum = F.sum("__gw").over(wrun)
+    wtot = Window.partitionBy(*by)
+    cum = F.sum("__gw").over(wtot.orderBy(val).rowsBetween(
+        Window.unboundedPreceding, 0))
     tot = F.sum("__gw").over(wtot)
     picked = grouped.withColumn("__hit",
                                 (cum * 2 >= tot).cast("int"))
-    sel = (Window.partitionBy(*by).orderBy(
-               F.col("__hit").desc(), F.col(val).asc())
-           if by else
-           Window.orderBy(F.col("__hit").desc(), F.col(val).asc()))
+    sel = wtot.orderBy(F.col("__hit").desc(), F.col(val).asc())
     first = picked.withColumn("__rn", F.row_number().over(sel)) \
         .where((F.col("__rn") == 1) & (F.col("__hit") == 1))
     return first.select(
@@ -2988,60 +2918,39 @@ def cliffs_delta(df: DataFrame, value_col: str, sample_col: str,
     dominance counts left-join onto it, coalesced to zero.
 
     Determinism: dominance counts come from the (group, value) CELL
-    grain self-join on strict value dominance (the q189 Kendall
-    device - Theta(cells^2), independent of row count); every count
+    grain self-join on strict value dominance (:func:`_cell_pairs` -
+    Theta(cells^2), independent of row count); every count
     is an exact DECIMAL(38,0) sum of long products; the single final
     division is row-local.
 
     Scale shape: one map-side-combined grain aggregation (the raw
-    table's only shuffle) + a bounded cell join; bucket continuous
-    values upstream, exactly like q189.
+    table's only shuffle) + a bounded :func:`_cell_pairs` join;
+    bucket continuous values upstream, exactly like q189.
     """
-    from pyspark.sql.functions import broadcast
-
     by = list(by or [])
     s = F.col(sample_col)
     dec = "decimal(38,0)"
     cells = df.where(F.col(value_col).isNotNull()
                      & s.isin(a, b)).groupBy(
-        *[F.col(c) for c in by],
-        F.col(value_col).alias("__v")).agg(
+        *by, F.col(value_col).alias("__v")).agg(
         F.sum((s == a).cast("bigint")).cast("bigint").alias("__ta"),
         F.sum((s == b).cast("bigint")).cast("bigint").alias("__tb"))
-    left = cells.select(
-        *[F.col(c).alias(f"__l_{c}") for c in by],
-        F.col("__v").alias("__vl"), F.col("__ta").alias("__tal"),
-        F.col("__tb").alias("__tbl"))
-    right = cells.select(
-        *[F.col(c).alias(f"__r_{c}") for c in by],
-        F.col("__v").alias("__vr"), F.col("__ta").alias("__tar"),
-        F.col("__tb").alias("__tbr"))
-    jcond = _eq_all([(f"__l_{c}", f"__r_{c}") for c in by],
-                    F.col("__vl") < F.col("__vr"))
     # for each ordered cell pair (l < r): a-above-b pairs are
     # (a at r) x (b at l); a-below-b pairs are (a at l) x (b at r)
-    dom = left.join(right, jcond).groupBy(
-        *[F.col(f"__l_{c}").alias(c) for c in by]).agg(
-        F.sum((F.col("__tar") * F.col("__tbl")).cast(dec))
+    dom = _cell_pairs(cells, cells, by,
+                      F.col("l.__v") < F.col("r.__v")).groupBy(
+        *[F.col(f"l.{c}").alias(c) for c in by]).agg(
+        F.sum((F.col("r.__ta") * F.col("l.__tb")).cast(dec))
          .alias("__gt"),
-        F.sum((F.col("__tal") * F.col("__tbr")).cast(dec))
+        F.sum((F.col("l.__ta") * F.col("r.__tb")).cast(dec))
          .alias("__lt"))
-    totals = cells.groupBy(
-        *[F.col(c).alias(f"__t_{c}") for c in by]).agg(
+    # totals is the spine (one row per group with any data); dominance
+    # counts LEFT-join on so a constant-valued group - no ordered cell
+    # pair, hence no dom row - still emits, with __gt/__lt coalesced
+    # to 0 below (delta = 0, not a lost row)
+    out = _attach(cells.groupBy(*by).agg(
         F.sum("__ta").cast("bigint").alias("n_a"),
-        F.sum("__tb").cast("bigint").alias("n_b"))
-    if by:
-        # totals is the spine (one row per group with any data);
-        # dominance counts LEFT-join on so a constant-valued group -
-        # no ordered cell pair, hence no dom row - still emits, with
-        # __gt/__lt coalesced to 0 below (delta = 0, not a lost row)
-        cond = _eq_all([(f"__t_{c}", c) for c in by])
-        out = totals.join(broadcast(dom), cond, "left") \
-            .select(*[F.col(f"__t_{c}").alias(c) for c in by],
-                    "n_a", "n_b", "__gt", "__lt")
-    else:
-        from .fold import fold_scalars
-        out = fold_scalars(dom, totals.select("n_a", "n_b"))
+        F.sum("__tb").cast("bigint").alias("n_b")), dom, by)
     zero = F.lit(0).cast(dec)
     delta = F.when(
         (F.col("n_a") > 0) & (F.col("n_b") > 0),
@@ -3062,10 +2971,11 @@ def hodges_lehmann(df: DataFrame, value_col: str, sample_col: str,
     ``x_a - x_b``.
 
     Determinism: differences enumerate the (group, value) CELL grain
-    cross join (weights ``ta_i * tb_j`` exact bigints); for integer
-    or fixed-point values every difference is exact, and the
-    weighted lower-median pick (:func:`_weighted_lower_median`) is
-    pure integer arithmetic - hash-identical across engines.
+    pairs (:func:`_cell_pairs` with no predicate; weights
+    ``ta_i * tb_j`` exact bigints); for integer or fixed-point values
+    every difference is exact, and the weighted lower-median pick
+    (:func:`_weighted_lower_median`) is pure integer arithmetic -
+    hash-identical across engines.
 
     Scale shape: one grain aggregation + a bounded Theta(cells^2)
     cross join per group (bucket continuous values upstream); the
@@ -3075,37 +2985,20 @@ def hodges_lehmann(df: DataFrame, value_col: str, sample_col: str,
     s = F.col(sample_col)
     cells = df.where(F.col(value_col).isNotNull()
                      & s.isin(a, b)).groupBy(
-        *[F.col(c) for c in by],
-        F.col(value_col).alias("__v")).agg(
+        *by, F.col(value_col).alias("__v")).agg(
         F.sum((s == a).cast("bigint")).cast("bigint").alias("__ta"),
         F.sum((s == b).cast("bigint")).cast("bigint").alias("__tb"))
-    left = cells.where(F.col("__ta") > 0).select(
-        *[F.col(c).alias(f"__l_{c}") for c in by],
-        F.col("__v").alias("__va"), F.col("__ta").alias("__wa"))
-    right = cells.where(F.col("__tb") > 0).select(
-        *[F.col(c).alias(f"__r_{c}") for c in by],
-        F.col("__v").alias("__vb"), F.col("__tb").alias("__wb"))
-    jcond = _eq_all([(f"__l_{c}", f"__r_{c}") for c in by])
-    pairs = (left.join(right, jcond) if jcond is not None
-             else left.crossJoin(right)).select(
-        *[F.col(f"__l_{c}").alias(c) for c in by],
-        (F.col("__va") - F.col("__vb")).alias("__d"),
-        (F.col("__wa") * F.col("__wb")).cast("bigint").alias("__w"))
+    pairs = _cell_pairs(cells.where(F.col("__ta") > 0),
+                        cells.where(F.col("__tb") > 0), by).select(
+        *[F.col(f"l.{c}").alias(c) for c in by],
+        (F.col("l.__v") - F.col("r.__v")).alias("__d"),
+        (F.col("l.__ta") * F.col("r.__tb")).cast("bigint").alias("__w"))
     med = _weighted_lower_median(pairs, by, "__d", "__w", "shift")
-    totals = cells.groupBy(
-        *[F.col(c).alias(f"__t_{c}") for c in by]).agg(
+    totals = cells.groupBy(*by).agg(
         F.sum("__ta").cast("bigint").alias("n_a"),
         F.sum("__tb").cast("bigint").alias("n_b"))
-    if by:
-        from pyspark.sql.functions import broadcast
-        out = med.join(broadcast(totals),
-                       _eq_all([(c, f"__t_{c}") for c in by])) \
-            .drop(*[f"__t_{c}" for c in by])
-    else:
-        from .fold import fold_scalars
-        out = fold_scalars(med, totals.select("n_a", "n_b"))
-    return out.select(*[F.col(c) for c in by],
-                      "n_a", "n_b", "shift")
+    return _attach(med, totals, by, how="inner").select(
+        *by, "n_a", "n_b", "shift")
 
 
 def _complete_blocks(df: DataFrame, by: list[str], block_col: str,
@@ -3119,7 +3012,7 @@ def _complete_blocks(df: DataFrame, by: list[str], block_col: str,
     ``(*by, __blk, __trt, __v, __k)`` — block cast to string, item to
     ``item_type``, ``__v`` the value (or the ``value`` expression) and
     ``__k`` the number of distinct items in the ``by`` group
-    (:func:`_attach_group_aggs`) — keeping only the blocks that hold
+    (:func:`_attach`) — keeping only the blocks that hold
     each of the k items exactly once.
 
     The completeness table has one row per (group, block): unlike the
@@ -3145,18 +3038,19 @@ def _complete_blocks(df: DataFrame, by: list[str], block_col: str,
         F.col(block_col).cast("string").alias("__blk"),
         F.col(item_col).cast(item_type).alias("__trt"),
         (F.col(value_col) if value is None else value).alias("__v"))
-    k = F.countDistinct("__trt").cast("bigint")
-    rows = _attach_group_aggs(base, base, by, k.alias("__k"))
+    k = base.groupBy(*by).agg(
+        F.countDistinct("__trt").cast("bigint").alias("__k"))
+    rows = _attach(base, k, by, how="inner")
     rng = [(F.max("__v") - F.min("__v")).alias("__rng")] if rank_range \
         else []
     blocks = base.groupBy(*by, "__blk").agg(
-        k.alias("__bk"), F.count(F.lit(1)).cast("bigint").alias("__bn"),
-        *rng)
+        F.countDistinct("__trt").cast("bigint").alias("__bk"),
+        F.count(F.lit(1)).cast("bigint").alias("__bn"), *rng)
     complete = ((F.col("__bk") == F.col("__k"))
                 & (F.col("__bn") == F.col("__k")))
     if rank_range:
         blocks = _midranks(
-            _attach_group_aggs(blocks, base, by, k.alias("__k"))
+            _attach(blocks, k, by, how="inner")
             .where(complete), ["__rng"], ["__q2"], by, False) \
             .select(*by, "__blk", "__q2")
     names = {**{c: f"__b_{c}" for c in by}, "__blk": "__b_blk"}
@@ -3224,10 +3118,8 @@ def friedman_test(df: DataFrame, block_col: str, treatment_col: str,
                     F.lit(0.0),
                     lambda acc, s: acc + s["term"]).alias("__fold"),
     ]
-    g = (staged.groupBy(*[F.col(c) for c in by]).agg(*aggs)
-         if by else staged.agg(*aggs))
-    g = _attach_group_aggs(
-        g, ranked, by, F.sum("__tie1").cast("bigint").alias("__ties"))
+    g = _attach(staged.groupBy(*by).agg(*aggs), ranked.groupBy(*by).agg(
+        F.sum("__tie1").cast("bigint").alias("__ties")), by, how="inner")
     nd = F.col("n_blocks").cast("double")
     kd = F.col("k").cast("double")
     q_raw = (F.lit(12.0) / (nd * kd * (kd + 1)) * F.col("__fold")
@@ -3273,51 +3165,36 @@ def jonckheere_terpstra(df: DataFrame, value_col: str,
 
     Determinism: the doubled statistic ``2*JT`` accumulates as exact
     DECIMAL(38,0) from the (group, value) cell grain (one dominance
-    self-join on ``(v, dose)`` - the q189/q202 device); every
+    self-join on ``(v, dose)`` - :func:`_cell_pairs`); every
     variance ingredient (``sum n_i^2``, the A/B/C tie sums) is an
     exact integer/DECIMAL aggregation; ``z`` is one row-local
     expression. No float accumulation anywhere.
 
     Scale shape: one grain aggregation + a bounded Theta(cells^2)
-    join per group; the tie sums are one extra bounded aggregation
-    of the same cell grain; bucket continuous values upstream.
+    :func:`_cell_pairs` join; the tie sums are one extra bounded
+    aggregation of the same cell grain; bucket continuous values
+    upstream.
     """
-    from pyspark.sql.functions import broadcast
-
     by = list(by or [])
     dec = "decimal(38,0)"
     cells = df.where(F.col(value_col).isNotNull()
                      & F.col(dose_col).isNotNull()).groupBy(
-        *[F.col(c) for c in by],
-        F.col(value_col).alias("__v"),
+        *by, F.col(value_col).alias("__v"),
         F.col(dose_col).cast("bigint").alias("__d")).agg(
         F.count(F.lit(1)).cast("bigint").alias("__n"))
-    left = cells.select(
-        *[F.col(c).alias(f"__l_{c}") for c in by],
-        F.col("__v").alias("__vl"), F.col("__d").alias("__dl"),
-        F.col("__n").alias("__nl"))
-    right = cells.select(
-        *[F.col(c).alias(f"__r_{c}") for c in by],
-        F.col("__v").alias("__vr"), F.col("__d").alias("__dr"),
-        F.col("__n").alias("__nr"))
-    jcond = _eq_all([(f"__l_{c}", f"__r_{c}") for c in by],
-                    F.col("__dl") < F.col("__dr"))
-    pairs = left.join(right, jcond)
     # 2*U contribution: 2 per strictly-below pair, 1 per tie pair
-    contrib = F.when(F.col("__vl") < F.col("__vr"), F.lit(2)) \
-        .when(F.col("__vl") == F.col("__vr"), F.lit(1)) \
+    vl, vr = F.col("l.__v"), F.col("r.__v")
+    contrib = F.when(vl < vr, F.lit(2)).when(vl == vr, F.lit(1)) \
         .otherwise(F.lit(0))
-    jt2 = pairs.groupBy(
-        *[F.col(f"__l_{c}").alias(c) for c in by]).agg(
-        F.sum((contrib * F.col("__nl") * F.col("__nr")).cast(dec))
+    jt2 = _cell_pairs(cells, cells, by,
+                      F.col("l.__d") < F.col("r.__d")).groupBy(
+        *[F.col(f"l.{c}").alias(c) for c in by]).agg(
+        F.sum((contrib * F.col("l.__n") * F.col("r.__n")).cast(dec))
          .alias("__jt2"))
-    sizes = cells.groupBy(
-        *[F.col(c).alias(f"__s_{c}") for c in by],
-        F.col("__d").alias("__s_d")).agg(
+    sizes = cells.groupBy(*by, "__d").agg(
         F.sum("__n").cast("bigint").alias("__ni"))
     ni = F.col("__ni")
-    tots = sizes.groupBy(
-        *[F.col(c) for c in [f"__s_{c}" for c in by]]).agg(
+    tots = sizes.groupBy(*by).agg(
         F.count(F.lit(1)).cast("bigint").alias("k"),
         F.sum("__ni").cast("bigint").alias("n"),
         F.sum(ni * ni).cast(dec).alias("__sn2"),
@@ -3327,28 +3204,15 @@ def jonckheere_terpstra(df: DataFrame, value_col: str,
         F.sum(ni.cast(dec) * (ni - 1)).alias("__sn2b"))
     # pooled tie-group sizes per distinct VALUE (across doses) - the
     # t_u of the tie-corrected variance; same bounded cell grain
-    tval = cells.groupBy(
-        *[F.col(c).alias(f"__q_{c}") for c in by],
-        F.col("__v").alias("__q_v")).agg(
+    tval = cells.groupBy(*by, "__v").agg(
         F.sum("__n").cast("bigint").alias("__t"))
     tu = F.col("__t")
-    ties = tval.groupBy(
-        *[F.col(c) for c in [f"__q_{c}" for c in by]]).agg(
+    ties = tval.groupBy(*by).agg(
         F.sum(tu.cast(dec) * (tu - 1) * (2 * tu + 5)).alias("__st5"),
         F.sum(tu.cast(dec) * (tu - 1) * (tu - 2)).alias("__st3"),
         F.sum(tu.cast(dec) * (tu - 1)).alias("__st2"))
-    if by:
-        out = jt2.join(broadcast(tots),
-                       _eq_all([(c, f"__s_{c}") for c in by])) \
-            .drop(*[f"__s_{c}" for c in by])
-        out = out.join(broadcast(ties),
-                       _eq_all([(c, f"__q_{c}") for c in by])) \
-            .drop(*[f"__q_{c}" for c in by])
-    else:
-        from .fold import fold_scalars
-        out = fold_scalars(jt2, tots)
-        out = fold_scalars(
-            out, ties.select("__st5", "__st3", "__st2"))
+    out = _attach(_attach(jt2, tots, by, how="inner"), ties, by,
+                  how="inner")
     nd = F.col("n").cast("double")
     e2 = (nd * nd - F.col("__sn2").cast("double")) / F.lit(2.0)
     if tie_correction:
@@ -3396,82 +3260,29 @@ def ordinal_association(df: DataFrame, x_col: str, y_col: str,
       ``m = min(k_x, k_y)`` — corrects tau for NON-SQUARE tables
       where tau-b cannot reach +/-1.
 
-    Same bounded-grain contract and mechanics as
-    :func:`kendall_tau_b` (bucket continuous values upstream): one
-    map-side-combined cell aggregation, one broadcast dominance
-    self-join over Theta(cells^2) pairs classifying each unordered
-    distinct-cell pair exactly once (C / D / tied-on-y-only /
-    tied-on-x-only), marginal tie totals from one grouping-sets pass.
-    Every count is exact (codegen'd LONG pair sums, DECIMAL(38,0)
-    tie terms); only the final ratios are float.
+    Same bounded-grain contract and counts as :func:`kendall_tau_b`
+    (bucket continuous values upstream): :func:`_concordance` — one
+    map-side-combined cell aggregation, one :func:`_cell_pairs`
+    dominance join counting each strictly x-ordered cell pair once as
+    concordant, discordant or tied on y, and the marginal tie totals
+    and grain cardinalities from one grouping-sets pass. Every count
+    is exact (codegen'd LONG pair sums, DECIMAL(38,0) tie terms); only
+    the final ratios are float.
     """
     by = list(by or [])
-    x, y = F.col(x_col), F.col(y_col)
-    from .cache import operator_persist
-
-    cells = operator_persist(
-        df.where(x.isNotNull() & y.isNotNull()).groupBy(
-            *[F.col(c) for c in by], x.alias("__x"), y.alias("__y"))
-        .agg(F.count(F.lit(1)).cast("bigint").alias("__n")))
-    l = cells.repartition(*[F.col(c) for c in by], F.col("__x")) \
-        .alias("l")
-    r = F.broadcast(cells).alias("r")
-    # each unordered pair of DISTINCT cells exactly once: strict x
-    # dominance, or x-tie broken by strict y dominance
-    cond = (F.col("l.__x") < F.col("r.__x")) \
-        | ((F.col("l.__x") == F.col("r.__x"))
-           & (F.col("l.__y") < F.col("r.__y")))
-    cond = _eq_all([(f"l.{c}", f"r.{c}") for c in by], cond)
-    m = F.col("l.__n") * F.col("r.__n")
-    xlt = F.col("l.__x") < F.col("r.__x")
-    pairs = l.join(r, cond).select(
-        *[F.col(f"l.{c}").alias(c) for c in by],
-        F.when(xlt & (F.col("l.__y") < F.col("r.__y")), m)
-         .otherwise(F.lit(0)).alias("__mc"),
-        F.when(xlt & (F.col("l.__y") > F.col("r.__y")), m)
-         .otherwise(F.lit(0)).alias("__md"))
+    g = _concordance(df, x_col, y_col, by)
     dec = "decimal(38,0)"
-    aggs = [F.sum("__mc").cast(dec).alias("__C"),
-            F.sum("__md").cast(dec).alias("__D")]
-    cd = (pairs.groupBy(*[F.col(c) for c in by]).agg(*aggs)
-          if by else pairs.agg(*aggs))
-    # marginals: per-x tie totals, per-y tie totals, n, and the two
-    # grain cardinalities — one grouping-sets pass (the tau-b device)
-    marg = cells.groupingSets(
-        [[*by, "__x"], [*by, "__y"], list(by)],
-        *[F.col(c) for c in by], F.col("__x"), F.col("__y")).agg(
-        F.sum("__n").cast("bigint").alias("__t"),
-        F.grouping("__x").alias("__gx"),
-        F.grouping("__y").alias("__gy"))
-    tt = (F.col("__t").cast(dec) * (F.col("__t") - 1).cast(dec) / 2) \
-        .cast(dec)
-    is_x = (F.col("__gx") == 0) & (F.col("__gy") == 1)
-    is_y = (F.col("__gy") == 0) & (F.col("__gx") == 1)
-    fold = [
-        F.sum(F.when(is_x, tt)).alias("__Tx"),
-        F.sum(F.when(is_y, tt)).alias("__Ty"),
-        F.sum(F.when(is_x, 1)).cast("bigint").alias("__kx"),
-        F.sum(F.when(is_y, 1)).cast("bigint").alias("__ky"),
-        F.max(F.when((F.col("__gx") == 1) & (F.col("__gy") == 1),
-                     F.col("__t"))).alias("n"),
-    ]
-    tot = (marg.groupBy(*[F.col(c) for c in by]).agg(*fold)
-           if by else marg.agg(*fold))
-    g = _left_join_nullsafe(tot, cd, list(by)) if by \
-        else tot.crossJoin(cd)
     n = F.col("n")
-    zero = F.lit(0).cast(dec)
-    cc = F.coalesce(F.col("__C"), zero)
-    dd = F.coalesce(F.col("__D"), zero)
+    cc, dd = F.col("__C"), F.col("__D")
     n0 = (n.cast(dec) * (n - 1).cast(dec) / 2).cast(dec)
     num = (cc - dd).cast("double")
     cpd = (cc + dd).cast("double")
-    base_yx = (n0 - F.coalesce(F.col("__Tx"), zero)).cast("double")
-    base_xy = (n0 - F.coalesce(F.col("__Ty"), zero)).cast("double")
+    base_yx = (n0 - F.col("__Tx")).cast("double")
+    base_xy = (n0 - F.col("__Ty")).cast("double")
     md = F.least(F.col("__kx"), F.col("__ky")).cast("double")
     nd = n.cast("double")
     return g.select(
-        *[F.col(c) for c in by], "n",
+        *by, "n",
         cc.cast("bigint").alias("c_pairs"),
         dd.cast("bigint").alias("d_pairs"),
         F.when(cpd > 0, num / cpd).alias("gamma"),
@@ -3513,8 +3324,7 @@ def mcnemar_test(df: DataFrame, a_col, b_col,
     aggs = [F.count(F.lit(1)).cast("bigint").alias("n"),
             F.sum("__n01").cast("bigint").alias("n01"),
             F.sum("__n10").cast("bigint").alias("n10")]
-    g = (base.groupBy(*[F.col(c) for c in by]).agg(*aggs)
-         if by else base.agg(*aggs))
+    g = base.groupBy(*by).agg(*aggs)
     disc = (F.col("n01") + F.col("n10")).cast("double")
     diff = (F.col("n01") - F.col("n10")).cast("double")
     if continuity:
@@ -3558,7 +3368,6 @@ def page_trend(df: DataFrame, block_col: str, treatment_col: str,
     (group, block) partitions - blocks x groups parallel over k
     values each; everything else is bounded-grain aggregation.
     """
-    from pyspark.sql.functions import broadcast
     from pyspark.sql.window import Window
 
     by = list(by or [])
@@ -3570,26 +3379,17 @@ def page_trend(df: DataFrame, block_col: str, treatment_col: str,
         *[F.col(c) for c in by], "__trt", "__k", "__r2")
     # dose order j = dense_rank of the treatment within the group
     # (bounded grain: k rows per group)
-    wj = (Window.partitionBy(*by).orderBy("__trt") if by
-          else Window.partitionBy().orderBy("__trt"))
-    trt = ranked.select(*[F.col(c) for c in by], "__trt") \
-        .distinct().withColumn(
+    wj = Window.partitionBy(*by).orderBy("__trt")
+    trt = ranked.select(*by, "__trt").distinct().withColumn(
         "__j", F.dense_rank().over(wj).cast("bigint"))
-    tsel = trt.select(
-        *[F.col(c).alias(f"__t_{c}") for c in by],
-        F.col("__trt").alias("__t_trt"), "__j")
-    jcond = _eq_all([("__trt", "__t_trt"),
-                     *[(c, f"__t_{c}") for c in by]])
-    ranked = ranked.join(broadcast(tsel), jcond) \
-        .drop("__t_trt", *[f"__t_{c}" for c in by])
+    ranked = _attach(ranked, trt, [*by, "__trt"], how="inner")
     aggs = [
         F.min("__k").cast("bigint").alias("k"),
         (F.count(F.lit(1)) / F.min("__k")).cast("bigint")
         .alias("n_blocks"),
         F.sum((F.col("__j") * F.col("__r2")).cast(dec)).alias("__l2"),
     ]
-    g = (ranked.groupBy(*[F.col(c) for c in by]).agg(*aggs)
-         if by else ranked.agg(*aggs))
+    g = ranked.groupBy(*by).agg(*aggs)
     kd = F.col("k").cast("double")
     nd = F.col("n_blocks").cast("double")
     l_stat = F.col("__l2").cast("double") / F.lit(2.0)
@@ -3625,26 +3425,15 @@ def mood_median_test(df: DataFrame, value_col: str, group_col: str,
     bounded value grain + one grouped count - nothing scales worse
     than the grain.
     """
-    from pyspark.sql.functions import broadcast
-
     by = list(by or [])
     base = df.where(F.col(value_col).isNotNull()
                     & F.col(group_col).isNotNull()).select(
-        *[F.col(c) for c in by],
-        F.col(group_col).cast("string").alias("__s"),
+        *by, F.col(group_col).cast("string").alias("__s"),
         F.col(value_col).alias("__v"))
-    grain = base.groupBy(*[F.col(c) for c in by], F.col("__v")).agg(
+    grain = base.groupBy(*by, F.col("__v")).agg(
         F.count(F.lit(1)).cast("bigint").alias("__w"))
     med = _weighted_lower_median(grain, by, "__v", "__w", "__med")
-    if by:
-        msel = med.select(
-            *[F.col(c).alias(f"__m_{c}") for c in by], "__med")
-        work = base.join(broadcast(msel),
-                         _eq_all([(c, f"__m_{c}") for c in by])) \
-            .drop(*[f"__m_{c}" for c in by])
-    else:
-        from .fold import fold_scalars
-        work = fold_scalars(base, med.select("__med"))
+    work = _attach(base, med, by, how="inner")
     cell = work.groupBy(*[F.col(c) for c in by], F.col("__s")).agg(
         F.sum((F.col("__v") > F.col("__med")).cast("bigint"))
          .cast("bigint").alias("__a"),
@@ -3662,8 +3451,7 @@ def mood_median_test(df: DataFrame, value_col: str, group_col: str,
         F.sum("__a").cast("bigint").alias("__atot"),
         F.sort_array(F.collect_list("__t")).alias("__cells"),
     ]
-    g = (staged.groupBy(*[F.col(c) for c in by]).agg(*aggs)
-         if by else staged.agg(*aggs))
+    g = staged.groupBy(*by).agg(*aggs)
     nd = F.col("n").cast("double")
     pa = F.col("__atot").cast("double") / nd
     pb = (F.col("n") - F.col("__atot")).cast("double") / nd
@@ -3738,11 +3526,9 @@ def kendalls_w(df: DataFrame, rater_col: str, object_col: str,
         F.min("m").cast("bigint").alias("m"),
         F.sum(dev * dev).alias("__S4"),
     ]
-    g = (objsum.groupBy(*[F.col(c) for c in by]).agg(*aggs)
-         if by else objsum.agg(*aggs))
-    g = _attach_group_aggs(
-        g, tie, by, F.sum(F.col("__t").cast(dec) * F.col("__t")
-                          * F.col("__t") - F.col("__t")).alias("__T"))
+    t = F.col("__t")
+    g = _attach(objsum.groupBy(*by).agg(*aggs), tie.groupBy(*by).agg(
+        F.sum(t.cast(dec) * t * t - t).alias("__T")), by, how="inner")
     kd = F.col("k").cast("double")
     md = F.col("m").cast("double")
     s = F.col("__S4").cast("double") / F.lit(4.0)
@@ -3809,8 +3595,7 @@ def quade_test(df: DataFrame, block_col: str, treatment_col: str,
         F.sum("__a16").alias("__A16"),
         F.sum(F.col("__sj4") * F.col("__sj4")).alias("__B16n"),
     ]
-    g = (tr.groupBy(*[F.col(c) for c in by]).agg(*aggs)
-         if by else tr.agg(*aggs))
+    g = tr.groupBy(*by).agg(*aggs)
     nd = F.col("n_blocks").cast("double")
     a16 = F.col("__A16").cast("double")
     b16n = F.col("__B16n").cast("double")
@@ -3853,17 +3638,23 @@ def cronbach_alpha(df: DataFrame, subject_col: str, item_col: str,
         value=F.round(F.col(value_col)).cast("bigint"))
     # per-item co-moments -> per-item variance terms, folded
     # item-sorted for cross-engine float determinism
-    item = work.groupBy(*[F.col(c) for c in by],
-                        F.col("__trt")).agg(
+    item = work.groupBy(*by, F.col("__trt")).agg(
         F.sum(F.col("__v").cast(dec)).alias("__s"),
         F.sum(F.col("__v").cast(dec) * F.col("__v")).alias("__s2"),
         F.count(F.lit(1)).cast("bigint").alias("__n"))
-    ivar = (F.col("__n").cast("double")
-            * F.col("__s2").cast("double")
-            - F.col("__s").cast("double")
-            * F.col("__s").cast("double")) \
-        / (F.col("__n").cast("double")
-           * (F.col("__n").cast("double") - 1))
+
+    def var(n, s, s2):
+        # sample variance from exact co-moments; NULL below two
+        # observations — the guard sits on the division itself, so a
+        # group with one complete subject is a NULL alpha, not an
+        # ANSI divide-by-zero failing the whole query
+        nd = F.col(n).cast("double")
+        return F.when(F.col(n) > 1, (
+            nd * F.col(s2).cast("double")
+            - F.col(s).cast("double") * F.col(s).cast("double"))
+            / (nd * (nd - 1)))
+
+    ivar = var("__n", "__s", "__s2")
     staged = item.select(
         *[F.col(c) for c in by], "__n",
         F.struct(F.col("__trt").alias("i"), ivar.alias("v"))
@@ -3875,21 +3666,14 @@ def cronbach_alpha(df: DataFrame, subject_col: str, item_col: str,
                     F.lit(0.0), lambda acc, s: acc + s["v"])
         .alias("__iv"),
     ]
-    g = (staged.groupBy(*[F.col(c) for c in by]).agg(*aggs)
-         if by else staged.agg(*aggs))
     # total-score variance from the subject grain
-    tot = work.groupBy(*[F.col(c) for c in by], "__blk").agg(
+    tot = work.groupBy(*by, "__blk").agg(
         F.sum(F.col("__v").cast(dec)).alias("__x"))
-    g = _attach_group_aggs(
-        g, tot, by, F.sum("__x").alias("__xs"),
+    g = _attach(staged.groupBy(*by).agg(*aggs), tot.groupBy(*by).agg(
+        F.sum("__x").alias("__xs"),
         F.sum(F.col("__x") * F.col("__x")).alias("__xs2"),
-        F.count(F.lit(1)).cast("bigint").alias("__xn"))
-    tvar = (F.col("__xn").cast("double")
-            * F.col("__xs2").cast("double")
-            - F.col("__xs").cast("double")
-            * F.col("__xs").cast("double")) \
-        / (F.col("__xn").cast("double")
-           * (F.col("__xn").cast("double") - 1))
+        F.count(F.lit(1)).cast("bigint").alias("__xn")), by, how="inner")
+    tvar = var("__xn", "__xs", "__xs2")
     kd = F.col("k_items").cast("double")
     alpha = F.when(
         (F.col("k_items") > 1) & (F.col("n_subjects") > 1)
@@ -3917,18 +3701,18 @@ def siegel_slopes(df: DataFrame, x_col: str, y_col: str,
     ``(n, n_cells, NULL, NULL)`` rather than vanishing (the
     theil_sen spine convention).
 
-    Determinism: everything runs on the (x, y) CELL grain (the q189
-    device - bucket continuous values upstream): each inner median is
-    a weighted lower-median pick (weight = partner-cell count n_j)
-    over row-local double slope divisions of exact ints, the outer
-    median weights each cell's inner median by its own count n_i, and
-    every median pick is pure integer running-weight arithmetic -
-    hash-identical across engines.
+    Determinism: everything runs on the (x, y) CELL grain
+    (:func:`_cell_pairs` - bucket continuous values upstream): each
+    inner median is a weighted lower-median pick (weight =
+    partner-cell count n_j) over row-local double slope divisions of
+    exact ints, the outer median weights each cell's inner median by
+    its own count n_i, and every median pick is pure integer
+    running-weight arithmetic - hash-identical across engines.
 
-    Scale shape: one grain aggregation + one Theta(cells^2) self-join
-    (both directions, x_i != x_j); the inner-median windows partition
-    by (group, CELL) - cells-way parallel; outer median over the
-    bounded cell grain.
+    Scale shape: one grain aggregation + one Theta(cells^2)
+    :func:`_cell_pairs` join (both directions, x_i != x_j); the
+    inner-median windows partition by (group, CELL) - cells-way
+    parallel; outer median over the bounded cell grain.
 
     ``x_cells_guard`` (default 10 000) protects against CONTINUOUS x:
     the pairwise join is row-count-safe only because cells are a
@@ -3937,26 +3721,19 @@ def siegel_slopes(df: DataFrame, x_col: str, y_col: str,
     referenced four times downstream anyway) and ONE count job checks
     the largest per-group cell count; above the threshold a warning
     names the offending magnitude and recommends bucketing x upstream
-    (``F.round`` / ``width_bucket`` — the q189 device). Pass ``None``
+    (``F.round`` / ``width_bucket``, as q189 does). Pass ``None``
     to skip the check (fully lazy, no persist).
     """
-    from pyspark.sql.functions import broadcast
-
     by = list(by or [])
     cells = df.where(F.col(x_col).isNotNull()
                      & F.col(y_col).isNotNull()).groupBy(
-        *[F.col(c) for c in by],
-        F.col(x_col).alias("__x"), F.col(y_col).alias("__y")).agg(
+        *by, F.col(x_col).alias("__x"), F.col(y_col).alias("__y")).agg(
         F.count(F.lit(1)).cast("bigint").alias("__n"))
     if x_cells_guard:
         from .cache import operator_persist
         cells = operator_persist(cells)
-        if by:
-            mx = cells.groupBy(*[F.col(c) for c in by]).agg(
-                F.count(F.lit(1)).alias("__c")).agg(
-                F.max("__c")).collect()[0][0]
-        else:
-            mx = cells.count()
+        mx = cells.groupBy(*by).agg(F.count(F.lit(1)).alias("__c")).agg(
+            F.max("__c")).collect()[0][0]
         if mx and mx > int(x_cells_guard):
             _warn_once(
                 f"siegel:{x_col}:{y_col}",
@@ -3966,86 +3743,44 @@ def siegel_slopes(df: DataFrame, x_col: str, y_col: str,
                 "slow/explosive on continuous x. Bucket x upstream "
                 "(F.round / width_bucket) or raise x_cells_guard "
                 "deliberately")
-    left = cells.select(
-        *[F.col(c).alias(f"__l_{c}") for c in by],
-        F.col("__x").alias("__xi"), F.col("__y").alias("__yi"))
-    right = cells.select(
-        *[F.col(c).alias(f"__r_{c}") for c in by],
-        F.col("__x").alias("__xj"), F.col("__y").alias("__yj"),
-        F.col("__n").alias("__nj"))
-    jcond = _eq_all([(f"__l_{c}", f"__r_{c}") for c in by],
-                    F.col("__xi") != F.col("__xj"))
-    pairs = left.join(right, jcond).select(
-        *[F.col(f"__l_{c}").alias(c) for c in by],
-        "__xi", "__yi",
-        ((F.col("__yj").cast("double") - F.col("__yi").cast("double"))
-         / (F.col("__xj").cast("double")
-            - F.col("__xi").cast("double"))).alias("__slope"),
-        F.col("__nj").alias("__w"))
-    inner = _weighted_lower_median(
-        pairs, [*by, "__xi", "__yi"], "__slope", "__w", "__med")
+    pairs = _cell_pairs(cells, cells, by,
+                        F.col("l.__x") != F.col("r.__x")).select(
+        *[F.col(f"l.{c}").alias(c) for c in by],
+        F.col("l.__x").alias("__xi"), F.col("l.__y").alias("__yi"),
+        ((F.col("r.__y").cast("double") - F.col("l.__y").cast("double"))
+         / (F.col("r.__x").cast("double")
+            - F.col("l.__x").cast("double"))).alias("__slope"),
+        F.col("r.__n").alias("__w"))
+    cell = [*by, "__xi", "__yi"]
+    inner = _weighted_lower_median(pairs, cell, "__slope", "__w", "__med")
     # attach each cell's own weight for the outer median
-    csel = cells.select(
-        *[F.col(c).alias(f"__c_{c}") for c in by],
-        F.col("__x").alias("__c_x"), F.col("__y").alias("__c_y"),
-        F.col("__n").alias("__ni"))
-    icond = _eq_all([("__xi", "__c_x"), ("__yi", "__c_y"),
-                     *[(c, f"__c_{c}") for c in by]])
-    innerw = inner.join(broadcast(csel), icond) \
-        .select(*[F.col(c) for c in by], "__med", "__ni")
+    innerw = _attach(inner, cells.select(
+        *by, F.col("__x").alias("__xi"), F.col("__y").alias("__yi"),
+        F.col("__n").alias("__ni")), cell, how="inner")
     slope = _weighted_lower_median(innerw, by, "__med", "__ni",
                                    "slope")
-    # totals spine (a constant-x group has no pair, hence no slope -
-    # it must still emit; the theil_sen r12 convention)
-    if by:
-        tot = cells.groupBy(
-            *[F.col(c).alias(f"__t_{c}") for c in by]).agg(
-            F.sum("__n").cast("bigint").alias("n"),
-            F.count(F.lit(1)).cast("bigint").alias("n_cells"))
-        scols = slope.select(
-            *[F.col(c).alias(f"__m_{c}") for c in by], "slope")
-        cond = _eq_all([(f"__t_{c}", f"__m_{c}") for c in by])
-        out = tot.join(broadcast(scols), cond, "left") \
-            .drop(*[f"__m_{c}" for c in by])
-        # intercept: weighted lower median of y - slope*x per cell
-        ssel = slope.select(
-            *[F.col(c).alias(f"__s_{c}") for c in by],
-            F.col("slope").alias("__sl"))
-        withs = cells.join(broadcast(ssel),
-                           _eq_all([(c, f"__s_{c}") for c in by])) \
-            .drop(*[f"__s_{c}" for c in by])
-    else:
-        from .fold import fold_scalars
-        tot = cells.agg(
-            F.sum("__n").cast("bigint").alias("n"),
-            F.count(F.lit(1)).cast("bigint").alias("n_cells"))
-        out = fold_scalars(
-            tot, slope.agg(F.min("slope").alias("slope")))
-        withs = fold_scalars(
-            cells, slope.agg(F.min("slope").alias("__sl")))
+    # intercept: weighted lower median of y - slope*x per cell
+    withs = _attach(cells, slope.withColumnRenamed("slope", "__sl"), by,
+                    how="inner")
     resid = withs.where(F.col("__sl").isNotNull()).select(
-        *[F.col(c) for c in by],
-        (F.col("__y").cast("double")
-         - F.col("__sl") * F.col("__x").cast("double"))
+        *by, (F.col("__y").cast("double")
+              - F.col("__sl") * F.col("__x").cast("double"))
         .alias("__resid"),
         F.col("__n").alias("__w"))
     inter = _weighted_lower_median(resid, by, "__resid", "__w",
                                    "intercept")
-    if by:
-        isel = inter.select(
-            *[F.col(c).alias(f"__i_{c}") for c in by], "intercept")
-        cond = _eq_all([(f"__t_{c}", f"__i_{c}") for c in by])
-        out = out.join(broadcast(isel), cond, "left") \
-            .drop(*[f"__i_{c}" for c in by])
-        out = out.select(
-            *[F.col(f"__t_{c}").alias(c) for c in by],
-            "n", "n_cells", "slope", "intercept")
-    else:
-        from .fold import fold_scalars
-        out = fold_scalars(
-            out, inter.agg(F.min("intercept").alias("intercept")))
-    return out.select(*[F.col(c) for c in by],
-                      "n", "n_cells", "slope", "intercept")
+    # totals spine (a constant-x group has no pair, hence no slope -
+    # it must still emit; the theil_sen r12 convention)
+    if not by:
+        # min wraps the <=1-row median frames to exactly one row
+        # (NULL when empty) so the scalar folds never drop the row
+        slope = slope.agg(F.min("slope").alias("slope"))
+        inter = inter.agg(F.min("intercept").alias("intercept"))
+    tot = cells.groupBy(*by).agg(
+        F.sum("__n").cast("bigint").alias("n"),
+        F.count(F.lit(1)).cast("bigint").alias("n_cells"))
+    return _attach(_attach(tot, slope, by), inter, by).select(
+        *by, "n", "n_cells", "slope", "intercept")
 
 
 def wilcoxon_signed_rank(df: DataFrame, a_col: str, b_col: str,
@@ -4097,8 +3832,7 @@ def wilcoxon_signed_rank(df: DataFrame, a_col: str, b_col: str,
         F.sum(F.col("__t").cast(dec) * F.col("__t") * F.col("__t")
               - F.col("__t")).alias("__ties"),
     ]
-    g = (ranked.groupBy(*[F.col(c) for c in by]).agg(*aggs)
-         if by else ranked.agg(*aggs))
+    g = ranked.groupBy(*by).agg(*aggs)
     nd = F.col("n").cast("double")
     e2 = nd * (nd + 1) / F.lit(2.0)
     var = (nd * (nd + 1) * (2 * nd + 1) / F.lit(24.0)
@@ -4158,11 +3892,9 @@ def mood_scale_test(df: DataFrame, value_col: str, sample_col: str,
     # total n must be in hand BEFORE the squared deviation - attach
     # the group total as a window sum over the cell grain (no second
     # pass over the raw table)
-    wn = (Window.partitionBy(*by) if by else Window.partitionBy())
     ranked = ranked.withColumn(
-        "__n1", F.sum("__t").over(wn).cast("bigint"))
-    g = (ranked.groupBy(*[F.col(c) for c in by]).agg(*aggs)
-         if by else ranked.agg(*aggs))
+        "__n1", F.sum("__t").over(Window.partitionBy(*by)).cast("bigint"))
+    g = ranked.groupBy(*by).agg(*aggs)
     na = F.col("n_a").cast("double")
     nb = F.col("n_b").cast("double")
     nd = na + nb
@@ -4213,8 +3945,7 @@ def cochran_q(df: DataFrame, block_col: str, treatment_col: str,
     meta_aggs = [
         F.countDistinct("__t").cast("bigint").alias("k"),
         F.countDistinct("__b").cast("bigint").alias("n_blocks")]
-    meta = (base.groupBy(*[F.col(c) for c in by]).agg(*meta_aggs)
-            if by else base.agg(*meta_aggs))
+    meta = base.groupBy(*by).agg(*meta_aggs)
     cells = base.where(F.col("__y")).select(
         *by, "__b", "__t").distinct()
     gj = cells.groupBy(*by, "__t").agg(
@@ -4222,20 +3953,13 @@ def cochran_q(df: DataFrame, block_col: str, treatment_col: str,
     gagg = [F.sum("__g").cast("bigint").alias("t"),
             F.sum(F.col("__g").cast("decimal(38,0)")
                   * F.col("__g")).alias("__g2")]
-    gt = (gj.groupBy(*[F.col(c) for c in by]).agg(*gagg)
-          if by else gj.agg(*gagg))
+    gt = gj.groupBy(*by).agg(*gagg)
     li = cells.groupBy(*by, "__b").agg(
         F.count(F.lit(1)).cast("bigint").alias("__l"))
     lagg = [F.sum(F.col("__l").cast("decimal(38,0)")
                   * F.col("__l")).alias("__l2")]
-    lt = (li.groupBy(*[F.col(c) for c in by]).agg(*lagg)
-          if by else li.agg(*lagg))
-    if by:
-        out = _left_join_nullsafe(
-            _left_join_nullsafe(meta, gt, by), lt, by)
-    else:
-        from .fold import fold_scalars
-        out = fold_scalars(fold_scalars(meta, gt), lt)
+    lt = li.groupBy(*by).agg(*lagg)
+    out = _attach(_attach(meta, gt, by), lt, by)
     kd = F.col("k").cast("double")
     td = F.coalesce(F.col("t"), F.lit(0)).cast("double")
     g2 = F.coalesce(F.col("__g2").cast("double"), F.lit(0.0))
@@ -4279,9 +4003,7 @@ def runs_test(df: DataFrame, order_col: str, above_expr,
                      F.col(order_col).alias("__o"),
                      cond.cast("boolean").alias("__b")) \
         .where(F.col("__b").isNotNull())
-    w = (Window.partitionBy(*[F.col(c) for c in by]).orderBy("__o")
-         if by else Window.orderBy("__o"))
-    prev = F.lag("__b").over(w)
+    prev = F.lag("__b").over(Window.partitionBy(*by).orderBy("__o"))
     marked = base.select(
         *[F.col(c) for c in by], "__b",
         (prev.isNotNull() & (prev != F.col("__b")))
@@ -4292,8 +4014,8 @@ def runs_test(df: DataFrame, order_col: str, above_expr,
          .alias("n2"),
         (F.sum("__t") + 1).cast("bigint").alias("runs"),
     ]
-    g = (marked.groupBy(*[F.col(c) for c in by]).agg(*aggs)
-         if by else marked.agg(*aggs))
+    g = marked.groupBy(*by).agg(*aggs)
+
     n1 = F.col("n1").cast("double")
     n2 = F.col("n2").cast("double")
     n = n1 + n2

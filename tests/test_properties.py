@@ -3,6 +3,7 @@ strategy: the security gates and format translators must be total
 functions (never crash) and must uphold their invariants on arbitrary
 input, not just the curated cases."""
 
+import math
 import re
 
 from hypothesis import given, settings
@@ -141,10 +142,12 @@ def test_quantile_buckets_range_and_cover(spark, vs, k):
 # (ties, NULLs, degenerate groups) — not just on the curated cases.
 # ---------------------------------------------------------------------------
 
+# ties, NULL, NaN and both signed zeros (equal to each other)
 _ranks = st.lists(
     st.one_of(st.none(),
               st.integers(min_value=0, max_value=6)
-              .map(lambda i: float(i))),
+              .map(lambda i: float(i)),
+              st.sampled_from([-0.0, 0.0, float("nan")])),
     min_size=2, max_size=16)
 
 
@@ -169,22 +172,24 @@ def test_distributed_midrank_equals_reference(spark, vs, buckets, cells):
 
     df = spark.createDataFrame([("g", v) for v in vs],
                                "g string, v double")
-    got = sorted(((r.v, r.r2) for r in
-                  _midranks(df, ["v"], ["r2"], ["g"], True,
-                            buckets=buckets).collect()),
-                 key=lambda t: (t[0] is not None, t[0], t[1]))
-    # reference doubled midrank, NULLs tied lowest (NULLS FIRST)
-    def r2(x):
-        if x is None:
-            return sum(1 for o in vs if o is None) + 1
-        lt = (sum(1 for o in vs if o is None)
-              + sum(1 for o in vs if o is not None and o < x))
-        eq = sum(1 for o in vs if o == x)
-        return 2 * lt + eq + 1
-    want = sorted(((v, r2(v)) for v in vs),
-                  key=lambda t: (t[0] is not None, t[0], t[1]))
-    assert got == want
-    assert len(got) == len(vs)  # no row dropped
+
+    # Spark's order: NULLS FIRST, NaN above every number, -0.0 == 0.0
+    def key(x):
+        return (0,) if x is None else (2,) if math.isnan(x) else (1, x)
+
+    # reference doubled midrank and tie count
+    def ref(x):
+        lt = sum(1 for o in vs if key(o) < key(x))
+        eq = sum(1 for o in vs if key(o) == key(x))
+        return 2 * lt + eq + 1, eq
+
+    want = sorted((key(v), *ref(v)) for v in vs)
+    for dist in (False, True):
+        got = sorted((key(r.v), r.r2, r.t) for r in
+                     _midranks(df, ["v"], ["r2"], ["g"], dist,
+                               buckets=buckets, tie_cols=["t"])
+                     .collect())
+        assert got == want  # no row dropped, on either device
 
     # weighted: on both devices, the (g, v) cell grain ranked with its
     # row count as the weight equals the unweighted expanded rows

@@ -709,6 +709,28 @@ class TestCronbachAlpha:
         row = cronbach_alpha(df, "sub", "item", "v").collect()[0]
         assert row["alpha"] is None
 
+    def test_single_subject_group_null_not_error(self, spark):
+        """A by group with ONE complete subject has no sample variance:
+        its alpha is NULL, and the other group's alpha is what it gets
+        alone (the variances once divided by n(n-1) = 0 under ANSI
+        and failed the whole query)."""
+        from pyspark.sql import functions as F
+
+        from pandas_ai_spark.functions.stats import cronbach_alpha
+
+        rows = ([("one", 1, i, v) for i, v in (("a", 2), ("b", 3))]
+                + [("two", s, i, s * 2 + len(i) + (s % 2))
+                   for s in (1, 2, 3, 4) for i in ("a", "b", "c")])
+        df = spark.createDataFrame(rows, ["g", "sub", "item", "v"])
+        out = {r["g"]: r for r in
+               cronbach_alpha(df, "sub", "item", "v", by=["g"]).collect()}
+        assert out["one"]["n_subjects"] == 1
+        assert out["one"]["alpha"] is None
+        alone = cronbach_alpha(df.where(F.col("g") == "two"), "sub",
+                               "item", "v", by=["g"]).collect()[0]
+        assert alone["alpha"] is not None
+        assert out["two"]["alpha"] == alone["alpha"]
+
 # ---------------------------------------------------------------------------
 # wilcoxon signed-rank (paired continuous)
 # ---------------------------------------------------------------------------

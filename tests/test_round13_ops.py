@@ -118,6 +118,56 @@ class TestExactStateThresholdConfig:
         assert stats._resolve_approx(df, False) is False
 
 
+# one by group's rows: (block, treatment, value) over 5 complete blocks
+# of 3 treatments, values with ties
+_ONE_GROUP = [(b, t, (b * 7 + t * 3) % 6 + t)
+              for b in range(5) for t in (1, 2, 3)]
+
+# every by-taking operator that attaches per-group tables or joins cell
+# pairs: (module, call on a frame keyed by "g")
+_NULL_KEY_OPS = {
+    "kruskal_wallis": ("stats", lambda f, df: f(
+        df, "v", "trt", by=["g"], distributed=False)),
+    "dunn_test": ("stats", lambda f, df: f(
+        df, "v", "trt", by=["g"], distributed=False)),
+    "mood_median_test": ("stats",
+                         lambda f, df: f(df, "v", "trt", by=["g"])),
+    "jonckheere_terpstra": ("stats",
+                            lambda f, df: f(df, "v", "trt", by=["g"])),
+    "kendall_tau_b": ("stats", lambda f, df: f(df, "x", "y", by=["g"])),
+    "ordinal_association": ("stats",
+                            lambda f, df: f(df, "x", "y", by=["g"])),
+    "theil_sen": ("stats", lambda f, df: f(df, "x", "y", by=["g"])),
+    "siegel_slopes": ("stats", lambda f, df: f(
+        df, "x", "y", by=["g"], x_cells_guard=None)),
+    "cliffs_delta": ("stats", lambda f, df: f(
+        df, "v", "s", "a", "b", by=["g"])),
+    "hodges_lehmann": ("stats", lambda f, df: f(
+        df, "v", "s", "a", "b", by=["g"])),
+    "permutation_test": ("stats", lambda f, df: f(
+        df, "v", "s", "a", "b", ["id"], by=["g"], n_perm=5)),
+    "friedman_test": ("stats", lambda f, df: f(
+        df, "blk", "trt", "v", by=["g"])),
+    "page_trend": ("stats", lambda f, df: f(
+        df, "blk", "trt", "v", by=["g"])),
+    "kendalls_w": ("stats", lambda f, df: f(
+        df, "blk", "trt", "v", by=["g"])),
+    "quade_test": ("stats", lambda f, df: f(
+        df, "blk", "trt", "v", by=["g"])),
+    "cronbach_alpha": ("stats", lambda f, df: f(
+        df, "blk", "trt", "v", by=["g"])),
+    "cochran_q": ("stats", lambda f, df: f(
+        df, "blk", "trt", "v > 3", by=["g"])),
+    "weighted_kappa": ("classify", lambda f, df: f(df, "x", "y",
+                                                  by=["g"])),
+    "gwet_ac1": ("classify", lambda f, df: f(df, "x", "y", by=["g"])),
+    "fleiss_kappa": ("classify", lambda f, df: f(df, "blk", "y",
+                                                by=["g"])),
+    "krippendorff_alpha": ("classify", lambda f, df: f(df, "blk", "y",
+                                                      by=["g"])),
+}
+
+
 class TestAdviceR12Fixes:
     def test_ordinal_association_null_group_key(self, spark):
         """ADVICE r12: a NULL by-key group must carry real C/D counts
@@ -134,14 +184,35 @@ class TestAdviceR12Fixes:
         assert out[None]["gamma"] == pytest.approx(1.0)
         assert out["g"]["gamma"] == pytest.approx(-1.0)
 
-    def test_kendall_tau_b_null_group_key(self, spark):
-        from pandas_ai_spark.functions.stats import kendall_tau_b
+    @pytest.mark.parametrize("op", sorted(_NULL_KEY_OPS))
+    def test_null_group_key(self, spark, op):
+        """A by group whose key is NULL returns the same rows as the
+        same data under a non-NULL key, for every operator whose
+        per-group attaches (stats._attach) and cell-pair joins
+        (stats._cell_pairs) match group keys NULL-safely. Both groups
+        share one input, so a NULL key pairing with nothing, or with
+        the other group, shows as a difference."""
+        import importlib
 
-        rows = [(None, 1, 1), (None, 2, 2), (None, 3, 3)]
-        df = spark.createDataFrame(rows, "grp string, x int, y int")
-        out = kendall_tau_b(df, "x", "y", by=["grp"]).collect()
-        assert len(out) == 1
-        assert out[0]["tau_b"] == pytest.approx(1.0)
+        rows = [(g, f"b{b}", t, v, t, v % 4, "ab"[(b + t) % 2],
+                 f"{b}-{t}")
+                for g in (None, "k") for b, t, v in _ONE_GROUP]
+        df = spark.createDataFrame(
+            rows, "g string, blk string, trt int, v int, x int, y int, "
+                  "s string, id string")
+        module, call = _NULL_KEY_OPS[op]
+        fn = getattr(importlib.import_module(
+            f"pandas_ai_spark.functions.{module}"), op)
+        out = call(fn, df).collect()
+
+        def rows_of(key):
+            return sorted(
+                (tuple((k, round(v, 9) if isinstance(v, float) else v)
+                       for k, v in r.asDict().items() if k != "g")
+                 for r in out if r["g"] == key), key=str)
+
+        assert rows_of("k")
+        assert rows_of(None) == rows_of("k")
 
     def test_wilcoxon_rounds_fractional_inputs(self, spark):
         """ADVICE r12: fractional inputs are HALF-UP rounded, not
