@@ -5,19 +5,32 @@ Design notes per operator:
 
 - **exact**: hash-groupBy on a normalized key — one shuffle on the key,
   map-side partial aggregation keeps it skew-tolerant.
-- **MinHash+LSH**: shingle → k independent min-hashes (JVM-side xxhash64,
-  no Python) → band signatures → explode(bands) → groupBy(band, sig).
-  The only shuffle is on band signatures; candidate verification joins
-  back by id. This is the canonical sub-quadratic near-dup path.
+- **MinHash+LSH**: tokenize → word shingles → signed-64 md5 per shingle
+  → k affine min-hashes → FNV-folded band signatures, all in ONE Arrow
+  pass (:func:`_state_udf`) that also returns the shingle-hash set the
+  exact verify needs. Candidates come from one shuffle on the band
+  signature (:func:`_bucket_pairs`); verification attaches the hash
+  sets by id. This is the canonical sub-quadratic near-dup path.
 - **SimHash**: 64-bit signature via a vectorized Arrow pandas_udf (numpy
   bit-twiddling beats a 64-term JVM expression tree), then banded Hamming
   candidate buckets.
 - **n-gram Jaccard**: exact verification metric; used standalone with
   length blocking for small/medium tables and as the verify stage after
   LSH candidate generation.
+
+The candidate-pair operators here and in ``similarity`` make the same
+move: a table of ``(id, bucket key)`` rows becomes id pairs sharing a
+key (:func:`_bucket_pairs`), and a per-id table then attaches to both
+pair sides for the exact score (:func:`_attach_sides`). Three keep a
+self-join of their own that carries a per-id payload through the join
+(SimHash's signature, the n-gram set sizes, the semantic cells'
+vectors), where attaching it afterwards measured slower or ran more
+Spark jobs.
 """
 
 from __future__ import annotations
+
+import hashlib
 
 import pandas as pd
 import numpy as np
@@ -27,25 +40,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .cache import operator_persist
+from .skew import _fanout_if_narrow
 from .text import normalize_text, whitespace_tokens
-
-
-def spread(df: DataFrame) -> DataFrame:
-    """Repartition up to the cluster's default parallelism when the scan
-    produced fewer partitions (single-file / single-row-group inputs leave
-    the whole pipeline on one core otherwise). No-op on well-partitioned
-    inputs — at 100 TB the scan already yields thousands of splits.
-
-    SMALL-INPUT HELPER: the partition-count probe goes through
-    ``df.rdd``, which forces physical planning and a Python RDD wrapper
-    on the driver (~10s of ms). That's free at harness scale and
-    pointless at cluster scale (the condition is false there); don't put
-    it inside per-batch or per-query hot loops.
-    """
-    target = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < target:
-        return df.repartition(target)
-    return df
 
 
 # ---------------------------------------------------------------------------
@@ -100,24 +96,24 @@ def _norm_tokens(col: Column) -> Column:
     return whitespace_tokens(normalize_text(col))
 
 
-def _shingle_hash_set(ts, n: int) -> set:
-    """Distinct word n-gram shingles → signed-64 md5 hashes (process-stable,
-    no PYTHONHASHSEED dependence). Short docs yield one whole-doc shingle —
-    same semantics as :func:`word_shingles`."""
-    import hashlib
+def _md5_i64(g: str) -> int:
+    """The first 8 md5 bytes of ``g``, little-endian, as a signed 64-bit
+    int — process-stable (no PYTHONHASHSEED dependence), and the gram
+    hash the DuckDB oracles replicate."""
+    return int.from_bytes(hashlib.md5(g.encode()).digest()[:8], "little",
+                          signed=True)
 
+
+def _shingle_hash_set(ts, n: int) -> set:
+    """Distinct word n-gram shingles → :func:`_md5_i64` hashes. Short
+    docs yield one whole-doc shingle — same semantics as
+    :func:`word_shingles`."""
     if ts is None or len(ts) == 0:
         return set()
     ts = list(ts)
     if len(ts) < n:
-        grams = {" ".join(ts)}
-    else:
-        grams = {" ".join(ts[i:i + n]) for i in range(len(ts) - n + 1)}
-    out = set()
-    for g in grams:
-        v = int.from_bytes(hashlib.md5(g.encode()).digest()[:8], "little")
-        out.add(v - (1 << 64) if v >= (1 << 63) else v)
-    return out
+        return {_md5_i64(" ".join(ts))}
+    return {_md5_i64(" ".join(ts[i:i + n])) for i in range(len(ts) - n + 1)}
 
 
 def shingle_hash_udf(n: int = 3):
@@ -159,6 +155,14 @@ def _affine_params(num_hashes: int, seed: int = 42):
     return a, b
 
 
+def _min_hashes(hs: list, a, b):
+    """uint64 min-hash signature of one doc's base hashes ``hs`` (a
+    non-empty list of signed 64-bit ints) under the affine family
+    ``(a, b)`` of :func:`minhash_signature_udf`."""
+    h = _mod_m31(np.asarray(hs, dtype=np.int64).astype(np.uint64))
+    return _mod_m31(h[:, None] * a[None, :] + b[None, :]).min(axis=0)
+
+
 def minhash_signature_udf(num_hashes: int = 128, seed: int = 42):
     """array<bigint> shingle hashes → array<bigint> min-hash signature.
 
@@ -181,9 +185,7 @@ def minhash_signature_udf(num_hashes: int = 128, seed: int = 42):
         def one(hs) -> list:
             if hs is None or len(hs) == 0:
                 return empty
-            h = _mod_m31(np.asarray(hs, dtype=np.int64).astype(np.uint64))
-            vals = _mod_m31(h[:, None] * a[None, :] + b[None, :])
-            return vals.min(axis=0).astype(np.int64).tolist()
+            return _min_hashes(hs, a, b).astype(np.int64).tolist()
 
         return hashes.map(one)
 
@@ -196,39 +198,141 @@ def minhash_signature(shingles: Column, num_hashes: int = 128,
     return minhash_signature_udf(num_hashes, seed)(shingle_hashes(shingles))
 
 
-def _band_sig_udf(shingle_size: int, num_hashes: int, bands: int):
-    """tokens → per-band FNV-mixed minhash signature — shingling,
-    hashing, minhash, and banding fused into one Arrow pass. Shared by
-    the self-join candidate generator and the incremental
-    batch-vs-corpus form (identical constants → comparable bands)."""
+def _state_udf(shingle_size: int, num_hashes: int, bands: int):
+    """tokens → struct(bsigs array<long>, hashes array<long>): the
+    banded minhash signature AND the exact-verify shingle-hash set
+    from ONE tokenize/shingle/md5 pass (the md5 of every distinct
+    shingle is exactly the work both need). Band ``j`` FNV-folds
+    min-hashes ``j·r .. j·r+r−1`` (``r = num_hashes // bands``); the
+    constants depend only on the arguments, so band signatures stay
+    comparable across calls — the incremental form joins a batch's
+    bands against stored corpus bands."""
     rows_per_band = num_hashes // bands
     a, b_ = _affine_params(num_hashes)
     fnv_prime = np.uint64(1099511628211)
     fnv_basis = np.uint64(14695981039346656037)
+    schema = T.StructType([
+        T.StructField("bsigs", T.ArrayType(T.LongType())),
+        T.StructField("hashes", T.ArrayType(T.LongType()))])
 
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def band_sigs(toks: pd.Series) -> pd.Series:
+    @F.pandas_udf(schema)
+    def state(toks: pd.Series) -> pd.DataFrame:
         empty_sig = np.zeros(num_hashes, dtype=np.uint64)
 
-        def one(ts) -> list:
-            hs = _shingle_hash_set(ts, shingle_size)
-            if not hs:
-                mins = empty_sig
-            else:
-                h = _mod_m31(np.fromiter(hs, dtype=np.int64,
-                                         count=len(hs)).astype(np.uint64))
-                mins = _mod_m31(h[:, None] * a[None, :]
-                                + b_[None, :]).min(axis=0)
+        def one(ts) -> tuple:
+            hs = list(_shingle_hash_set(ts, shingle_size))
+            mins = _min_hashes(hs, a, b_) if hs else empty_sig
             with np.errstate(over="ignore"):
                 acc = np.full(bands, fnv_basis, dtype=np.uint64)
                 for r in range(rows_per_band):
-                    # band j accumulates mins[j*rpb .. j*rpb+rpb)
                     acc = (acc ^ mins[r::rows_per_band]) * fnv_prime
-            return acc.astype(np.int64).tolist()
+            return acc.astype(np.int64).tolist(), hs
 
-        return toks.map(one)
+        pairs = toks.map(one)
+        return pd.DataFrame({"bsigs": pairs.map(lambda p: p[0]),
+                             "hashes": pairs.map(lambda p: p[1])})
 
-    return band_sigs
+    return state
+
+
+def minhash_fused_state(df: DataFrame, text_col: str = "text",
+                        id_col: str = "doc_id", shingle_size: int = 3,
+                        num_hashes: int = 128,
+                        bands: int = 32) -> DataFrame:
+    """``(id, bsigs, hashes)`` — one fused-UDF row per doc; the
+    persistable unit every multi-consumer caller should cache."""
+    toks = _norm_tokens(F.col(text_col))
+    return df.select(
+        F.col(id_col),
+        _state_udf(shingle_size, num_hashes, bands)(toks).alias("__st")
+    ).select(F.col(id_col), F.col("__st.bsigs").alias("bsigs"),
+             F.col("__st.hashes").alias("hashes"))
+
+
+def _state_bands(st: DataFrame, id_col: str = "doc_id") -> DataFrame:
+    return st.select(F.col(id_col),
+                     F.posexplode("bsigs").alias("band", "bsig"))
+
+
+def _state_hashes(st: DataFrame, id_col: str = "doc_id") -> DataFrame:
+    return st.select(F.col(id_col), "hashes")
+
+
+def _bucket_pairs(index: DataFrame, id_col: str,
+                  keys: list[str]) -> DataFrame:
+    """``(id_a, id_b)`` with ``id_a < id_b``, one row per key value the
+    two ids share in ``index`` (an ``id_col`` column plus the ``keys``
+    columns) — the one candidate-pair former of the near-duplicate
+    family: LSH bands, inverted-index shingles, winnowed fingerprints,
+    hyperplane buckets and k-means cells all reduce to it. Callers take
+    ``.distinct()`` for candidate pairs, or a per-pair count for the
+    number of shared keys. Rows with a NULL key or a NULL id never
+    pair. Every caller's index holds each ``(id, key)`` once; a
+    repeated row pairs once per copy.
+
+    Shape: an equi self-join on the keys — one shuffle of the index on
+    the keys, read by both sides. ``index`` is read twice, so a caller
+    whose index comes out of a Python UDF persists it (Catalyst does
+    not share the two aliased subtrees). Skew exposure: a bucket of b
+    ids does O(b²) work in one task; callers keep b small (LSH
+    parameters, the doc-frequency cap, cell sizing), and a degenerate
+    all-identical corpus is the caller's dedup bug, not a plan
+    regression.
+
+    Candidate ids dedup BEFORE per-id payloads attach
+    (:func:`_attach_sides`): a pair colliding in several buckets would
+    otherwise ship its payload (two embeddings are ~70× the bytes of
+    the id pair) once per collision.
+    """
+    idx = index.select(id_col, *keys)
+    l, r = idx.alias("l"), idx.alias("r")
+    on = F.col(f"l.{id_col}") < F.col(f"r.{id_col}")
+    for k in keys:
+        on = on & (F.col(f"l.{k}") == F.col(f"r.{k}"))
+    return l.join(r, on).select(F.col(f"l.{id_col}").alias("id_a"),
+                                F.col(f"r.{id_col}").alias("id_b"))
+
+
+def _attach_sides(pairs: DataFrame, table: DataFrame, id_col: str,
+                  table_b: DataFrame | None = None) -> DataFrame:
+    """``pairs`` (``id_a``, ``id_b``, ...) with the per-id ``table``
+    joined to both sides: each ``table`` column ``c`` other than
+    ``id_col`` arrives as ``c_a`` and ``c_b``. ``table_b`` (same
+    columns) serves the ``id_b`` side when the sides come from
+    different tables — a new batch against a stored corpus. Inner
+    joins: a pair whose id has no row drops."""
+    cols = [c for c in table.columns if c != id_col]
+    for side, t in (("a", table),
+                    ("b", table if table_b is None else table_b)):
+        pairs = pairs.join(t.select(
+            F.col(id_col).alias(f"id_{side}"),
+            *[F.col(c).alias(f"{c}_{side}") for c in cols]), f"id_{side}")
+    return pairs
+
+
+def _lsh_pairs(st: DataFrame, id_col: str) -> DataFrame:
+    """Distinct candidate pairs of a :func:`minhash_fused_state`: ids
+    whose signatures match in at least one band."""
+    return _bucket_pairs(_state_bands(st, id_col), id_col,
+                         ["band", "bsig"]).distinct()
+
+
+def _verified_pairs(st: DataFrame, id_col: str,
+                    threshold: float) -> DataFrame:
+    """The LSH candidates of the fused state ``st`` whose exact
+    shingle Jaccard is ≥ ``threshold``: ``(id_a, id_b, jaccard)``.
+    ``st`` feeds the bands and both hash-set sides, so callers
+    persist it."""
+    # verify on hashed shingles: array_intersect over longs, not strings
+    # (64-bit collisions are ~N²/2⁶⁴ — immaterial vs the LSH error itself)
+    return (
+        _attach_sides(_lsh_pairs(st, id_col), _state_hashes(st, id_col),
+                      id_col)
+        .withColumn("jaccard", jaccard(F.col("hashes_a"),
+                                       F.col("hashes_b")))
+        .where(F.col("jaccard") >= threshold)
+        .select("id_a", "id_b", "jaccard")
+    )
 
 
 def minhash_lsh_candidates(
@@ -246,34 +350,12 @@ def minhash_lsh_candidates(
     is 1-(1-s^r)^b — with 128/32 the S-curve centers near s≈0.65.
 
     Returns pairs (id_a < id_b). Scale: the explode produces bands×N rows;
-    the groupBy shuffles only (band_idx, 64-bit sig, id) triples.
+    the pair join shuffles only (band_idx, 64-bit sig, id) triples.
     """
-    band_sigs = _band_sig_udf(shingle_size, num_hashes, bands)
-    # persisted (scope-managed, see functions/cache.py): both self-join
-    # sides consume it, and Catalyst does not reuse the exchange across
-    # the aliased subtrees — unpersisted, the fused shingle→minhash
-    # Arrow pass runs twice over the corpus
-    banded = operator_persist(df.select(
-        F.col(id_col),
-        F.posexplode(band_sigs(_norm_tokens(F.col(text_col))))
-         .alias("band", "bsig"),
-    ))
-    left = banded.alias("l")
-    right = banded.alias("r")
-    pairs = (
-        left.join(
-            right,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.bsig") == F.col("r.bsig"))
-            & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")),
-        )
-        .select(
-            F.col(f"l.{id_col}").alias("id_a"),
-            F.col(f"r.{id_col}").alias("id_b"),
-        )
-        .distinct()
-    )
-    return pairs
+    # persisted (scope-managed, see functions/cache.py): both pair
+    # sides read it, and unpersisted the Arrow pass would run per side
+    return _lsh_pairs(operator_persist(minhash_fused_state(
+        df, text_col, id_col, shingle_size, num_hashes, bands)), id_col)
 
 
 def jaccard(a: Column, b: Column) -> Column:
@@ -292,27 +374,13 @@ def minhash_dedup_pairs(
     num_hashes: int = 128,
     bands: int = 32,
 ) -> DataFrame:
-    """LSH candidates verified with exact shingle Jaccard ≥ threshold."""
-    cands = minhash_lsh_candidates(
-        df, text_col, id_col, shingle_size, num_hashes, bands)
-    # verify on hashed shingles: array_intersect over longs, not strings
-    # (64-bit collisions are ~N²/2⁶⁴ — immaterial vs the LSH error itself).
-    # Persisted (scope-managed): attaches to both pair sides (one
-    # shingle pass, not two).
-    sh = operator_persist(df.select(
-        F.col(id_col),
-        shingle_hash_udf(shingle_size)(
-            _norm_tokens(F.col(text_col))).alias("__sh"),
-    ))
-    return (
-        cands.join(sh.withColumnRenamed(id_col, "id_a")
-                     .withColumnRenamed("__sh", "__sh_a"), "id_a")
-             .join(sh.withColumnRenamed(id_col, "id_b")
-                     .withColumnRenamed("__sh", "__sh_b"), "id_b")
-             .withColumn("jaccard", jaccard(F.col("__sh_a"), F.col("__sh_b")))
-             .where(F.col("jaccard") >= threshold)
-             .select("id_a", "id_b", "jaccard")
-    )
+    """LSH candidates verified with exact shingle Jaccard ≥ threshold.
+    Candidates and verify both read one persisted (scope-managed, see
+    functions/cache.py) :func:`minhash_fused_state`, so the text runs
+    through one Arrow pass."""
+    st = operator_persist(minhash_fused_state(
+        df, text_col, id_col, shingle_size, num_hashes, bands))
+    return _verified_pairs(st, id_col, threshold)
 
 
 def minhash_dedup(df: DataFrame, text_col: str = "text",
@@ -403,8 +471,6 @@ def ngram_jaccard_pairs(
         max_doc_freq = _DOC_FREQ_DEFAULT
     # shingles hashed to int64 up front: the inverted-index join shuffles
     # and compares longs, never shingle strings (collision odds ~N²/2⁶⁴).
-    # Sizes ride along the index rows, so the pair counts come out of ONE
-    # self-join + ONE groupBy — no post-join size lookups.
     #
     # The shingled table is PERSISTED (memory-and-disk, LRU-evicted):
     # it feeds six consumers (stop-set freq, both self-join sides, the
@@ -445,6 +511,11 @@ def ngram_jaccard_pairs(
         else:
             # anti-join against the (tiny, AQE-broadcast) stop set
             inv = inv.join(stop, "__s", "left_anti")
+    # Its own self-join rather than _bucket_pairs + _attach_sides: the
+    # sizes ride along the index rows, so the pair counts come out of
+    # ONE self-join + ONE groupBy, where attaching the sizes afterwards
+    # adds two broadcast joins (measured at sf0.01: two more jobs for
+    # q21, and two more build jobs for q34/q68's cluster probe).
     l, r = inv.alias("l"), inv.alias("r")
     inter = (
         l.join(r, F.col("l.__s") == F.col("r.__s"))
@@ -452,8 +523,8 @@ def ngram_jaccard_pairs(
         .groupBy(F.col(f"l.{id_col}").alias("id_a"),
                  F.col(f"r.{id_col}").alias("id_b"))
         .agg(F.count("*").alias("__inter"),
-             F.min("l.__size").alias("__sa"),   # constant per pair
-             F.min("r.__size").alias("__sb"))
+             F.min("l.__size").alias("__size_a"),   # constant per pair
+             F.min("r.__size").alias("__size_b"))
     )
     if max_doc_freq:
         # each doc's KEPT size bounds the stop-shingle overlap in the UB
@@ -461,18 +532,15 @@ def ngram_jaccard_pairs(
         # per doc, id-keyed — Catalyst broadcasts it), never to the
         # exploded index: joining there would shuffle the whole inverted
         # index by id and drag __ksize through the self-join payload.
-        ksize = inv.groupBy(id_col).agg(F.count("*").alias("__ksize"))
-        inter = (
-            inter
-            .join(ksize.select(F.col(id_col).alias("id_a"),
-                               F.col("__ksize").alias("__ka")), "id_a")
-            .join(ksize.select(F.col(id_col).alias("id_b"),
-                               F.col("__ksize").alias("__kb")), "id_b")
-        )
+        inter = _attach_sides(
+            inter, inv.groupBy(id_col).agg(F.count("*").alias("__ksize")),
+            id_col)
+    sa, sb = F.col("__size_a"), F.col("__size_b")
+
     def _score(i):
         if score == "containment":
-            return i / F.least(F.col("__sa"), F.col("__sb"))
-        return i / (F.col("__sa") + F.col("__sb") - i)
+            return i / F.least(sa, sb)
+        return i / (sa + sb - i)
 
     if not max_doc_freq:
         return (
@@ -484,27 +552,19 @@ def ngram_jaccard_pairs(
     # smaller stop-shingle count: UB = (i+m)/(|A|+|B|-i-m) with
     # m = min(stop_a, stop_b). Numerator maximal, denominator minimal →
     # sound upper bound; no candidate above threshold is dropped.
-    stop_min = F.least(F.col("__sa") - F.col("__ka"),
-                       F.col("__sb") - F.col("__kb"))
+    stop_min = F.least(sa - F.col("__ksize_a"), sb - F.col("__ksize_b"))
     if score == "containment":
         # iex <= inter + m and the denominator min(|A|,|B|) is fixed,
         # so (inter+m)/min is a sound upper bound too
-        ub = ((F.col("__inter") + stop_min)
-              / F.least(F.col("__sa"), F.col("__sb")))
+        ub = (F.col("__inter") + stop_min) / F.least(sa, sb)
     else:
         ub = ((F.col("__inter") + stop_min)
-              / (F.col("__sa") + F.col("__sb") - F.col("__inter")
-                 - stop_min))
-    cand = inter.where(ub >= threshold)
+              / (sa + sb - F.col("__inter") - stop_min))
     # Exact re-verify: pull both full shingle sets (candidate volume is
     # ~output-sized after the UB prefilter) and intersect JVM-side.
-    sets_a = sh.select(F.col(id_col).alias("id_a"),
-                       F.col("__sh").alias("__sha"))
-    sets_b = sh.select(F.col(id_col).alias("id_b"),
-                       F.col("__sh").alias("__shb"))
     return (
-        cand.join(sets_a, "id_a").join(sets_b, "id_b")
-        .withColumn("__iex", F.size(F.array_intersect("__sha", "__shb")))
+        _attach_sides(inter.where(ub >= threshold), sh, id_col)
+        .withColumn("__iex", F.size(F.array_intersect("__sh_a", "__sh_b")))
         .withColumn(score, _score(F.col("__iex")))
         .where(F.col(score) >= threshold)
         .select("id_a", "id_b", score)
@@ -579,6 +639,10 @@ def simhash_candidates(df: DataFrame, text_col: str = "text",
             for b in range(4)
         ])).alias("bb"),
     ).select(id_col, "simhash", "bb.band", "bb.bsig"))
+    # its own self-join rather than _bucket_pairs + _attach_sides: the
+    # signature riding through the join measured faster than attaching
+    # it to the pairs afterwards (q23 at sf0.1, local[4]: 1.7-1.8 s
+    # median vs 2.2 s)
     l, r = banded.alias("l"), banded.alias("r")
     pairs = (
         l.join(r, (F.col("l.band") == F.col("r.band"))
@@ -618,11 +682,14 @@ def ngram_jaccard_pairs_prefix(
     quadratically; at low thresholds prefix ≈ full set, so prefer
     :func:`ngram_jaccard_pairs` below t≈0.5.
     """
-    sh = df.select(
+    # persisted (scope-managed): the prefix index (both pair sides)
+    # and both verify sides read it; unpersisted, the shingle UDF ran
+    # once per consumer (6 Python evaluations in the plan)
+    sh = operator_persist(df.select(
         F.col(id_col),
         F.array_sort(shingle_hash_udf(n)(
             _norm_tokens(F.col(text_col)))).alias("__sh"),
-    )
+    ))
     # prefix length ⌊(1−t)·|A|⌋+1 of the hash-sorted set
     pref = sh.select(
         id_col, "__sh",
@@ -632,19 +699,10 @@ def ngram_jaccard_pairs_prefix(
             .cast("int")).alias("__pref"),
     )
     inv = pref.select(id_col, F.explode("__pref").alias("__s"))
-    l, r = inv.alias("l"), inv.alias("r")
-    cands = (
-        l.join(r, F.col("l.__s") == F.col("r.__s"))
-        .where(F.col(f"l.{id_col}") < F.col(f"r.{id_col}"))
-        .select(F.col(f"l.{id_col}").alias("id_a"),
-                F.col(f"r.{id_col}").alias("id_b"))
-        .distinct()
-    )
-    sa = pref.select(F.col(id_col).alias("id_a"), F.col("__sh").alias("__sha"))
-    sb = pref.select(F.col(id_col).alias("id_b"), F.col("__sh").alias("__shb"))
+    cands = _bucket_pairs(inv, id_col, ["__s"]).distinct()
     return (
-        cands.join(sa, "id_a").join(sb, "id_b")
-        .withColumn("jaccard", jaccard(F.col("__sha"), F.col("__shb")))
+        _attach_sides(cands, pref.select(id_col, "__sh"), id_col)
+        .withColumn("jaccard", jaccard(F.col("__sh_a"), F.col("__sh_b")))
         .where(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
     )
@@ -867,11 +925,6 @@ def winnow_hash_udf(k: int = 8, w: int = 4):
     k-gram hashes, keep the min of every w-window. Guarantee: any shared
     token run of length ≥ k + w − 1 produces at least one shared
     fingerprint; fingerprint density ≈ 2/(w+1) of the k-grams."""
-    import hashlib
-
-    def h64(g: str) -> int:
-        v = int.from_bytes(hashlib.md5(g.encode()).digest()[:8], "little")
-        return v - (1 << 64) if v >= (1 << 63) else v
 
     @F.pandas_udf(T.ArrayType(T.LongType()))
     def f(toks: pd.Series) -> pd.Series:
@@ -880,8 +933,8 @@ def winnow_hash_udf(k: int = 8, w: int = 4):
                 return []
             ts = list(ts)
             if len(ts) < k:
-                return [h64(" ".join(ts))]
-            hs = [h64(" ".join(ts[i:i + k]))
+                return [_md5_i64(" ".join(ts))]
+            hs = [_md5_i64(" ".join(ts[i:i + k]))
                   for i in range(len(ts) - k + 1)]
             if len(hs) <= w:
                 return [min(hs)]
@@ -900,21 +953,17 @@ def winnow_candidates(df: DataFrame, text_col: str = "text",
                       w: int = 4) -> DataFrame:
     """Candidate near-dup pairs sharing ≥1 winnowed fingerprint — the
     substring-overlap detector (catches long verbatim spans that word-set
-    Jaccard dilutes away). Same inverted-index join shape as the n-gram
+    Jaccard dilutes away). Same inverted-index pair shape as the n-gram
     path; index volume is only ~2/(w+1) of the k-gram count."""
     # persisted (scope-managed): the winnowing UDF would otherwise run
-    # once per self-join side (no cross-subtree exchange reuse)
+    # once per pair side (no cross-subtree exchange reuse)
     fp = operator_persist(df.select(
         F.col(id_col),
         F.explode(winnow_hash_udf(k, w)(
             _norm_tokens(F.col(text_col)))).alias("__fp"),
     ))
-    l, r = fp.alias("l"), fp.alias("r")
     return (
-        l.join(r, F.col("l.__fp") == F.col("r.__fp"))
-        .where(F.col(f"l.{id_col}") < F.col(f"r.{id_col}"))
-        .groupBy(F.col(f"l.{id_col}").alias("id_a"),
-                 F.col(f"r.{id_col}").alias("id_b"))
+        _bucket_pairs(fp, id_col, ["__fp"]).groupBy("id_a", "id_b")
         .agg(F.count("*").alias("shared_fingerprints"))
     )
 
@@ -991,51 +1040,6 @@ def decontaminate(
     return clean, flagged
 
 
-def _state_udf(shingle_size: int, num_hashes: int, bands: int):
-    """tokens → struct(bsigs array<long>, hashes array<long>): the
-    banded minhash signature AND the exact-verify shingle-hash set
-    from ONE tokenize/shingle/md5 pass. The per-micro-batch hot path
-    of :func:`minhash_incremental` previously ran
-    :func:`_band_sig_udf` and :func:`shingle_hash_udf` as separate
-    Arrow passes, each re-shingling and re-hashing the same text —
-    this fuses them (the md5 of every distinct shingle is exactly the
-    work both need). Constants and banding are bit-identical to
-    :func:`_band_sig_udf` (same ``_affine_params``/FNV fold), so
-    signatures remain comparable with self-join candidates."""
-    rows_per_band = num_hashes // bands
-    a, b_ = _affine_params(num_hashes)
-    fnv_prime = np.uint64(1099511628211)
-    fnv_basis = np.uint64(14695981039346656037)
-    schema = T.StructType([
-        T.StructField("bsigs", T.ArrayType(T.LongType())),
-        T.StructField("hashes", T.ArrayType(T.LongType()))])
-
-    @F.pandas_udf(schema)
-    def state(toks: pd.Series) -> pd.DataFrame:
-        empty_sig = np.zeros(num_hashes, dtype=np.uint64)
-
-        def one(ts) -> tuple:
-            hs = _shingle_hash_set(ts, shingle_size)
-            if not hs:
-                mins = empty_sig
-            else:
-                h = _mod_m31(np.fromiter(hs, dtype=np.int64,
-                                         count=len(hs)).astype(np.uint64))
-                mins = _mod_m31(h[:, None] * a[None, :]
-                                + b_[None, :]).min(axis=0)
-            with np.errstate(over="ignore"):
-                acc = np.full(bands, fnv_basis, dtype=np.uint64)
-                for r in range(rows_per_band):
-                    acc = (acc ^ mins[r::rows_per_band]) * fnv_prime
-            return acc.astype(np.int64).tolist(), list(hs)
-
-        pairs = toks.map(one)
-        return pd.DataFrame({"bsigs": pairs.map(lambda p: p[0]),
-                             "hashes": pairs.map(lambda p: p[1])})
-
-    return state
-
-
 def minhash_state(
     df: DataFrame,
     text_col: str = "text",
@@ -1055,29 +1059,6 @@ def minhash_state(
     st = minhash_fused_state(df, text_col, id_col, shingle_size,
                              num_hashes, bands)
     return _state_bands(st, id_col), _state_hashes(st, id_col)
-
-
-def minhash_fused_state(df: DataFrame, text_col: str = "text",
-                        id_col: str = "doc_id", shingle_size: int = 3,
-                        num_hashes: int = 128,
-                        bands: int = 32) -> DataFrame:
-    """``(id, bsigs, hashes)`` — one fused-UDF row per doc; the
-    persistable unit every multi-consumer caller should cache."""
-    toks = _norm_tokens(F.col(text_col))
-    return df.select(
-        F.col(id_col),
-        _state_udf(shingle_size, num_hashes, bands)(toks).alias("__st")
-    ).select(F.col(id_col), F.col("__st.bsigs").alias("bsigs"),
-             F.col("__st.hashes").alias("hashes"))
-
-
-def _state_bands(st: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    return st.select(F.col(id_col),
-                     F.posexplode("bsigs").alias("band", "bsig"))
-
-
-def _state_hashes(st: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    return st.select(F.col(id_col), "hashes")
 
 
 def minhash_incremental(
@@ -1116,27 +1097,24 @@ def minhash_incremental_parts(
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Near-dup dedup of a NEW batch against an existing corpus
     represented only by its :func:`minhash_state` — the continuous-
-    ingestion form of :func:`minhash_dedup_pairs` (which self-joins one
-    table). Returns ``(novel_docs, updated_bands, updated_hashes)``.
+    ingestion form of :func:`minhash_dedup_pairs` (which pairs one
+    table with itself). Returns ``(novel_docs, updated_bands,
+    updated_hashes)``.
 
     Scale shape: the batch's band signatures equi-join the corpus band
     table on ``(band, bsig)`` — candidate volume is collision-bounded
-    exactly like the self-join case, and the batch side is typically
+    exactly like the one-table case, and the batch side is typically
     tiny relative to corpus state, so AQE broadcasts it. Candidates are
     then verified with exact Jaccard over the stored shingle-hash sets
     (no false positives); only verified near-dups are dropped. Within-
-    batch near-dups are removed first with the same constants, so the
-    returned state stays internally dedup'd.
+    batch near-dups are removed first by :func:`minhash_dedup_pairs`'
+    own body with the same constants, so the returned state stays
+    internally dedup'd.
 
-    Per-batch cost (the q67 streaming hot path, reworked r11): the
-    batch text runs through ONE fused shingle/minhash Arrow pass
-    (:func:`_state_udf`), persisted — within-batch dedup, the corpus
-    joins, and the returned state increments all reuse it by id,
-    where the previous shape re-shingled the batch in 5-6 separate
-    UDF passes (minhash_dedup's candidates + verify, then
-    minhash_state twice). Output is UNCHANGED: identical constants →
-    identical candidate pairs, verdicts, and survivors (q67's
-    hash-verified oracle is the regression proof). Returns ``(novel,
+    Per-batch cost (the q67 streaming hot path): the batch text runs
+    through ONE fused shingle/minhash Arrow pass (:func:`_state_udf`),
+    persisted — within-batch dedup, the corpus joins, and the returned
+    state increments all reuse it by id. Returns ``(novel,
     novel_bands, novel_hashes)`` — the state INCREMENTS, so a
     streaming sink can checkpoint O(increment) per batch and keep the
     corpus union lazy (re-materializing the whole corpus every
@@ -1146,64 +1124,40 @@ def minhash_incremental_parts(
     """
     st = operator_persist(minhash_fused_state(
         new_docs, text_col, id_col, shingle_size, num_hashes, bands))
-    b_bands_all = _state_bands(st, id_col)
-    b_hashes_all = _state_hashes(st, id_col)
+    b_hashes = _state_hashes(st, id_col)
 
     # within-batch greedy dedup (minhash_dedup semantics: every doc
-    # matching a lower-id doc goes), over the precomputed state
-    lb, rb = b_bands_all.alias("l"), b_bands_all.alias("r")
-    in_pairs = (
-        lb.join(rb, (F.col("l.band") == F.col("r.band"))
-                & (F.col("l.bsig") == F.col("r.bsig"))
-                & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")))
-        .select(F.col(f"l.{id_col}").alias("id_a"),
-                F.col(f"r.{id_col}").alias("id_b"))
-        .distinct()
-    )
-    losers = (
-        in_pairs.join(b_hashes_all.withColumnRenamed(id_col, "id_a")
-                      .withColumnRenamed("hashes", "__ha"), "id_a")
-        .join(b_hashes_all.withColumnRenamed(id_col, "id_b")
-              .withColumnRenamed("hashes", "__hb"), "id_b")
-        .where(jaccard(F.col("__ha"), F.col("__hb"))
-               >= F.lit(threshold))
-        .select(F.col("id_b").alias(id_col)).distinct()
-    )
+    # matching a lower-id doc goes)
+    losers = (_verified_pairs(st, id_col, threshold)
+              .select(F.col("id_b").alias(id_col)).distinct())
     batch = new_docs.join(losers, id_col, "left_anti")
-    b_bands = b_bands_all.join(losers, id_col, "left_anti")
+    b_bands = _state_bands(st, id_col).join(losers, id_col, "left_anti")
 
     cand = (
-        b_bands.join(corpus_bands.withColumnRenamed(id_col, "__cid"),
+        b_bands.join(corpus_bands.withColumnRenamed(id_col, "id_b"),
                      ["band", "bsig"])
-        .select(id_col, "__cid").distinct()
+        .select(F.col(id_col).alias("id_a"), "id_b").distinct()
     )
     verified = (
-        cand.join(b_hashes_all, id_col)
-        .join(corpus_hashes.select(F.col(id_col).alias("__cid"),
-                                   F.col("hashes").alias("__chashes")),
-              "__cid")
-        .where(jaccard(F.col("hashes"), F.col("__chashes"))
+        _attach_sides(cand, b_hashes, id_col,
+                      corpus_hashes.select(id_col, "hashes"))
+        .where(jaccard(F.col("hashes_a"), F.col("hashes_b"))
                >= F.lit(threshold))
-        .select(id_col).distinct()
+        .select(F.col("id_a").alias(id_col)).distinct()
     )
     novel = batch.join(verified, id_col, "left_anti")
     novel_ids = novel.select(id_col)
     novel_bands = b_bands.join(novel_ids, id_col, "left_semi")
-    novel_hashes = b_hashes_all.join(novel_ids, id_col, "left_semi")
+    novel_hashes = b_hashes.join(novel_ids, id_col, "left_semi")
     return novel, novel_bands, novel_hashes
 
 
 def positional_ngram_hash_udf(w: int = 8):
     """tokens → array of POSITIONAL token-``w``-gram hashes (index i =
-    gram starting at token i; docs shorter than ``w`` yield []) — md5
-    little-endian-first-8 family so oracles replicate it. Unlike
+    gram starting at token i; docs shorter than ``w`` yield []) —
+    :func:`_md5_i64` hashes so oracles replicate them. Unlike
     :func:`shingle_hash_udf` the output is not a set: span excision
     needs every occurrence at its position."""
-    import hashlib
-
-    def h64(g: str) -> int:
-        v = int.from_bytes(hashlib.md5(g.encode()).digest()[:8], "little")
-        return v - (1 << 64) if v >= (1 << 63) else v
 
     @F.pandas_udf(T.ArrayType(T.LongType()))
     def f(toks: pd.Series) -> pd.Series:
@@ -1211,7 +1165,7 @@ def positional_ngram_hash_udf(w: int = 8):
             if ts is None or len(ts) < w:
                 return []
             ts = list(ts)
-            return [h64(" ".join(ts[i:i + w]))
+            return [_md5_i64(" ".join(ts[i:i + w]))
                     for i in range(len(ts) - w + 1)]
 
         return toks.map(one)
@@ -1249,18 +1203,11 @@ def excise_duplicate_spans(
     """
     # Parallelism guard: a small input file scans as ONE partition
     # (sf0.1 documents = 594 KB < maxPartitionBytes), which serializes
-    # the Arrow gram-hash UDF — the dominant cost — onto one core.
-    # Repartition up ONLY when the scan is narrower than half the
-    # cluster's default parallelism (a few-hundred-KB text shuffle);
-    # at production scale the scan already has >> cores partitions and
+    # the Arrow gram-hash UDF — the dominant cost — onto one core. At
+    # production scale the scan already has >> cores partitions and
     # this is a no-op. The exchange is reused across both consumers
     # (gram pass + reassembly join) by Catalyst's ReuseExchange.
-    try:
-        target = df.sparkSession.sparkContext.defaultParallelism
-        if df.rdd.getNumPartitions() * 2 < target:
-            df = df.repartition(target)
-    except Exception:
-        pass
+    df = _fanout_if_narrow(df, id_col)
     # toks_df is consumed twice (gram pass + reassembly join) but NOT
     # persisted: caching the full token arrays measured SLOWER than
     # re-running the JVM tokenize chain (2.35 s vs 3.92 s at sf0.1) —

@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .cache import operator_persist
+from .dedup import _attach_sides, _bucket_pairs
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -45,6 +46,19 @@ def cosine(a: Column, b: Column) -> Column:
     b = b.cast("array<double>")
     denom = l2_norm(a) * l2_norm(b)
     return F.when(denom > 0, dot(a, b) / denom).otherwise(F.lit(0.0))
+
+
+def _pair_cosine() -> Column:
+    """Cosine of the ``__v_a``/``__v_b`` vectors of a pair frame whose
+    per-id ``(__v, __n = l2_norm(__v))`` table was attached to both
+    sides (:func:`~.dedup._attach_sides`); 0 when either norm is 0.
+    The dot stays a HOF fold: an unrolled 64-term GetArrayItem chain
+    measured 3x slower on the embedding near-dup path (9.5 s vs 3.5 s
+    end-to-end at sf0.1) — the deep Add tree defeats codegen where the
+    HOF's tight interpreted loop at least stays cache-resident."""
+    na, nb = F.col("__n_a"), F.col("__n_b")
+    return F.when(na * nb > 0, dot(F.col("__v_a"), F.col("__v_b"))
+                  / (na * nb)).otherwise(F.lit(0.0))
 
 
 def _normalized_matrix(rows: list, dtype=np.float64) -> tuple[np.ndarray, np.ndarray]:
@@ -297,9 +311,10 @@ def embedding_near_dup_pairs(
 ) -> DataFrame:
     """Pairs (id_a < id_b) with cosine ≥ threshold.
 
-    Multi-table LSH self-join by default (scale path — near-identical
-    vectors collide in at least one table w.h.p.); ``use_lsh=False`` gives
-    the exact all-pairs GEMM path for small tables / oracle checks.
+    Multi-table LSH candidate pairs by default (scale path —
+    near-identical vectors collide in at least one table w.h.p.);
+    ``use_lsh=False`` gives the exact all-pairs GEMM path for small
+    tables / oracle checks.
 
     When ``num_planes``/``num_tables`` are omitted they are derived via
     :func:`derive_lsh_params` — plane count from the corpus size (one
@@ -322,75 +337,20 @@ def embedding_near_dup_pairs(
                                      target_recall, target_bucket_rows)
             num_planes = num_planes if num_planes is not None else k
             num_tables = num_tables if num_tables is not None else L
-        banded = state if state is not None else embedding_lsh_state(
-            base, id_col, "__v", dim, num_planes, num_tables, seed)
-        # Fused candidate generation: ONE shuffle keyed on (tbl, bkt)
-        # collects each bucket's id list and expands in-bucket pairs as
-        # a JVM array expression — replaces the banded self-join, whose
-        # two sorted sides cost an extra shuffle round and which
-        # Catalyst cannot share. Skew exposure: a bucket of b ids does
-        # O(b²) work in one task — the same candidate volume the
-        # self-join emits for that bucket, and the derivation above
-        # keeps E[b] ≈ 1; a degenerate all-identical corpus is the
-        # caller's dedup bug, not a plan regression.
-        # Candidate ids dedup BEFORE vectors attach: a pair colliding
-        # in several tables would otherwise ship its two dim-double
-        # vectors once per collision (~70× the bytes of the id pair).
-        buckets = (
-            banded.groupBy("tbl", "bkt")
-            .agg(F.array_sort(F.collect_list(id_col)).alias("__ids"))
-            .where(F.size("__ids") >= 2)
-        )
-        # AQE coalesces the bucket table by BYTES — a few thousand
-        # (tbl, bkt, ids) rows collapse to one partition — but the
-        # pair expansion below does O(|ids|²) interpreted work per
-        # row, so byte-based coalescing strands the whole expansion
-        # on one core (measured ~0.6-3 s off at sf0.1 with the
-        # explicit spread; guide §2.5 — partition by expansion work,
-        # not bytes). Keyed on xxhash64(tbl, bkt) rather than
-        # (tbl, bkt): a same-key repartition is elided as redundant
-        # against the aggregation exchange it sits on (verified in
-        # the q26 plan), which would hand AQE the coalesce back.
-        # Deterministic hash, retry-safe; candidate sets are
-        # partition-placement-invariant.
-        buckets = buckets.repartition(
-            banded.sparkSession.sparkContext.defaultParallelism,
-            F.xxhash64("tbl", "bkt"))
-        cand = (
-            buckets.select(F.explode(F.flatten(F.transform(
-                F.col("__ids"),
-                lambda x, i: F.transform(
-                    F.slice(F.col("__ids"), i + F.lit(2),
-                            F.size(F.col("__ids"))),
-                    lambda y: F.struct(x.alias("id_a"), y.alias("id_b")),
-                )))).alias("__p"))
-            .select("__p.id_a", "__p.id_b")
-            .dropDuplicates(["id_a", "id_b"])
-        )
+        # persisted: both pair sides read the banded table, and the
+        # hyperplane UDF would otherwise run once per side
+        banded = operator_persist(
+            state if state is not None else embedding_lsh_state(
+                base, id_col, "__v", dim, num_planes, num_tables, seed))
+        cand = _bucket_pairs(banded, id_col, ["tbl", "bkt"]).distinct()
         # exact verify: norms precomputed ONCE per vector (4000 rows),
         # not once per candidate side — the per-pair expression is a
         # single dot aggregate instead of three
         nv = base.select(
             F.col(id_col), F.col("__v"), l2_norm(F.col("__v")).alias("__n"))
-        va = nv.select(F.col(id_col).alias("id_a"),
-                       F.col("__v").alias("__va"),
-                       F.col("__n").alias("__na"))
-        vb = nv.select(F.col(id_col).alias("id_b"),
-                       F.col("__v").alias("__vb"),
-                       F.col("__n").alias("__nb"))
         return (
-            cand.join(va, "id_a").join(vb, "id_b")
-            .withColumn(
-                "cosine",
-                # kept as the HOF fold: an unrolled 64-term
-                # GetArrayItem chain MEASURED 3x slower here (9.5 s
-                # vs 3.5 s end-to-end at sf0.1) — the deep Add tree
-                # defeats codegen where the HOF's tight interpreted
-                # loop at least stays cache-resident. Ledger r15.
-                F.when(F.col("__na") * F.col("__nb") > 0,
-                       dot(F.col("__va"), F.col("__vb"))
-                       / (F.col("__na") * F.col("__nb")))
-                .otherwise(F.lit(0.0)))
+            _attach_sides(cand, nv, id_col)
+            .withColumn("cosine", _pair_cosine())
             .where(F.col("cosine") >= threshold)
             .select("id_a", "id_b", "cosine")
         )
@@ -469,19 +429,19 @@ def embedding_near_dup_incremental(
     b_state = operator_persist(embedding_lsh_state(
         batch, id_col, vec_col, dim, num_planes, num_tables, seed))
     cand = (
-        b_state.join(corpus_state.withColumnRenamed(id_col, "__cid"),
+        b_state.join(corpus_state.withColumnRenamed(id_col, "id_b"),
                      ["tbl", "bkt"])
-        .select(id_col, "__cid").distinct()
+        .select(F.col(id_col).alias("id_a"), "id_b").distinct()
     )
+
+    def vecs(t):
+        return t.select(F.col(id_col),
+                        F.col(vec_col).cast("array<double>").alias("__v"))
+
     verified = (
-        cand.join(batch.select(
-            F.col(id_col),
-            F.col(vec_col).cast("array<double>").alias("__bv")), id_col)
-        .join(corpus_vecs.select(
-            F.col(id_col).alias("__cid"),
-            F.col(vec_col).cast("array<double>").alias("__cv")), "__cid")
-        .where(cosine(F.col("__bv"), F.col("__cv")) >= F.lit(threshold))
-        .select(id_col).distinct()
+        _attach_sides(cand, vecs(batch), id_col, vecs(corpus_vecs))
+        .where(cosine(F.col("__v_a"), F.col("__v_b")) >= F.lit(threshold))
+        .select(F.col("id_a").alias(id_col)).distinct()
     )
     novel = batch.join(verified, id_col, "left_anti")
     novel_state = embedding_lsh_state(
@@ -742,23 +702,22 @@ def semantic_dedup_pairs(
         F.col(id_col), F.col("__v"),
         l2_norm(F.col("__v")).alias("__n"),
         cell_of(F.col("__v")).alias("__cell")))
+    # Its own cell join rather than _bucket_pairs + _attach_sides: the
+    # vectors ride through the join, where attaching them to the pairs
+    # afterwards adds broadcast joins (measured at sf0.01: four more
+    # jobs for q65, four more build jobs for q66's cluster probe).
     l = binned.select(F.col("__cell"),
                       F.col(id_col).alias("id_a"),
-                      F.col("__v").alias("__va"),
-                      F.col("__n").alias("__na"))
+                      F.col("__v").alias("__v_a"),
+                      F.col("__n").alias("__n_a"))
     r = binned.select(F.col("__cell"),
                       F.col(id_col).alias("id_b"),
-                      F.col("__v").alias("__vb"),
-                      F.col("__n").alias("__nb"))
+                      F.col("__v").alias("__v_b"),
+                      F.col("__n").alias("__n_b"))
     return (
         l.join(r, "__cell")
         .where(F.col("id_a") < F.col("id_b"))
-        .withColumn(
-            "cosine",
-            F.when(F.col("__na") * F.col("__nb") > 0,
-                   dot(F.col("__va"), F.col("__vb"))
-                   / (F.col("__na") * F.col("__nb")))
-            .otherwise(F.lit(0.0)))
+        .withColumn("cosine", _pair_cosine())
         .where(F.col("cosine") >= threshold)
         .select("id_a", "id_b", "cosine")
     )

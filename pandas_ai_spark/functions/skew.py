@@ -117,3 +117,29 @@ def key_skew_report(df: DataFrame, key_col: str,
         .alias(f"top{int(top_n)}_share"),
         "p50_count", "p99_count",
         (F.col("p99_count") / F.col("p50_count")).alias("skew_ratio"))
+
+
+def _fanout_if_narrow(df: DataFrame, *key_cols: str) -> DataFrame:
+    """Hash-repartition to ``defaultParallelism`` when the plan would
+    scan fewer partitions than cores — single-row-group parquet at toy
+    scale strands every map-side expression on one task (input skew:
+    the Poisson bootstrap, span excision and the bucketed rank/ECDF
+    paths). Deterministic key hash: retry-safe, no round-robin
+    pre-sort, and every caller computes placement-independent exact
+    results, so they are unchanged. At real scale input splits >=
+    cores and this is a no-op.
+
+    Decided from the physical plan, without an action: an input that
+    an exchange feeds is left as it is, since reading its partition
+    count would run that exchange under adaptive execution (a shuffle
+    has spread it already; a narrow scan broadcast-joined to a small
+    table stays narrow — the price of a lazy build). Only an
+    exchange-free plan has its partition count read, which a file
+    scan answers from its file listing."""
+    sc = df.sparkSession.sparkContext
+    n = sc.defaultParallelism
+    if "Exchange" in df._jdf.queryExecution().executedPlan().toString():
+        return df
+    if df.rdd.getNumPartitions() < n:
+        return df.repartition(n, *[F.col(c) for c in key_cols])
+    return df

@@ -38,6 +38,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .skew import _fanout_if_narrow
+
 
 # Above this Catalyst-estimated input size, exact percentile /
 # multi-distinct aggregation state (bounded by distinct values, not
@@ -1406,33 +1408,6 @@ def _slog_minmax(v, i: int):
     return [F.min(s).alias(f"__mn_{i}"), F.max(s).alias(f"__mx_{i}")]
 
 
-def _fanout_if_narrow(df: DataFrame, *key_cols: str) -> DataFrame:
-    """Hash-repartition to ``defaultParallelism`` when the plan would
-    scan fewer partitions than cores — single-row-group parquet at toy
-    scale strands every map-side expression on one task (guide §2.5
-    "input skew"; the q170 bootstrap device, shared by the bucketed
-    rank/ECDF paths). Deterministic key hash: retry-safe, no
-    round-robin pre-sort, and every caller computes
-    placement-independent exact aggregates/ranks so results are
-    unchanged. At real scale input splits >= cores and this is a
-    no-op.
-
-    Decided from the physical plan, without an action: an input that
-    an exchange feeds is left as it is, since reading its partition
-    count would run that exchange under adaptive execution (a shuffle
-    has spread it already; a narrow scan broadcast-joined to a small
-    table stays narrow — the price of a lazy build). Only an
-    exchange-free plan has its partition count read, which a file
-    scan answers from its file listing."""
-    sc = df.sparkSession.sparkContext
-    n = sc.defaultParallelism
-    if "Exchange" in df._jdf.queryExecution().executedPlan().toString():
-        return df
-    if df.rdd.getNumPartitions() < n:
-        return df.repartition(n, *[F.col(c) for c in key_cols])
-    return df
-
-
 def _prefix(col: str, wb):
     """Exclusive prefix sum of ``col`` over the bucket-ordered window
     ``wb`` — 0 for a group's first bucket."""
@@ -1842,9 +1817,7 @@ def poisson_bootstrap_ci(df: DataFrame, value_col: str, id_col: str,
     # first (measured 66 s -> 9 s at sf0.1 on local[32]; at real
     # scale the input split count already exceeds cores and this
     # never fires)
-    sc = df.sparkSession.sparkContext
-    if df.rdd.getNumPartitions() < sc.defaultParallelism:
-        df = df.repartition(sc.defaultParallelism)
+    df = _fanout_if_narrow(df, id_col)
     # hex windows computed ONCE into an exploded (b, hex) stream: the
     # inverse CDF then runs on the SCALAR hex column, so every codegen
     # stage stays small. (Building all B weight expressions inline —

@@ -6,7 +6,8 @@ setJobDescription (guide §1.5).
 ``--counts`` makes the tool a same-work check: each query is built in
 one job group and collected in another, and the job and stage counts of
 each phase (``perfbench/counters.py``'s ``SparkCounters``) are printed
-as one ``COUNTS`` line. The physical operator tree of the built plan,
+as one ``COUNTS`` line, with ``py_evals``, the number of distinct
+Python-UDF evaluations in the built plan (:func:`py_evals`). The physical operator tree of the built plan,
 with expression and plan ids stripped, is written beside the formatted
 plan as ``<query>_<tag>.tree.txt`` so two checkouts' trees diff
 cleanly.
@@ -31,6 +32,40 @@ def operator_tree(df) -> str:
     """The pre-execution physical plan's tree with ids stripped."""
     plan = df._jdf.queryExecution().executedPlan().treeString()
     return _IDS.sub("", plan)
+
+
+_PY_EVALS = ("ArrowEvalPython", "BatchEvalPython")
+
+
+def _seq(s) -> list:
+    return [s.apply(i) for i in range(s.size())]
+
+
+def py_evals(df) -> int:
+    """Distinct ``ArrowEvalPython``/``BatchEvalPython`` subtrees of the
+    pre-execution physical plan. A cached relation's subtree counts
+    once however many scans read it (the Python work runs once), as
+    does a reused exchange; the walk descends into adaptive plans,
+    their query stages, cached relations and subqueries."""
+    seen: set[str] = set()
+
+    def walk(node) -> None:
+        name = node.nodeName()
+        if name in _PY_EVALS:
+            seen.add(node.treeString())
+        if name == "AdaptiveSparkPlan":
+            kids = [node.executedPlan()]
+        elif name == "InMemoryTableScan":
+            kids = [node.relation().cachedPlan()]
+        elif name.endswith("QueryStage"):  # a materialized stage
+            kids = [node.plan()]
+        else:
+            kids = _seq(node.children())
+        for k in kids + _seq(node.subqueries()):
+            walk(k)
+
+    walk(df._jdf.queryExecution().executedPlan())
+    return len(seen)
 
 
 def counted(spark, counters, group: str, action):
@@ -94,13 +129,14 @@ def main() -> int:
             with open(os.path.join(outdir, f"{name}_{args.tag}.tree.txt"),
                       "w") as f:
                 f.write(operator_tree(df))
+            evals = py_evals(df)
             spark.sparkContext.setJobDescription(f"{name}: collect")
             rows, coll = counted(spark, counters, f"{name}:collect",
                                  df.collect)
             print(f"COUNTS {name} rows={len(rows)} "
                   f"build_jobs={build[0]} build_stages={build[1]} "
-                  f"collect_jobs={coll[0]} collect_stages={coll[1]}",
-                  flush=True)
+                  f"collect_jobs={coll[0]} collect_stages={coll[1]} "
+                  f"py_evals={evals}", flush=True)
         release_operator_caches()
         if not args.no_noop:
             best = float("inf")
