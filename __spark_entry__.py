@@ -20,6 +20,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pandas_ai_spark.functions.skew import _fanout_if_narrow
 from pandas_ai_spark.plans.compiler import ResolverContext, SchemaCompiler
 from pandas_ai_spark.schema import SemanticLayerSchema
 from pandas_ai_spark.sql import SQLExecutor
@@ -44,34 +45,32 @@ import weakref
 _T_MEMO: "weakref.WeakKeyDictionary[SparkSession, dict]" = \
     weakref.WeakKeyDictionary()
 
-# Narrow-scan fan-out (guide §2.5 "input skew: one huge unsplittable
-# file"): the testdata parquet files are written as ONE row group, so
-# a scan yields 1 split no matter the conf and every map-side
-# expression (md5 uniforms, tokenize+explode, percentile partials,
-# pandas_udf signatures) runs on one of 32 cores — while DuckDB
-# parallelizes within a row group natively. When the scan has fewer
-# splits than cores, fan the heavy-map tables out with ONE
-# deterministic hash repartition on the table's key (retry-safe, no
-# round-robin pre-sort; key cardinality >> partitions so the spread is
-# even — guide §2.5). At real scale (splits >= cores) this never fires
-# — the q170 device, table-level. `embeddings` is deliberately NOT
-# fanned out: the sample-based ANN/kmeans trainers (q24/q26/q35/q66/
-# q83...) collect a file-order sample whose row order pins trained
-# codebooks shared with the oracles.
-# Only the tables whose per-row map work is heavy enough to repay the
-# exchange: measured at sf0.1, fanning `events`/`customer`/`part` out
-# REGRESSED ~15 cheap-aggregation queries by ~0.5-1.0 s each (the
-# extra stage + shuffle of the whole table outweighs trivial map
-# work), while lineitem (600k rows feeding md5/percentile/explode
-# work), orders (150k, permutation/bootstrap grids) and documents
-# (text: tokenize/shingle/minhash/demux per row) each repay it many
-# times over. Operators with heavy map work over OTHER inputs carry
-# the same guard internally (stats._fanout_if_narrow, q170's device).
-_FANOUT_KEYS = {
-    "lineitem": "l_orderkey",
-    "orders": "o_orderkey",
-    "documents": "doc_id",
-}
+# Narrow-scan fan-out, table level: only `documents`. The testdata
+# parquet files are written as ONE row group, so a scan yields 1 split
+# whatever the conf, and every map-side expression over it runs as one
+# task. A hash repartition on the key spreads it, but the exchange's
+# map side is itself one task that reads and serializes every row:
+# more work than a partial aggregate on that same task, on any number
+# of cores. So the fan-out pays only where the per-row map work after
+# it is heavy, which is a property of the operator, not of the table.
+# Measured at sf0.1 on local[4] (4 cores):
+# - `lineitem` and `orders` are read as scanned. Fanned out, every
+#   cheap aggregation paid a single-task shuffle of the whole table
+#   (q01/q05/q40 collect 0.59/0.22/0.26 s fanned out, 0.34/0.16/0.22 s
+#   as scanned). The operators whose map work repays a shuffle carry
+#   the guard themselves: `skew._fanout_if_narrow`'s docstring lists
+#   them. Queries whose own joins, distincts or SQL leaned on the
+#   table-level hash partitioning (q09, q138, q155) shuffle from one
+#   task now.
+# - `documents` keeps the table-level fan-out: text operators tokenize,
+#   shingle, hash or demux every row, and without it q86 went from
+#   0.9-1.1 s to 1.4 s and q20 from 1.1 s to 1.4 s.
+# - `events`, `customer` and `part` were never fanned out (cheap map
+#   work), nor `embeddings`: the sample-based ANN/kmeans trainers
+#   (q24/q26/q35/q66/q83...) collect a file-order sample whose row
+#   order pins codebooks shared with the oracles.
+# At real scale splits >= cores and the guard never fires.
+_FANOUT_KEYS = {"documents": "doc_id"}
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -80,18 +79,15 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     df = per_session.get(key)
     if df is None:
         df = _t_load(spark, sf_dir, name)
-        fk = _FANOUT_KEYS.get(name)
-        if fk is not None:
-            n = spark.sparkContext.defaultParallelism
-            if df.rdd.getNumPartitions() < n:
-                df = df.repartition(n, F.col(fk))
+        if name in _FANOUT_KEYS:
+            df = _fanout_if_narrow(df, _FANOUT_KEYS[name])
         per_session[key] = df
     return df
 
 
 def _t_raw(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """The un-fanned scan, for the TWO queries whose oracle is a
-    pinned snapshot of a partition-layout-seeded RNG (q46/q57
+    """The un-fanned ``documents`` scan, for the TWO queries whose
+    oracle is a pinned snapshot of a partition-layout-seeded RNG (q46/q57
     sampleBy): Bernoulli sampling draws a per-partition seeded stream,
     so the fan-out repartition would change the sampled set and break
     the snapshot. Every hash/content-deterministic query uses
@@ -704,10 +700,11 @@ def q29_stream_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream, "ts", "1 hour",
         {"n": F.count("*"), "total_value": F.round(F.sum("value"), 2)},
         keys=["event_type"], watermark="2 hours")
-    # size state stores to the small demo-key grain (the q100 device:
-    # every store instance pays per-micro-batch open+commit I/O whether
-    # or not it holds keys; 32 session-default stores x 4 batches was
-    # most of the drain wall). Cluster deployments leave this None.
+    # cap the state stores at the small demo-key grain (the q100
+    # device: every store instance pays per-micro-batch open+commit I/O
+    # whether or not it holds keys). The cap only lowers the session's
+    # one-store-per-core count: local[4] keeps 4, local[32] drops to 8.
+    # Cluster deployments leave this None.
     return StreamCompiler.run_available_now(
         agg, "entry_stream_windowed", state_partitions=8) \
         .orderBy("window_start", "event_type")
@@ -3223,10 +3220,10 @@ def q100_stream_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
             stream, "event_type", "ts", "value", "event_id",
             window=20, min_periods=5, z_threshold=3.0)
         name = f"q100_alerts_{uuid.uuid4().hex[:8]}"
-        # 5 event-type keys: size the state-store instance count to
-        # the key cardinality instead of the 32-partition session
-        # default — 27 empty stores were paying per-batch commit I/O
-        # for nothing (measured 45k -> 80-86k rows/s steady at sf0.1)
+        # 5 event-type keys: cap the state-store instance count near
+        # the key cardinality — at a 32-partition session default, 27
+        # empty stores were paying per-batch commit I/O for nothing
+        # (measured 45k -> 80-86k rows/s steady at sf0.1 on local[32])
         out = StreamCompiler.run_available_now(alerts, name,
                                                state_partitions=8)
         rows = out.select(
@@ -5139,7 +5136,7 @@ def q174_stream_reservoir(spark: SparkSession, sf_dir: str
                   .option("maxFilesPerTrigger", 1).parquet(src))
         res = stateful_reservoir(stream, "event_type", "event_id",
                                  k=10, seed="res")
-        # 5 strata: size the state-store instance count to the key
+        # 5 strata: cap the state-store instance count near the key
         # cardinality (q100 convention — empty stores pay per-batch
         # commit I/O)
         from pandas_ai_spark.streaming.stream import (

@@ -27,6 +27,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from pandas_ai_spark.functions.skew import _fanout_if_narrow
 from pandas_ai_spark.functions.stats import _attach, _cell_pairs
 from pandas_ai_spark.functions.text import normalize_text, whitespace_tokens
 
@@ -575,7 +576,12 @@ def conformal_interval(df: DataFrame, group_cols, y_col: str,
     integral = dict(df.dtypes).get(y_col) in (
         "tinyint", "smallint", "int", "bigint", "boolean")
     y = F.col(y_col).cast("bigint" if integral else "double")
-    tagged = df.where(F.col(y_col).isNotNull()).select(
+    # the split md5-hashes every row, once per consumer (train and
+    # calibration): spread a narrow input first
+    src = _fanout_if_narrow(
+        df.where(F.col(y_col).isNotNull())
+          .select(*dict.fromkeys([*group_cols, y_col, id_col])), id_col)
+    tagged = src.select(
         *[F.col(c) for c in group_cols], y.alias("__y"),
         F.col(id_col).alias("__id"), (b < cut).alias("__cal"))
     train = tagged.where(~F.col("__cal")).groupBy(

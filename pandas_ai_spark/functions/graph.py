@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .skew import _fanout_if_narrow
+
 
 def pagerank(
     edges: DataFrame,
@@ -149,9 +151,12 @@ def cooccurrence_edges(df: DataFrame, basket_col: str, item_col: str,
     arr = F.array_sort(F.collect_set("__i"))
     if max_items_per_basket:
         arr = F.slice(arr, 1, int(max_items_per_basket))
-    baskets = (df.select(F.col(basket_col).alias("__b"),
-                         F.col(item_col).alias("__i"))
-                 .where(F.col("__i").isNotNull())
+    # a narrow input is fanned out on the basket: that exchange serves
+    # the basket grouping too (the frequent_pairs device)
+    baskets = (_fanout_if_narrow(
+                   df.select(F.col(basket_col).alias("__b"),
+                             F.col(item_col).alias("__i"))
+                     .where(F.col("__i").isNotNull()), "__b")
                  .groupBy("__b").agg(arr.alias("__items")))
     # unordered pairs from the sorted array — ONE struct per pair even
     # for symmetric output: dedup/threshold on the (src < dst) halved

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .cache import operator_persist
+from .skew import _fanout_if_narrow
 
 
 def frequent_pairs(
@@ -57,11 +58,14 @@ def frequent_pairs(
     if max_items_per_basket:
         arr = F.slice(arr, 1, int(max_items_per_basket))
     # one basket-keyed shuffle; persisted because three consumers read
-    # it (pair expansion, per-item counts, the basket total)
+    # it (pair expansion, per-item counts, the basket total). A narrow
+    # input is fanned out on the basket: that exchange serves the
+    # basket grouping too, so the collect_set runs on every core
     baskets = operator_persist(
-        df.select(F.col(basket_col).alias("__b"),
-                  F.col(item_col).alias("__i"))
-          .where(F.col("__i").isNotNull())
+        _fanout_if_narrow(
+            df.select(F.col(basket_col).alias("__b"),
+                      F.col(item_col).alias("__i"))
+              .where(F.col("__i").isNotNull()), "__b")
           .groupBy("__b").agg(arr.alias("__items")))
 
     # ONE scalar to the driver (the q53/q58 pattern — a count, not

@@ -27,6 +27,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .classify import md5_bucket
+from .skew import _fanout_if_narrow
 
 
 def _cells(col: Column, depth: int, width: int) -> Column:
@@ -45,7 +46,8 @@ def countmin_build(df: DataFrame, col: str, depth: int = 4,
     grids from disjoint corpora/micro-batches union + re-aggregate to
     merge."""
     tok = F.col(col).cast("string")
-    return (df.where(tok.isNotNull())
+    # depth md5 hashes per row: spread a narrow input first
+    return (_fanout_if_narrow(df.where(tok.isNotNull()).select(col), col)
               .select(F.explode(_cells(tok, depth, width)).alias("__c"))
               .groupBy(F.col("__c.row").alias("row"),
                        F.col("__c.bucket").alias("bucket"))

@@ -122,24 +122,68 @@ def key_skew_report(df: DataFrame, key_col: str,
 def _fanout_if_narrow(df: DataFrame, *key_cols: str) -> DataFrame:
     """Hash-repartition to ``defaultParallelism`` when the plan would
     scan fewer partitions than cores — single-row-group parquet at toy
-    scale strands every map-side expression on one task (input skew:
-    the Poisson bootstrap, span excision and the bucketed rank/ECDF
-    paths). Deterministic key hash: retry-safe, no round-robin
-    pre-sort, and every caller computes placement-independent exact
-    results, so they are unchanged. At real scale input splits >=
-    cores and this is a no-op.
+    scale strands every map-side expression on one task (input skew).
+    Deterministic key hash: retry-safe, no round-robin pre-sort, and
+    every caller computes placement-independent exact results, so they
+    are unchanged. At real scale input splits >= cores and this is a
+    no-op.
 
-    Decided from the physical plan, without an action: an input that
-    an exchange feeds is left as it is, since reading its partition
-    count would run that exchange under adaptive execution (a shuffle
-    has spread it already; a narrow scan broadcast-joined to a small
-    table stays narrow — the price of a lazy build). Only an
-    exchange-free plan has its partition count read, which a file
-    scan answers from its file listing."""
-    sc = df.sparkSession.sparkContext
-    n = sc.defaultParallelism
-    if "Exchange" in df._jdf.queryExecution().executedPlan().toString():
+    The exchange's map side is itself one task that reads and
+    serializes every row, so only operators whose per-row map work
+    outweighs that call it:
+
+    - ``stats.permutation_test`` (the ``n_perm``-fold explode and md5
+      sort keys),
+    - ``stats.poisson_bootstrap_ci`` (the ``B``-fold weight explode),
+    - the bucketed rank/ECDF paths: ``stats._midranks``,
+      ``mann_whitney_u``, ``ks_test``, ``wasserstein_1d`` and
+      ``kruskal_wallis``,
+    - ``stats.profile_exact`` (the distinct counts' per-column Expand),
+    - ``stats.trimmed_stats`` (exact percentile buffers),
+    - ``classify.conformal_interval`` (the md5 split, read twice),
+    - ``sketch.countmin_build`` (``depth`` md5 hashes per row),
+    - ``mining.frequent_pairs`` and ``graph.cooccurrence_edges`` (the
+      basket ``collect_set``: keyed on the basket, the fan-out's
+      exchange serves the basket grouping too),
+    - ``dedup.excise_duplicate_spans`` (per-document span hashing),
+    - the ``documents`` table handle of ``__spark_entry__._t``.
+
+    Decided from the physical plan, without an action. An exchange-free
+    plan has its partition count read, which a file scan answers from
+    its file listing. A plan with exchanges is left as it is when a
+    shuffle feeds it (it is spread already; reading its partition count
+    would run that shuffle under adaptive execution); when only
+    broadcasts feed it (a narrow scan broadcast-joined to a small
+    table), its count is the file splits of the scans outside the
+    broadcast build sides (:func:`_scan_partitions`)."""
+    if df.isStreaming:  # no physical plan before the query starts
         return df
-    if df.rdd.getNumPartitions() < n:
+    n = df.sparkSession.sparkContext.defaultParallelism
+    plan = df._jdf.queryExecution().executedPlan()
+    if "Exchange" in plan.toString():
+        parts = _scan_partitions(plan)
+    else:
+        parts = df.rdd.getNumPartitions()
+    if parts is not None and parts < n:
         return df.repartition(n, *[F.col(c) for c in key_cols])
     return df
+
+
+def _scan_partitions(plan) -> int | None:
+    """The partitions a physical ``plan`` that no shuffle feeds
+    produces, read from its file scans' splits without running it: a
+    broadcast join keeps its stream side's partitions, so a broadcast
+    build side counts 0. None when a shuffle exchange feeds the plan or
+    a leaf is not a file scan."""
+    name = plan.getClass().getSimpleName()
+    if name == "AdaptiveSparkPlanExec":
+        return _scan_partitions(plan.executedPlan())
+    if name == "BroadcastExchangeExec":
+        return 0
+    if name == "FileSourceScanExec":
+        return plan.inputRDD().getNumPartitions()
+    kids = plan.children()
+    if name == "ShuffleExchangeExec" or kids.size() == 0:
+        return None
+    parts = [_scan_partitions(kids.apply(i)) for i in range(kids.size())]
+    return None if None in parts else sum(parts)

@@ -439,7 +439,9 @@ def profile_exact(df: DataFrame, cols: list[str],
             F.min(col).cast("string").alias(f"__p{i}_min"),
             F.max(col).cast("string").alias(f"__p{i}_max"),
         ]
-    row = df.agg(*aggs)
+    # the distinct counts' Expand copies every row once per column:
+    # spread a narrow input first
+    row = _fanout_if_narrow(df.select(*cols), *cols).agg(*aggs)
     parts: list = []
     for i, c in enumerate(cols):
         parts += [F.lit(c), F.col(f"__p{i}_n"), F.col(f"__p{i}_nulls"),
@@ -805,6 +807,13 @@ def welch_ttest(df: DataFrame, group_col: str, value_col: str,
         (F.abs(t) >= F.lit(float(t_critical))).alias("significant"))
 
 
+def _non_negative(x, message: str):
+    """``x``, failing the job that evaluates it with ``message`` on a
+    negative value: the check runs inside the plan, so building it
+    launches no job."""
+    return F.when(x < 0, F.raise_error(F.lit(message))).otherwise(x)
+
+
 def _global_rank(base: DataFrame, order: list) -> DataFrame:
     """Distributed global ``row_number`` over ``order`` (leading
     column ``__x``) WITHOUT a single-task global Window — the
@@ -862,8 +871,10 @@ def gini_coefficient(df: DataFrame, value_col: str,
     VALUE is tie-invariant (equal x swap ranks with equal weight…
     i·x + j·x is symmetric only when x's are equal, which is exactly
     the tie case), but a pinned order keeps the plan deterministic.
-    NULL values are excluded; negative values raise (Gini is defined
-    for non-negative distributions); an all-zero group yields NULL
+    NULL values are excluded; a negative value fails the first job
+    that reads it (Gini is defined for non-negative distributions;
+    with ``by`` that job is the caller's action, without ``by`` it is
+    the global rank's bucket-edge job); an all-zero group yields NULL
     gini (0/0) — surfaced, not hidden.
     """
     from pyspark.sql.window import Window
@@ -871,10 +882,9 @@ def gini_coefficient(df: DataFrame, value_col: str,
     by = list(by or [])
     v = F.col(value_col).cast("double")
     base = df.where(v.isNotNull()).select(
-        *by, v.alias("__x"),
+        *by, _non_negative(v, "gini_coefficient needs non-negative "
+                              "values").alias("__x"),
         *( [F.col(tiebreak).alias("__tb")] if tiebreak else []))
-    if base.where(F.col("__x") < 0).limit(1).count():
-        raise ValueError("gini_coefficient needs non-negative values")
     order = [F.col("__x")] + ([F.col("__tb")] if tiebreak else [])
     if by:
         w = Window.partitionBy(*by).orderBy(*order)
@@ -1066,17 +1076,17 @@ def weighted_median(df: DataFrame, group_col: str, value_col: str,
     passes over one shuffle's partitioning. ``tiebreak`` pins the
     order of equal values (the crossing VALUE is tie-invariant, the
     plan determinism is not). Rows with NULL value or weight are
-    excluded; negative weights raise.
+    excluded; a negative weight fails the action.
     """
     from pyspark.sql.window import Window
 
     v = F.col(value_col).cast("double")
     wt = F.col(weight_col).cast("double")
     base = df.where(v.isNotNull() & wt.isNotNull()).select(
-        F.col(group_col).alias("__g"), v.alias("__v"), wt.alias("__w"),
+        F.col(group_col).alias("__g"), v.alias("__v"),
+        _non_negative(wt, "weighted_median needs non-negative "
+                          "weights").alias("__w"),
         *([F.col(tiebreak).alias("__tb")] if tiebreak else []))
-    if base.where(F.col("__w") < 0).limit(1).count():
-        raise ValueError("weighted_median needs non-negative weights")
     order = [F.col("__v")] + ([F.col("__tb")] if tiebreak else [])
     w = (Window.partitionBy("__g").orderBy(*order)
          .rowsBetween(Window.unboundedPreceding, Window.currentRow))
@@ -1262,6 +1272,9 @@ def trimmed_stats(df: DataFrame, value_col: str,
     if not 0.0 < trim < 0.5:
         raise ValueError("need 0 < trim < 0.5")
     approx = _resolve_approx(df, approx)
+    # a percentile's partial buffer holds every value: spread a narrow
+    # input first (both passes read the one exchange)
+    df = _fanout_if_narrow(df.select(*(by or []), value_col), value_col)
     v = F.col(value_col).cast("double")
     lo_agg = _pct(v, trim, approx).alias("__lo")
     hi_agg = _pct(v, 1.0 - trim, approx).alias("__hi")
@@ -2359,6 +2372,9 @@ def permutation_test(df: DataFrame, value_col: str, sample_col: str,
                       "identify rows within a by group - duplicate "
                       "ids break cross-engine determinism"))
             .isNull()).drop("__idn")
+    # the explode below multiplies per-row map work by n_perm (and
+    # md5-hashes every copy): spread a narrow input first
+    base = _fanout_if_narrow(base, "__id")
     obs = base.groupBy(*by).agg(
         F.sum("__arm").cast("bigint").alias("__na"),
         (F.count(F.lit(1)) - F.sum("__arm")).cast("bigint")

@@ -320,7 +320,7 @@ class StreamCompiler:
         return the result table (the batch-parity test harness).
 
         ``state_partitions`` sizes the stateful operator's state-store
-        instance count (it pins ``spark.sql.shuffle.partitions`` for
+        instance count (it caps ``spark.sql.shuffle.partitions`` for
         THIS query's lifetime — a streaming checkpoint captures the
         value at first start). Every instance pays a per-micro-batch
         store open + delta-file commit whether or not it holds keys,
@@ -354,18 +354,22 @@ from contextlib import contextmanager
 
 @contextmanager
 def scoped_shuffle_partitions(spark, n: int | None):
-    """Pin ``spark.sql.shuffle.partitions`` for the duration of a
-    streaming drain started inside the block (``None`` = no-op). A
+    """Cap ``spark.sql.shuffle.partitions`` at ``n`` for the duration
+    of a streaming drain started inside the block (``None`` = no-op). A
     stateful streaming query captures the value at first start as its
     state-store instance count — size it to key cardinality for
     small-key demo streams (see ``run_available_now``); hold the
     scope until the bounded drain terminates, since the first batch
-    may plan after ``start()`` returns."""
+    may plan after ``start()`` returns. The cap only ever lowers the
+    count: a session already below ``n`` keeps its own value, since
+    every extra store pays its per-batch commit whether or not it holds
+    keys."""
     if n is None:
         yield
         return
     old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(int(n)))
+    spark.conf.set("spark.sql.shuffle.partitions",
+                   str(min(int(n), int(old))))
     try:
         yield
     finally:

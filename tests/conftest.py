@@ -48,6 +48,19 @@ def pytest_terminal_summary(terminalreporter, exitstatus):
         os.remove(scores_file)
 
 
+def build_jobs(spark, group, build):
+    """Run ``build`` in job group ``group``; return (its result, the
+    Spark jobs it launched)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "lazy check")
+    try:
+        out = build()
+        jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setJobGroup(None, None)
+    return out, jobs
+
+
 def sorted_rows(obj):
     """Order-insensitive canonical rows for comparison.
 

@@ -1,26 +1,19 @@
 """The near-duplicate family's shared devices: the candidate-pair former
 ``dedup._bucket_pairs`` against a brute-force reference, MinHash's single
-Arrow pass, and the lazy build of the fan-out guard's callers."""
+Arrow pass, the fan-out guard (its callers' lazy build, its view through
+broadcast joins) and which table handles of the query registry carry a
+fan-out."""
 
 import sys
 
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
+from pyspark.sql import functions as F
+
+from conftest import SF_SMOKE, build_jobs
 
 sys.path.insert(0, "tools")
-
-
-def _build_jobs(spark, group, build):
-    """Run ``build`` in job group ``group``; return (its result, the
-    Spark jobs it launched)."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, "lazy check")
-    try:
-        out = build()
-        jobs = list(sc.statusTracker().getJobIdsForGroup(group))
-    finally:
-        sc.setJobGroup(None, None)
-    return out, jobs
 
 
 # (id, k1, k2) rows: ids sharing several keys, repeated (id, key) rows,
@@ -97,8 +90,8 @@ def test_excise_duplicate_spans_exchange_input_builds_zero_jobs(spark):
     docs = spark.createDataFrame(
         [(i, f"doc{i} {span} end{i}") for i in range(6)],
         "doc_id long, text string").repartition(3, "doc_id")
-    out, jobs = _build_jobs(spark, "excise_build",
-                            lambda: excise_duplicate_spans(docs))
+    out, jobs = build_jobs(spark, "excise_build",
+                           lambda: excise_duplicate_spans(docs))
     assert jobs == []
     got = {r.doc_id: r.text for r in out.collect()}
     assert got == {i: f"doc{i} end{i}" for i in range(6)}
@@ -110,8 +103,70 @@ def test_poisson_bootstrap_exchange_input_builds_zero_jobs(spark):
     df = spark.createDataFrame(
         [(i, float(i % 7), "g%d" % (i % 2)) for i in range(40)],
         "rid long, v double, g string").repartition(3, "rid")
-    out, jobs = _build_jobs(
+    out, jobs = build_jobs(
         spark, "bootstrap_build",
         lambda: poisson_bootstrap_ci(df, "v", "rid", by=["g"], B=8))
     assert jobs == []
     assert out.count() == 2
+
+
+def test_permutation_test_exchange_input_builds_zero_jobs(spark):
+    from pandas_ai_spark.functions.stats import permutation_test
+
+    df = spark.createDataFrame(
+        [(i, float(i % 7), "ab"[i % 2], "g%d" % (i % 4 // 2))
+         for i in range(40)],
+        "rid long, v double, arm string, g string").repartition(3, "rid")
+    out, jobs = build_jobs(
+        spark, "permutation_build",
+        lambda: permutation_test(df, "v", "arm", "a", "b", ["rid"],
+                                 by=["g"], n_perm=8))
+    assert jobs == []
+    assert out.count() == 2
+
+
+def test_table_handles_fan_out_documents_only(spark):
+    # lineitem and orders are read as scanned; documents keeps its
+    # table-level fan-out whenever its scan is narrower than the cores.
+    # Building a handle runs no job beyond the parquet schema read
+    # that a bare spark.read.parquet runs too.
+    import __spark_entry__ as entry
+
+    def plan(df):
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    memo = entry._T_MEMO.setdefault(spark, {})
+    handles = {}
+    for t in ("lineitem", "orders", "documents"):
+        memo.pop((SF_SMOKE, t), None)
+        handles[t], jobs = build_jobs(
+            spark, f"handle_{t}", lambda: entry._t(spark, SF_SMOKE, t))
+        _, read_jobs = build_jobs(
+            spark, f"read_{t}", lambda: entry._t_load(spark, SF_SMOKE, t))
+        assert len(jobs) == len(read_jobs)
+    assert "Exchange" not in plan(handles["lineitem"])
+    assert "Exchange" not in plan(handles["orders"])
+    narrow = (entry._t_raw(spark, SF_SMOKE, "documents").rdd
+              .getNumPartitions() < spark.sparkContext.defaultParallelism)
+    assert ("Exchange" in plan(handles["documents"])) == narrow
+
+
+def test_fanout_sees_through_broadcast_joins(spark):
+    # a narrow scan broadcast-joined to a small table is still narrow:
+    # the guard counts the stream side's file splits without running
+    # the broadcast; a shuffle-fed input is left as it is
+    from pandas_ai_spark.functions.skew import _fanout_if_narrow
+
+    li = spark.read.parquet(f"{SF_SMOKE}/lineitem.parquet")
+    part = spark.read.parquet(f"{SF_SMOKE}/part.parquet")
+    joined = li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
+    n = spark.sparkContext.defaultParallelism
+    if li.rdd.getNumPartitions() >= n:
+        pytest.skip("the scan is not narrower than the cores here")
+    out, jobs = build_jobs(spark, "fanout_broadcast",
+                           lambda: _fanout_if_narrow(joined, "l_orderkey"))
+    assert jobs == []
+    assert "REPARTITION_BY_NUM" in \
+        out._jdf.queryExecution().executedPlan().toString()
+    spread = joined.repartition(n, "l_orderkey").select("l_orderkey")
+    assert _fanout_if_narrow(spread, "l_orderkey") is spread

@@ -7,7 +7,10 @@ import datetime as dt
 
 import pytest
 
+from pyspark.errors import SparkRuntimeException
 from pyspark.sql import functions as F
+
+from conftest import build_jobs
 
 
 # ---------------------------------------------------------------------------
@@ -364,10 +367,24 @@ class TestGini:
         out = {r.g: r.gini for r in gini_coefficient(
             df, "v", by=["g"], tiebreak="id").collect()}
         assert abs(out["a"]) < 1e-12 and out["b"] > 0.4
-        with pytest.raises(ValueError):
+        with pytest.raises(SparkRuntimeException,
+                           match="gini_coefficient needs non-negative"):
             gini_coefficient(spark.createDataFrame([(-1.0,)],
                                                    "v double"),
                              "v").collect()
+
+    def test_negative_check_builds_zero_jobs(self, spark):
+        from pandas_ai_spark.functions.stats import gini_coefficient
+
+        df = spark.createDataFrame([("a", 1.0), ("a", -1.0)],
+                                   "g string, v double")
+        out, jobs = build_jobs(
+            spark, "gini_build",
+            lambda: gini_coefficient(df, "v", by=["g"]))
+        assert jobs == []
+        with pytest.raises(SparkRuntimeException,
+                           match="gini_coefficient needs non-negative"):
+            out.collect()
 
 
 class TestBenford:
@@ -721,8 +738,15 @@ class TestWeightedMedian:
 
         df = spark.createDataFrame([("g", 1.0, -1.0)],
                                    "g string, v double, w double")
-        with pytest.raises(ValueError):
-            weighted_median(df, "g", "v", "w")
+        # the check is in the plan: the build runs no job, the action
+        # fails
+        out, jobs = build_jobs(
+            spark, "wmedian_build",
+            lambda: weighted_median(df, "g", "v", "w"))
+        assert jobs == []
+        with pytest.raises(SparkRuntimeException,
+                           match="weighted_median needs non-negative"):
+            out.collect()
 
 
 class TestKeySkewReport:

@@ -358,3 +358,23 @@ def test_stateful_rolling_zscore_parity_across_batches(spark, tmp_path):
     # the spike (id 100) alerts off batch-1 state; the point after it
     # (id 101) must NOT alert — the spike joined its baseline
     assert [i for i, _ in s_rows] == [100]
+
+
+def test_scoped_shuffle_partitions_only_lowers(spark):
+    # a state-store pin above the session's partition count keeps the
+    # session's count: every extra store pays a per-batch commit
+    from pandas_ai_spark.streaming.stream import scoped_shuffle_partitions
+
+    key = "spark.sql.shuffle.partitions"
+    old = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "4")
+        with scoped_shuffle_partitions(spark, 8):
+            assert spark.conf.get(key) == "4"
+        with scoped_shuffle_partitions(spark, 2):
+            assert spark.conf.get(key) == "2"
+        assert spark.conf.get(key) == "4"
+        with scoped_shuffle_partitions(spark, None):
+            assert spark.conf.get(key) == "4"
+    finally:
+        spark.conf.set(key, old)

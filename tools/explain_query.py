@@ -70,14 +70,16 @@ def py_evals(df) -> int:
 
 def counted(spark, counters, group: str, action):
     """Run ``action`` in job group ``group``; return its result and the
-    (jobs, stages) it launched."""
+    (jobs, stages) it launched. Jobs started before the call (an earlier
+    query's timing reps) are drained first, so they are not counted."""
+    counters.collect_op()
+    before = dict(counters.totals)
     sc = spark.sparkContext
     sc.setJobGroup(group, group)
     try:
         out = action()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    before = dict(counters.totals)
     counters.collect_op()
     return out, (int(counters.totals["jobs"] - before["jobs"]),
                  int(counters.totals["stages"] - before["stages"]))
@@ -101,7 +103,9 @@ def main() -> int:
     from pandas_ai_spark.functions.cache import release_operator_caches
     from pandas_ai_spark.session import get_session
 
-    spark = get_session(app_name=f"explain_{args.tag}")
+    # no progress bars: they would prefix the COUNTS lines on stdout
+    spark = get_session(app_name=f"explain_{args.tag}",
+                        extra_conf={"spark.ui.showConsoleProgress": "false"})
     here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     outdir = os.path.join(here, "plans", args.round)
     os.makedirs(outdir, exist_ok=True)
