@@ -1155,8 +1155,9 @@ def q65_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q66_semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Transitive semantic duplicate CLUSTERS: connected components
-    (distributed min-label propagation, q34's machinery) over the q65
-    semantic pair graph — (vec_id, cluster_id = min reachable id).
+    (dedup.dedup_clusters over graph.connected_components, q34's
+    machinery) over the q65 semantic pair graph — (vec_id,
+    cluster_id = min reachable id).
     Oracle: recursive CTE over the identical pair set."""
     from pandas_ai_spark.functions import dedup as dd
     from pandas_ai_spark.functions import similarity as sim
@@ -1550,7 +1551,7 @@ def q35_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q34_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Transitive near-dup clustering, EXACT pair source
     (near_dup_clusters(exact=True) → inverted-index n-gram Jaccard →
-    min-label connected components): the guaranteed-recall
+    graph.connected_components): the guaranteed-recall
     small/medium-corpus VERIFIER by the two-path convention — its
     candidate volume is Θ(Σ shingle-doc-freq²) and measured
     super-linear (SCALING.md), so the at-scale default is q186's
@@ -1567,8 +1568,8 @@ def q186_near_dup_clusters_lsh(spark: SparkSession,
     """Scale-DEFAULT transitive near-dup clustering
     (dedup.near_dup_clusters): banded MinHash-LSH candidates (128
     hashes / 32 bands, S-curve centered s≈0.65) verified with EXACT
-    shingle Jaccard ≥ 0.7 on collisions only, then min-label
-    connected components — Θ(corpus + band collisions), never the
+    shingle Jaccard ≥ 0.7 on collisions only, then
+    graph.connected_components — Θ(corpus + band collisions), never the
     exact form's Θ(Σ doc-freq²) candidate term (q34/q21, measured
     exp 1.62 at sf0.3; this path's pair source q22 measured 0.90).
     Recall caveat: a true ≥0.7 pair LSH-collides w.p.
@@ -4225,11 +4226,11 @@ def q146_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the bipartite customer↔order-bucket graph: labels start as
     node ids, 3 synchronous rounds of neighborhood min — the
     deterministic, SQL-expressible fragment of connected components
-    (the distributed complement to the size-gated driver union-find in
-    q34). Per round: one broadcast score join + a partial-aggregated
-    min per endpoint over the persisted symmetrized edge table; integer
-    labels make every round exact. Oracle: one chained CTE pair per
-    round (_q146_oracle)."""
+    (the fixed-round complement to graph.connected_components, which
+    q34 and q147 run). Per round: one broadcast score join + a
+    partial-aggregated min per endpoint over the persisted symmetrized
+    edge table; integer labels make every round exact. Oracle: one
+    chained CTE pair per round (_q146_oracle)."""
     from pandas_ai_spark.functions.graph import min_label_propagation
 
     orders = _t(spark, sf_dir, "orders")
@@ -4246,7 +4247,7 @@ def q147_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     alternating large-star/small-star contraction (Kiveris et al.,
     SoCC'14) over per-nation consecutive-custkey CHAINS — a
     deliberately DEEP graph (diameter = customers-per-nation, ~600 at
-    sf0.1) where q34/q146-style min-label propagation needs one round
+    sf0.1) where q146-style min-label propagation needs one round
     per hop; star contraction halves tree heights and converges in
     O(log^2 n) rounds (7 for a 40-chain, ~10 for a 600-chain).
     Self-loop edges keep single-customer nations in the node set.

@@ -5,10 +5,10 @@ reduces the corpus to its distinct-word frequency table, every merge
 iteration works on the VOCAB (|distinct words| rows — millions, not
 trillions), so the per-iteration cost is an explode+aggregate over a
 small table plus one driver sync of the single best pair — the same
-iterate-and-sync shape as k-means (similarity.ann_ivf) and min-label
-propagation (dedup.dedup_clusters). Lineage is truncated with
-localCheckpoint every few merges so the plan doesn't grow linearly with
-the merge count.
+iterate-and-sync shape as k-means (similarity.ann_ivf) and the
+star-contraction rounds of graph.connected_components. Lineage is
+truncated with localCheckpoint every few merges so the plan doesn't
+grow linearly with the merge count.
 
 No SQL oracle is possible (the merge loop is inherently iterative and
 data-dependent); correctness is pinned by a pure-Python reference
@@ -125,8 +125,9 @@ def train_bpe(df: DataFrame, text_col: str = "text",
     the reference Python implementation the tests pin against. Stops
     early when the best pair drops below ``min_freq``.
 
-    Hybrid execution (the dedup_clusters pattern): the distinct-word
-    vocab is usually bounded (≤ ~10⁷ even for web corpora), so when it
+    Hybrid execution (the graph.connected_components pattern: a
+    driver-local loop under a size limit): the distinct-word vocab
+    is usually bounded (≤ ~10⁷ even for web corpora), so when it
     fits under ``driver_vocab_limit`` the merge LOOP runs driver-side
     on the collected vocab — zero per-iteration job scheduling; the
     corpus-sized work stays in the one distributed vocab-building pass.

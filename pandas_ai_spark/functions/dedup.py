@@ -40,6 +40,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .cache import operator_persist
+from .graph import connected_components
 from .skew import _fanout_if_narrow
 from .text import normalize_text, whitespace_tokens
 
@@ -709,103 +710,21 @@ def ngram_jaccard_pairs_prefix(
 
 
 def dedup_clusters(pairs: DataFrame, id_a: str = "id_a",
-                   id_b: str = "id_b", max_iters: int = 20,
-                   driver_threshold: int = 1_000_000) -> DataFrame:
+                   id_b: str = "id_b") -> DataFrame:
     """Connected components over a near-duplicate pair graph →
-    ``(doc_id, cluster_id)`` with cluster_id = min id reachable.
-
-    Large-graph label propagation (the "small-star/large-star" family):
-    every node starts labeled with itself; each round joins the current
-    labels across edges (both directions) and keeps the min neighbor
-    label. Plain min-label propagation converges in O(graph diameter)
-    rounds — fine for near-dup graphs (cliques converge in one round,
-    long chains are rare); for deep chains use
-    :func:`~pandas_ai_spark.functions.graph.connected_components`
-    (large-star/small-star, O(log^2 n) rounds). Each
-    iteration is one shuffle on node id; the label frame is
-    localCheckpoint()ed so the lineage doesn't grow unboundedly.
+    ``(doc_id, cluster_id)`` with cluster_id = min id reachable: a
+    rename over :func:`~pandas_ai_spark.functions.graph.connected_components`
+    (a driver-local union-find for small pair graphs — the pairs are the
+    rare events — and convergent large-star/small-star contraction
+    above that, so a long chain of near-duplicates is never cut short).
 
     Greedy ``minhash_dedup`` keeps lower-id docs of each *pair*; this
     gives true transitive clusters (A~B, B~C ⇒ one cluster even when A~C
     wasn't a candidate pair).
     """
-    # both edge directions from ONE scan of `pairs`: a union of two
-    # selects would execute the (possibly expensive — e.g. a full
-    # ngram-Jaccard pass) upstream pair plan once per branch; explode
-    # duplicates each row into (a→b, b→a) inside a single pass.
-    edges = (
-        pairs.select(F.explode(F.array(
-            F.struct(F.col(id_a).alias("src"), F.col(id_b).alias("dst")),
-            F.struct(F.col(id_b).alias("src"), F.col(id_a).alias("dst")),
-        )).alias("__e"))
-        .select("__e.src", "__e.dst")
-        .distinct()
-    )
-    # hybrid: near-dup pair graphs are tiny relative to the corpus (the
-    # pairs ARE the rare events); below the threshold a driver-side
-    # union-find beats ~log(n) distributed iterations of per-job overhead.
-    # The distributed path below remains the >5M-edge scale story.
-    # The edge set is persisted (scope-managed) BEFORE the path probe:
-    # count() materializes the cache in one full pass (take() would
-    # launch 3-4 incremental scale-up jobs here, since edge counts sit
-    # far below the threshold), the small-path collect() then reads the
-    # cache instead of re-running the upstream pair plan, and the
-    # distributed path needs edges cached anyway (it re-reads them every
-    # propagation round).
-    edges = operator_persist(edges)
-    if edges.count() <= driver_threshold:
-        edge_rows = edges.collect()
-        parent: dict = {}
-
-        def find(x):
-            root = x
-            while parent.get(root, root) != root:
-                root = parent[root]
-            while parent.get(x, x) != x:       # path compression
-                parent[x], x = root, parent[x]
-            return root
-
-        for row in edge_rows:
-            ra, rb = find(row.src), find(row.dst)
-            if ra != rb:
-                lo, hi = (ra, rb) if ra <= rb else (rb, ra)
-                parent[hi] = lo                # min id becomes the root
-        nodes = {r.src for r in edge_rows}
-        # id type follows the input (string ids order lexicographically,
-        # consistent with the distributed path's F.min labels)
-        id_type = edges.schema["src"].dataType
-        out_schema = T.StructType([
-            T.StructField("doc_id", id_type),
-            T.StructField("cluster_id", id_type)])
-        out = [(x, find(x)) for x in nodes]
-        return pairs.sparkSession.createDataFrame(out, out_schema)
-    labels = (
-        edges.select(F.col("src").alias("id")).distinct()
-        .withColumn("label", F.col("id"))
-    )
-    for _ in range(max_iters):
-        # min label among self and neighbors
-        neighbor_min = (
-            edges.join(labels.withColumnRenamed("id", "dst")
-                             .withColumnRenamed("label", "dst_label"), "dst")
-            .groupBy("src").agg(F.min("dst_label").alias("nmin"))
-            .withColumnRenamed("src", "id")
-        )
-        new_labels = (
-            labels.join(neighbor_min, "id", "left")
-            .select("id", F.least("label", F.coalesce("nmin", "label"))
-                    .alias("label"))
-        )
-        new_labels = new_labels.localCheckpoint(eager=True)
-        changed = (
-            new_labels.alias("n").join(labels.alias("o"), "id")
-            .where(F.col("n.label") != F.col("o.label")).limit(1).count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
-    return labels.select(F.col("id").alias("doc_id"),
-                         F.col("label").alias("cluster_id"))
+    return (connected_components(pairs, src=id_a, dst=id_b)
+            .select(F.col("node").alias("doc_id"),
+                    F.col("component").alias("cluster_id")))
 
 
 def near_dup_clusters(df: DataFrame, text_col: str = "text",

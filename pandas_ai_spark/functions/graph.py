@@ -1,14 +1,13 @@
-"""Graph analytics on edge tables: PageRank (power iteration).
-
-Shallow-graph connected components live in
-:func:`~pandas_ai_spark.functions.dedup.dedup_clusters` (min-label
-propagation — right for near-dup clique families); this module adds
-centrality plus :func:`connected_components`, the convergent
-large-star/small-star contraction for DEEP graphs (entity-resolution
-chains, lineage graphs) where propagation's one-round-per-hop cost is
-the bottleneck. PageRank over a co-occurrence or citation graph is the
-standard importance score a corpus pipeline uses to weight domains /
-documents (the original web-scale use case).
+"""Graph analytics on edge tables: PageRank (power iteration), HITS,
+triangle counts, k-core, min-label propagation and
+:func:`connected_components`, the one connected-components device of
+the package (``dedup.dedup_clusters`` and ``linkage.golden_records``
+are renames over it): a driver-local union-find for small graphs,
+large-star/small-star contraction, which converges in O(log^2 n)
+rounds whatever the diameter, above that. PageRank over a
+co-occurrence or citation graph is the standard importance score a
+corpus pipeline uses to weight domains / documents (the original
+web-scale use case).
 
 Scale shape: the graph stays an EDGE TABLE end-to-end — one
 ``(src → out_degree)`` aggregation, then per iteration one equi-join of
@@ -19,6 +18,12 @@ rank mass lives in a DataFrame of |V| rows. Iterations are UNROLLED
 into one lazy plan, with lineage truncated every ``checkpoint_every``
 iterations (the :func:`~pandas_ai_spark.functions.bpe.train_bpe`
 pattern) so plan depth stays bounded for large iteration counts.
+
+Small graphs take a driver-local path instead: at or under
+``LOCAL_EDGES_MAX[op]`` edges an operator collects its edge table once
+(:func:`_collect_codes`) and runs its rounds over numpy, returning a
+``(node, …)`` frame (:func:`_node_frame`) — identical results, without
+the per-round jobs whose scheduler floor dominates at toy scale.
 """
 
 from __future__ import annotations
@@ -27,6 +32,74 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .skew import _fanout_if_narrow
+
+# Small-graph fast paths: at or under this many edges an operator
+# collects its edge table once and runs driver-local over numpy instead
+# of a chain of per-round Spark jobs (each ~0.4-1.0 s of scheduler
+# floor at toy scale; r13 q138 decomposition). Each limit is set by the
+# driver memory of that operator's local form. Tests that exercise the
+# distributed rounds set an entry to 0.
+LOCAL_EDGES_MAX = {
+    # wedge arrays are bounded by m^1.5 under degree orientation:
+    # ~1e7 int64 entries at 50k edges
+    "triangle_counts": 50_000,
+    # the collected edge table plus two float64 score vectors:
+    # <= ~100 MB of driver memory at 1e6 edges
+    "hits": 1_000_000,
+    # the collected edge table plus one int64 label vector
+    "min_label_propagation": 1_000_000,
+    # the collected raw edge table plus one int64 parent array; the
+    # union-find walks the edges in one Python pass
+    "connected_components": 1_000_000,
+    # 5M int edges ≈ 80 MB (strings a few hundred MB): two int64 code
+    # arrays and one degree vector per round
+    "kcore": 5_000_000,
+}
+
+
+def _broadcast_below(n: int, limit: int):
+    """``F.broadcast`` while ``n`` (a node count, or an edge count as
+    its upper bound) is under ``limit``, else the identity: an
+    iteration's small side broadcasts so the edge table is never
+    shuffled, and past ``limit`` (a side that would OOM the executors)
+    the joins fall back to node-id shuffles."""
+    return F.broadcast if n < limit else (lambda df: df)
+
+
+def _collect_codes(e: DataFrame, sort: bool = False):
+    """Collect a two-column edge table and factorize both endpoint
+    columns together: ``(s, d, uniques)``, where ``s`` and ``d`` are
+    int64 codes into ``uniques`` and a NULL endpoint is ``-1``.
+    ``sort=True`` makes code order equal value order (lexicographic
+    for strings, the binary order Spark's ``min``/``least`` use), so a
+    min over codes is a min over node ids."""
+    import numpy as np
+    import pandas as pd
+
+    pdf = e.toPandas()
+    codes, uniques = pd.factorize(
+        pd.concat([pdf.iloc[:, 0], pdf.iloc[:, 1]], ignore_index=True),
+        sort=sort)
+    codes = codes.astype(np.int64)
+    return codes[:len(pdf)], codes[len(pdf):], uniques
+
+
+def _node_frame(e: DataFrame, node, **cols) -> DataFrame:
+    """The ``(node, *cols)`` result frame of a driver-local path:
+    ``node`` is typed like ``e``'s first column, and each ``cols``
+    value is ``(values, spark_type)``, with ``None`` for a node-typed
+    column (a component or label)."""
+    import numpy as np
+    import pandas as pd
+    from pyspark.sql import types as T
+
+    node_t = e.schema[0].dataType
+    out = pd.DataFrame({"node": np.asarray(node),
+                        **{c: np.asarray(v) for c, (v, _) in cols.items()}})
+    schema = T.StructType(
+        [T.StructField("node", node_t)]
+        + [T.StructField(c, t or node_t) for c, (_, t) in cols.items()])
+    return e.sparkSession.createDataFrame(out, schema=schema)
 
 
 def pagerank(
@@ -97,8 +170,7 @@ def pagerank(
         return ndeg.select("node").withColumn("rank", F.lit(0.0))
     base = (1.0 - damping) / n_nodes
 
-    small = n_nodes < broadcast_nodes_below
-    hint = F.broadcast if small else (lambda df: df)
+    hint = _broadcast_below(n_nodes, broadcast_nodes_below)
 
     ranks = ndeg.withColumn("rank", F.lit(1.0 / n_nodes))
     for it in range(iterations):
@@ -204,16 +276,12 @@ def _tri_local(und: DataFrame) -> DataFrame:
     bounded by m^1.5 under degree orientation (~1e7 int64 entries at
     the 50k-edge gate's worst case)."""
     import numpy as np
-    import pandas as pd
+    from pyspark.sql import types as T
 
-    pdf = und.toPandas()
-    both = pd.concat([pdf.iloc[:, 0], pdf.iloc[:, 1]],
-                     ignore_index=True)
-    codes, uniques = pd.factorize(both, sort=False)
+    s, d, uniques = _collect_codes(und)
     n = max(len(uniques), 1)
-    s, d = codes[:len(pdf)], codes[len(pdf):]
     ok = (s >= 0) & (d >= 0)  # NULL endpoints never equi-join
-    s, d = s[ok].astype(np.int64), d[ok].astype(np.int64)
+    s, d = s[ok], d[ok]
     deg = np.bincount(s, minlength=n) + np.bincount(d, minlength=n)
     # orient low-(degree, id) -> high-(degree, id), as the joins do
     fwd = (deg[s] < deg[d]) | ((deg[s] == deg[d]) & (s < d))
@@ -248,19 +316,14 @@ def _tri_local(und: DataFrame) -> DataFrame:
     # alive mask over the REAL node count (an empty q88-at-sf0.001
     # edge set must yield an empty frame, not a shape error)
     alive = tri[:len(uniques)] > 0
-    out = pd.DataFrame({"node": pd.Series(uniques[alive]),
-                        "triangles": tri[:len(uniques)][alive]})
-    from pyspark.sql import types as T
-    schema = T.StructType([
-        T.StructField("node", und.schema[0].dataType),
-        T.StructField("triangles", T.LongType())])
-    return und.sparkSession.createDataFrame(out, schema=schema)
+    return _node_frame(und, uniques[alive],
+                       triangles=(tri[:len(uniques)][alive],
+                                  T.LongType()))
 
 
 def triangle_counts(edges: DataFrame, src: str = "src",
                     dst: str = "dst",
-                    assume_canonical: bool = False,
-                    local_edges_below: int = 50_000) -> DataFrame:
+                    assume_canonical: bool = False) -> DataFrame:
     """Per-node triangle counts over an undirected graph:
     ``(node, triangles)``, nodes with zero triangles omitted.
 
@@ -285,16 +348,14 @@ def triangle_counts(edges: DataFrame, src: str = "src",
     edge list with itself on the wedge apex, then the closing
     semi-equi-join — no cartesian products, no Python.
 
-    ``local_edges_below`` is the small-graph fast path (the
-    q138/_hits_local device): at or below that many canonical edges —
-    one count on the persisted table, which also materializes the
-    cache every path reads five times — the wedge enumeration runs
-    driver-local over vectorized numpy (identical integer counts, see
+    Small-graph fast path: at or under
+    ``LOCAL_EDGES_MAX["triangle_counts"]`` canonical edges — one count
+    on the persisted table, which also materializes the cache every
+    path reads five times — the wedge enumeration runs driver-local
+    over vectorized numpy (identical integer counts, see
     :func:`_tri_local`) instead of a ~6-job join chain whose
-    scheduler floor dominates at toy scale. 50k edges bounds the
-    wedge arrays to ~1e7 entries worst-case under degree orientation.
-    Pass 0 to force the distributed joins (the billion-edge story,
-    unchanged)."""
+    scheduler floor dominates at toy scale. Above it the distributed
+    joins run (the billion-edge story, unchanged)."""
     from .cache import operator_persist
 
     # the canonical edge table is referenced five times (degree agg,
@@ -311,7 +372,7 @@ def triangle_counts(edges: DataFrame, src: str = "src",
                     F.greatest(src, dst).alias("v"))
             .where(F.col("u") != F.col("v"))
             .distinct())
-    if local_edges_below and und.count() <= local_edges_below:
+    if und.count() <= LOCAL_EDGES_MAX["triangle_counts"]:
         return _tri_local(und)
     deg = (und.select(F.col("u").alias("n"))
               .unionAll(und.select(F.col("v").alias("n")))
@@ -348,16 +409,10 @@ def _hits_local(e: DataFrame, iterations: int) -> DataFrame:
     sum (exact, order-independent to 2^53), the L2 norm and final
     divisions are single IEEE ops on both sides."""
     import numpy as np
-    import pandas as pd
+    from pyspark.sql import types as T
 
-    pdf = e.toPandas()
-    if len(pdf) == 0:
-        raise ValueError("hits needs a non-empty edge table")
-    both = pd.concat([pdf.iloc[:, 0], pdf.iloc[:, 1]],
-                     ignore_index=True)
-    codes, uniques = pd.factorize(both, sort=False)
+    s_idx, d_idx, uniques = _collect_codes(e)
     n = len(uniques)
-    s_idx, d_idx = codes[:len(pdf)], codes[len(pdf):]
     h = np.ones(n, dtype="float64")
     a = np.zeros(n, dtype="float64")
     for _ in range(int(iterations)):
@@ -365,20 +420,13 @@ def _hits_local(e: DataFrame, iterations: int) -> DataFrame:
         h = np.bincount(s_idx, weights=a[d_idx], minlength=n)
     nh = float(np.sqrt(np.sum(h * h)))
     na = float(np.sqrt(np.sum(a * a)))
-    out = pd.DataFrame({"node": pd.Series(uniques),
-                        "hub": h / nh, "authority": a / na})
-    from pyspark.sql import types as T
-    schema = T.StructType([
-        T.StructField("node", e.schema[0].dataType),
-        T.StructField("hub", T.DoubleType()),
-        T.StructField("authority", T.DoubleType())])
-    return e.sparkSession.createDataFrame(out, schema=schema)
+    return _node_frame(e, uniques, hub=(h / nh, T.DoubleType()),
+                       authority=(a / na, T.DoubleType()))
 
 
 def hits(edges: DataFrame, src: str = "src", dst: str = "dst",
          iterations: int = 3, checkpoint_every: int = 2,
-         broadcast_nodes_below: int = 5_000_000,
-         local_edges_below: int = 1_000_000) -> DataFrame:
+         broadcast_nodes_below: int = 5_000_000) -> DataFrame:
     """HITS hubs & authorities (Kleinberg) over a directed edge table:
     ``(node, hub, authority)`` after ``iterations`` rounds of
     ``a ← Aᵀh; h ← A·a`` from ``h₀ = 1``, L2-normalized ONCE at the
@@ -406,10 +454,10 @@ def hits(edges: DataFrame, src: str = "src", dst: str = "dst",
     (integer-exact sums are unchanged), so the SQL oracle contract is
     unaffected.
 
-    ``local_edges_below`` is the small-graph fast path (the broadcast-
-    join idea applied to the whole operator): when the DISTINCT edge
-    count — one cheap job on the already-persisted edge table, paid by
-    both paths — is at or below it, the iteration runs driver-local
+    Small-graph fast path (the broadcast-join idea applied to the
+    whole operator): when the DISTINCT edge count — one cheap job on
+    the already-persisted edge table, paid by both paths — is at or
+    under ``LOCAL_EDGES_MAX["hits"]``, the iteration runs driver-local
     over numpy ``bincount`` instead of 2·iterations broadcast-join
     rounds. Rationale (r13 q138 decomposition, sf0.1): each distributed
     half-round costs ~0.4-1.0 s of SCHEDULER floor (cached edge scan +
@@ -422,7 +470,7 @@ def hits(edges: DataFrame, src: str = "src", dst: str = "dst",
     memory, and above the threshold the distributed rounds (fixed round
     count, linear work per round, score side broadcast) are unchanged —
     at cluster scale the scheduler floor amortizes and the edge table
-    never moves. Pass ``local_edges_below=0`` to force distributed.
+    never moves.
     """
     from .cache import operator_persist
 
@@ -434,13 +482,11 @@ def hits(edges: DataFrame, src: str = "src", dst: str = "dst",
     n_edges = e.count()
     if n_edges == 0:
         raise ValueError("hits needs a non-empty edge table")
-    if n_edges <= local_edges_below:
+    if n_edges <= LOCAL_EDGES_MAX["hits"]:
         return _hits_local(e, iterations)
     nodes = (e.select(F.col("__s").alias("node"))
               .union(e.select("__d")).distinct())
-    n_nodes = nodes.count()
-    maybe_bc = (F.broadcast if n_nodes < broadcast_nodes_below
-                else (lambda d: d))
+    maybe_bc = _broadcast_below(nodes.count(), broadcast_nodes_below)
     h = nodes.select("node", F.lit(1.0).alias("h"))
     a = None
     for it in range(int(iterations)):
@@ -483,77 +529,62 @@ def _kcore_local(e: DataFrame, k: int, rounds: int,
     integer operations, the loop/early-stop/probe logic mirrors
     :func:`kcore` line for line."""
     import numpy as np
-    import pandas as pd
+    from pyspark.sql import types as T
 
-    pdf = e.toPandas()
-    both = pd.concat([pdf.iloc[:, 0], pdf.iloc[:, 1]],
-                     ignore_index=True)
-    codes, uniques = pd.factorize(both, sort=False)
+    s, d, uniques = _collect_codes(e)
     n = len(uniques)
-    s, d = codes[:len(pdf)], codes[len(pdf):]
     # NULL endpoints factorize to -1 (ADVICE r14: bincount raises on
     # negatives); remap them to a sentinel slot that mirrors the
     # distributed rounds exactly — a NULL-dst edge still counts
     # toward its src's ROUND-1 degree (the groupBy counts it), but
     # the equi-join filters never match NULL, so every NULL-touching
     # edge drops in the first peel regardless of degree.
-    s = np.where(s < 0, n, s).astype(np.int64)
-    d = np.where(d < 0, n, d).astype(np.int64)
+    s = np.where(s < 0, n, s)
+    d = np.where(d < 0, n, d)
+
+    def peel(s, d):
+        keep = np.bincount(s, minlength=n + 1) >= int(k)
+        keep[n] = False  # NULL never equi-joins back
+        return keep[s] & keep[d]
+
     prev = len(s)
     converged = prev == 0
     for _ in range(int(rounds)):
         if converged:
             break
-        deg = np.bincount(s, minlength=n + 1)
-        keep = deg >= int(k)
-        keep[n] = False  # NULL never equi-joins back
-        mask = keep[s] & keep[d]
+        mask = peel(s, d)
         s, d = s[mask], d[mask]
         cnt = len(s)
         if cnt == prev:
             converged = True
         prev = cnt
     if return_convergence and not converged and prev > 0:
-        deg = np.bincount(s, minlength=n + 1)
-        keep = deg >= int(k)
-        keep[n] = False
-        converged = int((keep[s] & keep[d]).sum()) == prev
+        converged = int(peel(s, d).sum()) == prev
     deg = np.bincount(s, minlength=n + 1)[:n]
     alive = deg > 0
-    out = pd.DataFrame({"node": pd.Series(uniques[alive]),
-                        "degree": deg[alive].astype("int64")})
-    from pyspark.sql import types as T
-    schema = T.StructType([
-        T.StructField("node", e.schema[0].dataType),
-        T.StructField("degree", T.LongType())])
-    res = e.sparkSession.createDataFrame(out, schema=schema)
+    res = _node_frame(e, uniques[alive],
+                      degree=(deg[alive].astype("int64"), T.LongType()))
     if return_convergence:
         return res, converged
     return res
 
 
-def _cc_local(e: DataFrame, nodes: DataFrame) -> DataFrame:
-    """Driver-local connected components over an already-persisted
-    canonical (u > v, distinct, no self-loops) edge table small enough
-    to collect — one union-find pass instead of O(log² n) star-
-    contraction rounds of checkpoint+signature jobs. Labels are
-    identical to the converged contraction by construction: component
-    = min node id (codes from a SORTED factorize, so integer code
-    order equals value order — lexicographic for strings, the same
-    binary ordering Spark's min/least uses)."""
-    import numpy as np
+def _cc_local(raw: DataFrame) -> DataFrame:
+    """Driver-local connected components over the persisted raw
+    ``(u, v)`` edge table, small enough to collect — one union-find
+    pass instead of O(log² n) star-contraction rounds of
+    checkpoint+signature jobs. The node set is every endpoint;
+    self-loops, duplicates and NULL-touching edges shape membership
+    only, as in the distributed rounds. Labels are identical to the
+    converged contraction by construction: component = min node id
+    (codes from a SORTED factorize, so integer code order equals value
+    order). A NULL endpoint is one node of its own, labelled NULL: the
+    distributed tail restores it self-labelled, as no equi-join or
+    ``u != v`` filter ever matches NULL."""
     import pandas as pd
 
-    pdf = e.toPandas()
-    npdf = nodes.toPandas()
-    all_vals = pd.concat([npdf.iloc[:, 0], pdf.iloc[:, 0],
-                          pdf.iloc[:, 1]], ignore_index=True)
-    codes, uniques = pd.factorize(all_vals, sort=True)
-    n = len(uniques)
-    nn = len(npdf)
-    u = codes[nn:nn + len(pdf)]
-    v = codes[nn + len(pdf):]
-    parent = np.arange(n, dtype=np.int64)
+    u, v, uniques = _collect_codes(raw, sort=True)
+    parent = list(range(len(uniques)))
 
     def find(x: int) -> int:
         root = x
@@ -563,35 +594,19 @@ def _cc_local(e: DataFrame, nodes: DataFrame) -> DataFrame:
             parent[x], x = root, parent[x]
         return root
 
-    for a, b in zip(u.tolist(), v.tolist()):
+    ok = (u >= 0) & (v >= 0) & (u != v)
+    for a, b in zip(u[ok].tolist(), v[ok].tolist()):
         ra, rb = find(a), find(b)
         if ra != rb:
             # min code becomes the root — codes are value-ordered
-            if ra < rb:
-                parent[rb] = ra
-            else:
-                parent[ra] = rb
-    # a NULL node factorizes to -1 (ADVICE r14: parent[-1] silently
-    # labeled it with an arbitrary component); the distributed tail
-    # restores such nodes self-labeled — edges never carry NULL here
-    # (the caller's u != v filter drops them), so a NULL node is
-    # always isolated and its component is itself (NULL).
-    ncodes = codes[:nn]
-    valid = ncodes >= 0
-    roots = np.array(
-        [find(i) for i in np.where(valid, ncodes, 0).tolist()],
-        dtype=np.int64)
-    comp = pd.Series(uniques[roots])
-    if not valid.all():
-        comp = comp.where(pd.Series(valid),
-                          npdf.iloc[:, 0].reset_index(drop=True))
-    out = pd.DataFrame({"node": pd.Series(npdf.iloc[:, 0].values),
-                        "component": comp})
-    from pyspark.sql import types as T
-    node_t = nodes.schema[0].dataType
-    schema = T.StructType([T.StructField("node", node_t),
-                           T.StructField("component", node_t)])
-    return e.sparkSession.createDataFrame(out, schema=schema)
+            parent[max(ra, rb)] = min(ra, rb)
+    node = pd.Series(uniques)
+    comp = pd.Series(uniques[[find(i) for i in range(len(uniques))]])
+    if (u < 0).any() or (v < 0).any():
+        null = pd.Series([None], dtype=node.dtype)
+        node = pd.concat([node, null], ignore_index=True)
+        comp = pd.concat([comp, null], ignore_index=True)
+    return _node_frame(raw, node, component=(comp, None))
 
 
 def _min_label_local(fwd: DataFrame, iterations: int) -> DataFrame:
@@ -603,17 +618,9 @@ def _min_label_local(fwd: DataFrame, iterations: int) -> DataFrame:
     (lexicographic for strings — the same binary ordering Spark's
     ``least`` uses), and min is exact on integers."""
     import numpy as np
-    import pandas as pd
 
-    pdf = fwd.toPandas()
-    if len(pdf) == 0:
-        raise ValueError("min_label_propagation needs a non-empty "
-                         "edge table")
-    both = pd.concat([pdf.iloc[:, 0], pdf.iloc[:, 1]],
-                     ignore_index=True)
-    codes, uniques = pd.factorize(both, sort=True)
+    a, b, uniques = _collect_codes(fwd, sort=True)
     n = len(uniques)
-    a, b = codes[:len(pdf)], codes[len(pdf):]
     mask = a != b  # self-loops shape membership only, not propagation
     s = np.concatenate([a[mask], b[mask]])
     d = np.concatenate([b[mask], a[mask]])
@@ -622,19 +629,12 @@ def _min_label_local(fwd: DataFrame, iterations: int) -> DataFrame:
         neigh = np.full(n, n, dtype=np.int64)
         np.minimum.at(neigh, d, labels[s])
         labels = np.minimum(labels, neigh)
-    out = pd.DataFrame({"node": pd.Series(uniques),
-                        "label": pd.Series(uniques[labels])})
-    from pyspark.sql import types as T
-    node_t = fwd.schema[0].dataType
-    schema = T.StructType([T.StructField("node", node_t),
-                           T.StructField("label", node_t)])
-    return fwd.sparkSession.createDataFrame(out, schema=schema)
+    return _node_frame(fwd, uniques, label=(uniques[labels], None))
 
 
 def min_label_propagation(edges: DataFrame, src: str = "src",
                           dst: str = "dst", iterations: int = 3,
-                          broadcast_nodes_below: int = 5_000_000,
-                          local_edges_below: int = 1_000_000
+                          broadcast_nodes_below: int = 5_000_000
                           ) -> DataFrame:
     """Synchronous min-label propagation over an UNDIRECTED graph:
     every node starts labeled with its own id; each round every node
@@ -642,36 +642,38 @@ def min_label_propagation(edges: DataFrame, src: str = "src",
     ``iterations`` rounds, ``label(v)`` is the minimum node id within
     ``iterations`` hops — the bounded-round fragment of connected
     components (labels converge to components once ``iterations``
-    reaches the graph diameter). Returns ``(node, label)``.
+    reaches the graph diameter; :func:`connected_components` is the
+    convergent operator). Returns ``(node, label)``.
 
-    This is the DISTRIBUTED component/community primitive next to the
-    driver-side union-find in ``dedup.dedup_clusters`` (which is
-    size-gated): fixed rounds keep the computation deterministic and
-    SQL-oracle-expressible (one chained CTE per round), and the
-    per-round cost is one partial-aggregated min per edge endpoint —
-    the q82/q138 shape: the symmetrized edge table is persisted and
-    NEVER re-shuffles; only the (node, label) score table moves, and
-    it broadcasts below ``broadcast_nodes_below`` nodes. Min is
-    idempotent/associative, so map-side combine collapses the shuffle
-    to the node count.
+    This is the fixed-round community primitive: fixed rounds keep the
+    computation deterministic and SQL-oracle-expressible (one chained
+    CTE per round), and the per-round cost is one partial-aggregated
+    min per edge endpoint — the q82/q138 shape: the symmetrized edge
+    table is persisted and NEVER re-shuffles; only the (node, label)
+    score table moves, and it broadcasts below
+    ``broadcast_nodes_below`` nodes. Min is idempotent/associative, so
+    map-side combine collapses the shuffle to the node count.
 
-    ``local_edges_below`` is the small-graph fast path (the q138/hits
-    device): at or below that many RAW edges — one count on the
-    persisted edge table, whose upstream both paths execute exactly
-    once — the rounds run driver-local over numpy ``minimum.at``
-    instead of per-round join jobs, identical by construction (sorted
-    factorize makes integer code order equal value order). Pass 0 to
-    force the distributed rounds.
+    Small-graph fast path (the q138/hits device): at or under
+    ``LOCAL_EDGES_MAX["min_label_propagation"]`` RAW edges — one count
+    on the persisted edge table, whose upstream both paths execute
+    exactly once — the rounds run driver-local over numpy
+    ``minimum.at`` instead of per-round join jobs, identical by
+    construction (sorted factorize makes integer code order equal
+    value order).
     """
     from .cache import operator_persist
 
     if iterations < 1:
         raise ValueError("iterations must be >= 1")
-    fwd = edges.select(F.col(src).alias("__a"), F.col(dst).alias("__b"))
-    if local_edges_below:
-        fwd = operator_persist(fwd)
-        if fwd.count() <= local_edges_below:
-            return _min_label_local(fwd, iterations)
+    fwd = operator_persist(
+        edges.select(F.col(src).alias("__a"), F.col(dst).alias("__b")))
+    n_edges = fwd.count()
+    if n_edges == 0:
+        raise ValueError("min_label_propagation needs a non-empty "
+                         "edge table")
+    if n_edges <= LOCAL_EDGES_MAX["min_label_propagation"]:
+        return _min_label_local(fwd, iterations)
     sym = operator_persist(
         fwd.union(fwd.select(F.col("__b"), F.col("__a"))
                      .toDF("__a", "__b"))
@@ -682,12 +684,7 @@ def min_label_propagation(edges: DataFrame, src: str = "src",
     nodes = (fwd.select(F.col("__a").alias("node"))
                 .union(fwd.select(F.col("__b").alias("node")))
                 .distinct())
-    n_nodes = nodes.count()
-    if n_nodes == 0:
-        raise ValueError("min_label_propagation needs a non-empty "
-                         "edge table")
-    maybe_bc = (F.broadcast if n_nodes < broadcast_nodes_below
-                else (lambda d: d))
+    maybe_bc = _broadcast_below(nodes.count(), broadcast_nodes_below)
     labels = nodes.select("node", F.col("node").alias("label"))
     for _ in range(int(iterations)):
         neigh = (sym.join(maybe_bc(labels.withColumnRenamed(
@@ -706,23 +703,28 @@ def min_label_propagation(edges: DataFrame, src: str = "src",
 def connected_components(edges: DataFrame, src: str = "src",
                          dst: str = "dst",
                          max_iterations: int = 50,
-                         stats: dict | None = None,
-                         local_edges_below: int = 1_000_000
+                         stats: dict | None = None
                          ) -> DataFrame:
-    """Connected components to CONVERGENCE via alternating
-    large-star/small-star contraction (Kiveris et al., "Connected
-    Components in MapReduce and Beyond", ACM SoCC 2014). Returns
-    ``(node, component)`` with ``component`` = the minimum node id in
-    the component (lexicographic for string ids — same label rule as
-    :func:`~pandas_ai_spark.functions.dedup.dedup_clusters`).
+    """Connected components to CONVERGENCE: returns ``(node,
+    component)`` with ``component`` = the minimum node id in the
+    component (lexicographic for string ids). This is the package's
+    one components device: ``dedup.dedup_clusters`` (near-duplicate
+    clusters) and ``linkage.golden_records`` (entities) rename its
+    output.
 
-    Why a second components operator: ``dedup_clusters``'s distributed
-    path is plain min-label propagation — one round per hop, so a
-    path-shaped component of length D needs D rounds. Star contraction
-    halves tree heights instead and converges in O(log^2 n) rounds
-    regardless of diameter; this is the operator to reach for when the
-    graph is not a shallow near-dup clique family (entity-resolution
-    chains, follower graphs, lineage graphs).
+    The raw ``(src, dst)`` projection is persisted once and counted
+    once. At or under ``LOCAL_EDGES_MAX["connected_components"]`` raw
+    edges (self-loops and duplicates included) :func:`_cc_local`
+    collects that one table and runs a union-find; the limit counts
+    raw edges, not canonical ones, and both paths give identical
+    labels, so it only decides which path runs. Above it (or when
+    ``stats`` asks for round instrumentation) the graph contracts by
+    alternating large-star/small-star rounds (Kiveris et al.,
+    "Connected Components in MapReduce and Beyond", ACM SoCC 2014),
+    which halve tree heights and converge in O(log^2 n) rounds
+    whatever the diameter — a path-shaped component of length D does
+    not need D rounds, as min-label propagation would (entity-
+    resolution chains, follower graphs, lineage graphs).
 
     Per round the edge set is rewritten twice:
 
@@ -747,7 +749,8 @@ def connected_components(edges: DataFrame, src: str = "src",
     — so the round where it first matches pays ONE definitive
     ``subtract``-emptiness probe before declaring convergence; a
     collision (≈2^-64 per round) costs one extra iteration, never a
-    wrong label. Non-terminal rounds stay subtract-free.
+    wrong label. Non-terminal rounds stay subtract-free. A run that
+    hits ``max_iterations`` warns and returns the partial contraction.
     Self-loop-only and isolated
     endpoints never propagate but are restored in the output labeled
     with themselves (the ``min_label_propagation`` membership rule).
@@ -760,7 +763,11 @@ def connected_components(edges: DataFrame, src: str = "src",
 
     if max_iterations < 1:
         raise ValueError("max_iterations must be >= 1")
-    raw = edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+    raw = operator_persist(
+        edges.select(F.col(src).alias("u"), F.col(dst).alias("v")))
+    if (stats is None and raw.count()
+            <= LOCAL_EDGES_MAX["connected_components"]):
+        return _cc_local(raw)
     nodes = operator_persist(
         raw.select(F.col("u").alias("node"))
            .union(raw.select(F.col("v").alias("node")))
@@ -782,19 +789,6 @@ def connected_components(edges: DataFrame, src: str = "src",
         return row["n"], row["h"]
 
     sig = _signature(e)
-    # small-graph fast path (the q138/_hits_local device): below
-    # ``local_edges_below`` canonical edges — the count is already in
-    # hand from the signature — one driver-local union-find replaces
-    # O(log² n) star-contraction rounds of checkpoint+signature jobs
-    # (at toy scale each round is ~0.4-1.0 s of scheduler floor; the
-    # q147 chain graph took ~10 rounds). Labels are identical by
-    # construction (min node id per component; the union-find always
-    # fully converges, which equals the contraction's fixpoint). The
-    # distributed rounds below remain the billion-edge scale story.
-    # Requesting ``stats`` (round instrumentation) forces them, as
-    # does local_edges_below=0.
-    if stats is None and local_edges_below and sig[0] <= local_edges_below:
-        return _cc_local(e, nodes)
     rounds = 0
     for _ in range(int(max_iterations)):
         if sig[0] == 0:
@@ -923,8 +917,7 @@ def degree_assortativity(edges: DataFrame, src: str = "src",
 def kcore(edges: DataFrame, k: int, rounds: int = 8,
           src: str = "src", dst: str = "dst",
           broadcast_nodes_below: int = 5_000_000,
-          return_convergence: bool = False,
-          local_edges_below: int = 5_000_000):
+          return_convergence: bool = False):
     """``rounds``-round k-core peel over a SYMMETRIC edge table: keep
     the subgraph where every node has degree >= ``k`` within the
     subgraph, by repeatedly deleting under-degree nodes - the
@@ -965,50 +958,42 @@ def kcore(edges: DataFrame, k: int, rounds: int = 8,
     round r costs O(|E_r|) and the plan stays flat instead of
     nesting r rounds of joins.
 
-    ``local_edges_below`` is the small-graph fast path (the
-    q138/_hits_local device): at or below that many edges — the count
-    is already in hand from the eager checkpoint both paths pay — the
-    peel runs driver-local over numpy ``bincount`` (identical integer
-    algebra, see :func:`_kcore_local`) instead of per-round
-    checkpoint+count jobs whose ~0.4-1.0 s scheduler floor dominates
-    at toy scale. 5M int edges ≈ 80 MB driver memory (strings a few
-    hundred MB). Pass 0 to force the distributed rounds.
+    Small-graph fast path (the q138/_hits_local device): at or under
+    ``LOCAL_EDGES_MAX["kcore"]`` edges — the count is already in hand
+    from the eager checkpoint both paths pay — the peel runs
+    driver-local over numpy ``bincount`` (identical integer algebra,
+    see :func:`_kcore_local`) instead of per-round checkpoint+count
+    jobs whose ~0.4-1.0 s scheduler floor dominates at toy scale.
     """
     if k < 1:
         raise ValueError("k must be >= 1")
     if rounds < 1:
         raise ValueError("rounds must be >= 1")
-    from pyspark.sql.functions import broadcast
-
     alive = edges.select(F.col(src).alias("__s"),
                          F.col(dst).alias("__d")) \
         .localCheckpoint(eager=True)
     prev = alive.count()
-    # small-graph fast path (the q138/_hits_local device): the peel
-    # rounds run driver-local over numpy bincount — identical integer
-    # algebra — instead of per-round checkpoint+count jobs whose
-    # scheduler floor dominates at toy scale. The checkpoint + count
-    # above are paid by both paths; pass local_edges_below=0 to force
-    # the distributed rounds (the >2M-edge scale story, unchanged).
-    if prev <= local_edges_below and local_edges_below:
+    # the checkpoint + count above are paid by both paths
+    if prev <= LOCAL_EDGES_MAX["kcore"]:
         return _kcore_local(alive, k, rounds, return_convergence)
+
+    def peel(alive: DataFrame, n_edges: int) -> DataFrame:
+        # one map-side-combined degree count, then two semi-joins that
+        # keep the edges whose endpoints both have degree >= k
+        keep = (alive.groupBy(F.col("__s").alias("__n"))
+                     .agg(F.count(F.lit(1)).cast("bigint").alias("__deg"))
+                     .where(F.col("__deg") >= int(k)).select("__n"))
+        hint = _broadcast_below(n_edges, broadcast_nodes_below)
+        return (alive
+                .join(hint(keep.select(F.col("__n").alias("__s"))), "__s")
+                .join(hint(keep.select(F.col("__n").alias("__d"))), "__d")
+                .select("__s", "__d"))
+
     converged = prev == 0  # an empty graph is trivially its own core
     for _ in range(int(rounds)):
         if converged:
             break
-        deg = alive.groupBy(F.col("__s").alias("__n")).agg(
-            F.count(F.lit(1)).cast("bigint").alias("__deg"))
-        keep = deg.where(F.col("__deg") >= int(k)) \
-            .select(F.col("__n"))
-        hint = (broadcast if prev < broadcast_nodes_below
-                else (lambda d: d))
-        alive = (alive
-                 .join(hint(keep.select(
-                     F.col("__n").alias("__s"))), "__s")
-                 .join(hint(keep.select(
-                     F.col("__n").alias("__d"))), "__d")
-                 .select("__s", "__d")
-                 .localCheckpoint(eager=True))
+        alive = peel(alive, prev).localCheckpoint(eager=True)
         cnt = alive.count()
         if cnt == prev:
             converged = True
@@ -1019,17 +1004,7 @@ def kcore(edges: DataFrame, k: int, rounds: int = 8,
         # in-loop check can't see it — ADVICE r12 false negative). One
         # extra DETECTION round is an algebraic no-op on the result:
         # count the would-be survivors without applying the filter.
-        deg = alive.groupBy(F.col("__s").alias("__n")).agg(
-            F.count(F.lit(1)).cast("bigint").alias("__deg"))
-        keep = deg.where(F.col("__deg") >= int(k)).select(F.col("__n"))
-        hint = (broadcast if prev < broadcast_nodes_below
-                else (lambda d: d))
-        probe = (alive
-                 .join(hint(keep.select(F.col("__n").alias("__s"))),
-                       "__s")
-                 .join(hint(keep.select(F.col("__n").alias("__d"))),
-                       "__d"))
-        converged = probe.count() == prev
+        converged = peel(alive, prev).count() == prev
     out = alive.groupBy(F.col("__s").alias("node")).agg(
         F.count(F.lit(1)).cast("bigint").alias("degree"))
     if return_convergence:

@@ -172,8 +172,7 @@ def golden_records(df: DataFrame, pairs: DataFrame,
                    id_col: str = "rec_id",
                    completeness_cols: list[str] | None = None,
                    recency_col: str | None = None,
-                   id_a: str = "id_a", id_b: str = "id_b",
-                   driver_threshold: int = 1_000_000) -> DataFrame:
+                   id_a: str = "id_a", id_b: str = "id_b") -> DataFrame:
     """Survivorship: consolidate linked records into ONE golden record
     per entity. ``pairs`` is a match-pair table (from ``fuzzy_join``,
     ``sorted_neighborhood_pairs``, or any matcher); entities are the
@@ -187,22 +186,19 @@ def golden_records(df: DataFrame, pairs: DataFrame,
     single-member entities.
 
     Scale shape (the ``dedup_keep_best`` contract): match pairs are
-    rare-event-sized, so clustering is hybrid like ``dedup_clusters``:
-    at or below ``driver_threshold`` edges a driver-side union-find
-    labels the graph in one collect (pair graphs are tiny relative to
-    the corpus, and milliseconds beat any distributed round); above
-    it, :func:`~pandas_ai_spark.functions.graph.connected_components`
-    (large-star/small-star — entity graphs produced by multi-pass
-    blocking are CHAINS, the deep case propagation handles worst).
-    Either way the survivorship window partitions the LINKED member
+    rare-event-sized; entities come from one
+    :func:`~pandas_ai_spark.functions.graph.connected_components` call,
+    which labels a small pair graph with a driver-local union-find in
+    one collect and a large one by large-star/small-star contraction
+    (entity graphs produced by multi-pass blocking are CHAINS, which
+    that contraction converges on in O(log^2 n) rounds). Either way
+    the survivorship window partitions the LINKED member
     frame only (~|pairs|); the corpus at large is touched by one
     id-keyed left anti-join and passes through untouched. No
     full-corpus window, no corpus collect.
     """
     from pyspark.sql import Window
 
-    from .cache import operator_persist
-    from .dedup import dedup_clusters
     from .graph import connected_components
 
     comp_cols = completeness_cols or []
@@ -213,19 +209,9 @@ def golden_records(df: DataFrame, pairs: DataFrame,
     for c in comp_cols:
         completeness = completeness + F.col(c).isNotNull().cast("int")
 
-    pairs = operator_persist(
-        pairs.select(F.col(id_a), F.col(id_b)))
-    if pairs.count() <= driver_threshold:
-        # dedup_clusters' own hybrid resolves to the driver union-find
-        # here (same threshold family); labels are identically min-id
-        labels = (dedup_clusters(pairs, id_a=id_a, id_b=id_b,
-                                 driver_threshold=driver_threshold)
-                  .select(F.col("doc_id").alias(id_col),
-                          F.col("cluster_id").alias("entity_id")))
-    else:
-        labels = (connected_components(pairs, src=id_a, dst=id_b)
-                  .select(F.col("node").alias(id_col),
-                          F.col("component").alias("entity_id")))
+    labels = (connected_components(pairs, src=id_a, dst=id_b)
+              .select(F.col("node").alias(id_col),
+                      F.col("component").alias("entity_id")))
     linked = (df.join(labels, id_col)
                 .withColumn("completeness", completeness))
     order = [F.col("completeness").desc()]

@@ -735,7 +735,8 @@ def semantic_dedup(
     """Drop the higher-id side of every semantic near-dup pair — the
     keep-one-representative form of :func:`semantic_dedup_pairs`
     (pair-wise, like ``minhash_dedup``; for transitive-closure cluster
-    semantics feed the pairs to ``dedup.dedup_clusters``)."""
+    semantics feed the pairs to ``dedup.dedup_clusters``, a rename over
+    ``graph.connected_components``)."""
     pairs = semantic_dedup_pairs(df, threshold, n_clusters, id_col,
                                  vec_col, sample, seed)
     return df.join(

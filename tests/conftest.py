@@ -89,3 +89,28 @@ def rank_paths(monkeypatch):
 
     monkeypatch.setattr(stats, "_resolve_rank_path", spy)
     return calls
+
+
+@pytest.fixture
+def graph_distributed(monkeypatch):
+    """``force(op)`` sends graph operator ``op`` (a key of
+    ``graph.LOCAL_EDGES_MAX``) down its distributed rounds for the rest
+    of the test: its local-path limit becomes 0, so any non-empty edge
+    table is over it, and its driver-local function fails the test if
+    it still runs."""
+    from pandas_ai_spark.functions import graph
+
+    local = {"triangle_counts": "_tri_local", "hits": "_hits_local",
+             "kcore": "_kcore_local",
+             "min_label_propagation": "_min_label_local",
+             "connected_components": "_cc_local"}
+
+    def force(op):
+        monkeypatch.setitem(graph.LOCAL_EDGES_MAX, op, 0)
+
+        def ran(*args, **kwargs):
+            pytest.fail(f"{op} took its driver-local path")
+
+        monkeypatch.setattr(graph, local[op], ran)
+
+    return force

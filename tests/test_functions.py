@@ -807,18 +807,34 @@ def test_asof_join_tie_matches_same_timestamp(spark):
     assert asof_join(left, right, by=["k"]).collect()[0].rid_right == 9
 
 
-def test_dedup_clusters_distributed_path(spark):
-    """driver_threshold=0 forces the label-propagation path; result must
-    equal the union-find fast path."""
+def test_dedup_clusters_distributed_path(spark, graph_distributed):
+    """The forced star-contraction rounds of connected_components give
+    the same clusters as its union-find fast path."""
     from pandas_ai_spark.functions import dedup as dd
 
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (10, 11)], "id_a long, id_b long")
     fast = {(r.doc_id, r.cluster_id)
             for r in dd.dedup_clusters(pairs).collect()}
+    graph_distributed("connected_components")
     dist = {(r.doc_id, r.cluster_id)
-            for r in dd.dedup_clusters(pairs, driver_threshold=0).collect()}
+            for r in dd.dedup_clusters(pairs).collect()}
     assert fast == dist == {(1, 1), (2, 1), (3, 1), (10, 10), (11, 10)}
+
+
+def test_dedup_clusters_long_chain_distributed(spark, graph_distributed):
+    """A 30-node chain is one cluster labelled 1 on the distributed
+    path too: clustering runs to convergence, not a fixed number of
+    propagation rounds (20 rounds of min-label propagation left node
+    30 labelled 10)."""
+    from pandas_ai_spark.functions import dedup as dd
+
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(1, 30)], "id_a long, id_b long")
+    graph_distributed("connected_components")
+    got = {r.doc_id: r.cluster_id
+           for r in dd.dedup_clusters(pairs).collect()}
+    assert got == {i: 1 for i in range(1, 31)}
 
 
 def test_clean_corpus_pipeline(docs):

@@ -8,8 +8,8 @@
 - decimal-before-sum lint (ADVICE r13): the agreement/Q statistics cast
   an operand to decimal(38,0) BEFORE the product/sum, never after.
 - HITS small-graph fast path (VERDICT r13 item 3): driver-local numpy
-  rounds below ``local_edges_below`` are bitwise-identical to the
-  distributed rounds.
+  rounds under ``graph.LOCAL_EDGES_MAX["hits"]`` are bitwise-identical
+  to the distributed rounds.
 - siegel_slopes continuous-x guard (VERDICT r13 item 4).
 - rank dispatch skips the eager count for Python-UDF plans
   (ADVICE r13), dispatching distributed instead.
@@ -275,18 +275,20 @@ class TestHitsLocalPath:
                 for _ in range(400)]
         return spark.createDataFrame(rows, ["src", "dst"])
 
-    def test_local_equals_distributed_bitwise(self, spark):
+    def test_local_equals_distributed_bitwise(self, spark,
+                                              graph_distributed):
         from pandas_ai_spark.functions.graph import hits
 
         e = self._edges(spark)
         local = {r["node"]: (r["hub"], r["authority"])
                  for r in hits(e, iterations=3).collect()}
+        graph_distributed("hits")
         dist = {r["node"]: (r["hub"], r["authority"])
-                for r in hits(e, iterations=3,
-                              local_edges_below=0).collect()}
+                for r in hits(e, iterations=3).collect()}
         assert local == dist  # exact float equality, by construction
 
-    def test_zero_threshold_forces_distributed(self, spark):
+    def test_zero_threshold_forces_distributed(self, spark, monkeypatch,
+                                               graph_distributed):
         from pandas_ai_spark.functions import graph
 
         e = self._edges(spark)
@@ -297,23 +299,24 @@ class TestHitsLocalPath:
             called["local"] = True
             return orig(*a, **kw)
 
-        graph._hits_local = spy
-        try:
-            graph.hits(e, iterations=1, local_edges_below=0).collect()
-            assert not called["local"]
-            graph.hits(e, iterations=1).collect()
-            assert called["local"]
-        finally:
-            graph._hits_local = orig
+        monkeypatch.setattr(graph, "_hits_local", spy)
+        graph.hits(e, iterations=1).collect()
+        assert called["local"]
+        # a zero limit replaces the spy with one that fails the test
+        # if the local path runs
+        graph_distributed("hits")
+        graph.hits(e, iterations=1).collect()
 
-    def test_empty_edges_raise_on_both_paths(self, spark):
+    def test_empty_edges_raise_on_both_paths(self, spark,
+                                             graph_distributed):
         from pandas_ai_spark.functions.graph import hits
 
         e = spark.createDataFrame([], "src string, dst string")
         with pytest.raises(ValueError):
             hits(e, iterations=1).collect()
+        graph_distributed("hits")
         with pytest.raises(ValueError):
-            hits(e, iterations=1, local_edges_below=0).collect()
+            hits(e, iterations=1).collect()
 
 
 # ---------------------------------------------------------------------------
@@ -330,7 +333,7 @@ class TestLabelPropLocalPath:
         rows.append(("zz_selfloop", "zz_selfloop"))  # membership-only
         return spark.createDataFrame(rows, ["src", "dst"])
 
-    def test_local_equals_distributed(self, spark):
+    def test_local_equals_distributed(self, spark, graph_distributed):
         from pandas_ai_spark.functions.graph import (
             min_label_propagation)
 
@@ -338,21 +341,24 @@ class TestLabelPropLocalPath:
         local = {r["node"]: r["label"]
                  for r in min_label_propagation(
                      e, iterations=3).collect()}
+        graph_distributed("min_label_propagation")
         dist = {r["node"]: r["label"]
                 for r in min_label_propagation(
-                    e, iterations=3, local_edges_below=0).collect()}
+                    e, iterations=3).collect()}
         assert local == dist
         assert local["zz_selfloop"] == "zz_selfloop"
 
-    def test_empty_edges_raise_on_both_paths(self, spark):
+    def test_empty_edges_raise_on_both_paths(self, spark,
+                                             graph_distributed):
         from pandas_ai_spark.functions.graph import (
             min_label_propagation)
 
         e = spark.createDataFrame([], "src string, dst string")
         with pytest.raises(ValueError):
             min_label_propagation(e).collect()
+        graph_distributed("min_label_propagation")
         with pytest.raises(ValueError):
-            min_label_propagation(e, local_edges_below=0).collect()
+            min_label_propagation(e).collect()
 
 
 # ---------------------------------------------------------------------------

@@ -369,7 +369,8 @@ class TestBootstrapHexThresholds:
 # ---------------------------------------------------------------------
 
 class TestGraphR15:
-    def test_kcore_local_null_endpoint_matches_distributed(self, spark):
+    def test_kcore_local_null_endpoint_matches_distributed(
+            self, spark, graph_distributed):
         from pandas_ai_spark.functions.graph import kcore
         # triangle a-b-c (sym) + a null-dst edge inflating a's round-1
         # degree, exactly the distributed groupBy semantics
@@ -377,7 +378,8 @@ class TestGraphR15:
                ("b", "c"), ("c", "b"), ("a", None)]
         df = spark.createDataFrame(sym, "src string, dst string")
         local = _rows(kcore(df, k=2, rounds=4))
-        dist = _rows(kcore(df, k=2, rounds=4, local_edges_below=0))
+        graph_distributed("kcore")
+        dist = _rows(kcore(df, k=2, rounds=4))
         assert local == dist
 
     def test_cc_local_null_node_self_labeled(self, spark):
@@ -392,7 +394,8 @@ class TestGraphR15:
         # the null node is restored self-labeled (component NULL)
         assert (None, None) in local
 
-    def test_triangle_local_matches_distributed_and_canonical(self, spark):
+    def test_triangle_local_matches_distributed_and_canonical(
+            self, spark, graph_distributed):
         from pandas_ai_spark.functions.graph import triangle_counts
         import random
         rnd = random.Random(9)
@@ -403,16 +406,16 @@ class TestGraphR15:
         df = spark.createDataFrame(edges + [(v, u) for u, v in edges],
                                    "src string, dst string")
         local = _rows(triangle_counts(df))
-        dist = _rows(triangle_counts(df, local_edges_below=0))
-        assert local == dist
         # canonical input, assume_canonical skips the re-dedup
         canon = sorted({(min(u, v), max(u, v))
                         for u, v in edges if u != v})
         cdf = spark.createDataFrame(canon, "src string, dst string")
         got = _rows(triangle_counts(cdf, assume_canonical=True))
         assert got == local
-        got_dist = _rows(triangle_counts(cdf, assume_canonical=True,
-                                         local_edges_below=0))
+        graph_distributed("triangle_counts")
+        dist = _rows(triangle_counts(df))
+        assert local == dist
+        got_dist = _rows(triangle_counts(cdf, assume_canonical=True))
         assert got_dist == local
 
     def test_triangle_local_empty_edges(self, spark):

@@ -417,9 +417,8 @@ class TestConnectedComponents:
         assert stats["rounds"] == 1
 
     def test_matches_dedup_clusters_union_find(self, spark):
-        # parity vs the driver-side union-find on a deterministic
+        # parity vs a plain union-find written here, on a deterministic
         # pseudo-random graph (hash arithmetic, no RNG)
-        from pandas_ai_spark.functions.dedup import dedup_clusters
         from pandas_ai_spark.functions.graph import connected_components
 
         pairs = [(k * 7919 % 101, (k * 104729 + 3) % 101)
@@ -427,8 +426,17 @@ class TestConnectedComponents:
         edges = spark.createDataFrame(pairs, ["src", "dst"])
         cc = {r.node: r.component for r in
               connected_components(edges).collect()}
-        uf = {r.doc_id: r.cluster_id for r in
-              dedup_clusters(edges, id_a="src", id_b="dst").collect()}
+        parent = {}
+
+        def find(x):
+            while parent.setdefault(x, x) != x:
+                x = parent[x]
+            return x
+
+        for a, b in pairs:
+            ra, rb = find(a), find(b)
+            parent[max(ra, rb)] = min(ra, rb)
+        uf = {x: find(x) for x in parent}
         assert cc == uf
 
     def test_empty_and_bad_args(self, spark):
@@ -497,16 +505,17 @@ class TestGoldenRecords:
 
 
 
-    def test_distributed_path_same_labels(self, spark):
-        # driver_threshold=0 forces the large-star/small-star path;
-        # survivors must be identical to the union-find default
+    def test_distributed_path_same_labels(self, spark,
+                                          graph_distributed):
+        # the forced large-star/small-star path gives survivors
+        # identical to the union-find default
         from pandas_ai_spark.functions.linkage import golden_records
 
         pairs = spark.createDataFrame([(1, 2), (2, 3)], ["id_a", "id_b"])
+        graph_distributed("connected_components")
         got = {(r.entity_id, r.rec_id) for r in
                golden_records(self._df(spark), pairs, "rec_id",
-                              ["addr", "phone"], "ts",
-                              driver_threshold=0).collect()}
+                              ["addr", "phone"], "ts").collect()}
         assert got == {(1, 3), (9, 9)}
 
 
